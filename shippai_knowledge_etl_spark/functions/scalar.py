@@ -173,13 +173,6 @@ def resolve_url(base: Column | str, href: Column) -> Column:
     return _remove_dot_segments(joined)
 
 
-def build_url(base: str, col: Column) -> Column:
-    """F10 legacy shape: absolute URL from an origin-like base + href
-    (src/render_pdf.py:364,418). Now urljoin-faithful via resolve_url —
-    a base with no path behaves as the site origin."""
-    return resolve_url(base, col)
-
-
 def output_filename(case_id: Column, case_name: Column, ext: str) -> Column:
     """F11: ``{case_id}_{case_name}.{ext}`` (src/extract.py:417;
     requirements.md:85-90)."""

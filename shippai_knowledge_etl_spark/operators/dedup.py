@@ -735,37 +735,6 @@ def connected_components_lss(
     )
 
 
-def near_dup_probe_index(
-    new_batch: DataFrame,
-    band_index: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Incremental near-dup: candidate (new_id, old_id) pairs between a
-    NEW batch and the already-ingested corpus, via the corpus's stored
-    LSH band rows — the near-dup counterpart of ``dedup_incremental``
-    (which covers exact hashes).
-
-    ``band_index`` is the at-rest table built by :func:`lsh_band_rows`
-    over everything ingested so far ((id, band_idx, band_hash) — 16
-    rows/doc, signatures never text). The probe computes band rows for
-    the new batch only and hash-joins on (band_idx, band_hash): the
-    historical corpus is never rescanned or re-shingled, and the only
-    shuffle is band-hash-keyed rows from both sides. Candidates feed
-    the existing exact-Jaccard verify stage exactly like
-    ``minhash_candidate_pairs`` output does."""
-    probe = lsh_band_rows(new_batch, id_col, text_col).withColumnRenamed(
-        id_col, "new_id"
-    )
-    idx = band_index.withColumnRenamed(id_col, "old_id")
-    return (
-        probe.join(idx, ["band_idx", "band_hash"])
-        .filter(F.col("new_id") != F.col("old_id"))
-        .select("new_id", "old_id")
-        .distinct()
-    )
-
-
 def prefix_candidates(
     df: DataFrame,
     id_col: str,

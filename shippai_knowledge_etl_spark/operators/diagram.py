@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shippai_knowledge_etl_spark.sources import sinks
+
 # Layout constants, tenth-mm (reference src/render_pdf.py:204-213).
 BAR_W = 420
 BAR_H = 55
@@ -503,124 +505,92 @@ def separator_line_ops(positioned: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def draw_ops(positioned: DataFrame, id_col: str, title_col: Column | None = None) -> DataFrame:
-    """All of a case's drawable geometry as ONE ordered row set, in the
-    reference's section order (src/render_pdf.py:324-471): title text,
-    item bars (+labels), separator lines (doubles as a ±4-unit pair),
-    category braces (+labels). Uniform schema feeds the S6 PDF sink:
+def draw_ops(positioned: DataFrame, id_col: str) -> DataFrame:
+    """A case's scenario diagram as rows for the S6 PDF sink: page 1 of
+    the document ``doc_id`` (the case id), in the ``sinks.draw_op``
+    format. Sections follow the reference's order
+    (src/render_pdf.py:324-471):
 
-      (id, section, seq, op, x, y, x2, y2, w, h, fill, label,
-       total_h, page_w)
+      0  title text, from the case's idx0 = 0 row;
+      1  item bars with their numbered labels, seq = idx0;
+      2  separator lines, seq = 2*idx0 (a double is a ±4-unit pair,
+         the upper one at seq 2*idx0 + 1);
+      3  category braces, a line and a label each, seq = the
+         category's place in cause → action → result.
 
-    Everything stays per-case relational rows — the sink only ever sees
-    a sorted partition, never a collected document.
-
-    ``positioned`` is persisted here: five union branches plus the dims
-    aggregate would otherwise re-run the scenario parse + layout fold
-    ~6× per action. Caller owns the storage (one-shot sinks can leave
-    eviction to the LRU; long-lived pipelines should unpersist)."""
-    positioned = positioned.persist()
-    dims = positioned.groupBy(id_col).agg(
-        F.max("total_h").cast("long").alias("total_h"),
-        (
-            F.lit(MARGIN_LEFT)
-            + F.max("idx0") * STEP_X
-            + BAR_W
-            + BRACE_GAP
-            + F.lit(200)
-        ).cast("long").alias("page_w"),
+    The page is ``total_h`` high and as wide as the last bar's right
+    edge plus room for the braces. Both follow from per-case columns
+    every row already carries, so each op gets its page size from its
+    own row; the only shuffle is brace_ops' per-category aggregate.
+    Nothing is persisted: each of the three branches re-reads
+    ``positioned`` (for the chunked layout, one narrow projection per
+    read), which measured no slower end to end than persisting it;
+    callers that want it computed once persist it themselves."""
+    page_w = (
+        F.lit(MARGIN_LEFT)
+        + (F.col("total_items") - 1) * STEP_X
+        + BAR_W
+        + BRACE_GAP
+        + 200
     )
-    nul = F.lit(None).cast("double")
-
-    title = dims.select(
-        F.col(id_col),
-        F.lit(0).alias("section"),
-        F.lit(0).alias("seq"),
-        F.lit("text").alias("op"),
-        F.lit(float(MARGIN_LEFT)).alias("x"),
-        (F.col("total_h") - 40).cast("double").alias("y"),
-        nul.alias("x2"),
-        nul.alias("y2"),
-        nul.alias("w"),
-        nul.alias("h"),
-        F.lit(None).cast("string").alias("fill"),
-        (title_col if title_col is not None else F.col(id_col).cast("string")).alias(
-            "label"
+    # the layout helpers pass the id column through untouched, so a
+    # struct id hands every branch its case's page size
+    doc = F.col("_doc")
+    keyed = positioned.withColumn(
+        "_doc",
+        F.struct(
+            F.col(id_col).alias("id"),
+            page_w.alias("w"),
+            F.col("total_h").alias("h"),
         ),
     )
-    rects = rect_ops(positioned, id_col).select(
-        F.col(id_col),
-        F.lit(1).alias("section"),
-        F.col("idx0").alias("seq"),
-        F.col("op"),
-        F.col("x").cast("double"),
-        F.col("y_pdf").cast("double").alias("y"),
-        nul.alias("x2"),
-        nul.alias("y2"),
-        F.col("w").cast("double"),
-        F.col("h").cast("double"),
-        F.col("fill"),
-        F.col("label"),
-    )
-    # double separators render as a parallel pair, singles as one line
-    seps = separator_line_ops(positioned, id_col)
-    seps = seps.select(
-        "*",
-        F.explode(
+
+    def op(section, seq, name, x, y, **kw) -> Column:
+        return sinks.draw_op(
+            1, section, seq, name, x, y, page_w=doc["w"], page_h=doc["h"], **kw
+        )
+
+    rects = sinks.draw_rows(
+        rect_ops(keyed, "_doc"),
+        doc["id"],
+        F.array(
             F.when(
-                F.col("line_type") == "double", F.array(F.lit(-4), F.lit(4))
-            ).otherwise(F.array(F.lit(0)))
-        ).alias("dy"),
-    ).select(
-        F.col(id_col),
-        F.lit(2).alias("section"),
-        (F.col("idx0") * 2 + (F.col("dy") > 0).cast("int")).alias("seq"),
-        F.lit("line").alias("op"),
-        F.col("x_start").cast("double").alias("x"),
-        (F.col("y_line") + F.col("dy")).cast("double").alias("y"),
-        F.col("x_end").cast("double").alias("x2"),
-        (F.col("y_line") + F.col("dy")).cast("double").alias("y2"),
-        nul.alias("w"),
-        nul.alias("h"),
-        F.lit(None).cast("string").alias("fill"),
-        F.lit(None).cast("string").alias("label"),
+                F.col("idx0") == 0,
+                op(0, 0, "text", MARGIN_LEFT, doc["h"] - 40,
+                   label=doc["id"].cast("string")),
+            ),
+            op(1, F.col("idx0"), F.col("op"), F.col("x"), F.col("y_pdf"),
+               w=F.col("w"), h=F.col("h"), fill=F.col("fill"),
+               label=F.col("label")),
+        ),
     )
-    braces = brace_ops(positioned, id_col)
-    brace_lines = braces.select(
-        F.col(id_col),
-        F.lit(3).alias("section"),
-        F.lit(0).alias("seq"),
-        F.lit("line").alias("op"),
-        F.col("brace_x").cast("double").alias("x"),
-        F.col("y_bot").alias("y"),
-        F.col("brace_x").cast("double").alias("x2"),
-        F.col("y_top").alias("y2"),
-        nul.alias("w"),
-        nul.alias("h"),
-        F.lit(None).cast("string").alias("fill"),
-        F.lit(None).cast("string").alias("label"),
+
+    def sep(dy: int, upper: int) -> Column:
+        y = F.col("y_line") + dy
+        return op(2, F.col("idx0") * 2 + upper, "line", F.col("x_start"), y,
+                  x2=F.col("x_end"), y2=y)
+
+    seps = sinks.draw_rows(
+        separator_line_ops(keyed, "_doc"),
+        doc["id"],
+        F.when(
+            F.col("line_type") == "double", F.array(sep(-4, 0), sep(4, 1))
+        ).otherwise(F.array(sep(0, 0))),
     )
-    brace_labels = braces.select(
-        F.col(id_col),
-        F.lit(3).alias("section"),
-        F.lit(1).alias("seq"),
-        F.lit("text").alias("op"),
-        (F.col("brace_x") + 10).cast("double").alias("x"),
-        F.col("label_y").alias("y"),
-        nul.alias("x2"),
-        nul.alias("y2"),
-        nul.alias("w"),
-        nul.alias("h"),
-        F.lit(None).cast("string").alias("fill"),
-        F.col("category").alias("label"),
+    cat_seq = F.array_position(
+        F.array(*[F.lit(c) for c in CATEGORY_COLORS]), F.col("category")
     )
-    ops = title.unionByName(rects).unionByName(seps).unionByName(brace_lines).unionByName(
-        brace_labels
+    braces = sinks.draw_rows(
+        brace_ops(keyed, "_doc"),
+        doc["id"],
+        F.array(
+            op(3, cat_seq, "line", F.col("brace_x"), F.col("y_bot"),
+               x2=F.col("brace_x"), y2=F.col("y_top")),
+            op(3, cat_seq, "text", F.col("brace_x") + 10, F.col("label_y"),
+               label=F.col("category")),
+        ),
     )
-    # plain equi-join on the case id (no broadcast hint: dims has one row
-    # PER CASE, which at 100 TB is far too large to broadcast; AQE may
-    # still choose broadcast at small SF)
-    return ops.join(dims, on=id_col)
+    return rects.unionByName(seps).unionByName(braces)
 
 
 def brace_ops(positioned: DataFrame, id_col: str) -> DataFrame:

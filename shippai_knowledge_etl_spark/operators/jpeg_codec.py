@@ -832,22 +832,6 @@ def build_huffman_spec(
     return tuple(bits[1:17]), huffval
 
 
-class _CountEmitter:
-    """First-pass scan walk: collects Huffman symbol frequencies."""
-
-    def __init__(self) -> None:
-        self.freq: dict[int, int] = {}
-
-    def sym(self, s: int) -> None:
-        self.freq[s] = self.freq.get(s, 0) + 1
-
-    def bits(self, v: int, n: int) -> None:
-        pass
-
-    def restart(self) -> None:
-        pass
-
-
 class _RecordEmitter:
     """Single scan walk that counts Huffman symbol frequencies AND
     records the emission stream, so the entropy pass is a replay of

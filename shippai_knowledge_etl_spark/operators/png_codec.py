@@ -68,18 +68,6 @@ def _adam7_dims(width: int, height: int):
     return out
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (RFC 2083 §6.6): nearest of left/up/up-left to
-    the linear estimate a + b - c, ties left > up > up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter_scanline(
     ftype: int, line: np.ndarray, prev: np.ndarray, bpp: int
 ) -> np.ndarray:

@@ -72,29 +72,6 @@ def status_summary(df: DataFrame) -> DataFrame:
     )
 
 
-def manifest(df: DataFrame, id_cols: list[str]) -> DataFrame:
-    """A3 manifest row: summary counts + per-case records collected into a
-    ``cases`` array of structs with status-dependent nullable payloads
-    (reference ``src/run.py:86-132``, U2 union-compatible shape).
-
-    ``collect_list`` of all rows only makes sense for run-manifest
-    cardinalities (one entry per *case batch*, not per data row); callers
-    at scale aggregate per batch/partition first.
-    """
-    case_struct = F.struct(
-        *[F.col(c) for c in id_cols],
-        F.col("status"),
-        F.when(F.col("status") == STATUS_EXCLUDED, F.col("missing_fields")).alias(
-            "missing_fields"
-        ),
-    )
-    summary = status_summary(df)
-    cases = df.agg(
-        F.array_sort(F.collect_list(case_struct)).alias("cases")
-    )
-    return summary.crossJoin(cases)
-
-
 def profile_table(df, columns: list[str]):
     """Data-profiling report: one row per profiled column with the
     stats a pipeline health check needs — row/null/distinct counts,

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from shippai_knowledge_etl_spark.functions import listparse, nested, scalar
 from shippai_knowledge_etl_spark.operators import quality
 from shippai_knowledge_etl_spark.sources import sinks
-from shippai_knowledge_etl_spark.sources.fetch import fetch_html, fetched_pages
+from shippai_knowledge_etl_spark.sources.fetch import fetch_html
 from shippai_knowledge_etl_spark.sources.html_parse import (
     case_page_facets,
     list_page_links,
@@ -127,7 +127,7 @@ def expand_worklist(
     if limit is not None:
         links = F.slice(links, 1, limit)
     fetched = lists.select(
-        "url", fetched_pages(F.col("url")).alias("page")
+        "url", fetch_html(F.col("url")).alias("page")
     ).cache()
     # a failed list fetch must be LOUD, not an empty expansion: the
     # explode over [] below would silently drop the whole list page
@@ -211,7 +211,7 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
         "seq",
         F.col("case_url"),
         scalar.case_id_from_url(F.col("case_url")).alias("case_id"),
-        fetched_pages(F.col("case_url")).alias("page"),
+        fetch_html(F.col("case_url")).alias("page"),
     )
     # Generate barrier: ONE parse per page (same pattern as
     # run_pipeline_e2e); fetch errors carry through as null body
@@ -337,33 +337,6 @@ RECORD_COLUMNS = (
 )
 
 
-_PAGE_W, _PAGE_H = 2100, 2970  # tenth-mm, A4
-
-
-def _pdf_op(page, section: int, seq, opname: str, x: float, y, **kw) -> F.Column:
-    """One draw-op struct in the uniform sink schema. ``page`` and
-    ``seq``/``y`` accept Columns for data-dependent placement."""
-    nd = F.lit(None).cast("double")
-    as_col = lambda v, t: (  # noqa: E731
-        v if isinstance(v, F.Column) else F.lit(v).cast(t)
-    )
-    return F.struct(
-        as_col(page, "int").alias("page"),
-        F.lit(section).alias("section"),
-        as_col(seq, "int").alias("seq"),
-        F.lit(opname).alias("op"),
-        F.lit(float(x)).alias("x"),
-        as_col(float(y) if not isinstance(y, F.Column) else y, "double").alias("y"),
-        kw.get("x2", nd).alias("x2"),
-        kw.get("y2", nd).alias("y2"),
-        kw.get("w", nd).alias("w"),
-        kw.get("h", nd).alias("h"),
-        kw.get("fill", F.lit(None).cast("string")).alias("fill"),
-        kw.get("label", F.lit(None).cast("string")).alias("label"),
-        kw.get("img", F.lit(None).cast("binary")).alias("img"),
-    )
-
-
 def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
     """Per-case composite report through the S6 emitter, mirroring the
     reference's section flow (src/render_pdf.py:324-471):
@@ -388,7 +361,8 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
     from shippai_knowledge_etl_spark.operators import diagram
     from shippai_knowledge_etl_spark.sources.fetch import fetch_binary
 
-    box_w = float(_PAGE_W - 200)  # text box inside 100-tmm side margins
+    op = sinks.draw_op
+    box_w = float(sinks.PAGE_W - 200)  # text box inside 100-tmm side margins
 
     def _head(
         sec: int, label: str | F.Column, seq: int = 0, h2: bool = False
@@ -396,15 +370,12 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
         """``h2=True`` for the headings the reference styles JP_H2
         (background fill + 13 pt, src/render_pdf.py:43-53,363,425,440);
         labeled one-liner fields stay plain text (JP_Label class)."""
-        lbl = F.lit(label) if isinstance(label, str) else label
         if h2:
-            return _pdf_op(-1, sec, seq, "h2", 100, 0.0,
-                           w=F.lit(box_w), label=lbl)
-        return _pdf_op(-1, sec, seq, "text", 100, 0.0, label=lbl)
+            return op(-1, sec, seq, "h2", 100, 0.0, w=box_w, label=label)
+        return op(-1, sec, seq, "text", 100, 0.0, label=label)
 
     def _body(sec: int, text: F.Column, seq: int = 1) -> F.Column:
-        return _pdf_op(-1, sec, seq, "para", 100, 0.0,
-                       w=F.lit(box_w), label=text)
+        return op(-1, sec, seq, "para", 100, 0.0, w=box_w, label=text)
 
     # --- flow content, reference section order ---
     ops: list[F.Column] = [_head(0, F.col("case_name"))]
@@ -426,10 +397,8 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
     ops.append(F.when(has_rep, _head(4, "代表図", h2=True)))
     ops.append(F.when(
         has_rep,
-        _pdf_op(-1, 4, 1, "image", 100, 0.0,
-                w=F.lit(1600.0), h=F.lit(1100.0),
-                img=fetch_binary(rep_url).getField("content"),
-                label=F.lit("代表図")),
+        op(-1, 4, 1, "image", 100, 0.0, w=1600.0, h=1100.0,
+           img=fetch_binary(rep_url).getField("content"), label="代表図"),
     ))
     prose = [
         ("事例概要", F.col("summary")),
@@ -481,43 +450,18 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
     # vs these seq>=1 values within the shared section
     src_ops = F.transform(
         F.col("sources"),
-        lambda s_, i: _pdf_op(-1, 13, i + 1, "para", 100, 0.0,
-                              w=F.lit(box_w), label=s_),
+        lambda s_, i: op(-1, 13, i + 1, "para", 100, 0.0, w=box_w, label=s_),
     )
-    dims = [
-        F.lit(_PAGE_W).cast("long").alias("page_w"),
-        F.lit(_PAGE_H).cast("long").alias("total_h"),
-    ]
-    text_ops = successes.select(
-        F.col("case_id").alias("doc_id"),
-        F.explode(
-            F.filter(F.concat(F.array(*ops), src_ops),
-                     lambda o: o.isNotNull())
-        ).alias("o"),
-    ).select("doc_id", "o.*", *dims)
+    text_ops = sinks.draw_rows(
+        successes, F.col("case_id"), F.concat(F.array(*ops), src_ops)
+    )
 
     # --- page 1: the diagonal diagram (scenario cases only) ---
     scen = successes.filter(nested.scenario_presence(F.col("scenario"))).select(
         F.col("case_id").alias("doc_id"), "scenario"
     )
-    pos = diagram.positioned_items_chunked(scen, "doc_id")
-    diag_ops = diagram.draw_ops(pos, "doc_id").select(
-        "doc_id",
-        F.lit(1).cast("int").alias("page"),
-        "section",
-        F.col("seq").cast("int").alias("seq"),
-        "op",
-        F.col("x").cast("double"),
-        F.col("y").cast("double"),
-        F.col("x2").cast("double"),
-        F.col("y2").cast("double"),
-        F.col("w").cast("double"),
-        F.col("h").cast("double"),
-        "fill",
-        "label",
-        F.lit(None).cast("binary").alias("img"),
-        F.col("page_w").cast("long"),
-        F.col("total_h").cast("long"),
+    diag_ops = diagram.draw_ops(
+        diagram.positioned_items_chunked(scen, "doc_id"), "doc_id"
     )
 
     # --- pages 2+: one multimedia image per page ---
@@ -532,22 +476,16 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
             F.concat(F.lit("../mf/"), F.col("m.id"), F.lit(".jpg")),
         )
     ).getField("content")
-    page_col = (F.col("i") + 2).cast("int")
-    mm_ops = mm.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                _pdf_op(page_col, 0, 0, "text", 100, _PAGE_H - 150,
-                        label=F.col("m.caption")),
-                _pdf_op(page_col, 0, 1, "image", 100, 300,
-                        w=F.lit(1900.0), h=F.lit(2300.0),
-                        img=mm_img, label=F.col("m.caption")),
-            )
-        ).alias("o"),
-    ).select("doc_id", "o.*", *dims)
+    page = F.col("i") + 2
+    mm_ops = sinks.draw_rows(mm, F.col("doc_id"), F.array(
+        op(page, 0, 0, "text", 100, sinks.PAGE_H - 150,
+           label=F.col("m.caption")),
+        op(page, 0, 1, "image", 100, 300, w=1900.0, h=2300.0,
+           img=mm_img, label=F.col("m.caption")),
+    ))
 
     draw = text_ops.unionByName(diag_ops).unionByName(mm_ops)
-    sinks.render_pdf_sink(draw, out_dir, id_col="doc_id")
+    sinks.render_pdf_sink(draw, out_dir)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -43,14 +43,3 @@ def get_spark(app_name: str = "shippai-knowledge-etl-spark") -> SparkSession:
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine conf to an externally built session.
-
-    The driver harness passes its own SparkSession to ``queries()``
-    callables; timestamp semantics must not depend on its timezone.
-    """
-    for k in ("spark.sql.session.timeZone", "spark.sql.adaptive.enabled"):
-        spark.conf.set(k, ENGINE_CONF[k])
-    return spark

@@ -20,7 +20,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -85,7 +84,3 @@ def fetch_binary(urls: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     for batch in urls:
         rows = [_fetch_one(opener, u, binary=True) for u in batch]
         yield pd.DataFrame(rows, columns=["content", "status", "error"])
-
-
-def fetched_pages(url_col: Column) -> Column:
-    return fetch_html(url_col)

@@ -4,9 +4,12 @@
     per-case filenames are a driver-side rename concern, kept out of
     executors).
   - S6 PDF report sink: foreachPartition emitter producing REAL,
-    openable single-page PDFs via the dependency-free writer in
-    sources/pdf_writer.py (no reportlab needed); the layout math lives
-    in operators/diagram.py and feeds it as draw-ops rows.
+    openable multi-page PDF reports (flowed prose pages, the scenario
+    diagram page, one page per multimedia image) via the
+    dependency-free writer in sources/pdf_writer.py (no reportlab
+    needed). Its input is rows of one draw-op format, built only by
+    ``draw_op``; the diagram layout math lives in
+    operators/diagram.py.
   - S7 run-manifest sink: max+1 numbered results_NNN.json; sequencing
     is inherently single-writer → computed on the driver
     (SURVEY §7.4 item 4). The streaming analog is foreachBatch batchId
@@ -20,7 +23,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.schemas import CASE_SCHEMA
@@ -139,19 +142,71 @@ def write_manifest_streamed(summary: dict, entries, out_dir: str) -> str:
     return path
 
 
-def render_pdf_sink(draw_ops: DataFrame, out_dir: str, id_col: str = "doc_id") -> None:
-    """S6: per-case PDF emission from the draw-ops table
-    (operators/diagram.py ``draw_ops``), matching the reference's
-    section order (src/render_pdf.py:324-471: title → bars → separator
-    lines → braces). Distributed shape: repartition on the case id so
-    one case's ops land contiguous in one task, sortWithinPartitions
-    pins draw order, then foreachPartition streams each case's rows
-    into a hand-rolled single-page PDF — no reportlab, no driver
-    collect, no whole-case materialization beyond one case's op rows.
+# Default page size, tenth-mm: A4 portrait.
+PAGE_W, PAGE_H = 2100, 2970
+
+
+def draw_op(
+    page, section, seq, op, x, y, *,
+    x2=None, y2=None, w=None, h=None, fill=None, label=None, img=None,
+    page_w=PAGE_W, page_h=PAGE_H,
+) -> Column:
+    """One drawing instruction in the S6 sink's row format — the only
+    place its fields and types are written down. Every argument is a
+    Column or a Python literal; unset fields are typed nulls.
+
+    ``page`` -1 marks flow content, which the sink lays out down the
+    page by measured height; other pages are drawn as given, in page
+    order. ``page_w`` x ``page_h`` (tenth-mm) is the size of the page
+    the op lands on. Within a page, ops draw in (section, seq, op)
+    order, so that key must be unique per document and page for the
+    PDF bytes not to depend on shuffle arrival order."""
+
+    def c(v, t: str) -> Column:
+        return (v if isinstance(v, Column) else F.lit(v)).cast(t)
+
+    return F.struct(
+        c(page, "int").alias("page"),
+        c(section, "int").alias("section"),
+        c(seq, "int").alias("seq"),
+        c(op, "string").alias("op"),
+        c(x, "double").alias("x"),
+        c(y, "double").alias("y"),
+        c(x2, "double").alias("x2"),
+        c(y2, "double").alias("y2"),
+        c(w, "double").alias("w"),
+        c(h, "double").alias("h"),
+        c(fill, "string").alias("fill"),
+        c(label, "string").alias("label"),
+        c(img, "binary").alias("img"),
+        c(page_w, "long").alias("page_w"),
+        c(page_h, "long").alias("page_h"),
+    )
+
+
+def draw_rows(df: DataFrame, doc_id: Column, ops: Column) -> DataFrame:
+    """Sink rows ``(doc_id, *draw_op fields)`` from an array of
+    :func:`draw_op` structs per input row; null entries (ops switched
+    off by a ``when``) are dropped."""
+    return (
+        df.select(doc_id.alias("doc_id"), F.explode(ops).alias("o"))
+        .filter(F.col("o").isNotNull())
+        .select("doc_id", "o.*")
+    )
+
+
+def render_pdf_sink(draw_ops: DataFrame, out_dir: str) -> None:
+    """S6: one multi-page PDF report per ``doc_id`` from
+    :func:`draw_rows` output, in the reference's page flow
+    (src/render_pdf.py:324-471): flow pages first, then the paged ops
+    (diagram, multimedia) in page order. Distributed shape: repartition
+    on the document id so one document's ops land contiguous in one
+    task, sortWithinPartitions pins draw order, then foreachPartition
+    streams each document's rows into a hand-rolled PDF — no reportlab,
+    no driver collect, no materialization beyond one document's op rows.
     ``out_dir`` must be storage every executor can reach (local mode:
     any dir; cluster mode: a shared mount)."""
     os.makedirs(out_dir, exist_ok=True)
-    paged = "page" in draw_ops.columns
 
     def emit(rows) -> None:
         from shippai_knowledge_etl_spark.sources.pdf_writer import (
@@ -184,36 +239,17 @@ def render_pdf_sink(draw_ops: DataFrame, out_dir: str, id_col: str = "doc_id") -
                 f.write(pdf_document(pages))
 
         for r in rows:
-            if r[id_col] != cur_id:
+            if r["doc_id"] != cur_id:
                 flush()
-                cur_id, cur_pages = r[id_col], {}
-            d = r.asDict()
-            page = cur_pages.setdefault(
-                d.get("page") or 0, {"ops": [], "w": 1000, "h": 1000}
-            )
-            page["w"], page["h"] = d["page_w"], d["total_h"]
-            page["ops"].append(
-                {
-                    "op": d["op"],
-                    "x": d["x"],
-                    "y": d["y"],
-                    "x2": d["x2"],
-                    "y2": d["y2"],
-                    "w": d["w"],
-                    "h": d["h"],
-                    "fill": d["fill"],
-                    "label": d["label"],
-                    # optional binary payload for image ops (callers
-                    # without an img column just never emit op="image")
-                    "img": bytes(d["img"]) if d.get("img") is not None else None,
-                }
-            )
+                cur_id, cur_pages = r["doc_id"], {}
+            page = cur_pages.setdefault(r["page"], {"ops": []})
+            page["w"], page["h"] = r["page_w"], r["page_h"]
+            page["ops"].append(r.asDict())
         flush()
 
-    sort_cols = [id_col, *(["page"] if paged else []), "section", "seq", "op"]
     (
-        draw_ops.repartition(F.col(id_col))
-        .sortWithinPartitions(*sort_cols)
+        draw_ops.repartition("doc_id")
+        .sortWithinPartitions("doc_id", "page", "section", "seq", "op")
         .foreachPartition(emit)
     )
 

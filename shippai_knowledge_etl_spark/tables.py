@@ -239,7 +239,3 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the streaming file source hands TIMESTAMP(NANOS) over as MICROS
     # when read through a long schema (measured; see normalize_events_ts)
     return normalize_events_ts(raw, unit="us")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}

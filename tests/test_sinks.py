@@ -102,18 +102,31 @@ def test_pdf_sink_renders_real_per_case_artifacts(spark, sf_dir, tmp_path):
         .when(F.array_contains("singles", F.col("idx0")), 1)
         .otherwise(0)
     )
+    # page size: total_h high, and wide enough for the last bar plus
+    # its brace (tenth-mm; the PDF's /MediaBox is in points)
+    pt = 72 / 254
+    page_w = (
+        diagram.MARGIN_LEFT + (F.max("total_items") - 1) * diagram.STEP_X
+        + diagram.BAR_W + diagram.BRACE_GAP + 200
+    )
     expected = {
-        r["doc_id"]: (r["n"], r["n_lines"] + r["n_cats"])
+        r["doc_id"]: (
+            r["n"],
+            r["n_lines"] + r["n_cats"],
+            b"/MediaBox [0 0 %.2f %.2f]" % (r["page_w"] * pt, r["page_h"] * pt),
+        )
         for r in pos.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(sep_weight).alias("n_lines"),
             F.countDistinct("category").alias("n_cats"),
+            page_w.alias("page_w"),
+            F.max("total_h").alias("page_h"),
         )
         .collect()
     }
     ops = diagram.draw_ops(pos, "doc_id")
-    sinks.render_pdf_sink(ops, str(tmp_path / "pdf"), id_col="doc_id")
+    sinks.render_pdf_sink(ops, str(tmp_path / "pdf"))
 
     files = sorted((tmp_path / "pdf").iterdir())
     assert len(files) == len(expected)
@@ -122,6 +135,7 @@ def test_pdf_sink_renders_real_per_case_artifacts(spark, sf_dir, tmp_path):
         raw = p.read_bytes()
         assert raw.startswith(b"%PDF-1.4")
         assert raw.rstrip().endswith(b"%%EOF")
+        assert raw.count(b"/MediaBox") == 1 and expected[doc_id][2] in raw
         n_rects = raw.count(b" re f")
         assert n_rects == expected[doc_id][0], f"doc {doc_id} rect count"
         assert raw.count(b" l S") == expected[doc_id][1], f"doc {doc_id} line count"
