@@ -14,8 +14,9 @@ src/extract.py:396-407) with ``--limit`` case links kept per list;
 skipped. An empty worklist exits 1 (src/run.py:79-81).
 
 Where the reference loops sequentially with 30 s timeouts per fetch,
-the worklist here is a DataFrame: fetches fan out partition-parallel
-(errors are data, never task failures), the parse edges are
+the worklist here is a DataFrame that ``expand_worklist`` spreads over
+``defaultParallelism`` partitions, so fetches fan out partition-parallel
+on every core (errors are data, never task failures), the parse edges are
 Arrow-batched HTML UDFs — ONE parse per page via a Generate barrier —
 and everything downstream is column expressions: the scenario sub-page
 (S3) is fetched per case and decoded Spark-side (F19 separator decode →
@@ -86,39 +87,56 @@ _PARA_FIELDS = {
 }
 
 
+_WARN_CAP = 100  # warning lines per kind before "... and N more"
+
+
+def _warn(lines: list[str], more: str) -> None:
+    """One stderr warning per line, capped so a pathological worklist
+    (e.g. fed from a file) cannot flood the terminal."""
+    for line in lines[:_WARN_CAP]:
+        print(f"warning: {line}", file=sys.stderr)
+    if len(lines) > _WARN_CAP:
+        print(f"warning: ... and {len(lines) - _WARN_CAP} more {more}",
+              file=sys.stderr)
+
+
 def expand_worklist(
     spark: SparkSession, urls: list[str], limit: int | None
 ) -> DataFrame:
-    """argv URLs → one row per case URL (``case_url`` + input-order
-    ``seq``, so the manifest lists cases in worklist order like the
-    reference's sequential loop)."""
-    routed = spark.createDataFrame(
-        [(u,) for u in urls], "url string"
-    ).select(
-        "url",
-        F.when(F.col("url").contains("/lis/"), "list")
-        .when(F.col("url").contains("/cf/"), "case")
-        .otherwise("skip")
-        .alias("route"),
-    )
-    # warning collects are capped at 100 rows so a pathological
-    # worklist (e.g. fed from a file) can never balloon the driver;
-    # the count() reports the full tally either way
-    skipped = routed.filter(F.col("route") == "skip")
-    n_skip = skipped.count()
-    for r in skipped.limit(100).collect():
-        print(f"warning: unrecognized URL pattern, skipping: {r.url}",
-              file=sys.stderr)
-    if n_skip > 100:
-        print(f"warning: ... and {n_skip - 100} more unrecognized URLs",
-              file=sys.stderr)
+    """argv URLs → the case worklist: one row per case URL
+    (``case_url``) with ``seq``, a bigint sort key holding the URL's
+    argv position in its high 32 bits and, for a link expanded from a
+    list page, the link's position on that page in its low 32. Ordering
+    by ``seq`` is worklist order, so the manifest lists cases the way
+    the reference's sequential loop appends them (src/run.py:66-77).
 
-    direct = routed.filter(F.col("route") == "case").select(
-        F.col("url").alias("case_url")
-    )
-    lists = routed.filter(F.col("route") == "list")
-    if lists.isEmpty():
-        return direct.withColumn("seq", F.monotonically_increasing_id())
+    argv is a handful of strings, so routing and the skip warnings run
+    on the driver; only list pages touch Spark. They are fetched and
+    parsed once into an eager checkpoint, whose failures are collected
+    for the warnings before the links are exploded.
+
+    The worklist is where ``process_cases`` gets its fan-out: the rows
+    come back spread over ``defaultParallelism`` partitions whose sizes
+    differ by at most one, so case fetch, parse and record assembly run
+    on every core. Direct-only argv runs no Spark job: its rows are
+    parallelized from the driver, already in that many equal slices.
+    """
+    cases: list[tuple[str, int, int]] = []
+    lists: list[tuple[int, str]] = []
+    skipped: list[str] = []
+    for pos, url in enumerate(urls):
+        if "/lis/" in url:
+            lists.append((pos, url))
+        elif "/cf/" in url:
+            cases.append((url, pos, 0))
+        else:
+            skipped.append(f"unrecognized URL pattern, skipping: {url}")
+    _warn(skipped, "unrecognized URLs")
+
+    direct = spark.createDataFrame(cases, "case_url string, pos long, link int")
+    seq = F.shiftleft("pos", 32).bitwiseOR(F.col("link")).alias("seq")
+    if not lists:
+        return direct.select("case_url", seq)
 
     links = F.filter(
         list_page_links(F.col("page.body")),
@@ -126,39 +144,40 @@ def expand_worklist(
     )
     if limit is not None:
         links = F.slice(links, 1, limit)
-    fetched = lists.select(
-        "url", fetch_html(F.col("url")).alias("page")
-    ).cache()
-    # a failed list fetch must be LOUD, not an empty expansion: the
-    # explode over [] below would silently drop the whole list page
-    # (reference surfaces list-expansion failures, src/run.py:66-77)
-    failed = fetched.filter(F.col("page.error").isNotNull())
-    n_failed = failed.count()
-    for r in failed.limit(100).collect():
-        print(
-            f"warning: list page fetch failed ({r.page.error}), "
-            f"0 cases expanded: {r.url}",
-            file=sys.stderr,
-        )
-    if n_failed > 100:
-        print(f"warning: ... and {n_failed - 100} more failed list fetches",
-              file=sys.stderr)
-    expanded = (
-        fetched.select("url", F.explode(links).alias("r"))
-        .select(scalar.resolve_url(F.col("url"), F.col("r.href")).alias("case_url"))
-    )
-    # the worklist is small (list-page anchors) — checkpoint it eagerly
-    # so (a) downstream actions (isEmpty + the case pipeline) never
-    # re-trigger the list-page HTTP fetch through lineage, and (b) the
-    # cached page BODIES can be released now instead of pinning
-    # executor memory for the whole run
-    out = (
-        direct.unionByName(expanded)
-        .withColumn("seq", F.monotonically_increasing_id())
+    pages = (
+        spark.createDataFrame(lists, "pos long, url string")
+        .select("pos", "url", fetch_html(F.col("url")).alias("page"))
+        .select("pos", "url", F.col("page.error").alias("error"),
+                links.alias("links"))
         .localCheckpoint(eager=True)
     )
-    fetched.unpersist()
-    return out
+    # a failed list fetch must be LOUD, not an empty expansion: the
+    # explode below would silently drop the whole list page (reference
+    # surfaces list-expansion failures, src/run.py:66-77)
+    failed = pages.filter(F.col("error").isNotNull()).collect()
+    _warn(
+        [f"list page fetch failed ({r.error}), 0 cases expanded: {r.url}"
+         for r in sorted(failed, key=lambda r: r.pos)],
+        "failed list fetches",
+    )
+    expanded = pages.select(
+        "pos", "url", F.posexplode("links").alias("link", "r")
+    ).select(
+        scalar.resolve_url(F.col("url"), F.col("r.href")).alias("case_url"),
+        "pos", "link",
+    )
+    # round-robin from ONE input partition deals the rows out evenly;
+    # seq is computed between the two so the optimizer cannot fold
+    # coalesce(1) into the repartition. The eager checkpoint pins the
+    # spread and keeps later actions from re-reading the list pages
+    # through lineage.
+    return (
+        direct.unionByName(expanded)
+        .coalesce(1)
+        .select("case_url", seq)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
 
 
 def _first_val(rows: F.Column, label: str) -> F.Column:

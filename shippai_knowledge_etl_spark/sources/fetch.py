@@ -6,10 +6,11 @@ iterator-form pandas UDF: one HTTP session per Python worker (connection
 reuse across Arrow batches), rows fetched within a partition, failures
 returned as null/status columns — never task failures (errors-are-data).
 
-Partition-parallel fan-out replaces the reference's sequential loop: at
-1000 executors the worklist shards naturally; rate limits are applied
-per-partition (sleep between requests) so cluster-wide QPS =
-partitions × per-partition rate — repartition the worklist to tune.
+Partition-parallel fan-out replaces the reference's sequential loop.
+Rows of one partition are fetched one after another, so the requests
+in flight equal the running tasks and the fan-out is the partitioning
+of the input: the CLI's ``run.expand_worklist`` spreads the case
+worklist evenly over ``defaultParallelism`` partitions.
 
 Correctness tests use a loopback HTTP server (tests/test_fetch.py);
 live-network use is smoke-only (SURVEY §7.4 item 6).

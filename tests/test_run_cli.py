@@ -99,8 +99,17 @@ TINY_JPEG = (
 )
 
 
+def _big_list(n: int) -> str:
+    """A list page of ``n`` case links (``/fkd/lis/big{n}.html``)."""
+    items = "".join(
+        f'<li><a href="../cf/CB{i:07d}.html">case {i}</a></li>' for i in range(n)
+    )
+    return f'<html><ul class="list_all">{items}</ul></html>'
+
+
 class _Site(BaseHTTPRequestHandler):
     def do_GET(self):
+        big = re.fullmatch(r"/fkd/lis/big(\d+)\.html", self.path)
         pages = {
             "/fkd/lis/lis1.html": LIST_PAGE,
             "/fkd/cf/CA0000001.html": CASE_OK,
@@ -118,7 +127,7 @@ class _Site(BaseHTTPRequestHandler):
             self.end_headers()
             self.wfile.write(images[self.path])
             return
-        body = pages.get(self.path)
+        body = _big_list(int(big.group(1))) if big else pages.get(self.path)
         if body is None:
             self.send_error(404)
             return
@@ -252,6 +261,11 @@ def test_cli_end_to_end(spark, site, tmp_path):
         "total": 3, "n_success": 1, "n_excluded": 1, "n_error": 1,
     }
     assert not (out / ".manifest_entries").exists()  # temp dir cleaned
+    # argv order: the list's links in page order, then the direct URL
+    # (reference src/run.py:66-77 appends cases in argv order)
+    assert [c["url"].rsplit("/", 1)[-1] for c in manifest["cases"]] == [
+        "CA0000001.html", "CA0000002.html", "CA0000404.html",
+    ]
     by_url = {c["url"].rsplit("/", 1)[-1]: c for c in manifest["cases"]}
     ok = by_url["CA0000001.html"]
     assert ok["case_id"] == "CA0000001"
@@ -277,3 +291,79 @@ def test_cli_empty_worklist_exits_1(spark, tmp_path):
 
     assert main(["http://x/unknown/route.html",
                  "--output-dir", str(tmp_path)]) == 1
+
+
+def _job_count(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through the job group ``group``
+    on the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_expand_worklist_spreads_rows_in_argv_order(spark, site):
+    """The worklist comes back spread over defaultParallelism partitions
+    (sizes within one of each other) and ordered by (argv position,
+    link position) — direct URLs on both sides of a list page."""
+    from shippai_knowledge_etl_spark.run import expand_worklist
+
+    par = spark.sparkContext.defaultParallelism
+    n = par * 4 + 3
+    argv = [f"{site}/cf/CA0000001.html", f"{site}/lis/big{n}.html",
+            f"{site}/cf/CA0000002.html"]
+    worklist = expand_worklist(spark, argv, None)
+
+    sizes = worklist.rdd.glom().map(len).collect()
+    rows = n + 2
+    assert sum(s > 0 for s in sizes) == min(rows, par), sizes
+    assert max(sizes) - min(s for s in sizes if s > 0) <= 1, sizes
+    urls = [r.case_url for r in sorted(worklist.collect(), key=lambda r: r.seq)]
+    assert urls == (
+        [argv[0]] + [f"{site}/cf/CB{i:07d}.html" for i in range(n)] + [argv[2]]
+    )
+
+
+def test_expand_worklist_warnings(spark, site, capsys):
+    """Unrecognized URLs and failed list fetches warn on stderr with the
+    reference-facing text; a 404 list page expands to zero cases."""
+    from shippai_knowledge_etl_spark.run import expand_worklist
+
+    unknown = f"{site}/xx/unknown.html"
+    missing = f"{site}/lis/missing.html"
+    worklist = expand_worklist(spark, [unknown, missing], None)
+    assert worklist.count() == 0
+    warned = [ln for ln in capsys.readouterr().err.splitlines()
+              if ln.startswith("warning: ")]
+    assert warned == [
+        f"warning: unrecognized URL pattern, skipping: {unknown}",
+        f"warning: list page fetch failed (http 404), 0 cases expanded: {missing}",
+    ]
+
+    # at most 100 lines per kind, then one summary line
+    expand_worklist(spark, [f"http://x/{i}.html" for i in range(101)], None)
+    warned = [ln for ln in capsys.readouterr().err.splitlines()
+              if ln.startswith("warning: ")]
+    assert len(warned) == 101
+    assert warned[-1] == "warning: ... and 1 more unrecognized URLs"
+
+
+def test_expand_worklist_job_count(spark, site):
+    """Routing stays on the driver: direct URLs alone run no Spark job,
+    and one list page runs the list checkpoint, the failure collect and
+    the spread checkpoint (shuffle map stage + result): 4 jobs."""
+    from shippai_knowledge_etl_spark.run import expand_worklist
+
+    direct = [f"{site}/cf/CA0000001.html", f"{site}/cf/CA0000002.html"]
+    n_direct = _job_count(
+        spark, "expand-direct", lambda: expand_worklist(spark, direct, None)
+    )
+    assert n_direct == 0
+    n_list = _job_count(
+        spark, "expand-list",
+        lambda: expand_worklist(spark, [f"{site}/lis/lis1.html"], None),
+    )
+    assert n_list <= 4, n_list
