@@ -22,6 +22,12 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # 10 MB default is conservative; dims (region/nation/labels) are tiny.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # PySpark wraps every Column and functions call to record its Python
+    # call site, about 10 extra py4j round trips per call. Plans built
+    # from hundreds of Columns pay seconds of driver time for it. Off,
+    # an analysis error loses only the Python file:line of its
+    # DataFrame context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import re
 import threading
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
@@ -108,7 +109,10 @@ def _big_list(n: int) -> str:
 
 
 class _Site(BaseHTTPRequestHandler):
+    hits: Counter = Counter()  # requests per path; the server is single-threaded
+
     def do_GET(self):
+        self.hits[self.path] += 1
         big = re.fullmatch(r"/fkd/lis/big(\d+)\.html", self.path)
         pages = {
             "/fkd/lis/lis1.html": LIST_PAGE,
@@ -367,3 +371,88 @@ def test_expand_worklist_job_count(spark, site):
         lambda: expand_worklist(spark, [f"{site}/lis/lis1.html"], None),
     )
     assert n_list <= 4, n_list
+
+
+@pytest.fixture(scope="module")
+def pdf_run(spark, site, tmp_path_factory):
+    """One ``main --pdf`` call over ``lis1`` (limit 2): the frames handed
+    to the JSON and PDF sinks, and the site's requests per path."""
+    from shippai_knowledge_etl_spark.run import main
+    from shippai_knowledge_etl_spark.sources import sinks
+
+    frames = {}
+
+    def capture(name):
+        sink = getattr(sinks, name)
+
+        def wrapper(df, out_dir):
+            frames[name] = df
+            return sink(df, out_dir)
+        return wrapper
+
+    _Site.hits.clear()
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("write_cases_json_named", "render_pdf_sink"):
+            mp.setattr(sinks, name, capture(name))
+        out = tmp_path_factory.mktemp("pdf_run")
+        rc = main([f"{site}/lis/lis1.html", "--limit", "2",
+                   "--output-dir", str(out), "--pdf"])
+    assert rc == 0
+    return frames, dict(_Site.hits)
+
+
+@pytest.mark.slow
+def test_sinks_plan_over_checkpointed_records(pdf_run):
+    """The records are checkpointed before any sink: the sink frames'
+    analyzed plans carry no fetch or parse UDF, so the driver plans them
+    over a one-node leaf and no page can be re-fetched through lineage."""
+    frames, _ = pdf_run
+    assert set(frames) == {"write_cases_json_named", "render_pdf_sink"}
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        for udf in ("fetch_html", "case_page_facets", "scenario_page_facts"):
+            assert udf not in plan, (name, udf)
+
+
+@pytest.mark.slow
+def test_each_page_fetched_once(pdf_run):
+    """One call requests every page and image once; the scenario page
+    both cases link is requested once per linking case."""
+    _, hits = pdf_run
+    assert hits == {
+        "/fkd/lis/lis1.html": 1,
+        "/fkd/cf/CA0000001.html": 1,
+        "/fkd/cf/CA0000002.html": 1,
+        "/fkd/sf/SA0000001.html": 2,
+        "/fkd/df/DZ001.jpg": 1,
+        "/fkd/mf/MA1.jpg": 1,
+        "/fkd/mf/MA2.jpg": 1,
+    }
+
+
+def test_engine_session_skips_call_site_capture(spark, monkeypatch):
+    """PySpark's call-site capture costs about 10 py4j round trips per
+    Column or functions call, seconds of driver time per CLI call;
+    ENGINE_CONF turns it off. Clearing the module's cache makes the
+    check read the session conf."""
+    from pyspark.errors import utils
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
+
+
+def test_manifest_failure_removes_entries_dir(spark, site, tmp_path, monkeypatch):
+    """A manifest write that raises still removes the temporary
+    ``.manifest_entries`` directory."""
+    from shippai_knowledge_etl_spark.run import main
+    from shippai_knowledge_etl_spark.sources import sinks
+
+    def fail(*a, **k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sinks, "write_manifest_streamed", fail)
+    out = tmp_path / "data"
+    with pytest.raises(OSError, match="disk full"):
+        main([f"{site}/cf/CA0000001.html", "--output-dir", str(out)])
+    assert (out / "CA0000001_タンク爆発.json").exists()
+    assert not (out / ".manifest_entries").exists()
