@@ -1,7 +1,8 @@
 """Nested-array restructuring primitives (SURVEY.md §2.8 W1/W2, §2.5 O1/O3).
 
-All pure higher-order-function expressions — chunking, boundary slicing,
-ordinal sort, order-preserving dedup — usable per-row on array columns.
+All pure column expressions — chunking, boundary slicing, ordinal
+sort, order-preserving dedup, first-label lookup — usable per-row on
+array columns.
 One case = one row, so every operator here is a narrow map at any scale.
 """
 
@@ -103,3 +104,15 @@ def scenario_presence(scenario: Column) -> Column:
         + F.size(scenario.getField("action"))
         + F.size(scenario.getField("result"))
     ) > 0
+
+
+def first_val(rows: Column, label: str) -> Column:
+    """First occurrence of a label among ``array<struct<label,value>>``
+    rows (the bgcolor-sentinel label/value pairs the case-page parser
+    emits) — raw value (``<br>`` already mapped to newline by the
+    parser), ``""`` when absent. A position lookup on the label array,
+    no lambda."""
+    pos = F.array_position(rows.getField("label"), label).cast("int")
+    return F.coalesce(
+        F.when(pos > 0, F.element_at(rows.getField("value"), pos)), F.lit("")
+    )

@@ -40,38 +40,13 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles(col: Column, n: int = 3, max_tokens: int | None = None) -> Column:
-    """Distinct n-gram (word) shingles over the full token stream.
-    ``max_tokens`` optionally bounds very long documents (a recall
-    trade-off some production dedup pipelines take); default is
-    unbounded — the round-1 demo cap of 12 is lifted."""
-    toks = tokenize(col)
-    if max_tokens is not None:
-        toks = F.slice(toks, 1, max_tokens)
-
-    # let-bind the token array (one-element transform) so the per-gram
-    # slices read a lambda variable — an expression inside a HOF lambda
-    # is re-evaluated per element, so the unbound form re-ran tokenize
-    # for EVERY gram (see operators/textops._let)
-    def _grams(t: Column) -> Column:
-        return F.when(
-            F.size(t) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - n),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", t)))
-
-    return F.array_distinct(F.element_at(F.transform(F.array(toks), _grams), 1))
-
-
 def shingle_structs(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as structs — same set semantics as
-    :func:`shingles` (concat_ws(' ') over space-free tokens is
-    injective, so struct equality ≡ joined-string equality) but built
-    from zero lambda higher-order functions.
+    """Distinct word n-grams as structs — the same set as the
+    space-joined gram strings (concat_ws(' ') over space-free tokens
+    is injective, so struct equality ≡ joined-string equality) but
+    built from zero lambda higher-order functions.
 
-    Why a second form exists: HOFs (`transform`/`filter`/`aggregate`)
+    Why structs and not strings: HOFs (`transform`/`filter`/`aggregate`)
     are CodegenFallback — evaluated through the shared interpreter
     classes, whose megamorphic call sites get profile-polluted once a
     session has run several different lambda expressions, and then run
@@ -79,9 +54,7 @@ def shingle_structs(col: Column, n: int = 3) -> Column:
     `split`/`slice`/`arrays_zip`/`array_distinct` all have real
     codegen, so this form stays inside WholeStageCodegen — fresh
     per-query generated classes with direct calls, immune to interpreter
-    profile state. The dedup hot paths use this; the string form remains
-    as the oracle-facing semantic definition (and its ``max_tokens``
-    knob documents the long-document recall trade-off).
+    profile state.
     """
     toks = tokenize(col)
     sz = F.size(toks)

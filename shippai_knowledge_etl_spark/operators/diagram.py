@@ -134,40 +134,6 @@ def boundary_markers(df: DataFrame, id_col: str, scenario_col: str = "scenario")
     )
 
 
-def with_y_positions(items: DataFrame, markers: DataFrame, id_col: str) -> DataFrame:
-    """W5: running y position with data-dependent spacing — the
-    cumulative-window form of the reference's y accumulation loop
-    (src/render_pdf.py:217-227):
-      y[i] = margin_top + i*step_y + Σ_{j<i} extra[j]
-    plus the per-case total height (drawing canvas extent).
-    """
-    j = items.join(markers.drop("total_items"), on=id_col)
-    extra = (
-        F.when(F.array_contains("doubles", F.col("idx0")), F.lit(DSEP_EXTRA))
-        .when(F.array_contains("singles", F.col("idx0")), F.lit(SEP_EXTRA))
-        .otherwise(F.lit(0))
-    )
-    w_prev = (
-        Window.partitionBy(id_col)
-        .orderBy("idx0")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.partitionBy(id_col)
-    out = j.withColumn("extra", extra).withColumn(
-        "y",
-        F.lit(MARGIN_TOP)
-        + F.col("idx0") * STEP_Y
-        + F.coalesce(F.sum("extra").over(w_prev), F.lit(0)),
-    )
-    return out.withColumn(
-        "total_h",
-        F.lit(MARGIN_TOP)
-        + F.col("total_items") * STEP_Y
-        + F.sum("extra").over(w_all)
-        + F.lit(BOTTOM_PAD),
-    )
-
-
 def category_ranges(items: DataFrame, id_col: str) -> DataFrame:
     """W6/A5: per category present, first/last item index and the mid
     index used for brace-label placement (src/render_pdf.py:257-269)."""
@@ -183,13 +149,13 @@ def positioned_items(df: DataFrame, id_col: str, scenario_col: str = "scenario")
     markers, extras, y positions, canvas height) is computed ARRAY-SIDE
     within the case's row, then exploded once.
 
-    The staged forms above (flatten_renumber → boundary_markers →
-    with_y_positions) are semantically identical but cost a count
-    window + a join + a running-sum window — three shuffles of purely
-    per-case data. One case = one row, so none of them are needed: this
-    is the plan you want at 100 TB (a narrow map + generator; scales
-    embarrassingly). Kept alongside the staged forms because the driver
-    oracles pin both to the same answers.
+    The staged forms above (flatten_renumber → boundary_markers) give
+    the same numbering and markers but cost a count window + a join,
+    and a staged y accumulation would add a running-sum window — three
+    shuffles of purely per-case data. One case = one row, so none of
+    them are needed: this is the plan you want at 100 TB (a narrow map
+    + generator; scales embarrassingly). Kept alongside the staged
+    forms because the driver oracles pin both to the same answers.
     """
     # Generate barrier: CollapseProject would otherwise re-inline the
     # (HOF-heavy, CSE-exempt) scenario expression into every column that

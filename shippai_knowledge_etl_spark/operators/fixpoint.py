@@ -1,11 +1,13 @@
 """[EXT] Generic iterative-dataflow fixpoint operator (round 12,
 VERDICT r11 item 8's named stretch).
 
-Every iterative loop this engine runs — PageRank's damped propagation,
-connected components' min-label exchange, k-core's monotone peel, BFS
-frontier expansion, Markov power iteration, Bellman-Ford relaxation —
-shares one skeleton: a state DataFrame, a step that joins state
-against a static relation and re-aggregates, ``localCheckpoint``
+Every iterative loop this engine runs over DataFrame state —
+PageRank's damped propagation, connected components' min-label
+exchange, k-core's monotone peel, BFS frontier expansion, Markov power
+iteration, Bellman-Ford relaxation, Lloyd's k-means and PQ codebook
+rounds, Bradley-Terry MM rounds, random-walk steps — shares one
+skeleton: a state DataFrame, a step that joins state against a static
+relation and re-aggregates, ``localCheckpoint``
 lineage truncation so N rounds cost O(1) plan depth, and either a
 fixed round budget (exactly oracle-unrollable as chained CTEs — the
 repo's graph-gate convention) or a convergence probe (the recursive-
@@ -22,12 +24,18 @@ extra exchange, no driver-side data movement. ``localCheckpoint``
 (non-eager on the cadence, one eager cut at the end when requested)
 bounds both lineage depth and scheduler recursion at 1000-round
 scale; the optional convergence probe is one bounded action per round
-(`exceptAll(prev).limit(1)` — at most one row crosses to the driver),
-the same sanctioned-action class as ``pagerank_until``'s residual
-probe. At 100 TB the state frame is node-keyed and orders of
-magnitude smaller than the fact tables; the static relation should
+(`exceptAll(prev).limit(1)` — at most one row crosses to the driver).
+At 100 TB the state frame is node-keyed and orders of magnitude
+smaller than the fact tables; the static relation should
 arrive pre-partitioned on the join key so every round reuses one
 partitioning.
+
+Three loops stay outside it because each round's result lives on the
+driver: ``bpe.bpe_train`` (a merge list, stopped by a
+collected argmax), ``curate.logreg_quality_train`` (a weight dict) and
+``retrieval.mmr_rerank_distributed`` (a greedy pick list that stops on
+an empty pool). ``tests/test_dedup.py::test_dataframe_loops_use_iterate``
+fails on any other loop that rebinds a DataFrame across rounds.
 
 Reference analog: none — the reference (a 1,069-LoC sequential
 scraper) has no iteration beyond its URL loop (src/run.py:90-137);

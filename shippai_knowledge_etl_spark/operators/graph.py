@@ -19,9 +19,11 @@ Docstring convention (round-9 verdict item 7): operator functions take
 edge lists plus PRECOMPUTED sizes (``n_nodes`` / ``n_seeds`` ints) and
 never trigger Spark actions at plan-build — sizing counts belong to
 the query wrapper (where a demo graph is being synthesized) or to the
-caller's catalog stats (where a real edge list arrives). The one
-sanctioned action in this module is ``pagerank_until``'s per-round
-convergence probe, which is the operator's semantics, not sizing.
+caller's catalog stats (where a real edge list arrives). The only
+sanctioned actions in this module are the per-round convergence probes
+of ``fixpoint.iterate``'s fixpoint mode (``pagerank_until``'s residual,
+``shortest_paths``' empty frontier), which are the operators'
+semantics, not sizing.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from shippai_knowledge_etl_spark.operators.fixpoint import iterate
+from shippai_knowledge_etl_spark.operators.fixpoint import StepFn, iterate
 from shippai_knowledge_etl_spark.tables import (
     _parse_bytes_conf,
     estimated_input_bytes,
@@ -38,17 +40,13 @@ from shippai_knowledge_etl_spark.tables import (
 SCALE = 1_000_000_000_000  # ranks in units of 1e-12
 
 
-def pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
-    n_iters: int = 3,
-    damping_pct: int = 85,
-    checkpoint_every: int = 1,
-    *,
-    n_nodes: int,
-) -> DataFrame:
-    """Fixed-iteration PageRank over (``nodes``: col ``id``;
-    ``edges``: cols ``src``, ``dst``), returning (id, rank_scaled).
+def _pagerank_rounds(
+    nodes: DataFrame, edges: DataFrame, damping_pct: int, n: int
+) -> tuple[DataFrame, StepFn, DataFrame]:
+    """The setup and round shared by :func:`pagerank` and
+    :func:`pagerank_until`: returns (uniform initial ranks, the round
+    step for :func:`iterate`, the persisted degree-annotated edge list
+    the caller unpersists once the state is materialized).
 
     Per round: rank/outdeg contribution per edge (integer ``div``),
     sum by dst (map-side partial agg — the only wide shuffle, keyed
@@ -57,18 +55,9 @@ def pagerank(
     the full node universe (left join + coalesce keeps zero-inbound
     nodes, which a bare groupBy(dst) would silently drop). Dangling
     nodes (outdeg 0 after self-loop removal) simply emit nothing —
-    the standard simplification, documented rather than hidden.
-
-    Scale: state is 2 longs per node; edges never materialize
-    anything wider than (dst, contrib) into the shuffle. localCheckpoint
-    every ``checkpoint_every`` rounds keeps lineage O(1) like the CC
-    operators; convergence beyond ``n_iters`` is the caller's loop.
-    """
+    the standard simplification, documented rather than hidden."""
     edges = edges.filter(F.col("src") != F.col("dst"))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    n = n_nodes  # caller-supplied: operators never trigger sizing actions
-    if n == 0:
-        return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
     base = SCALE // n
     reset = (base * (100 - damping_pct)) // 100
     ranks = nodes.select("id", F.lit(base).alias("rank_scaled"))
@@ -97,6 +86,31 @@ def pagerank(
             ).alias("rank_scaled"),
         )
 
+    return ranks, step, deg_edges
+
+
+def pagerank(
+    nodes: DataFrame,
+    edges: DataFrame,
+    n_iters: int = 3,
+    damping_pct: int = 85,
+    checkpoint_every: int = 1,
+    *,
+    n_nodes: int,
+) -> DataFrame:
+    """Fixed-iteration PageRank over (``nodes``: col ``id``;
+    ``edges``: cols ``src``, ``dst``), returning (id, rank_scaled);
+    the round is :func:`_pagerank_rounds`.
+
+    Scale: state is 2 longs per node; edges never materialize
+    anything wider than (dst, contrib) into the shuffle. localCheckpoint
+    every ``checkpoint_every`` rounds keeps lineage O(1) like the CC
+    operators; convergence beyond ``n_iters`` is :func:`pagerank_until`.
+    """
+    n = n_nodes  # caller-supplied: operators never trigger sizing actions
+    if n == 0:
+        return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
+    ranks, step, deg_edges = _pagerank_rounds(nodes, edges, damping_pct, n)
     # eager final checkpoint: materializes the state (and any pending
     # lazy checkpoints) so the cached edge list can be released now
     ranks, _, _ = iterate(
@@ -116,11 +130,11 @@ def pagerank_until(
     *,
     n_nodes: int,
 ) -> DataFrame:
-    """Convergence-terminated PageRank: iterate single rounds (each via
-    :func:`pagerank` with the shared integer arithmetic) until the max
-    per-node rank change falls below ``tol_scaled`` or ``max_iters`` is
-    hit — raising if it never converges, the same loud-failure contract
-    as ``dedup.connected_components``.
+    """Convergence-terminated PageRank: the :func:`pagerank` round,
+    iterated until the max per-node rank change falls below
+    ``tol_scaled`` or ``max_iters`` is hit — raising if it never
+    converges, the same loud-failure contract as
+    ``dedup.connected_components``.
 
     The convergence probe is a 1-row driver collect per round (join old
     vs new on id, global max of |delta| — a map-side-combined agg), the
@@ -131,57 +145,31 @@ def pagerank_until(
     n = n_nodes  # caller-supplied (module docstring convention)
     if n == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
-    ranks = nodes.select(
-        "id", F.lit(SCALE // n).alias("rank_scaled")
-    ).localCheckpoint(eager=True)
-    edges = edges.filter(F.col("src") != F.col("dst"))
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    deg_edges = edges.join(outdeg, "src").persist()
-    reset = ((SCALE // n) * (100 - damping_pct)) // 100
+    ranks, step, deg_edges = _pagerank_rounds(nodes, edges, damping_pct, n)
+
+    def settled(prev: DataFrame, new: DataFrame) -> bool:
+        delta = (
+            new.alias("n")
+            .join(prev.alias("o"), "id")
+            .agg(
+                F.max(
+                    F.abs(F.col("n.rank_scaled") - F.col("o.rank_scaled"))
+                ).alias("d")
+            )
+            .collect()[0]["d"]
+        )
+        return delta is not None and delta <= tol_scaled
+
     try:
-        for _ in range(max_iters):
-            contribs = (
-                deg_edges.join(ranks.withColumnRenamed("id", "src"), "src")
-                .select(
-                    "dst", F.expr("rank_scaled div outdeg").alias("contrib")
-                )
-                .groupBy("dst")
-                .agg(F.sum("contrib").alias("inflow"))
-            )
-            new_ranks = (
-                nodes.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(reset)
-                        + F.expr(
-                            f"({damping_pct} * coalesce(inflow, 0)) div 100"
-                        )
-                    ).alias("rank_scaled"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            delta = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "id")
-                .agg(
-                    F.max(
-                        F.abs(
-                            F.col("n.rank_scaled") - F.col("o.rank_scaled")
-                        )
-                    ).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta <= tol_scaled:
-                return ranks
+        ranks, _, converged = iterate(ranks, step, max_iters, stop_when=settled)
     finally:
         deg_edges.unpersist()
-    raise RuntimeError(
-        f"pagerank_until: no convergence to {tol_scaled} within "
-        f"{max_iters} iterations"
-    )
+    if not converged:
+        raise RuntimeError(
+            f"pagerank_until: no convergence to {tol_scaled} within "
+            f"{max_iters} iterations"
+        )
+    return ranks
 
 
 def label_propagation(

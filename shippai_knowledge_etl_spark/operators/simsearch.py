@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shippai_knowledge_etl_spark.operators.fixpoint import iterate
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-to-right fold — deterministic summation order,
@@ -201,21 +203,31 @@ def assign_clusters(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (tiny) centroid table
     against every vector, argmin via min_by with a deterministic
     cluster-id tie-break. One narrow pass over the corpus — the corpus
-    itself never shuffles."""
-    scored = corpus.crossJoin(F.broadcast(centroids))
+    itself never shuffles. Returns (*keys, id, cluster, vec, dist).
+
+    ``keys`` scopes the centroids (PQ's ``("sub_id",)``: one codebook
+    per subspace), making the broadcast an equi-join; unkeyed it stays
+    a cross join, as ``join(on=[])`` raises in PySpark. The vector
+    rides through ``min_by`` so the update needs no join back."""
+    if keys:
+        scored = corpus.join(F.broadcast(centroids), list(keys))
+    else:
+        scored = corpus.crossJoin(F.broadcast(centroids))
     d = _sq_dist(F.col(vec_col), F.col("centroid"))
     return (
         scored.select(
+            *keys,
             F.col(id_col),
             F.col(vec_col),
             F.col("cluster"),
             F.round(d, 9).alias("dist"),
         )
-        .groupBy(id_col)
+        .groupBy(id_col, *keys)
         .agg(
             F.min_by(
                 F.struct(F.col("cluster"), F.col(vec_col).alias("vec")),
@@ -224,12 +236,66 @@ def assign_clusters(
             F.min("dist").alias("dist"),
         )
         .select(
+            *keys,
             id_col,
             F.col("_m.cluster").alias("cluster"),
             F.col("_m.vec").alias(vec_col),
             "dist",
         )
     )
+
+
+def _update_centroids(
+    assigned: DataFrame, vec_col: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Lloyd's update over an :func:`assign_clusters` frame: explode
+    (cluster, dim, value), average per (cluster, dim) — a shuffle of
+    corpus×dims scalar rows with map-side combine, the standard
+    MapReduce k-means shape — and rebuild each centroid in dim order.
+    The rebuild sorts (pos, x) structs and extracts the field array,
+    so no lambda runs per row. Returns (*keys, cluster, centroid)."""
+    return (
+        assigned.select(
+            *keys, "cluster", F.posexplode(vec_col).alias("pos", "x")
+        )
+        .groupBy(*keys, "cluster", "pos")
+        .agg(F.avg("x").alias("x"))
+        .groupBy(*keys, "cluster")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("pos", "x")))
+            .getField("x")
+            .alias("centroid")
+        )
+    )
+
+
+def _seeds(corpus: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """(cluster, centroid): the k lowest-id vectors, numbered by id."""
+    from pyspark.sql import Window
+
+    return (
+        corpus.orderBy(id_col)
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy(id_col)) - 1).alias("cluster"),
+            F.col(vec_col).alias("centroid"),
+        )
+    )
+
+
+def _lloyd(
+    points: DataFrame, seeds: DataFrame, n_iter: int, id_col: str,
+    vec_col: str, keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """``n_iter`` Lloyd rounds from ``seeds``; the centroid table is
+    checkpointed each round, and eagerly at the end."""
+
+    def step(centroids: DataFrame, _i: int) -> DataFrame:
+        assigned = assign_clusters(points, centroids, id_col, vec_col, keys)
+        return _update_centroids(assigned, vec_col, keys)
+
+    centroids, _, _ = iterate(seeds, step, n_iter, eager_final=True)
+    return centroids
 
 
 def kmeans_fit(
@@ -243,43 +309,17 @@ def kmeans_fit(
     the real version of the ``label``-as-bucket stand-in.
 
     Per round: assignment is a broadcast-join argmin (narrow over the
-    corpus); the centroid update explodes (cluster, dim, value) and
-    averages per (cluster, dim) — a shuffle of corpus×dims scalar rows
-    with map-side combine, the standard MapReduce k-means shape. The
-    centroid table (k×dims) is localCheckpoint'ed each round so lineage
-    stays O(1); at cluster scale swap in reliable checkpoint(). Returns
+    corpus), then :func:`_update_centroids`. At cluster scale swap the
+    per-round localCheckpoint for a reliable checkpoint(). Returns
     (assignments, centroids).
 
     Deterministic: seeds are the k lowest-id vectors, ties in argmin
     break on cluster id, and per-dim means use exact double sums over a
     fixed grouping — same result at any parallelism up to FP summation
     order in avg() (bounded by shuffle determinism of groupBy keys)."""
-    from pyspark.sql import Window
-
-    seeds = (
-        corpus.orderBy(id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy(id_col)) - 1).alias("cluster"),
-            F.col(vec_col).alias("centroid"),
-        )
+    centroids = _lloyd(
+        corpus, _seeds(corpus, k, id_col, vec_col), n_iter, id_col, vec_col
     )
-    centroids = seeds.localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-        centroids = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("x"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "x"))),
-                    lambda s: s.getField("x"),
-                ).alias("centroid")
-            )
-            .localCheckpoint(eager=True)
-        )
     # final assignment runs against the RETURNED centroids — otherwise a
     # caller routing query vectors by centroid searches buckets the
     # corpus was never assigned to (and n_iter=0 stays well-defined)
@@ -415,60 +455,24 @@ def pq_train(
 ) -> DataFrame:
     """Train the m per-subspace codebooks (k codes each) — ALL
     subspaces in one distributed k-means loop: the (id, sub_id, subvec)
-    frame carries every subspace, assignment joins on sub_id against
-    the broadcast codebook table, and the centroid update groups on
-    (sub_id, code, dim). One loop, m codebooks — the shuffle volume per
-    round is corpus×dims scalars with map-side combine, identical to
-    one full-width k-means, never m of them.
+    frame carries every subspace and the shared Lloyd round is keyed
+    by sub_id (assignment joins on sub_id against the broadcast
+    codebook table; the update groups on (sub_id, code, dim)). One
+    loop, m codebooks — the shuffle volume per round is corpus×dims
+    scalars with map-side combine, identical to one full-width
+    k-means, never m of them.
 
-    Deterministic: seeds are the k lowest-id vectors per subspace;
-    argmin ties break on code. Returns (sub_id, code, centroid)."""
-    from pyspark.sql import Window
-
+    Deterministic: seeds are the k lowest-id vectors per subspace —
+    the subvectors of k-means' own seeds; argmin ties break on code.
+    Returns (sub_id, code, centroid)."""
     sub = subvectors(corpus, m, dims, id_col, vec_col).localCheckpoint(
-        eager=True  # the train loop re-reads it n_iter+1 times
+        eager=True  # the train loop re-reads it every round
     )
-    w = Window.partitionBy("sub_id").orderBy(id_col)
-    books = (
-        sub.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "sub_id", (F.col("rn") - 1).alias("code"),
-            F.col("subvec").alias("centroid"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_iter):
-        assigned = _pq_assign(sub, books, id_col)
-        books = (
-            assigned.join(sub, [id_col, "sub_id"])
-            .select("sub_id", "code", F.posexplode("subvec").alias("pos", "x"))
-            .groupBy("sub_id", "code", "pos")
-            .agg(F.avg("x").alias("x"))
-            .groupBy("sub_id", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "x"))),
-                    lambda s: s.getField("x"),
-                ).alias("centroid")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return books
-
-
-def _pq_assign(sub: DataFrame, books: DataFrame, id_col: str) -> DataFrame:
-    """Nearest-code per (id, sub_id): broadcast-join the codebooks on
-    sub_id, argmin via min_by with a code tie-break."""
-    scored = sub.join(F.broadcast(books), "sub_id")
-    d = _sq_dist(F.col("subvec"), F.col("centroid"))
-    return (
-        scored.select(
-            id_col, "sub_id", "code", F.round(d, 9).alias("dist")
-        )
-        .groupBy(id_col, "sub_id")
-        .agg(F.min_by("code", F.struct("dist", "code")).alias("code"))
-    )
+    seeds = subvectors(
+        _seeds(corpus, k, id_col, vec_col), m, dims, "cluster", "centroid"
+    ).withColumnRenamed("subvec", "centroid")
+    books = _lloyd(sub, seeds, n_iter, id_col, "subvec", ("sub_id",))
+    return books.select("sub_id", F.col("cluster").alias("code"), "centroid")
 
 
 def pq_encode(
@@ -480,11 +484,13 @@ def pq_encode(
     100 TB ANN index stores. The codes array is rebuilt lambda-free
     with m conditional-max agg columns (same order-safe trick as
     span_dedup_profile)."""
-    assigned = _pq_assign(
-        subvectors(corpus, m, dims, id_col, vec_col), books, id_col
+    assigned = assign_clusters(
+        subvectors(corpus, m, dims, id_col, vec_col),
+        books.withColumnRenamed("code", "cluster"),
+        id_col, "subvec", ("sub_id",),
     )
     per_sub = [
-        F.max(F.when(F.col("sub_id") == j, F.col("code"))).alias(f"c{j}")
+        F.max(F.when(F.col("sub_id") == j, F.col("cluster"))).alias(f"c{j}")
         for j in range(m)
     ]
     return (

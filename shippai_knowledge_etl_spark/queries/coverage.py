@@ -251,6 +251,7 @@ def run_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     required-field validation, status summary. Every stage after the UDF
     is whole-stage-codegen'd and per-row local; the only shuffles are
     the edge-stage repartition and the final status aggregation."""
+    from shippai_knowledge_etl_spark.functions.nested import first_val
     from shippai_knowledge_etl_spark.operators import quality
     from shippai_knowledge_etl_spark.sources.html_parse import label_rows
 
@@ -279,8 +280,8 @@ def run_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pivot here would force SortAggregate: min_by carries a string
     # buffer, which is not hash-aggregatable — measured 3x slower.)
     # The relational pivot operator itself is demonstrated by
-    # p3_label_pivot; parse output order is document order, so
-    # element_at(..., 1) IS the first occurrence.
+    # p3_label_pivot; parse output order is document order, so the
+    # first array_position hit IS the first occurrence.
     # Generate barrier (same trick as diagram.py): both lookups below
     # reference the parse result, and without the barrier the Python UDF
     # is extracted into TWO ArrowEvalPython nodes — every page parsed
@@ -290,20 +291,11 @@ def run_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(label_rows(page))).alias("__rows"),
     )
 
-    def first_val(label: str) -> F.Column:
-        hits = F.filter(
-            F.col("__rows"), lambda r: r.getField("label") == F.lit(label)
-        )
-        # try_element_at: missing label → null → '' (ANSI element_at
-        # would throw on the empty array)
-        return F.coalesce(
-            F.try_element_at(hits, F.lit(1)).getField("value"), F.lit("")
-        )
-
+    rows = F.col("__rows")
     wide = parsed.select(
         "case_key",
-        first_val("事例名称").alias("case_name"),
-        first_val("事例概要").alias("summary"),
+        first_val(rows, "事例名称").alias("case_name"),
+        first_val(rows, "事例概要").alias("summary"),
     )
     validated = quality.with_status(
         wide, {"summary": F.col("summary") == ""}, F.lit(False)

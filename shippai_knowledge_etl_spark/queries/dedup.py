@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.catalog import register
 from shippai_knowledge_etl_spark.operators import dedup
+from shippai_knowledge_etl_spark.operators.fixpoint import iterate
 from shippai_knowledge_etl_spark.operators.textops import tokenize
 from shippai_knowledge_etl_spark.tables import load, scale_out, table_rowcount
 
@@ -2264,7 +2265,8 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         i.alias("pos"),
         i.cast("string").alias("path"),
     )
-    for t in range(4):
+
+    def walk_step(walk: DataFrame, t: int) -> DataFrame:
         choice = F.lit(1) + F.conv(
             F.substring(
                 F.md5(
@@ -2278,7 +2280,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             16,
             10,
         ).cast("long") % F.col("d")
-        walk = (
+        return (
             walk.join(deg, deg["src"] == walk["pos"])
             .withColumn("choice", choice)
             .join(
@@ -2298,6 +2300,10 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("path"),
             )
         )
+
+    # one cut at the end: per-step cuts lose the reuse of adj's and deg's
+    # exchanges across steps (measured 1.64x slower at sf0.1)
+    walk, _, _ = iterate(walk, walk_step, 4, checkpoint_every=4)
     return walk.select(
         F.col("start").alias("start_node"),
         F.col("pos").cast("long").alias("final_node"),

@@ -186,16 +186,6 @@ def expand_worklist(
     )
 
 
-def _first_val(rows: F.Column, label: str) -> F.Column:
-    """First occurrence of a label among the bgcolor-sentinel rows —
-    raw value (``<br>`` already mapped to newline by the parser), ``""``
-    when absent. A position lookup on the label array, no lambda."""
-    pos = F.array_position(rows.getField("label"), label).cast("int")
-    return F.coalesce(
-        F.when(pos > 0, F.element_at(rows.getField("value"), pos)), F.lit("")
-    )
-
-
 def _single_line(col: F.Column) -> F.Column:
     """``get_text`` analog (src/extract.py:100-107): join the value's
     lines without separators (bs4's strip=True drops the whitespace-only
@@ -301,22 +291,26 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     rows = F.col("__rows")
     fields: dict[str, F.Column] = {}
     for name, label in _TEXT_FIELDS.items():
-        fields[name] = _single_line(_first_val(rows, label))
+        fields[name] = _single_line(nested.first_val(rows, label))
     for name, label in _PARA_FIELDS.items():
-        fields[name] = scalar.paragraphs(_first_val(rows, label))
+        fields[name] = scalar.paragraphs(nested.first_val(rows, label))
     fields["date"] = scalar.normalize_jp_date(
-        _single_line(_first_val(rows, "事例発生日付"))
+        _single_line(nested.first_val(rows, "事例発生日付"))
     )
-    fields["knowledge"] = listparse.parse_knowledge(_first_val(rows, "知識化"))
+    fields["knowledge"] = listparse.parse_knowledge(
+        nested.first_val(rows, "知識化")
+    )
     fields["scenario"] = _scenario_struct(F.col("__s"))
     fields["images"] = images
-    fields["sources"] = scalar.split_nonblank(_first_val(rows, "情報源"))
+    fields["sources"] = scalar.split_nonblank(nested.first_val(rows, "情報源"))
     fields["casualties"] = F.struct(
-        scalar.leading_int(_first_val(rows, "死者数")).alias("deaths"),
-        scalar.leading_int(_first_val(rows, "負傷者数")).alias("injuries"),
+        scalar.leading_int(nested.first_val(rows, "死者数")).alias("deaths"),
+        scalar.leading_int(nested.first_val(rows, "負傷者数")).alias("injuries"),
     )
     fields["authors"] = scalar.split_nonblank(
-        scalar.normalize_nbsp(scalar.paragraphs(_first_val(rows, "データ作成者")))
+        scalar.normalize_nbsp(
+            scalar.paragraphs(nested.first_val(rows, "データ作成者"))
+        )
     )
 
     # output-contract column order (requirements.md:107-142) — the

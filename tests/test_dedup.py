@@ -247,6 +247,20 @@ def test_pagerank_until_converges_and_matches_fixed(spark):
         assert abs(conv[k] - fixed[k]) <= 2_000_000, (k, conv[k], fixed[k])
 
 
+def test_pagerank_until_raises_without_convergence(spark):
+    import pyspark.sql.functions as F
+
+    from shippai_knowledge_etl_spark.operators.graph import pagerank_until
+
+    n = 30
+    nodes = spark.range(n).select(F.col("id"))
+    edges = spark.range(n).select(
+        F.col("id").alias("src"), ((F.col("id") * 3 + 1) % n).alias("dst")
+    )
+    with pytest.raises(RuntimeError, match="no convergence to 0 within 1"):
+        pagerank_until(nodes, edges, tol_scaled=0, max_iters=1, n_nodes=n)
+
+
 def test_containment_catches_fragment_jaccard_misses(spark, sf_dir):
     """A doc's first-third fragment is containment-1.0 but Jaccard
     ~0.33 against its parent: at threshold 0.8 the containment pass
@@ -690,6 +704,109 @@ def test_fixpoint_iterate_modes(spark):
     assert sorted(map(tuple, conv.collect())) == sorted(
         map(tuple, big.collect())
     )
+
+
+# Loops whose per-round result lives on the driver, so they cannot be
+# a fixpoint.iterate step; every other DataFrame loop must be one.
+EXEMPT = {
+    "operators/bpe.py:bpe_train": "merge list, stopped by a collected argmax",
+    "operators/curate.py:logreg_quality_train": "weight dict on the driver",
+    "operators/retrieval.py:mmr_rerank_distributed": (
+        "greedy pick list collected per round; stops on an empty pool"
+    ),
+}
+_DF_OPS = {"join", "groupBy", "agg", "crossJoin", "localCheckpoint"}
+
+
+def _loop_carried_df_names(loop) -> set[str]:
+    """Names a loop rebinds from a DataFrame op (directly or through
+    other names bound in the loop) that it also reads before the
+    rebinding, i.e. whose value flows from one round to the next."""
+    import ast
+
+    def df_op(node) -> bool:
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in _DF_OPS
+            # "sep".join(...) is a string op
+            and not isinstance(n.func.value, ast.Constant)
+            for n in ast.walk(node)
+        )
+
+    def names(node, ctx) -> set[str]:
+        return {
+            n.id for n in ast.walk(node)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ctx)
+        }
+
+    def bound(st) -> set[str]:
+        tgts = st.targets if isinstance(st, ast.Assign) else [st.target]
+        return set().union(*(names(t, ast.Store) for t in tgts))
+
+    binds = [
+        (st, bound(st))
+        for part in loop.body for st in ast.walk(part)
+        if isinstance(st, (ast.Assign, ast.AugAssign, ast.AnnAssign))
+        and st.value is not None
+    ]
+    tainted: set[str] = set()
+    while True:
+        grown = {
+            t for st, targets in binds
+            if df_op(st.value) or names(st.value, ast.Load) & tainted
+            for t in targets
+        } | tainted
+        if grown == tainted:
+            break
+        tainted = grown
+    first_end = {}  # name -> end of its first binding statement
+    for st, targets in binds:
+        end = (st.end_lineno, st.end_col_offset)
+        for t in targets:
+            first_end[t] = min(first_end.get(t, end), end)
+    head = [loop.test] if isinstance(loop, ast.While) else []
+    carried = {
+        n.id for part in head + loop.body for n in ast.walk(part)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        and n.id in first_end
+        and (part in head or (n.lineno, n.col_offset) < first_end[n.id])
+    } | {t for st, ts in binds if isinstance(st, ast.AugAssign) for t in ts}
+    return carried & tainted
+
+
+def test_dataframe_loops_use_iterate():
+    """Spark-free AST guard: no loop outside fixpoint.py carries a
+    DataFrame from round to round (rebinding a name read earlier in
+    the loop with a join/groupBy/agg/crossJoin/localCheckpoint result)
+    — such loops are steps for fixpoint.iterate. Only the EXEMPT
+    driver-state loops may."""
+    import ast
+    from pathlib import Path
+
+    import shippai_knowledge_etl_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    found = {}
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "fixpoint.py":
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        owner = {}  # loop -> innermost enclosing function
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for loop in ast.walk(fn):
+                    if isinstance(loop, (ast.For, ast.While)):
+                        owner[loop] = fn.name
+        for loop, fn_name in owner.items():
+            carried = _loop_carried_df_names(loop)
+            if carried:
+                where = f"{path.relative_to(root).as_posix()}:{fn_name}"
+                found[where] = (loop.lineno, sorted(carried))
+    unexpected = {k: v for k, v in found.items() if k not in EXEMPT}
+    assert not unexpected, f"DataFrame loops off fixpoint.iterate: {unexpected}"
+    # every exemption still names a live loop
+    assert set(EXEMPT) == set(found), set(EXEMPT) - set(found)
 
 
 def test_shortest_paths_exact_and_early_exit(spark):

@@ -52,6 +52,44 @@ def test_kmeans_assignment_shape(spark, emb):
     assert all(len(r.centroid) == 64 for r in cents)
 
 
+def test_lloyd_round_plan_has_no_lambda(spark):
+    """The centroid rebuild sorts (pos, x) structs and extracts the x
+    array: no lambda function survives into the optimized plan of a
+    Lloyd update, keyed or not."""
+    assigned = spark.createDataFrame(
+        [(0, 1, 0, [1.0, 2.0]), (0, 2, 0, [3.0, 4.0]), (1, 1, 1, [5.0, 6.0])],
+        "sub_id int, vec_id long, cluster int, embedding array<double>",
+    )
+    for keys in ((), ("sub_id",)):
+        upd = simsearch._update_centroids(assigned, "embedding", keys)
+        plan = upd._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan.lower(), plan
+    got = {
+        r.cluster: r.centroid
+        for r in simsearch._update_centroids(assigned, "embedding").collect()
+    }
+    assert got == {0: [2.0, 3.0], 1: [5.0, 6.0]}
+
+
+def test_pq_seeds_are_lowest_ids_per_subspace(spark, emb):
+    """With no rounds, pq_train returns its seeds: per subspace, the
+    subvectors of the k lowest-id vectors, coded by id rank."""
+    from pyspark.sql import Window
+
+    m, k, dims = 4, 3, 64
+    books = simsearch.pq_train(emb, m, k, dims, n_iter=0)
+    sub = simsearch.subvectors(emb, m, dims)
+    rn = F.row_number().over(Window.partitionBy("sub_id").orderBy("vec_id"))
+    want = (
+        sub.withColumn("rn", rn)
+        .filter(F.col("rn") <= k)
+        .select("sub_id", (F.col("rn") - 1).alias("code"), "subvec")
+    )
+    assert sorted(map(tuple, books.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
 def test_ivf_recall_vs_brute_force(spark, emb):
     """Searching only the query's learned bucket must recover a decent
     fraction of the true top-10 (recall bound is loose: the corpus is
