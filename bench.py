@@ -10,7 +10,9 @@ landed with ``"parsed": null``):
 Everything else — per-query cold/warm/best maps, triage prose — goes
 to stderr AND the sidecar ``BENCH_DETAIL.json`` at the repo root.
 ``queries`` now carries the per-query MEDIANS (the cross-round
-statistic); the cold map lives in the sidecar.
+statistic); the cold map lives in the sidecar. The warm-up, the
+contention sentinel and the cold + 2-rep pass (``noop`` sink) are
+``scripts/bench_sets.py``'s, shared with the EXT sets.
 
 Host-state protocol (VERDICT r11 items 1b + 6 — the measured
 evidence): the round-11 judge ran IDENTICAL code twice minutes apart
@@ -42,10 +44,7 @@ import json
 import os
 import re
 import sys
-import time
 from pathlib import Path
-
-import pandas as pd
 
 REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
@@ -82,51 +81,12 @@ PINNED_MEDIANS = {
 TRIAGE_BUDGET = 1.25
 
 
-def _timed_pass(names, spark, sf_dir):
-    """One full cold+2-rep measurement pass, sentinel-BRACKETED."""
-    from scripts.ext_common import contention_sentinel
-
-    pre = contention_sentinel(spark)
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    best: dict[str, float] = {}
-    median: dict[str, float] = {}
-    for name, fn in names.items():
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        # Steady-state latency (codegen + JIT warmed): min of two
-        # post-cold runs. A single repeat occasionally lands on a JIT
-        # compile-queue stall (all 32 cores busy → C2 starved → the
-        # whole single-wave stage runs interpreted, 5-10x slower), which
-        # says nothing about the plan; min-of-2 filters that tail.
-        reps = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
-        warm[name] = round(min(reps), 4)
-        best[name] = round(min([timings[name], *reps]), 4)
-        median[name] = round(sorted([timings[name], *reps])[1], 4)
-    post = contention_sentinel(spark)
-    unstable = pre["unstable"] or post["unstable"]
-    return {
-        "timings": timings,
-        "warm": warm,
-        "best": best,
-        "median": median,
-        "sentinel_pre_sec": pre["sentinel_sec"],
-        "sentinel_post_sec": post["sentinel_sec"],
-        "sentinel_pin_sec": pre["sentinel_pin_sec"],
-        "unstable": unstable,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
+    from scripts.bench_sets import noop, timed_pass, warm_up
     from shippai_knowledge_etl_spark.catalog import bench_queries
     from shippai_knowledge_etl_spark.session import get_spark
 
@@ -134,24 +94,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     names = bench_queries()
-    # Warm the JVM + parquet footers once so per-query numbers measure
-    # the query, not session startup.
-    next(iter(names.values()))(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # Also spin up the Python/Arrow workers (one per core): the first
-    # pandas-UDF query would otherwise absorb ~2s of worker fork/init
-    # that is session startup, not query cost.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(v: pd.Series) -> pd.Series:
-        return v
-
-    par = spark.sparkContext.defaultParallelism
-    spark.range(par * 4).repartition(par).select(_warm("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, sf_dir, noop)
 
     # Bracketed-sentinel protocol (module docstring): one re-run if the
     # first pass's bracket trips — a mid-run contention window ends as
@@ -161,7 +104,7 @@ def main() -> None:
     attempts = 0
     while True:
         attempts += 1
-        res = _timed_pass(names, spark, sf_dir)
+        res = timed_pass(names, spark, sf_dir, noop)
         if not res["unstable"] or attempts >= 2:
             break
         print(

@@ -100,6 +100,24 @@ def canon_frame(pdf: pd.DataFrame) -> tuple[list[str], list[str]]:
     return cols, rows
 
 
+def frame_mismatch(
+    spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame
+) -> str | None:
+    """The driver's value check of two result frames: sorted column
+    names, row count, then the sorted canonical rows (floats by full
+    repr). Returns the first failure, or None on a hash match."""
+    scols, srows = canon_frame(spark_pdf)
+    dcols, drows = canon_frame(duck_pdf)
+    if scols != dcols:
+        return f"cols {scols} != {dcols}"
+    if len(srows) != len(drows):
+        return f"rowcount {len(srows)} != {len(drows)}"
+    if srows != drows:
+        a, b = next((a, b) for a, b in zip(srows, drows) if a != b)
+        return f"values, first diff: {a[:200]} != {b[:200]}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -138,23 +156,13 @@ def main() -> int:
                 print(f"  {tag}: FAIL forbidden output types {bad}")
                 n_fail += 1
                 continue
-            scols, srows = canon_frame(df.toPandas())
-            dcols, drows = canon_frame(con.execute(o[name]).df())
-            if scols != dcols:
-                print(f"  {tag}: FAIL cols {scols} != {dcols}")
-                n_fail += 1
-            elif len(srows) != len(drows):
-                print(f"  {tag}: FAIL rowcount {len(srows)} != {len(drows)}")
-                n_fail += 1
-            elif srows != drows:
-                diff = next((a, b) for a, b in zip(srows, drows) if a != b)
-                print(
-                    f"  {tag}: FAIL values, first diff: "
-                    f"{diff[0][:200]} != {diff[1][:200]}"
-                )
+            spdf = df.toPandas()
+            msg = frame_mismatch(spdf, con.execute(o[name]).df())
+            if msg:
+                print(f"  {tag}: FAIL {msg}")
                 n_fail += 1
             else:
-                print(f"  {tag}: OK ({len(srows)} rows, hash-match)")
+                print(f"  {tag}: OK ({len(spdf)} rows, hash-match)")
                 n_pass += 1
         except Exception as ex:
             print(f"  {tag}: ERROR {type(ex).__name__}: {ex}")

@@ -2,60 +2,46 @@
 
 For every catalog query that declares a DuckDB oracle: run the Spark
 query and the oracle SQL, then compare row count, sorted column names,
-and an order-insensitive canonicalized value multiset. Strictly exact —
-no float tolerance — so any query that passes here is deterministic
-enough for the driver's value-hash check.
+and an order-insensitive canonicalized value multiset, all through
+``scripts/driver_sim.frame_mismatch`` on the two pandas frames the
+driver hashes. Strictly exact — floats compare by full ``repr`` — so
+any query that passes here is deterministic enough for the driver's
+value-hash check.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
-from decimal import Decimal
-
 import pytest
 
+from scripts.driver_sim import forbidden_output_types, frame_mismatch
 from shippai_knowledge_etl_spark.catalog import load_catalog
 
 
-def _canon(v):
-    """Canonicalize a value so Spark and DuckDB collect() forms compare."""
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        return f"{v.normalize():f}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(round(v, 9))
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    if hasattr(v, "asDict"):  # pyspark Row (a tuple subclass - check first)
-        return _canon(v.asDict())
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
-    if hasattr(v, "asDict"):  # pyspark Row
-        return _canon(v.asDict())
-    return v
+def _assert_parity(spark, duck, sf_dir, spec):
+    df = spec.fn(spark, sf_dir)
+    # Gate-interface contract (round-1 lesson): the driver hashes
+    # oracle-checked results through pandas, where array cells crash the
+    # canonicalizer and Decimal-vs-float64 always mismatches. Any
+    # hash-checked query must serialize/cast those at the boundary.
+    bad = forbidden_output_types(df)
+    assert not bad, f"{spec.name}: driver-unhashable output columns {bad}"
+    msg = frame_mismatch(df.toPandas(), duck.execute(spec.oracle).df())
+    assert msg is None, f"{spec.name}: {msg}"
 
 
-def _spark_rows(df):
-    cols = sorted(df.columns)
-    return cols, [tuple(_canon(r[c]) for c in cols) for r in df.collect()]
+def test_frame_mismatch_sees_one_ulp():
+    """A last-ulp double divergence fails the driver's hash, so it must
+    fail here too; rounding to 9 digits would have merged the pair."""
+    import numpy as np
+    import pandas as pd
 
-
-def _duck_rows(duck, sql):
-    res = duck.execute(sql)
-    names = [d[0] for d in res.description]
-    order = sorted(range(len(names)), key=lambda i: names[i])
-    rows = [tuple(_canon(row[i]) for i in order) for row in res.fetchall()]
-    return sorted(names), rows
+    a = 0.1
+    b = float(np.nextafter(a, 1.0))
+    assert repr(round(a, 9)) == repr(round(b, 9))
+    same = pd.DataFrame({"k": [1], "v": [a]})
+    assert frame_mismatch(same, same.copy()) is None
+    msg = frame_mismatch(same, pd.DataFrame({"k": [1], "v": [b]}))
+    assert msg is not None and msg.startswith("values")
 
 
 _SPECS = load_catalog()
@@ -65,24 +51,7 @@ _ROWS_ONLY = [s for s in _SPECS.values() if s.oracle is None]
 
 @pytest.mark.parametrize("spec", _WITH_ORACLE, ids=lambda s: s.name)
 def test_oracle_parity(spark, duck, sf_dir, spec):
-    df = spec.fn(spark, sf_dir)
-    # Gate-interface contract (round-1 lesson): the driver hashes
-    # oracle-checked results through pandas, where array cells crash the
-    # canonicalizer and Decimal-vs-float64 always mismatches. Any
-    # hash-checked query must serialize/cast those at the boundary.
-    from scripts.driver_sim import forbidden_output_types
-
-    bad = forbidden_output_types(df)
-    assert not bad, f"{spec.name}: driver-unhashable output columns {bad}"
-    scols, srows = _spark_rows(df)
-    dcols, drows = _duck_rows(duck, spec.oracle)
-    assert scols == dcols, f"{spec.name}: column mismatch {scols} != {dcols}"
-    assert len(srows) == len(drows), (
-        f"{spec.name}: row count {len(srows)} != {len(drows)}"
-    )
-    sset, dset = sorted(map(repr, srows)), sorted(map(repr, drows))
-    mism = [(a, b) for a, b in zip(sset, dset) if a != b][:3]
-    assert sset == dset, f"{spec.name}: value mismatch, first diffs: {mism}"
+    _assert_parity(spark, duck, sf_dir, spec)
 
 
 from shippai_knowledge_etl_spark.catalog import DRIVER_WINDOW as _WINDOW
@@ -102,16 +71,7 @@ def test_oracle_parity_driver_scale(spark, duck_sf001, spec):
     query at sf0.01 locally so those break HERE, not at the gate."""
     from tests.conftest import DRIVER_SF_DIR
 
-    df = spec.fn(spark, DRIVER_SF_DIR)
-    scols, srows = _spark_rows(df)
-    dcols, drows = _duck_rows(duck_sf001, spec.oracle)
-    assert scols == dcols, f"{spec.name}: column mismatch {scols} != {dcols}"
-    assert len(srows) == len(drows), (
-        f"{spec.name}: row count {len(srows)} != {len(drows)}"
-    )
-    sset, dset = sorted(map(repr, srows)), sorted(map(repr, drows))
-    mism = [(a, b) for a, b in zip(sset, dset) if a != b][:3]
-    assert sset == dset, f"{spec.name}: value mismatch, first diffs: {mism}"
+    _assert_parity(spark, duck_sf001, DRIVER_SF_DIR, spec)
 
 
 from shippai_knowledge_etl_spark.catalog import (
@@ -145,16 +105,7 @@ def test_oracle_parity_round_cohort(spark, duck_sf001, spec):
     found). Same body as the driver-scale window check."""
     from tests.conftest import DRIVER_SF_DIR
 
-    df = spec.fn(spark, DRIVER_SF_DIR)
-    scols, srows = _spark_rows(df)
-    dcols, drows = _duck_rows(duck_sf001, spec.oracle)
-    assert scols == dcols, f"{spec.name}: column mismatch {scols} != {dcols}"
-    assert len(srows) == len(drows), (
-        f"{spec.name}: row count {len(srows)} != {len(drows)}"
-    )
-    sset, dset = sorted(map(repr, srows)), sorted(map(repr, drows))
-    mism = [(a, b) for a, b in zip(sset, dset) if a != b][:3]
-    assert sset == dset, f"{spec.name}: value mismatch, first diffs: {mism}"
+    _assert_parity(spark, duck_sf001, DRIVER_SF_DIR, spec)
 
 
 @pytest.mark.parametrize("spec", _ROWS_ONLY, ids=lambda s: s.name)
