@@ -4,13 +4,16 @@
 A training-data / RAG platform needs lexical retrieval next to the
 vector stack (``operators/simsearch.py``):
 
-  - :func:`bm25_topk` — Okapi BM25 scoring over an inverted-index
-    shape: tokenize → postings (doc, term, tf) → per-term document
-    frequency → score → top-k. The postings are filtered to the query
-    vocabulary BEFORE the tf aggregation, which is the relational
-    analogue of probing a term-bucketed inverted index at rest: only
-    the query terms' postings ever shuffle, everything else dies in
-    the scan stage.
+  - :func:`bm25_scores` / :func:`bm25_topk` — Okapi BM25 scoring.
+    The postings form (:func:`_weighted_postings`) is the
+    inverted-index shape: tokenize → postings (doc, term, tf) →
+    per-term document frequency → weight. The postings are filtered
+    to the query vocabulary BEFORE the tf aggregation, which is the
+    relational analogue of probing a term-bucketed inverted index at
+    rest: only the query terms' postings ever shuffle, everything else
+    dies in the scan stage. The champion-list and rank-safe pruning
+    operators (WAND, MaxScore, Block-Max WAND) all start from it;
+    :func:`bm25_topk` uses the single-scan dense form.
   - :func:`chunk_tokens` — sliding-window document chunking with
     overlap (the standard RAG pre-embedding step). One tokenize pass,
     chunk starts from ``sequence()`` + ``posexplode`` (codegen'd, no
@@ -43,7 +46,7 @@ LLM-pipeline surface the build brief mandates.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.operators.textops import tokenize
@@ -51,6 +54,9 @@ from shippai_knowledge_etl_spark.operators.textops import tokenize
 # Okapi defaults (Robertson & Walker; the values ES/Lucene ship).
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+# exact type of every round-6 DECIMAL bound, threshold and sum
+DEC6 = "decimal(18,6)"
 
 
 def bm25_weight(
@@ -63,10 +69,16 @@ def bm25_weight(
     b: float,
 ) -> Column:
     """The Okapi BM25 per-(doc, term) weight — the ONE source of truth
-    for the scoring arithmetic (four call sites: postings form, dense
-    form, batch form, streaming-index form). Operand order is part of
-    the contract: the DuckDB oracles mirror it token for token so
-    doubles agree before the final round(6)."""
+    for the scoring arithmetic. Five call sites: the postings form
+    (:func:`_weighted_postings`, which serves :func:`bm25_scores` and
+    the whole pruning family), the dense form
+    (:func:`bm25_scores_dense`), the batch form
+    (:func:`bm25_topk_batch`), the streaming-index form
+    (``streaming/index.bm25_from_index``) and the impact-quantization
+    audit (``queries/retrieval.retrieval_impact_quantized``);
+    tests/test_retrieval.py::test_bm25_weight_call_sites pins the list.
+    Operand order is part of the contract: the DuckDB oracles mirror it
+    token for token so doubles agree before the final round(6)."""
     idf = F.log(
         F.lit(1.0) + (n_docs - df_ + F.lit(0.5)) / (df_ + F.lit(0.5))
     )
@@ -84,8 +96,9 @@ def pivot_score(
     own column with ``max(CASE ...)`` (exactly one posting per
     (doc, term), so max is an exact pick) and the final score adds the
     per-term columns in FIXED query order — the determinism device
-    that replaces an order-dependent double sum. Shared by the
-    postings form and the streaming-index form."""
+    that replaces an order-dependent double sum. Shared by every
+    postings-shaped scorer: :func:`bm25_scores`, the champion-list and
+    pruning family, and the streaming-index form."""
     pivots = [
         F.max(F.when(F.col("term") == t, F.col("w"))).alias(f"w_{i}")
         for i, t in enumerate(query_terms)
@@ -115,30 +128,42 @@ def _corpus_stats(doc_lens: DataFrame) -> DataFrame:
     )
 
 
-def bm25_scores(
+def _count(df: DataFrame, name: str) -> DataFrame:
+    """1-row row count of ``df`` as column ``name``."""
+    return df.agg(F.count(F.lit(1)).alias(name))
+
+
+def _top(scores: DataFrame, id_col: str, k: int) -> DataFrame:
+    """orderBy(rounded bm25 desc, id) + limit → TakeOrderedAndProject.
+    Ordering on the ROUNDED score keeps the k-boundary identical across
+    engines."""
+    return scores.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k)
+
+
+def _weighted_postings(
     df: DataFrame,
     id_col: str,
     text_col: str,
     query_terms: tuple[str, ...],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    k1: float,
+    b: float,
 ) -> DataFrame:
-    """Per-document BM25 score for a fixed query vocabulary.
+    """Query-term postings with their BM25 weight: (term, id, dl, tf,
+    df, n_docs, sum_dl, avgdl, w), one row per (doc, query term) — the
+    postings form every postings-shaped scorer starts from.
 
-    Determinism contract (driver hash gate): the per-doc score is NOT
-    ``sum(weight)`` over postings rows — double summation order under
-    partial aggregation is engine/partitioning-dependent. Instead each
-    query term is pivoted to its own column with ``max(CASE ...)``
-    (exactly one posting per (doc, term), so max is an exact pick) and
-    the final score adds the per-term columns in fixed query order.
-    """
+    The postings are filtered to the query vocabulary BEFORE the tf
+    aggregation (the relational analogue of probing a term-bucketed
+    inverted index: only query-term postings survive the scan). df is
+    vocabulary-sized (== |q| rows) and the corpus stats are one row,
+    so both broadcast; both come from the FULL postings, so any later
+    cut (champion lists, pruning) prunes rows, never statistics."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     toks = tokenize(F.col(text_col))
     docs = df.select(F.col(id_col), toks.alias("toks")).select(
         id_col, "toks", F.size("toks").alias("dl")
     )
-    # inverted-index probe: only query-term postings survive the scan
     postings = (
         docs.select(id_col, "dl", F.explode("toks").alias("term"))
         .filter(F.col("term").isin(*query_terms))
@@ -147,8 +172,7 @@ def bm25_scores(
     )
     dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     stats = _corpus_stats(docs.select(id_col, "dl"))
-
-    scored = (
+    return (
         postings.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
@@ -165,7 +189,155 @@ def bm25_scores(
             ),
         )
     )
-    return pivot_score(scored, id_col, query_terms)
+
+
+def _champions(weighted: DataFrame, id_col: str, champions: int) -> DataFrame:
+    """The champion-list cut (Manning, Raghavan & Schütze, IIR §7.1.3):
+    each term keeps its ``champions`` highest-tf postings, ties by id.
+    A per-term window (partitioned by term — never a global sort), so
+    everything downstream sees ≤ |q|·champions rows."""
+    rank = Window.partitionBy("term").orderBy(F.desc("tf"), F.asc(id_col))
+    return weighted.withColumn(
+        "champ_rank", F.row_number().over(rank)
+    ).filter(F.col("champ_rank") <= champions)
+
+
+def _pruning_threshold(
+    weighted: DataFrame,
+    id_col: str,
+    query_terms: tuple[str, ...],
+    k: int,
+    champions: int,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The shared front half of the rank-safe pruning family (WAND,
+    MaxScore, Block-Max WAND — one idea: a threshold from an achieved
+    score plus upper bounds). Returns ``(weighted, theta, floor)``:
+
+    - ``weighted``, lazily localCheckpointed. It is REUSED by four
+      consumers (upper bounds, champion θ, the bound filter, the
+      survivor scoring); without the barrier Catalyst re-plans the
+      whole corpus explode for each — measured 27 FileScans / 18
+      Generates in the first WAND cut. The frame holds only query-term
+      postings (|q|·df rows, index-sized, tiny next to the corpus), so
+      a lazy checkpoint materializes it once on first use and every
+      consumer reads it back — 2 corpus scans total, the "postings
+      index at rest" scale posture.
+    - ``theta``, the 1-row frame holding θ: the k-th best score of a
+      champion-list pass of depth ``champions``. θ is ACHIEVED by a
+      real document with at most its full score, so it lower-bounds
+      the true k-th score — pruning strictly below θ can never evict a
+      true top-k member.
+    - ``floor``, the DECIMAL(18,6) column θ − ε, valid on any frame
+      crossJoined with ``theta``. A bound must reach it to survive.
+
+    Rounding accounting (survivor / essential-term counts are
+    hash-gated, so membership must be round-6-STABLE on both engines
+    AND rank-safety must survive the rounding): every per-term bound
+    is round(·, 6) DECIMAL(18,6) (:func:`_round6_max`) and bounds add
+    as exact DECIMAL in fixed query order (:func:`_bound_and_filter`;
+    the eval_bleu_log pattern — no cross-engine double-sum ulp flips),
+    and θ is the round-6 champion score cast to the same DECIMAL. Both
+    can sit up to 5e-7 off their true values (θ can round UP past the
+    achieved score; each rounded bound can round DOWN below the true
+    one), so the comparison widens by ε = ceil((|q| + 1) / 2) µ. Then
+    for a true top-k doc: Σbound_rounded ≥ Σbound_true − |q|·5e-7 ≥
+    score_true − |q|·5e-7 ≥ θ_true − |q|·5e-7 ≥ θ_rounded −
+    (|q|+1)·5e-7 ≥ θ_rounded − ε, so it always survives: the filter
+    only ever ADMITS a few extra boundary docs, never prunes a true
+    member."""
+    weighted = weighted.localCheckpoint(eager=False)
+    champ = _champions(weighted, id_col, champions)
+    theta = _top(pivot_score(champ, id_col, query_terms), id_col, k).agg(
+        F.min("bm25").alias("theta")
+    )
+    eps_micros = (len(query_terms) + 2) // 2
+    eps = F.lit(f"0.{eps_micros:06d}").cast(DEC6)
+    floor = F.col("theta").cast(DEC6) - eps
+    return weighted, theta, floor
+
+
+def _round6_max(name: str) -> Column:
+    """max(w) of a group, round(·, 6) then DECIMAL(18,6), as ``name``
+    — the per-term (or per-block) upper bound of the pruning family."""
+    return F.round(F.max("w"), 6).cast(DEC6).alias(name)
+
+
+def _bound_and_filter(
+    rows: DataFrame,
+    id_col: str,
+    bcol: str,
+    query_terms: tuple[str, ...],
+    theta: DataFrame,
+    floor: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """(id, term, ``bcol``) bound rows → ``(bound, survivors)``: the
+    per-doc bound sum over PRESENT terms, pivoted per term and added as
+    exact DECIMAL in fixed query order (the :func:`pivot_score`
+    discipline — no cross-row sum), and the ids whose sum reaches
+    :func:`_pruning_threshold`'s floor θ − ε."""
+    per_doc = rows.groupBy(id_col).agg(
+        *[
+            F.max(F.when(F.col("term") == t, F.col(bcol))).alias(f"b_{i}")
+            for i, t in enumerate(query_terms)
+        ]
+    )
+    zero_dec = F.lit("0").cast(DEC6)
+    bsum = F.coalesce(F.col("b_0"), zero_dec)
+    for i in range(1, len(query_terms)):
+        bsum = bsum + F.coalesce(F.col(f"b_{i}"), zero_dec)
+    bound = per_doc.select(id_col, bsum.alias("bsum"))
+    survivors = (
+        bound.crossJoin(F.broadcast(theta))
+        .filter(F.col("bsum") >= floor)
+        .select(id_col)
+    )
+    return bound, survivors
+
+
+def bm25_scores(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    query_terms: tuple[str, ...],
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Per-document BM25 score for a fixed query vocabulary — the
+    postings form (:func:`_weighted_postings` + :func:`pivot_score`).
+
+    Determinism contract (driver hash gate): the per-doc score is NOT
+    ``sum(weight)`` over postings rows — double summation order under
+    partial aggregation is engine/partitioning-dependent. Instead each
+    query term is pivoted to its own column with ``max(CASE ...)``
+    (exactly one posting per (doc, term), so max is an exact pick) and
+    the final score adds the per-term columns in fixed query order.
+    """
+    return pivot_score(
+        _weighted_postings(df, id_col, text_col, query_terms, k1, b),
+        id_col,
+        query_terms,
+    )
+
+
+def _dense_tf(
+    df: DataFrame, id_col: str, text_col: str, query_terms: tuple[str, ...]
+) -> DataFrame:
+    """(id, dl, tf_0..tf_q): each query term's tf as a COLUMN on the
+    doc row via the lambda-free ``size(toks) - size(array_remove(toks,
+    term))`` counting trick (codegen'd, narrow) — one corpus scan, no
+    shuffle. The row shape of every dense single-scan scorer."""
+    if not query_terms:
+        raise ValueError("query_terms must be non-empty")
+    toks = tokenize(F.col(text_col))
+    tf_cols = [
+        (F.size("toks") - F.size(F.array_remove(F.col("toks"), t)))
+        .cast("long")
+        .alias(f"tf_{i}")
+        for i, t in enumerate(query_terms)
+    ]
+    return df.select(F.col(id_col), toks.alias("toks")).select(
+        id_col, F.size("toks").cast("long").alias("dl"), *tf_cols
+    )
 
 
 def bm25_scores_dense(
@@ -181,28 +353,15 @@ def bm25_scores_dense(
 
     The postings form (:func:`bm25_scores`) is the general
     inverted-index build, but as a per-query plan it reads the corpus
-    three times (postings, df, corpus stats). Here each query term's
-    tf becomes a COLUMN on the doc row via the lambda-free
-    ``size(toks) - size(array_remove(toks, term))`` counting trick
-    (codegen'd, narrow), so ONE scan yields (doc, dl, tf_0..tf_q); a
-    single map-side-combined global aggregate produces the 1-row
+    three times (postings, df, corpus stats). Here ONE scan yields
+    (doc, dl, tf_0..tf_q) (:func:`_dense_tf`); a single
+    map-side-combined global aggregate produces the 1-row
     (n_docs, sum_dl, df_0..df_q) stats which broadcast back. Total
     cost: one corpus scan, one 1-row exchange, zero wide shuffles.
     Only viable when q is small (columns ∝ query terms) — exactly the
     per-query case; the postings form remains the bulk-index path.
     """
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    tf_cols = [
-        (F.size("toks") - F.size(F.array_remove(F.col("toks"), t)))
-        .cast("long")
-        .alias(f"tf_{i}")
-        for i, t in enumerate(query_terms)
-    ]
-    per_doc = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, F.size("toks").cast("long").alias("dl"), *tf_cols
-    )
+    per_doc = _dense_tf(df, id_col, text_col, query_terms)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
@@ -247,17 +406,14 @@ def bm25_topk(
     k: int,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    dense: bool = True,
 ) -> DataFrame:
-    """Top-k BM25: orderBy(rounded score desc, id) + limit →
-    TakeOrderedAndProject. Ordering on the ROUNDED score keeps the
-    k-boundary identical across engines. ``dense=True`` (default)
-    uses the single-scan per-query plan; the postings form produces
-    bit-identical scores (pytest cross-checked), so both verify
-    against the same oracle."""
-    form = bm25_scores_dense if dense else bm25_scores
-    scores = form(df, id_col, text_col, query_terms, k1, b)
-    return scores.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k)
+    """Top-k BM25 over the single-scan dense plan
+    (:func:`bm25_scores_dense`), cut by :func:`_top`. The postings form
+    (:func:`bm25_scores`) produces bit-identical scores (pytest
+    cross-checked), so both verify against the same oracle."""
+    return _top(
+        bm25_scores_dense(df, id_col, text_col, query_terms, k1, b), id_col, k
+    )
 
 
 def chunk_tokens(
@@ -404,11 +560,12 @@ def hybrid_candidates(
     the collection model."""
     from shippai_knowledge_etl_spark.operators.simsearch import cosine
 
-    cand = (
-        bm25_scores_dense(docs, doc_id_col, text_col, query_terms)
-        .filter(F.col(doc_id_col) != query_vec_id)
-        .orderBy(F.desc("bm25"), F.asc(doc_id_col))
-        .limit(n_candidates)
+    cand = _top(
+        bm25_scores_dense(docs, doc_id_col, text_col, query_terms).filter(
+            F.col(doc_id_col) != query_vec_id
+        ),
+        doc_id_col,
+        n_candidates,
     )
     qv = emb.filter(F.col(vec_id_col) == query_vec_id).select(
         F.col(vec_col).alias("qvec")
@@ -704,8 +861,6 @@ def bm25_topk_batch(
         .groupBy("query_id", id_col)
         .agg(F.sum("w6").alias("score_dec"))
     )
-    from pyspark.sql import Window
-
     rank_w = Window.partitionBy("query_id").orderBy(
         F.desc("score_dec"), F.asc(id_col)
     )
@@ -721,6 +876,68 @@ def bm25_topk_batch(
     )
 
 
+def _ann_rankings(
+    emb: DataFrame, id_col: str, vec_col: str, query_mod: int, k: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The exact/probe ranking pair of the ANN eval harness, for the
+    query sample of every ``query_mod``-th id. Returns ``(qs,
+    exact_top, probe_top)``: the sample (query_id, qvec), the
+    exact-cosine top-k (query_id, id) and the Hamming sign-signature
+    probe top-k (query_id, id, rn), each query's own vector excluded.
+
+    Both rankings are computed batch-style in ONE plan each — corpus
+    crossJoin'd with the BROADCAST query sample, per-query top-k via a
+    query-partitioned window (WindowGroupLimit pushes the k-limit
+    below the shuffle). Cosine rounds to 6 dp with id tie-breaks and
+    Hamming is integer, so both are pure functions of the corpus."""
+    from shippai_knowledge_etl_spark.operators.simsearch import cosine
+
+    if k < 1:
+        raise ValueError("k must be positive")
+
+    def top_k(ranked: DataFrame, order: Column) -> DataFrame:
+        w = Window.partitionBy("query_id").orderBy(order, F.asc(id_col))
+        return ranked.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= k
+        )
+
+    is_query = F.col(id_col) % query_mod == 0
+    base = emb.select(F.col(id_col), F.col(vec_col))
+    qs = base.filter(is_query).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+    exact_top = top_k(
+        base.crossJoin(F.broadcast(qs))
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col(id_col),
+            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("sim"),
+        ),
+        F.desc("sim"),
+    ).select("query_id", id_col)
+    lo, hi = sign_pack64(F.col(vec_col))
+    sigs = base.select(F.col(id_col), lo.alias("lo"), hi.alias("hi"))
+    qsigs = sigs.filter(is_query).select(
+        F.col(id_col).alias("query_id"),
+        F.col("lo").alias("qlo"),
+        F.col("hi").alias("qhi"),
+    )
+    probe_top = top_k(
+        sigs.crossJoin(F.broadcast(qsigs))
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col(id_col),
+            hamming_dist(
+                F.col("lo"), F.col("hi"), F.col("qlo"), F.col("qhi")
+            ).alias("hamming"),
+        ),
+        F.asc("hamming"),
+    ).select("query_id", id_col, "rn")
+    return qs, exact_top, probe_top
+
+
 def ann_recall_eval(
     emb: DataFrame,
     id_col: str,
@@ -732,66 +949,14 @@ def ann_recall_eval(
     probe against exact-cosine ground truth, for a deterministic
     query sample (every ``query_mod``-th id).
 
-    Both rankings are computed batch-style in ONE plan each — corpus
-    crossJoin'd with the BROADCAST query sample, per-query top-k via a
-    query-partitioned window (WindowGroupLimit pushes the k-limit
-    below the shuffle) — then intersected per query. Determinism:
-    cosine rounds to 6 dp with id tie-breaks, Hamming is integer, so
-    recall is a pure function of the corpus and the driver hash gate
-    can check the EVALUATION itself.
+    Both rankings come from :func:`_ann_rankings` and are intersected
+    per query. Determinism: cosine rounds to 6 dp with id tie-breaks,
+    Hamming is integer, so recall is a pure function of the corpus and
+    the driver hash gate can check the EVALUATION itself.
     """
-    from pyspark.sql import Window
-
-    from shippai_knowledge_etl_spark.operators.simsearch import cosine
-
-    base = emb.select(F.col(id_col), F.col(vec_col))
-    qs = base.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-
-    ex_w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    exact_top = (
-        base.crossJoin(F.broadcast(qs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(ex_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col)
-    )
-
-    lo, hi = sign_pack64(F.col(vec_col))
-    sigs = base.select(F.col(id_col), lo.alias("lo"), hi.alias("hi"))
-    qsigs = sigs.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    hm_w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc(id_col)
-    )
-    hamming_top = (
-        sigs.crossJoin(F.broadcast(qsigs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            hamming_dist(
-                F.col("lo"), F.col("hi"), F.col("qlo"), F.col("qhi")
-            ).alias("hamming"),
-        )
-        .withColumn("rn", F.row_number().over(hm_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col)
-    )
-
+    qs, exact_top, probe_top = _ann_rankings(emb, id_col, vec_col, query_mod, k)
     hits = (
-        exact_top.join(hamming_top, ["query_id", id_col])
+        exact_top.join(probe_top, ["query_id", id_col])
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
@@ -806,6 +971,18 @@ def ann_recall_eval(
             ).alias("recall_at_k"),
         )
     )
+
+
+def _literal_case(col: Column, table: dict[int, float]) -> Column:
+    """``CASE col WHEN r THEN <literal> ...`` (no ELSE) over a shared
+    {rank: value} literal table, so the Spark plan consumes the same
+    constants the DuckDB oracle embeds."""
+    cases = iter(table.items())
+    r, v = next(cases)
+    expr = F.when(col == r, F.lit(v))
+    for r, v in cases:
+        expr = expr.when(col == r, F.lit(v))
+    return expr
 
 
 def ndcg_discounts(k: int) -> tuple[dict[int, float], float]:
@@ -839,72 +1016,18 @@ def ann_ndcg_eval(
     :func:`ndcg_discounts` as shared literals, each hit's term is a
     DECIMAL(18,6) so the per-query sum is exact and
     partitioning-independent, and dcg/ndcg round to 6 dp at the gate
-    boundary. Same plan shape as the recall eval: both rankings are
-    one broadcast-query crossJoin + a query-partitioned
-    WindowGroupLimit top-k; the join of the two k-row-per-query tables
+    boundary. Same plan shape as the recall eval (both rankings from
+    :func:`_ann_rankings`); the join of the two k-row-per-query tables
     is trivially small."""
-    from pyspark.sql import Window
-
-    from shippai_knowledge_etl_spark.operators.simsearch import cosine
-
     disc, idcg = ndcg_discounts(k)
-    base = emb.select(F.col(id_col), F.col(vec_col))
-    qs = base.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    ex_w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    exact_top = (
-        base.crossJoin(F.broadcast(qs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(ex_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col)
-    )
-    lo, hi = sign_pack64(F.col(vec_col))
-    sigs = base.select(F.col(id_col), lo.alias("lo"), hi.alias("hi"))
-    qsigs = sigs.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    hm_w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc(id_col)
-    )
-    probe_ranked = (
-        sigs.crossJoin(F.broadcast(qsigs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            hamming_dist(
-                F.col("lo"), F.col("hi"), F.col("qlo"), F.col("qhi")
-            ).alias("hamming"),
-        )
-        .withColumn("rn", F.row_number().over(hm_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col, "rn")
-    )
-    # CASE rn WHEN r THEN <literal discount> — the same literals the
-    # oracle embeds, cast to exact DECIMAL before the sum
-    expr = None
-    for r, v in disc.items():
-        expr = (
-            F.when(F.col("rn") == r, F.lit(v))
-            if expr is None
-            else expr.when(F.col("rn") == r, F.lit(v))
-        )
+    qs, exact_top, probe_top = _ann_rankings(emb, id_col, vec_col, query_mod, k)
+    # the same discount literals the oracle embeds, cast to exact
+    # DECIMAL before the sum
     term = F.when(
-        F.col("hit").isNotNull(), expr.cast("decimal(18,6)")
-    ).otherwise(F.lit(0).cast("decimal(18,6)"))
+        F.col("hit").isNotNull(), _literal_case(F.col("rn"), disc).cast(DEC6)
+    ).otherwise(F.lit(0).cast(DEC6))
     scored = (
-        probe_ranked.join(
+        probe_top.join(
             exact_top.withColumn("hit", F.lit(1)),
             ["query_id", id_col],
             "left",
@@ -1007,8 +1130,6 @@ def _ranked(
     bounded ``depth``-row set (plan-gate allowlisted: bounded-input
     global window, the retrieval_mmr candidate-pool discipline)."""
     top = df.orderBy(F.desc(score_col), F.asc(id_col)).limit(depth)
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc(score_col), F.asc(id_col))
     return top.select(
         F.col(id_col),
@@ -1077,70 +1198,16 @@ def ann_mrr_eval(
 
     first_hit_rank is the min probe rank holding an exact-top-k
     member (0 = no hit); rr maps it through the shared literal table.
-    Plan shape identical to the recall/ndcg evals: two broadcast-query
-    crossJoins + query-partitioned WindowGroupLimit top-k, then a
-    k-rows-per-query join and min-agg — integers end to end until the
-    literal lookup."""
-    from pyspark.sql import Window
-
-    from shippai_knowledge_etl_spark.operators.simsearch import cosine
-
-    rrs = mrr_literals(k)
-    base = emb.select(F.col(id_col), F.col(vec_col))
-    qs = base.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    ex_w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    exact_top = (
-        base.crossJoin(F.broadcast(qs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(ex_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col)
-    )
-    lo, hi = sign_pack64(F.col(vec_col))
-    sigs = base.select(F.col(id_col), lo.alias("lo"), hi.alias("hi"))
-    qsigs = sigs.filter(F.col(id_col) % query_mod == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    hm_w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc(id_col)
-    )
-    probe_ranked = (
-        sigs.crossJoin(F.broadcast(qsigs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            hamming_dist(
-                F.col("lo"), F.col("hi"), F.col("qlo"), F.col("qhi")
-            ).alias("hamming"),
-        )
-        .withColumn("rn", F.row_number().over(hm_w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col, "rn")
-    )
+    Plan shape identical to the recall/ndcg evals (both rankings from
+    :func:`_ann_rankings`), then a k-rows-per-query join and min-agg —
+    integers end to end until the literal lookup."""
+    qs, exact_top, probe_top = _ann_rankings(emb, id_col, vec_col, query_mod, k)
     first_hit = (
-        probe_ranked.join(exact_top, ["query_id", id_col])
+        probe_top.join(exact_top, ["query_id", id_col])
         .groupBy("query_id")
         .agg(F.min("rn").alias("fr"))
     )
-    rr_expr = None
-    for r, v in rrs.items():
-        rr_expr = (
-            F.when(F.col("first_hit_rank") == r, F.lit(v))
-            if rr_expr is None
-            else rr_expr.when(F.col("first_hit_rank") == r, F.lit(v))
-        )
+    rr = _literal_case(F.col("first_hit_rank"), mrr_literals(k))
     return (
         qs.select("query_id")
         .join(first_hit, "query_id", "left")
@@ -1153,7 +1220,7 @@ def ann_mrr_eval(
         .select(
             "query_id",
             "first_hit_rank",
-            rr_expr.otherwise(F.lit(0.0)).alias("rr"),
+            rr.otherwise(F.lit(0.0)).alias("rr"),
         )
     )
 
@@ -1189,8 +1256,6 @@ def min_cover_span(
     single task at 100 TB. The sweep's row count never exceeds its
     input's. Returns (id_col, min_span) for conjunctive docs only.
     """
-    from pyspark.sql import Window
-
     if not terms:
         raise ValueError("terms must be non-empty")
     w = (
@@ -1253,18 +1318,7 @@ def query_likelihood_dense(
     1-row global aggregate (T, ctf_*) broadcast back; zero wide
     shuffles. Columns ∝ |query| — the per-query case by construction.
     """
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    tf_cols = [
-        (F.size("toks") - F.size(F.array_remove(F.col("toks"), t)))
-        .cast("long")
-        .alias(f"tf_{i}")
-        for i, t in enumerate(query_terms)
-    ]
-    per_doc = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, F.size("toks").cast("long").alias("dl"), *tf_cols
-    )
+    per_doc = _dense_tf(df, id_col, text_col, query_terms)
     stats = per_doc.agg(
         F.sum("dl").alias("t_total"),
         *[
@@ -1284,7 +1338,7 @@ def query_likelihood_dense(
                 / (F.col("dl") + mu).cast("double")
             ),
             6,
-        ).cast("decimal(18,6)")
+        ).cast(DEC6)
         for i in range(len(query_terms))
     ]
     score = term_lns[0]
@@ -1321,57 +1375,16 @@ def bm25_champion_topk(
     from the FULL postings before the cut — champion lists store
     global statistics; only the posting ROWS are pruned.
 
-    Scale shape: the champion cut is a per-term window (partitioned by
-    term — never a global sort) over the postings produced by the one
-    vocabulary-filtered explode; everything downstream operates on
-    ≤ |q|·champions rows, so the final pivot/top-k is driver-trivial.
-    At 100 TB the cut itself is the index-build pass; queries never
-    see the corpus again.
+    Scale shape: the champion cut (:func:`_champions`) is a per-term
+    window over the postings produced by the one vocabulary-filtered
+    explode; everything downstream operates on ≤ |q|·champions rows,
+    so the final pivot/top-k is driver-trivial. At 100 TB the cut
+    itself is the index-build pass; queries never see the corpus
+    again.
     """
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, "toks", F.size("toks").alias("dl")
-    )
-    from pyspark.sql import Window
-
-    postings = (
-        docs.select(id_col, "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _corpus_stats(docs.select(id_col, "dl"))
-    champ = postings.withColumn(
-        "champ_rank",
-        F.row_number().over(
-            Window.partitionBy("term").orderBy(
-                F.desc("tf"), F.asc(id_col)
-            )
-        ),
-    ).filter(F.col("champ_rank") <= champions)
-    scored = (
-        champ.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-        .withColumn(
-            "w",
-            bm25_weight(
-                F.col("tf"),
-                F.col("df"),
-                F.col("dl"),
-                F.col("n_docs"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ),
-        )
-    )
-    return pivot_score(scored, id_col, query_terms).orderBy(
-        F.desc("bm25"), F.asc(id_col)
-    ).limit(k)
+    weighted = _weighted_postings(df, id_col, text_col, query_terms, k1, b)
+    champ = _champions(weighted, id_col, champions)
+    return _top(pivot_score(champ, id_col, query_terms), id_col, k)
 
 
 def bm25_wand_topk(
@@ -1388,131 +1401,50 @@ def bm25_wand_topk(
     al. 2003, "Efficient query evaluation using a two-level retrieval
     process"): each term stores its maximum attainable BM25 weight
     (the index-time upper bound UB_t); a document can enter the top-k
-    only if the sum of UB_t over its present terms reaches a threshold
-    θ. θ comes from a cheap champion-list pass (depth ``champions``):
-    its k-th best score is ACHIEVED by a real document with at most
-    its full score, so θ lower-bounds the true k-th score — pruning
-    strictly below θ can never evict a true top-k member. The returned
-    top-k is therefore identical to exhaustive evaluation (pinned by
-    pytest), while the evaluated candidate set shrinks to the docs
-    whose bound clears θ.
-
-    Rounding accounting (the survivor filter is hash-gated via
-    n_survivors, so membership must be round-6-STABLE on both engines
-    AND rank-safety must survive the rounding): every per-term UB is
-    round(·, 6) and the per-doc bound is assembled in DECIMAL(18,6)
-    in fixed query order (the eval_bleu_log pattern — no cross-engine
-    double-sum ulp flips), and θ is the round-6 champion score cast to
-    the same DECIMAL. Both quantities can sit up to 5e-7 off their
-    true values (θ can round UP past the achieved score; each rounded
-    UB can round DOWN below the true bound), so the comparison widens
-    by ε = ceil((|q| + 1) / 2) µ — ΣUB ≥ θ − ε. Then for a true top-k
-    doc: ΣUB_rounded ≥ ΣUB_true − |q|·5e-7 ≥ score_true − |q|·5e-7 ≥
-    θ_true − |q|·5e-7 ≥ θ_rounded − (|q|+1)·5e-7 ≥ θ_rounded − ε, so
-    it always survives: the filter only ever ADMITS a few extra
-    boundary docs, never prunes a true member.
+    only if the sum of UB_t over its present terms reaches the
+    threshold θ of :func:`_pruning_threshold` (a champion pass's
+    achieved k-th score, depth ``champions``), widened by its rounding
+    slack ε. The returned top-k is therefore identical to exhaustive
+    evaluation (pinned by pytest), while the evaluated candidate set
+    shrinks to the docs whose bound clears θ − ε. The rank-safety and
+    rounding proof lives on :func:`_pruning_threshold`.
 
     Returns the top-k rows plus constant bookkeeping columns
     (n_docs_scored_bound, n_survivors) so the pruning ratio is data
     the gate hashes, not a claim.
 
-    Scale shape: UB is a 3-row broadcast; θ a 1-row broadcast from the
-    champion pass (itself term-partitioned windows); the survivor
-    filter is a per-doc fixed-order pivot comparison applied BEFORE
-    the final top-k — at 100 TB this is the difference between scoring
-    every document containing any query term and scoring the small
-    bound-clearing candidate set (DAAT skipping's relational analog).
+    Scale shape: UB is a |q|-row broadcast; θ a 1-row broadcast from
+    the champion pass (itself term-partitioned windows); the survivor
+    filter (:func:`_bound_and_filter`) is a per-doc fixed-order pivot
+    comparison applied BEFORE the final top-k — at 100 TB this is the
+    difference between scoring every document containing any query
+    term and scoring the small bound-clearing candidate set (DAAT
+    skipping's relational analog).
     """
-    from pyspark.sql import Window
-
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, "toks", F.size("toks").alias("dl")
-    )
-    postings = (
-        docs.select(id_col, "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _corpus_stats(docs.select(id_col, "dl"))
-    weighted = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-        .withColumn(
-            "w",
-            bm25_weight(
-                F.col("tf"),
-                F.col("df"),
-                F.col("dl"),
-                F.col("n_docs"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ),
-        )
-    )
-    # the weighted postings are REUSED by four consumers (UB, champion
-    # θ, the bound pivot, the survivor evaluation); without a barrier
-    # Catalyst re-plans the whole corpus explode for each — measured
-    # 27 FileScans / 18 Generates in the first cut. The frame holds
-    # only query-term postings (|q|·df rows, index-sized, tiny next to
-    # the corpus), so a lazy localCheckpoint materializes it once on
-    # first use and every consumer reads it back — 2 corpus scans
-    # total, matching the "postings index at rest" scale posture.
-    weighted = weighted.localCheckpoint(eager=False)
-    # round-6 then DECIMAL: survivor membership feeds the gate, so the
-    # bound assembly must be ulp-stable across engines (docstring
-    # "Rounding accounting"; README Engineering notes)
-    ub = weighted.groupBy("term").agg(
-        F.round(F.max("w"), 6).cast("decimal(18,6)").alias("ub")
-    )
-    champ_rank = Window.partitionBy("term").orderBy(F.desc("tf"), F.asc(id_col))
-    champ_scores = pivot_score(
-        weighted.withColumn("champ_rank", F.row_number().over(champ_rank))
-        .filter(F.col("champ_rank") <= champions),
+    weighted, theta, floor = _pruning_threshold(
+        _weighted_postings(df, id_col, text_col, query_terms, k1, b),
         id_col,
         query_terms,
+        k,
+        champions,
     )
-    theta = champ_scores.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k).agg(
-        F.min("bm25").alias("theta")
+    ub = weighted.groupBy("term").agg(_round6_max("ub"))
+    bound, survivors = _bound_and_filter(
+        weighted.select(id_col, "term").join(F.broadcast(ub), "term"),
+        id_col,
+        "ub",
+        query_terms,
+        theta,
+        floor,
     )
-    # per-doc UB sum over PRESENT terms, fixed query order (the
-    # pivot_score discipline — no cross-row double sum)
-    ub_rows = weighted.select(id_col, "term", "w").join(F.broadcast(ub), "term")
-    bound = ub_rows.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("ub"))).alias(f"ub_{i}")
-            for i, t in enumerate(query_terms)
-        ]
+    final = _top(
+        pivot_score(weighted.join(survivors, id_col), id_col, query_terms),
+        id_col,
+        k,
     )
-    zero_dec = F.lit("0").cast("decimal(18,6)")
-    ub_sum = None
-    for i in range(len(query_terms)):
-        piece = F.coalesce(F.col(f"ub_{i}"), zero_dec)
-        ub_sum = piece if ub_sum is None else ub_sum + piece
-    bound = bound.select(id_col, ub_sum.alias("ub_sum"))
-    n_bound = bound.agg(F.count(F.lit(1)).alias("n_docs_scored_bound"))
-    # ε = ceil((|q|+1)/2) micro-quanta — covers θ rounding UP by 5e-7
-    # plus |q| UBs each rounding DOWN by 5e-7 (docstring proof)
-    eps_micros = (len(query_terms) + 2) // 2
-    eps = F.lit(f"0.{eps_micros:06d}").cast("decimal(18,6)")
-    survivors = bound.crossJoin(F.broadcast(theta)).filter(
-        F.col("ub_sum") >= F.col("theta").cast("decimal(18,6)") - eps
-    )
-    n_surv = survivors.agg(F.count(F.lit(1)).alias("n_survivors"))
-    final = (
-        pivot_score(
-            weighted.join(survivors.select(id_col), id_col), id_col, query_terms
-        )
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-    )
-    return final.crossJoin(F.broadcast(n_bound)).crossJoin(F.broadcast(n_surv))
+    return final.crossJoin(
+        F.broadcast(_count(bound, "n_docs_scored_bound"))
+    ).crossJoin(F.broadcast(_count(survivors, "n_survivors")))
 
 
 def bm25_champion_vs_exact(
@@ -1538,69 +1470,24 @@ def bm25_champion_vs_exact(
     same_doc); the rank windows run after each path's
     TakeOrderedAndProject cut, ≤k rows each.
     """
-    from pyspark.sql import Window
+    weighted = _weighted_postings(
+        df, id_col, text_col, query_terms, k1, b
+    ).localCheckpoint(eager=False)
+    by_score = Window.orderBy(F.desc("bm25"), F.asc(id_col))
 
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, "toks", F.size("toks").alias("dl")
-    )
-    postings = (
-        docs.select(id_col, "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _corpus_stats(docs.select(id_col, "dl"))
-    weighted = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-        .withColumn(
-            "w",
-            bm25_weight(
-                F.col("tf"),
-                F.col("df"),
-                F.col("dl"),
-                F.col("n_docs"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ),
+    def ranked(postings: DataFrame, prefix: str) -> DataFrame:
+        return (
+            _top(pivot_score(postings, id_col, query_terms), id_col, k)
+            .withColumn("rank", F.row_number().over(by_score))
+            .select(
+                "rank",
+                F.col(id_col).alias(f"{prefix}_doc_id"),
+                F.col("bm25").alias(f"{prefix}_bm25"),
+            )
         )
-        .localCheckpoint(eager=False)
-    )
-    w10 = Window.orderBy(F.desc("bm25"), F.asc(id_col))
-    champ = weighted.withColumn(
-        "champ_rank",
-        F.row_number().over(
-            Window.partitionBy("term").orderBy(F.desc("tf"), F.asc(id_col))
-        ),
-    ).filter(F.col("champ_rank") <= champions)
-    cl = (
-        pivot_score(champ, id_col, query_terms)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w10))
-        .select(
-            "rank",
-            F.col(id_col).alias("cl_doc_id"),
-            F.col("bm25").alias("cl_bm25"),
-        )
-    )
-    full = (
-        pivot_score(weighted, id_col, query_terms)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w10))
-        .select(
-            "rank",
-            F.col(id_col).alias("exact_doc_id"),
-            F.col("bm25").alias("exact_bm25"),
-        )
-    )
+
+    cl = ranked(_champions(weighted, id_col, champions), "cl")
+    full = ranked(weighted, "exact")
     return cl.join(full, "rank").select(
         "rank",
         "cl_doc_id",
@@ -1636,67 +1523,24 @@ def bm25_maxscore_topk(
 
     Safety/rounding accounting (n_essential_terms and n_candidates are
     hash-gated, so membership must be round-6-stable AND rank-safe):
-    θ is the champion pass's achieved k-th score (a lower bound on the
-    true k-th score); UBs are round(·,6) DECIMAL(18,6) and the tail is
-    their exact DECIMAL sum, so with each rounding ≤ 5e-7 off and θ
-    rounding up ≤ 5e-7, a doc of only-suffix terms truly scores
-    < tail_rounded + |q|·5e-7 — marking non-essential only when
-    tail_rounded < θ − ε with ε = ceil((|q|+1)/2) µ therefore never
-    prunes a true top-k member (the bm25_wand_topk quantum, applied to
+    θ, ε and the barrier come from :func:`_pruning_threshold`; UBs are
+    round(·,6) DECIMAL(18,6) and the tail is their exact DECIMAL sum,
+    so with each rounding ≤ 5e-7 off and θ rounding up ≤ 5e-7, a doc
+    of only-suffix terms truly scores < tail_rounded + |q|·5e-7 —
+    marking non-essential only when tail_rounded < θ − ε therefore
+    never prunes a true top-k member (that helper's proof, applied to
     tails). The equals-exhaustive property is pinned by pytest.
 
     Returns the top-k rows plus (n_essential_terms, n_candidates) as
     gated bookkeeping columns."""
-    from pyspark.sql import Window
-
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, "toks", F.size("toks").alias("dl")
-    )
-    postings = (
-        docs.select(id_col, "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _corpus_stats(docs.select(id_col, "dl"))
-    weighted = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-        .withColumn(
-            "w",
-            bm25_weight(
-                F.col("tf"),
-                F.col("df"),
-                F.col("dl"),
-                F.col("n_docs"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ),
-        )
-    )
-    # four consumers (UB tails, champion θ, candidate cut, final
-    # scoring) — one lazy materialization of the index-sized
-    # query-term postings, the bm25_wand_topk barrier rationale
-    weighted = weighted.localCheckpoint(eager=False)
-    ub = weighted.groupBy("term").agg(
-        F.round(F.max("w"), 6).cast("decimal(18,6)").alias("ub")
-    )
-    champ_rank = Window.partitionBy("term").orderBy(F.desc("tf"), F.asc(id_col))
-    champ_scores = pivot_score(
-        weighted.withColumn("champ_rank", F.row_number().over(champ_rank))
-        .filter(F.col("champ_rank") <= champions),
+    weighted, theta, floor = _pruning_threshold(
+        _weighted_postings(df, id_col, text_col, query_terms, k1, b),
         id_col,
         query_terms,
+        k,
+        champions,
     )
-    theta = champ_scores.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k).agg(
-        F.min("bm25").alias("theta")
-    )
+    ub = weighted.groupBy("term").agg(_round6_max("ub"))
     # tail sums over the |q|-row UB frame (a global window over a
     # bounded dimension — allowlisted plan shape): exact DECIMAL sums,
     # order pinned by (ub DESC, term ASC)
@@ -1704,13 +1548,10 @@ def bm25_maxscore_topk(
         Window.orderBy(F.desc("ub"), F.asc("term"))
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    eps_micros = (len(query_terms) + 2) // 2
-    eps = F.lit(f"0.{eps_micros:06d}").cast("decimal(18,6)")
     tails = ub.select("term", "ub", F.sum("ub").over(tail_w).alias("tail"))
     essential = tails.crossJoin(F.broadcast(theta)).filter(
-        F.col("tail") >= F.col("theta").cast("decimal(18,6)") - eps
+        F.col("tail") >= floor
     )
-    n_ess = essential.agg(F.count(F.lit(1)).alias("n_essential_terms"))
     cand = (
         weighted.join(
             F.broadcast(essential.select("term")), "term", "semi"
@@ -1718,13 +1559,14 @@ def bm25_maxscore_topk(
         .select(id_col)
         .distinct()
     )
-    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    final = (
-        pivot_score(weighted.join(cand, id_col), id_col, query_terms)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
+    final = _top(
+        pivot_score(weighted.join(cand, id_col), id_col, query_terms),
+        id_col,
+        k,
     )
-    return final.crossJoin(F.broadcast(n_ess)).crossJoin(F.broadcast(n_cand))
+    return final.crossJoin(
+        F.broadcast(_count(essential, "n_essential_terms"))
+    ).crossJoin(F.broadcast(_count(cand, "n_candidates")))
 
 
 def bm25_blockmax_topk(
@@ -1747,109 +1589,51 @@ def bm25_blockmax_topk(
     strictly tighter bound, so strictly fewer candidates survive.
     Relationally: block = id div ``block``, per-(term, block) round-6
     DECIMAL maxima, and the per-doc bound joins each present posting
-    to ITS OWN block's maximum (same fixed-order pivot as WAND's).
+    to ITS OWN block's maximum (same fixed-order DECIMAL bound sum as
+    WAND's, :func:`_bound_and_filter`).
 
     Safety: bm(t, block(d)) ≥ w(t, d) for every posting by
-    construction, so the bound dominates the true score; θ is the
-    champion pass's achieved k-th score; the round-6 slack is
-    absorbed by the same ε = ceil((|q|+1)/2) µ widening as
-    bm25_wand_topk (identical accounting — the bound is still a
-    |q|-term fixed-order DECIMAL sum).
+    construction, so the bound dominates the true score; θ, ε and the
+    rounding proof are :func:`_pruning_threshold`'s, unchanged (the
+    bound is still a |q|-term fixed-order DECIMAL sum).
 
     Both survivor counts are returned gated (n_survivors_block and
     the classic global-UB n_survivors_global), so the tightening is
     measured data, and equals-exhaustive is pinned by pytest."""
-    from pyspark.sql import Window
-
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = tokenize(F.col(text_col))
-    docs = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col, "toks", F.size("toks").alias("dl")
-    )
-    postings = (
-        docs.select(id_col, "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _corpus_stats(docs.select(id_col, "dl"))
-    weighted = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("avgdl", F.col("sum_dl") / F.col("n_docs"))
-        .withColumn(
-            "w",
-            bm25_weight(
-                F.col("tf"),
-                F.col("df"),
-                F.col("dl"),
-                F.col("n_docs"),
-                F.col("avgdl"),
-                k1,
-                b,
-            ),
-        )
-        .withColumn("blk", F.expr(f"{id_col} div {block}"))
-    )
-    weighted = weighted.localCheckpoint(eager=False)  # the WAND barrier
-    zero_dec = F.lit("0").cast("decimal(18,6)")
-    # per-(term, block) maxima — the block-max index; per-term global
-    # UBs ride the same frame for the comparison count
-    bmax = weighted.groupBy("term", "blk").agg(
-        F.round(F.max("w"), 6).cast("decimal(18,6)").alias("bm")
-    )
-    ub = weighted.groupBy("term").agg(
-        F.round(F.max("w"), 6).cast("decimal(18,6)").alias("ub")
-    )
-    champ_rank = Window.partitionBy("term").orderBy(F.desc("tf"), F.asc(id_col))
-    champ_scores = pivot_score(
-        weighted.withColumn("champ_rank", F.row_number().over(champ_rank))
-        .filter(F.col("champ_rank") <= champions),
+    weighted, theta, floor = _pruning_threshold(
+        _weighted_postings(
+            df, id_col, text_col, query_terms, k1, b
+        ).withColumn("blk", F.expr(f"{id_col} div {block}")),
         id_col,
         query_terms,
+        k,
+        champions,
     )
-    theta = champ_scores.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k).agg(
-        F.min("bm25").alias("theta")
+    # per-(term, block) maxima — the block-max index; per-term global
+    # UBs ride the same frame for the comparison count
+    bmax = weighted.groupBy("term", "blk").agg(_round6_max("bm"))
+    ub = weighted.groupBy("term").agg(_round6_max("ub"))
+    _, surv_blk = _bound_and_filter(
+        weighted.select(id_col, "term", "blk").join(bmax, ["term", "blk"]),
+        id_col,
+        "bm",
+        query_terms,
+        theta,
+        floor,
     )
-    eps_micros = (len(query_terms) + 2) // 2
-    eps = F.lit(f"0.{eps_micros:06d}").cast("decimal(18,6)")
-
-    def bound_and_filter(src, bcol, out_count):
-        per_doc = src.groupBy(id_col).agg(
-            *[
-                F.max(F.when(F.col("term") == t, F.col(bcol))).alias(
-                    f"b_{i}"
-                )
-                for i, t in enumerate(query_terms)
-            ]
-        )
-        s = None
-        for i in range(len(query_terms)):
-            piece = F.coalesce(F.col(f"b_{i}"), zero_dec)
-            s = piece if s is None else s + piece
-        surv = (
-            per_doc.select(id_col, s.alias("bsum"))
-            .crossJoin(F.broadcast(theta))
-            .filter(
-                F.col("bsum") >= F.col("theta").cast("decimal(18,6)") - eps
-            )
-            .select(id_col)
-        )
-        return surv, surv.agg(F.count(F.lit(1)).alias(out_count))
-
-    blk_rows = weighted.select(id_col, "term", "blk").join(
-        bmax, ["term", "blk"]
+    _, surv_glob = _bound_and_filter(
+        weighted.select(id_col, "term").join(F.broadcast(ub), "term"),
+        id_col,
+        "ub",
+        query_terms,
+        theta,
+        floor,
     )
-    surv_blk, n_blk = bound_and_filter(blk_rows, "bm", "n_survivors_block")
-    ub_rows = weighted.select(id_col, "term").join(F.broadcast(ub), "term")
-    _surv_glob, n_glob = bound_and_filter(
-        ub_rows, "ub", "n_survivors_global"
+    final = _top(
+        pivot_score(weighted.join(surv_blk, id_col), id_col, query_terms),
+        id_col,
+        k,
     )
-    final = (
-        pivot_score(weighted.join(surv_blk, id_col), id_col, query_terms)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-    )
-    return final.crossJoin(F.broadcast(n_blk)).crossJoin(F.broadcast(n_glob))
+    return final.crossJoin(
+        F.broadcast(_count(surv_blk, "n_survivors_block"))
+    ).crossJoin(F.broadcast(_count(surv_glob, "n_survivors_global")))

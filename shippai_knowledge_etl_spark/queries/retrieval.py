@@ -1702,20 +1702,12 @@ def retrieval_impact_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shippai_knowledge_etl_spark.operators.retrieval import (
         BM25_B,
         BM25_K1,
+        _dense_tf,
         bm25_weight,
     )
 
     d = load(spark, sf_dir, "documents")
-    toks = tokenize(F.col("text"))
-    tf_cols = [
-        (F.size("toks") - F.size(F.array_remove(F.col("toks"), t)))
-        .cast("long")
-        .alias(f"tf_{i}")
-        for i, t in enumerate(QUERY_TERMS)
-    ]
-    per_doc = d.select(F.col("doc_id"), toks.alias("toks")).select(
-        "doc_id", F.size("toks").cast("long").alias("dl"), *tf_cols
-    )
+    per_doc = _dense_tf(d, "doc_id", "text", QUERY_TERMS)
     # Round-12 optimization (guide §2.3 "don't recompute what you can
     # keep"; the eval_meteor_frag lazy-localCheckpoint idiom): four
     # consumers read per_doc — the corpus-stats aggregate, the global

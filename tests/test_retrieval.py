@@ -634,3 +634,116 @@ def test_blockmax_wand_rank_safe_and_tighter(spark, sf_dir):
         (r["doc_id"], r["bm25"]) for r in exact
     ]
     assert bmw[0]["n_survivors_block"] <= bmw[0]["n_survivors_global"]
+
+
+DEGENERATE_CORPORA = {
+    "empty": [],
+    "one_doc_with_terms": [(1, "spark join window spark")],
+    "one_doc_without_terms": [(1, "nothing relevant here")],
+    "five_identical_docs": [(i, "spark") for i in range(1, 6)],
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(DEGENERATE_CORPORA))
+def test_bm25_pruning_family_on_degenerate_corpora(spark, corpus):
+    """Empty, one-doc and all-tied corpora: every pruned top-k returns
+    exactly the exhaustive top-k's (id, bm25) rows, the champion/exact
+    harness agrees rank by rank, and query likelihood scores every
+    doc once (ROADMAP aim 3: operators hold on degenerate input)."""
+    d = spark.createDataFrame(
+        DEGENERATE_CORPORA[corpus], "doc_id long, text string"
+    )
+
+    def pairs(df):
+        return [(r["doc_id"], r["bm25"]) for r in df.collect()]
+
+    want = pairs(retrieval.bm25_topk(d, "doc_id", "text", TERMS, 10))
+    for op in (
+        retrieval.bm25_wand_topk,
+        retrieval.bm25_maxscore_topk,
+        retrieval.bm25_blockmax_topk,
+        retrieval.bm25_champion_topk,
+    ):
+        assert pairs(op(d, "doc_id", "text", TERMS, 10)) == want, op.__name__
+    cve = retrieval.bm25_champion_vs_exact(
+        d, "doc_id", "text", TERMS, 10
+    ).orderBy("rank").collect()
+    assert all(r["same_doc"] for r in cve)
+    assert [(r["exact_doc_id"], r["exact_bm25"]) for r in cve] == want
+    ql = retrieval.query_likelihood_dense(d, "doc_id", "text", TERMS)
+    ids = [r["doc_id"] for r in ql.collect()]
+    assert sorted(ids) == [i for i, _ in DEGENERATE_CORPORA[corpus]]
+
+
+@pytest.mark.parametrize("n_vectors", [0, 1])
+def test_ann_evals_on_degenerate_corpora(spark, n_vectors):
+    """An empty embedding corpus yields no eval rows; a corpus whose
+    only vector is the sampled query yields one zero-hit row per
+    eval (no neighbor exists, so nothing can be recalled)."""
+    emb = spark.createDataFrame(
+        [(i, [float(j % 3 - 1) for j in range(64)]) for i in range(n_vectors)],
+        "vec_id long, embedding array<float>",
+    )
+    args = (emb, "vec_id", "embedding", 50, 10)
+    recall = [tuple(r) for r in retrieval.ann_recall_eval(*args).collect()]
+    ndcg = [tuple(r) for r in retrieval.ann_ndcg_eval(*args).collect()]
+    mrr = [tuple(r) for r in retrieval.ann_mrr_eval(*args).collect()]
+    if n_vectors == 0:
+        assert recall == ndcg == mrr == []
+    else:
+        assert recall == [(0, 0, 0.0)]
+        assert ndcg == [(0, 0, 0.0, 0.0)]
+        assert mrr == [(0, 0, 0.0)]
+
+
+def test_ann_evals_reject_nonpositive_k(spark):
+    """k < 1 has no top-k and no literal table: every eval refuses it
+    with a ValueError before building a plan."""
+    emb = spark.createDataFrame(
+        [(0, [1.0] * 64)], "vec_id long, embedding array<float>"
+    )
+    for op in (
+        retrieval.ann_recall_eval,
+        retrieval.ann_ndcg_eval,
+        retrieval.ann_mrr_eval,
+    ):
+        with pytest.raises(ValueError):
+            op(emb, "vec_id", "embedding", 50, 0)
+
+
+def test_bm25_weight_call_sites():
+    """Spark-free AST guard: the BM25 weight is computed only by the
+    shared postings builder and the forms that cannot use it (dense
+    columns, batch semi-join postings, postings read at rest, the
+    impact audit), and the pruning family's rank-safety slack ε is
+    written once (operators/retrieval._pruning_threshold)."""
+    import ast
+    from pathlib import Path
+
+    import shippai_knowledge_etl_spark as pkg
+
+    allowed = {
+        "operators/retrieval.py:_weighted_postings",
+        "operators/retrieval.py:bm25_scores_dense",
+        "operators/retrieval.py:bm25_topk_batch",
+        "streaming/index.py:bm25_from_index",
+        "queries/retrieval.py:retrieval_impact_quantized",
+    }
+    eps = ast.dump(ast.parse("(len(query_terms) + 2) // 2", mode="eval").body)
+    root = Path(pkg.__file__).parent
+    sites, n_eps = [], 0
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        n_eps += sum(ast.dump(n) == eps for n in ast.walk(tree))
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Call) and "bm25_weight" in (
+                    getattr(n.func, "id", None),
+                    getattr(n.func, "attr", None),
+                ):
+                    sites.append(f"{path.relative_to(root).as_posix()}:{fn.name}")
+    assert set(sites) == allowed, sorted(set(sites) ^ allowed)
+    assert len(sites) == len(allowed), sorted(sites)
+    assert n_eps == 1, n_eps
