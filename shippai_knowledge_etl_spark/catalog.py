@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -610,8 +610,8 @@ DRIVER_WINDOW = (
 # runtime; older cohorts keep sf0.001 coverage via test_oracle_parity
 # plus whatever window slots they hold) — so the straddle-sensitive
 # class never loses sf0.01 coverage the round after it ships (the r10
-# blind spot: NEW_IN_ROUND used to reset each round). When a round
-# closes, ADD a new entry; never delete old ones (they're ~free
+# blind spot: a single current-round cohort reset each round). When a
+# round closes, ADD a new entry; never delete old ones (they're ~free
 # documentation and the two-round window is computed from the keys).
 COHORTS: dict[int, tuple[str, ...]] = {}
 
@@ -766,10 +766,6 @@ COHORTS[13] = (
     "dedup_minhash_verified",
 )
 
-# the CURRENT round's cohort — kept as a named alias so rotation
-# comments and round artifacts can keep saying "NEW_IN_ROUND"
-NEW_IN_ROUND: tuple[str, ...] = COHORTS[max(COHORTS)]
-
 # the sf0.01-pinned parity set: the last two rounds' cohorts
 COHORT_SF001_PINNED: tuple[str, ...] = tuple(
     dict.fromkeys(
@@ -787,7 +783,6 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL, or None → driver does rows-only check
     survey_ref: str = ""  # SURVEY.md §2 operator ids this demonstrates
     bench: bool = False  # include in bench.py headline set
-    tags: tuple[str, ...] = field(default=())
 
 
 def register(
@@ -795,12 +790,11 @@ def register(
     oracle: str | None = None,
     survey_ref: str = "",
     bench: bool = False,
-    tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, survey_ref, bench, tags)
+        _REGISTRY[name] = QuerySpec(name, fn, oracle, survey_ref, bench)
         return fn
 
     return deco

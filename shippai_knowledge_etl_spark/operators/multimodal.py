@@ -2,15 +2,34 @@
 
 Images/audio/video are opaque ``binary`` columns plus typed metadata
 structs; decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` UDFs. The decode libraries (PIL / torchaudio / ffmpeg)
-are NOT in this container, so most decode steps are STUBBED: when the
-library import fails we fall back to a deterministic fake decoder so
-the Spark-side plumbing — schema, batching, partitioning, UDF
-signature — is real and tested end-to-end. The real-decode branch
-raises NotImplementedError loudly rather than silently faking — with
-ONE real exception since round 9: PNG payloads decode for real via
-the pure-stdlib codec in ``png_codec.py`` (zlib inflate + all five
-RFC 2083 scanline filters), no Pillow required.
+``mapInPandas`` UDFs. Almost every one of them goes through one of two
+edges written once in this module:
+
+- ``_synthesize`` is the ingestion edge. Every ``attach_*_payload``
+  hands it a per-id generator ``make`` and it emits one
+  ``(doc_id, *make(doc_id))`` row per id behind ``scale_out``.
+- ``_decode_map`` is the narrow decode edge. Every ``*_features`` /
+  ``*_signatures`` map hands it a per-row ``features(doc_id,
+  *payload_bytes)`` and it emits ``(doc_id, *features, ok=true)``; a
+  row whose ``features`` raises becomes ``(doc_id, None…, ok=false)``
+  (errors are data, never task failures). Both edges take their
+  column names from the schema string.
+
+Only ``decode_image_features`` (whose real-decode branch re-raises
+NotImplementedError), ``sample_frames`` and ``audio_energy_frames``
+(many rows per payload, no ok column) write their own map.
+
+The decode libraries (PIL / torchaudio / ffmpeg) are NOT in this
+container, so the operators over ``attach_payload`` text bytes
+(``decode_image_features``, ``decode_audio_features``,
+``resize_images``, ``ahash_signatures``) decode with a deterministic
+fake: the Spark-side plumbing — schema, batching, partitioning, UDF
+signature — is real and tested end-to-end. Every other format decodes
+for real through the pure-stdlib codecs beside this module (PNG since
+round 9: zlib inflate + all five RFC 2083 scanline filters in
+``png_codec.py``, no Pillow required). ``decode_image_features``'s
+real-decode branch decodes PNG and raises NotImplementedError loudly
+for anything else rather than silently faking.
 
 Reference analog: ``download_image`` returning None on failure
 (src/render_pdf.py:90-98) — failure tolerance as nullable columns.
@@ -18,12 +37,64 @@ Reference analog: ``download_image`` returning None on failure
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shippai_knowledge_etl_spark.operators.avi_codec import (
+    decode_avi,
+    decode_avi_mjpeg,
+    encode_avi_mjpeg,
+    encode_avi_rgb24,
+)
+from shippai_knowledge_etl_spark.operators.bmp_codec import (
+    decode_bmp,
+    encode_bmp_rgb24,
+    encode_bmp_rle8,
+)
+from shippai_knowledge_etl_spark.operators.gif_codec import decode_gif, encode_gif
+from shippai_knowledge_etl_spark.operators.jpeg_codec import (
+    ZIGZAG,
+    decode_jpeg,
+    encode_jpeg,
+    encode_jpeg_progressive,
+    flat_block,
+)
+from shippai_knowledge_etl_spark.operators.png_codec import (
+    PNG_MAGIC,
+    decode_png,
+    decode_png16,
+    encode_png,
+    encode_png16,
+)
+from shippai_knowledge_etl_spark.operators.tar_codec import decode_tar, encode_tar
+from shippai_knowledge_etl_spark.operators.tiff_codec import (
+    decode_tiff,
+    encode_tiff,
+)
+from shippai_knowledge_etl_spark.operators.warc_codec import (
+    decode_warc_auto,
+    encode_warc,
+    encode_warc_gzip,
+    http_response,
+)
+from shippai_knowledge_etl_spark.operators.wav_codec import (
+    decode_wav,
+    decode_wav_ima,
+    encode_wav,
+    encode_wav_alaw,
+    encode_wav_ima,
+    encode_wav_mulaw,
+)
+from shippai_knowledge_etl_spark.operators.zip_codec import decode_zip, encode_zip
+from shippai_knowledge_etl_spark.sources.pdf_reader import extract_pdf_text
+from shippai_knowledge_etl_spark.sources.pdf_writer import pdf_document
 from shippai_knowledge_etl_spark.tables import scale_out
 
 if TYPE_CHECKING:
@@ -34,6 +105,141 @@ FEATURE_SCHEMA = (
 )
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_hash string"
+
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
+
+
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _synthesize(
+    df: DataFrame,
+    id_col: str,
+    make: Callable[[int], tuple],
+    schema: str = PAYLOAD_SCHEMA,
+) -> DataFrame:
+    """The ingestion edge: one ``(doc_id, *make(doc_id))`` row per id of
+    ``df[id_col]``, behind ``scale_out`` so the per-row encode spreads
+    over every core."""
+    columns = _columns(schema)
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = [(i, *make(i)) for i in map(int, pdf["doc_id"])]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
+        batches, schema
+    )
+
+
+def _decode_map(
+    df: DataFrame,
+    schema: str,
+    features: Callable[..., tuple],
+    inputs: tuple[str, ...] = ("payload",),
+) -> DataFrame:
+    """The narrow decode edge: ``(doc_id, *features(doc_id, *bytes of
+    inputs), True)`` per row, and ``(doc_id, None…, False)`` when
+    ``features`` raises — ``schema`` is ``doc_id``, the feature
+    columns, then ``ok``."""
+    columns = _columns(schema)
+    nulls = (None,) * (len(columns) - 2)
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = []
+            for doc_id, *blobs in zip(pdf["doc_id"], *(pdf[c] for c in inputs)):
+                i = int(doc_id)
+                try:
+                    rows.append((i, *features(i, *map(bytes, blobs)), True))
+                except Exception:
+                    rows.append((i, *nulls, False))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.select("doc_id", *inputs).mapInPandas(batches, schema)
+
+
+def _pcm16(i: int, n: int) -> list[int]:
+    """The Knuth-hash LCG PCM16 stream of every WAV surrogate: sample
+    k = ((id * 2654435761 + k * 40503) mod 65536) - 32768, exact in
+    int64 (the oracle SQL recomputes the same closed form)."""
+    return [((i * 2654435761 + k * 40503) % 65536) - 32768 for k in range(n)]
+
+
+def _ima_samples(i: int, n: int) -> list[int]:
+    """The IMA-ADPCM surrogate's source stream: s(k) = ((id·2654435761
+    + k²·40503) mod 8192) − 4096."""
+    return [((i * 2654435761 + k * k * 40503) % 8192) - 4096 for k in range(n)]
+
+
+def _rgb_ramp(i: int, w: int, h: int, shift: int = 0) -> bytes:
+    """Row-major RGB bytes, channel value (base_c + x + 2y + shift) mod
+    256 with bases (id, 3·id, 5·id) — the BMP and AVI surrogates'
+    gradient."""
+    return bytes(
+        (b + x + 2 * y + shift) % 256
+        for y in range(h)
+        for x in range(w)
+        for b in (i, 3 * i, 5 * i)
+    )
+
+
+def _flat_luma(base: int, nbx: int, nby: int) -> list[list]:
+    """nby×nbx grid of flat 8×8 DC blocks at (base + 7bx + 13by) % 256,
+    qDC=5 — the luma plane of every JPEG surrogate."""
+    return [
+        [flat_block((base + 7 * bx + 13 * by) % 256, 5) for bx in range(nbx)]
+        for by in range(nby)
+    ]
+
+
+def _jpeg_flat_components(i: int) -> tuple[int, int, list[dict]]:
+    """(w, h, components) of the flat-DC image of id ``i`` that
+    attach_jpeg_payload encodes baseline and
+    attach_jpeg_progressive_payload re-encodes progressively."""
+    if i % 2 == 0:
+        w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
+        return w, h, [
+            {"coeffs": _flat_luma(i, w // 8, h // 8), "q": [5] * 64, "hv": (1, 1)}
+        ]
+    w, h = 32 + 16 * ((i // 2) % 2), 32
+    cb = [
+        [flat_block((3 * i + 17 * mx + 29 * my) % 256, 6) for mx in range(w // 16)]
+        for my in range(2)
+    ]
+    cr = [
+        [flat_block((5 * i + 23 * mx + 31 * my) % 256, 6) for mx in range(w // 16)]
+        for my in range(2)
+    ]
+    return w, h, [
+        {"coeffs": _flat_luma(i, w // 8, 4), "q": [5] * 64, "hv": (2, 2)},
+        {"coeffs": cb, "q": [6] * 64, "hv": (1, 1)},
+        {"coeffs": cr, "q": [6] * 64, "hv": (1, 1)},
+    ]
+
+
+def _samples(pix: bytes) -> np.ndarray:
+    return np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
+
+
+def _weighted_sums(a: np.ndarray) -> tuple[int, int]:
+    """(Σ a, Σ a(x,y)·(x + 2y + 1)) of an (h, w, channels) int64 array
+    summed over channels — the position weight no flat whole-image
+    statistic can fake."""
+    a = a.sum(axis=2)
+    h, w = a.shape
+    wgt = (
+        np.arange(w, dtype=np.int64)[None, :]
+        + 2 * np.arange(h, dtype=np.int64)[:, None]
+        + 1
+    )
+    return int(a.sum()), int((a * wgt).sum())
 
 
 def attach_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -58,6 +264,25 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return (n % 640 + 16, (n // 640) % 480 + 16, 3)
 
 
+def _fake_resample(raw: bytes, out_w: int, out_h: int) -> tuple[int, int, np.ndarray]:
+    """(w, h, out): fake-decode ``raw`` to its h×w single-channel grid,
+    then REAL nearest-neighbor resample it to out_h×out_w (vectorized
+    gather)."""
+    w, h, _ = _fake_decode(raw)
+    # fake decode: tile/truncate payload into an h×w single-channel
+    # grid (deterministic); an empty payload decodes to the 16×16 zero
+    # grid so ok stays true — same contract as decode_image_features
+    if raw:
+        grid = np.frombuffer(
+            (raw * ((w * h) // len(raw) + 1))[: w * h], dtype=np.uint8
+        ).reshape(h, w)
+    else:
+        grid = np.zeros((h, w), dtype=np.uint8)
+    yi = (np.arange(out_h) * h) // out_h
+    xi = (np.arange(out_w) * w) // out_w
+    return w, h, grid[yi][:, xi]
+
+
 def decode_image_features(df: DataFrame, use_real_decoder: bool = False) -> DataFrame:
     """Image decode → feature columns via Arrow-batched mapInPandas.
 
@@ -68,11 +293,6 @@ def decode_image_features(df: DataFrame, use_real_decoder: bool = False) -> Data
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            PNG_MAGIC,
-            decode_png,
-        )
 
         def real_decode(payload: bytes) -> tuple[int, int, int]:
             # REAL path (round 9): PNG decodes with the pure-stdlib
@@ -107,10 +327,7 @@ def decode_image_features(df: DataFrame, use_real_decoder: bool = False) -> Data
                     raise  # loud posture: missing codec is not a data error
                 except Exception:
                     feats.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                feats,
-                columns=["doc_id", "byte_len", "width", "height", "channels", "ok"],
-            )
+            yield pd.DataFrame(feats, columns=_columns(FEATURE_SCHEMA))
 
     return df.select("doc_id", "payload").mapInPandas(batches, FEATURE_SCHEMA)
 
@@ -133,49 +350,11 @@ def png_decode_features(df: DataFrame) -> DataFrame:
     (data, not task, errors). Narrow Arrow map — no shuffle; pixels
     never leave the worker, only 7 small integers per image do."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, c, pixels = decode_png(payload)
+        return w, h, c, w * h, sum(pixels)
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, pixels = decode_png(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            w * h,
-                            sum(pixels),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_pixels",
-                    "pixel_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PNG_FEATURE_SCHEMA, features)
 
 
 def attach_png_payload(
@@ -190,38 +369,16 @@ def attach_png_payload(
     exact gradient for the pixel sums to match the oracle's
     closed-form recomputation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            encode_png,
+    def make(i: int) -> tuple:
+        w, h = 16 + i % 16, 16 + i % 8
+        r0, g0, b0 = i % 256, (7 * i) % 256, (13 * i) % 256
+        pixels = b"".join(
+            bytes(((r0 + y) % 256, (g0 + y) % 256, (b0 + y) % 256)) * w
+            for y in range(h)
         )
+        return (encode_png(w, h, 3, pixels, interlace=interlace),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 16 + i % 16, 16 + i % 8
-                r0, g0, b0 = i % 256, (7 * i) % 256, (13 * i) % 256
-                pixels = bytearray()
-                for y in range(h):
-                    row = bytes(
-                        (
-                            (r0 + y) % 256,
-                            (g0 + y) % 256,
-                            (b0 + y) % 256,
-                        )
-                    ) * w
-                    pixels += row
-                rows.append(
-                    (i, encode_png(w, h, 3, bytes(pixels),
-                                   interlace=interlace))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 WAV_FEATURE_SCHEMA = (
@@ -241,28 +398,11 @@ def attach_wav_payload(df: DataFrame, id_col: str) -> DataFrame:
     chunk layout and unpack the exact samples for the integer sums to
     match the oracle's closed-form recomputation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        samples = _pcm16(i, 64 + 2 * (i % 32))
+        return (encode_wav(samples, 8000 + (i % 4) * 4000, 1 + i % 2),)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import encode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                rate = 8000 + (i % 4) * 4000
-                channels = 1 + i % 2
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav(samples, rate, channels)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def wav_decode_features(df: DataFrame) -> DataFrame:
@@ -277,50 +417,19 @@ def wav_decode_features(df: DataFrame) -> DataFrame:
     become ok=false rows. Narrow Arrow map — no shuffle; samples never
     leave the worker, only 8 small integers per clip do."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        rate, channels, _bits, samples = decode_wav(payload)
+        n_frames = len(samples) // channels
+        return (
+            rate,
+            channels,
+            n_frames,
+            n_frames * 1000 // rate,
+            sum(samples),
+            sum(s * s for s in samples),
+        )
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, channels, _bits, samples = decode_wav(bytes(payload))
-                    n_frames = len(samples) // channels
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rate,
-                            channels,
-                            n_frames,
-                            n_frames * 1000 // rate,
-                            sum(samples),
-                            sum(s * s for s in samples),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "channels",
-                    "n_frames",
-                    "duration_ms",
-                    "sum_samples",
-                    "sum_squares",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, WAV_FEATURE_SCHEMA
-    )
+    return _decode_map(df, WAV_FEATURE_SCHEMA, features)
 
 
 AUDIO_SCHEMA = (
@@ -328,56 +437,25 @@ AUDIO_SCHEMA = (
 )
 
 
-def decode_audio_features(
-    df: DataFrame, sample_rate: int = 16000, use_real_decoder: bool = False
-) -> DataFrame:
+def decode_audio_features(df: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Audio decode → feature columns via Arrow-batched mapInPandas.
 
     The fake decoder treats the payload as 16-bit mono PCM at
     ``sample_rate`` (n_samples = bytes//2) and fingerprints the raw
-    payload; the real branch (torchaudio/soundfile) is gated and raises
-    loudly since those libs are absent here. Same batch/partitioning
-    contract as decode_image_features: narrow per-row map, failures are
-    ok=false rows.
+    payload; real WAV audio goes through wav_decode_features. Same
+    batch/partitioning contract as decode_image_features: narrow
+    per-row map, failures are ok=false rows.
     """
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def features(_i: int, raw: bytes) -> tuple:
+        n_samples = len(raw) // 2
+        return (
+            n_samples,
+            n_samples * 1000 // sample_rate,
+            hashlib.md5(raw).hexdigest(),
+        )
 
-        import pandas as pd
-
-        if use_real_decoder:
-            try:
-                import soundfile  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real audio decode needs soundfile/torchaudio, not in "
-                    "this container; use use_real_decoder=False"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    n_samples = len(raw) // 2
-                    rows.append(
-                        (
-                            int(doc_id),
-                            n_samples,
-                            n_samples * 1000 // sample_rate,
-                            hashlib.md5(raw).hexdigest(),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "duration_ms", "payload_md5", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, AUDIO_SCHEMA)
+    return _decode_map(df, AUDIO_SCHEMA, features)
 
 
 def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
@@ -386,8 +464,6 @@ def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
     one-row→many-rows pattern over binary columns."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
         import pandas as pd
 
         for pdf in it:
@@ -400,7 +476,7 @@ def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
                     rows.append(
                         (int(doc_id), i, hashlib.md5(chunk).hexdigest())
                     )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_hash"])
+            yield pd.DataFrame(rows, columns=_columns(FRAME_SCHEMA))
 
     return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
 
@@ -411,9 +487,7 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, use_real_decoder: bool = False
-) -> DataFrame:
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Image resize via Arrow-batched ``mapInPandas`` — the thumbnail /
     normalization step a vision-training pipeline runs before feature
     extraction. The resampling math is REAL nearest-neighbor
@@ -429,66 +503,18 @@ def resize_images(
     shuffle, linear scale-out; batch memory is bounded by
     (arrow batch rows) × max(src bytes, dst bytes)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def features(_i: int, raw: bytes) -> tuple:
+        w, h, out = _fake_resample(raw, target_w, target_h)
+        buf = out.tobytes()
+        return w, h, target_w, target_h, buf, hashlib.md5(buf).hexdigest()
 
-        import numpy as np
-        import pandas as pd
-
-        if use_real_decoder:
-            try:
-                from PIL import Image  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real image decode needs Pillow, which is not in this "
-                    "container; use use_real_decoder=False (deterministic fake)"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, _ = _fake_decode(raw)
-                    # fake decode: tile/truncate payload into an h×w
-                    # single-channel grid (deterministic); an empty
-                    # payload decodes to the 16×16 zero grid so ok stays
-                    # true — same contract as decode_image_features
-                    if raw:
-                        grid = np.frombuffer(
-                            (raw * ((w * h) // len(raw) + 1))[: w * h],
-                            dtype=np.uint8,
-                        ).reshape(h, w)
-                    else:
-                        grid = np.zeros((h, w), dtype=np.uint8)
-                    # REAL nearest-neighbor resample (vectorized gather)
-                    yi = (np.arange(target_h) * h) // target_h
-                    xi = (np.arange(target_w) * w) // target_w
-                    out = grid[yi][:, xi]
-                    buf = out.tobytes()
-                    rows.append(
-                        (int(doc_id), w, h, target_w, target_h, buf,
-                         hashlib.md5(buf).hexdigest(), True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "src_w", "src_h", "dst_w", "dst_h",
-                         "pixels", "pixel_md5", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, RESIZE_SCHEMA)
+    return _decode_map(df, RESIZE_SCHEMA, features)
 
 
 AHASH_SCHEMA = "doc_id long, sig long, ok boolean"
 
 
-def ahash_signatures(
-    df: DataFrame, hash_dim: int = 8, use_real_decoder: bool = False
-) -> DataFrame:
+def ahash_signatures(df: DataFrame, hash_dim: int = 8) -> DataFrame:
     """Perceptual average-hash (aHash) per image: resize the decoded
     grid to ``hash_dim``×``hash_dim`` (the same real nearest-neighbor
     gather as :func:`resize_images`), threshold each cell at the grid
@@ -502,49 +528,17 @@ def ahash_signatures(
     stack's sign-LSH signatures. Narrow Arrow map, no shuffle;
     signature state is 8 bytes/image at any corpus size."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def features(_i: int, raw: bytes) -> tuple:
+        small = _fake_resample(raw, hash_dim, hash_dim)[2].astype(np.int64)
+        sig = 0
+        for b in (small > small.mean()).flatten():
+            sig = (sig << 1) | int(b)
+        # wrap into signed 64-bit (bit 63 set -> negative)
+        if sig >= 1 << 63:
+            sig -= 1 << 64
+        return (sig,)
 
-        if use_real_decoder:
-            try:
-                from PIL import Image  # noqa: F401
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real image decode needs Pillow, which is not in this "
-                    "container; use use_real_decoder=False (deterministic fake)"
-                ) from e
-            raise NotImplementedError("real decode path not wired yet")
-        d = hash_dim
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, _ = _fake_decode(raw)
-                    if raw:
-                        grid = np.frombuffer(
-                            (raw * ((w * h) // len(raw) + 1))[: w * h],
-                            dtype=np.uint8,
-                        ).reshape(h, w)
-                    else:
-                        grid = np.zeros((h, w), dtype=np.uint8)
-                    yi = (np.arange(d) * h) // d
-                    xi = (np.arange(d) * w) // d
-                    small = grid[yi][:, xi].astype(np.int64)
-                    bits = (small > small.mean()).flatten()
-                    sig = 0
-                    for b in bits:  # d*d=64 iterations, vocabulary-free
-                        sig = (sig << 1) | int(b)
-                    # wrap into signed 64-bit (bit 63 set -> negative)
-                    if sig >= 1 << 63:
-                        sig -= 1 << 64
-                    rows.append((int(doc_id), sig, True))
-                except Exception:
-                    rows.append((int(doc_id), None, False))
-            yield pd.DataFrame(rows, columns=["doc_id", "sig", "ok"])
-
-    return df.select("doc_id", "payload").mapInPandas(batches, AHASH_SCHEMA)
+    return _decode_map(df, AHASH_SCHEMA, features)
 
 
 def image_near_dup(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -611,7 +605,6 @@ def audio_energy_frames(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     mirrors the same truncation). Int sums of uint8 bytes → exact."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
         import pandas as pd
 
         for pdf in it:
@@ -627,9 +620,7 @@ def audio_energy_frames(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
                     (int(doc_id), int(i), int(e))
                     for i, e in enumerate(energies)
                 )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "energy"]
-            )
+            yield pd.DataFrame(rows, columns=_columns(ENERGY_SCHEMA))
 
     return df.select("doc_id", "payload").mapInPandas(
         batches, ENERGY_SCHEMA
@@ -663,48 +654,22 @@ def wav_vad_features(df: DataFrame) -> DataFrame:
     five integers per clip do. The 100 TB form is identical — VAD is
     embarrassingly per-clip."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        _rate, _ch, _bits, samples = decode_wav(payload)
+        n_frames = len(samples) // 16
+        voiced = best = run = max_e = 0
+        for f in range(n_frames):
+            e = sum(s * s for s in samples[16 * f : 16 * f + 16])
+            max_e = max(max_e, e)
+            if e > VAD_ENERGY_THRESHOLD:
+                voiced += 1
+                run += 1
+                best = max(best, run)
+            else:
+                run = 0
+        return n_frames, voiced, best, max_e
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _rate, _ch, _bits, samples = decode_wav(bytes(payload))
-                    n_frames = len(samples) // 16
-                    voiced = best = run = 0
-                    max_e = 0
-                    for f in range(n_frames):
-                        e = sum(
-                            s * s for s in samples[16 * f : 16 * f + 16]
-                        )
-                        max_e = max(max_e, e)
-                        if e > VAD_ENERGY_THRESHOLD:
-                            voiced += 1
-                            run += 1
-                            best = max(best, run)
-                        else:
-                            run = 0
-                    rows.append(
-                        (int(doc_id), n_frames, voiced, best, max_e, True)
-                    )
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_frames16",
-                    "voiced_frames",
-                    "longest_voiced_run",
-                    "max_frame_energy",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, WAV_VAD_SCHEMA)
+    return _decode_map(df, WAV_VAD_SCHEMA, features)
 
 
 PNG_DOWNSAMPLE_SCHEMA = (
@@ -726,42 +691,26 @@ def png_downsample_features(df: DataFrame) -> DataFrame:
     the oracle's floor divisions. Narrow Arrow map; pixels stay in the
     worker."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, c, px = decode_png(payload)
+        ow, oh = w // 2, h // 2
+        total = 0
+        stride = w * c
+        for y in range(oh):
+            r0 = 2 * y * stride
+            r1 = r0 + stride
+            for x in range(ow):
+                base = 2 * x * c
+                for ch in range(c):
+                    total += (
+                        px[r0 + base + ch]
+                        + px[r0 + base + c + ch]
+                        + px[r1 + base + ch]
+                        + px[r1 + base + c + ch]
+                    ) // 4
+        return ow, oh, total
 
-        from shippai_knowledge_etl_spark.operators.png_codec import decode_png
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, px = decode_png(bytes(payload))
-                    ow, oh = w // 2, h // 2
-                    total = 0
-                    stride = w * c
-                    for y in range(oh):
-                        r0 = 2 * y * stride
-                        r1 = r0 + stride
-                        for x in range(ow):
-                            base = 2 * x * c
-                            for ch in range(c):
-                                total += (
-                                    px[r0 + base + ch]
-                                    + px[r0 + base + c + ch]
-                                    + px[r1 + base + ch]
-                                    + px[r1 + base + c + ch]
-                                ) // 4
-                    rows.append((int(doc_id), ow, oh, total, True))
-                except Exception:
-                    rows.append((int(doc_id), None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_w", "out_h", "ds_pixel_sum", "ok"],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG_DOWNSAMPLE_SCHEMA
-    )
+    return _decode_map(df, PNG_DOWNSAMPLE_SCHEMA, features)
 
 
 GIF_FEATURE_SCHEMA = (
@@ -781,36 +730,21 @@ def attach_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     decoder's variable-width table reconstruction is exercised by
     every payload, not just literal codes."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.gif_codec import (
-            encode_gif,
+    def make(i: int) -> tuple:
+        w, h = 8 + i % 8, 8 + i % 4
+        palette = bytes(
+            v
+            for j in range(16)
+            for v in (
+                (i + 5 * j) % 256,
+                (2 * i + 11 * j) % 256,
+                (3 * i + 7 * j) % 256,
+            )
         )
+        idx = bytes((x + 3 * y + i) % 16 for y in range(h) for x in range(w))
+        return (encode_gif(w, h, palette, idx),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 8, 8 + i % 4
-                palette = bytes(
-                    v
-                    for j in range(16)
-                    for v in (
-                        (i + 5 * j) % 256,
-                        (2 * i + 11 * j) % 256,
-                        (3 * i + 7 * j) % 256,
-                    )
-                )
-                idx = bytes(
-                    (x + 3 * y + i) % 16 for y in range(h) for x in range(w)
-                )
-                rows.append((i, encode_gif(w, h, palette, idx)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def gif_decode_features(df: DataFrame) -> DataFrame:
@@ -827,48 +761,17 @@ def gif_decode_features(df: DataFrame) -> DataFrame:
     Scale shape: one narrow Arrow map — indices and palette stay in
     the worker; seven small integers per image return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, palette, idx = decode_gif(payload)
+        sr = sg = sb = 0
+        for p in idx:
+            o = 3 * p
+            sr += palette[o]
+            sg += palette[o + 1]
+            sb += palette[o + 2]
+        return w, h, len(palette) // 3, sr, sg, sb
 
-        from shippai_knowledge_etl_spark.operators.gif_codec import (
-            decode_gif,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, palette, idx = decode_gif(bytes(payload))
-                    sr = sg = sb = 0
-                    for p in idx:
-                        o = 3 * p
-                        sr += palette[o]
-                        sg += palette[o + 1]
-                        sb += palette[o + 2]
-                    rows.append(
-                        (int(doc_id), w, h, len(palette) // 3, sr, sg, sb, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_colors",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, GIF_FEATURE_SCHEMA
-    )
+    return _decode_map(df, GIF_FEATURE_SCHEMA, features)
 
 
 MULAW_FEATURE_SCHEMA = (
@@ -885,28 +788,10 @@ def attach_mulaw_payload(df: DataFrame, id_col: str) -> DataFrame:
     format-tag-7 container — the 8 kHz telephony encoding speech
     corpora actually arrive in."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        return (encode_wav_mulaw(_pcm16(i, 64 + 2 * (i % 32)), 8000, 1),)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_mulaw,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav_mulaw(samples, 8000, 1)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def wav_mulaw_features(df: DataFrame) -> DataFrame:
@@ -922,53 +807,14 @@ def wav_mulaw_features(df: DataFrame) -> DataFrame:
     Scale shape: one narrow Arrow map; per clip five integers return
     to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(i: int, payload: bytes) -> tuple:
+        _rate, _ch, bits, q = decode_wav(payload)
+        if bits != 8:
+            raise ValueError("expected mu-law storage width 8")
+        errs = [abs(x - y) for x, y in zip(_pcm16(i, len(q)), q)]
+        return len(q), sum(q), sum(errs), max(errs) if errs else 0
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import decode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _rate, _ch, bits, q = decode_wav(bytes(payload))
-                    if bits != 8:
-                        raise ValueError("expected mu-law storage width 8")
-                    i = int(doc_id)
-                    orig = [
-                        ((i * 2654435761 + k * 40503) % 65536) - 32768
-                        for k in range(len(q))
-                    ]
-                    errs = [abs(x - y) for x, y in zip(orig, q)]
-                    rows.append(
-                        (
-                            i,
-                            len(q),
-                            sum(q),
-                            sum(errs),
-                            max(errs) if errs else 0,
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "sum_expanded",
-                    "sum_abs_err",
-                    "max_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MULAW_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MULAW_FEATURE_SCHEMA, features)
 
 
 BMP_FEATURE_SCHEMA = (
@@ -990,50 +836,20 @@ def attach_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
       mod 256 — runs of 7 so the run-length encoder emits genuine
       multi-pixel runs the decoder must expand exactly.
     """
+    palette = [
+        ((j * 17) % 256, (j * 29) % 256, (j * 43) % 256) for j in range(256)
+    ]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        h = 8 + i % 8
+        if i % 2 == 0:
+            w = 12 + i % 13
+            return (encode_bmp_rgb24(w, h, _rgb_ramp(i, w, h)),)
+        w = 14 + i % 11
+        idx = bytes((i + 3 * y + x // 7) % 256 for y in range(h) for x in range(w))
+        return (encode_bmp_rle8(w, h, idx, palette),)
 
-        from shippai_knowledge_etl_spark.operators.bmp_codec import (
-            encode_bmp_rgb24,
-            encode_bmp_rle8,
-        )
-
-        palette = [
-            ((j * 17) % 256, (j * 29) % 256, (j * 43) % 256)
-            for j in range(256)
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                h = 8 + i % 8
-                if i % 2 == 0:
-                    w = 12 + i % 13
-                    rgb = bytearray()
-                    for y in range(h):
-                        for x in range(w):
-                            rgb += bytes(
-                                (
-                                    (i + x + 2 * y) % 256,
-                                    (3 * i + x + 2 * y) % 256,
-                                    (5 * i + x + 2 * y) % 256,
-                                )
-                            )
-                    rows.append((i, encode_bmp_rgb24(w, h, bytes(rgb))))
-                else:
-                    w = 14 + i % 11
-                    idx = bytes(
-                        (i + 3 * y + x // 7) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    rows.append((i, encode_bmp_rle8(w, h, idx, palette)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def bmp_decode_features(df: DataFrame) -> DataFrame:
@@ -1045,58 +861,13 @@ def bmp_decode_features(df: DataFrame) -> DataFrame:
     unimplemented-mode payloads are ok=false rows. Narrow Arrow map,
     no shuffle; per image eight small values return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _struct
+    def features(_i: int, data: bytes) -> tuple:
+        w, h, c, rgb = decode_bmp(data)
+        bpp, comp = struct.unpack_from("<HI", data, 28)
+        mode = "rgb24" if (bpp, comp) == (24, 0) else "rle8"
+        return w, h, c, mode, w * h, sum(rgb), sum(rgb[: w * 3])
 
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.bmp_codec import (
-            decode_bmp,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    data = bytes(payload)
-                    w, h, c, rgb = decode_bmp(data)
-                    bpp, comp = _struct.unpack_from("<HI", data, 28)
-                    mode = "rgb24" if (bpp, comp) == (24, 0) else "rle8"
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            mode,
-                            w * h,
-                            sum(rgb),
-                            sum(rgb[: w * 3]),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id),) + (None,) * 7 + (False,)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "mode",
-                    "n_pixels",
-                    "pixel_sum",
-                    "top_row_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, BMP_FEATURE_SCHEMA
-    )
+    return _decode_map(df, BMP_FEATURE_SCHEMA, features)
 
 
 def png_tile_signatures(df: DataFrame, band_rows: int = 4) -> DataFrame:
@@ -1112,37 +883,18 @@ def png_tile_signatures(df: DataFrame, band_rows: int = 4) -> DataFrame:
     Scale shape: narrow Arrow map; pixels never shuffle — only the
     32-char signature does (the mm_image_near_dup discipline)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, c, pixels = decode_png(payload)
+        row_bytes = w * c
+        sums = [
+            sum(pixels[b0 * row_bytes : min(h, b0 + band_rows) * row_bytes])
+            for b0 in range(0, h, band_rows)
+        ]
+        key = f"{w}x{h}:" + ",".join(str(s) for s in sums)
+        return hashlib.md5(key.encode("ascii")).hexdigest(), len(sums)
 
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, pixels = decode_png(bytes(payload))
-                    row_bytes = w * c
-                    sums = []
-                    for b0 in range(0, h, band_rows):
-                        lo = b0 * row_bytes
-                        hi = min(h, b0 + band_rows) * row_bytes
-                        sums.append(sum(pixels[lo:hi]))
-                    key = f"{w}x{h}:" + ",".join(str(s) for s in sums)
-                    sig = hashlib.md5(key.encode("ascii")).hexdigest()
-                    rows.append((int(doc_id), sig, len(sums), True))
-                except Exception:
-                    rows.append((int(doc_id), None, None, False))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sig", "n_bands", "ok"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, "doc_id long, sig string, n_bands int, ok boolean"
+    return _decode_map(
+        df, "doc_id long, sig string, n_bands int, ok boolean", features
     )
 
 
@@ -1164,58 +916,19 @@ def wav_resample_features(df: DataFrame) -> DataFrame:
     Scale shape: narrow Arrow map over payload bytes; PCM stays in the
     worker, eight small values per clip return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        rate, ch, _bits, s = decode_wav(payload)
+        nf_in = len(s) // ch
+        nf_out = nf_in // 2
+        out = [
+            ((s[2 * j * ch + c] + 32768) + (s[(2 * j + 1) * ch + c] + 32768)) // 2
+            - 32768
+            for j in range(nf_out)
+            for c in range(ch)
+        ]
+        return rate // 2, ch, nf_in, nf_out, sum(out), sum(v * v for v in out)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, ch, _bits, s = decode_wav(bytes(payload))
-                    nf_in = len(s) // ch
-                    nf_out = nf_in // 2
-                    out = [
-                        ((s[2 * j * ch + c] + 32768)
-                         + (s[(2 * j + 1) * ch + c] + 32768)) // 2
-                        - 32768
-                        for j in range(nf_out)
-                        for c in range(ch)
-                    ]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rate // 2,
-                            ch,
-                            nf_in,
-                            nf_out,
-                            sum(out),
-                            sum(v * v for v in out),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate_out",
-                    "channels",
-                    "n_frames_in",
-                    "n_frames_out",
-                    "sum_out",
-                    "sum_squares_out",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, RESAMPLE_FEATURE_SCHEMA
-    )
+    return _decode_map(df, RESAMPLE_FEATURE_SCHEMA, features)
 
 
 AVI_FEATURE_SCHEMA = (
@@ -1234,38 +947,12 @@ def attach_avi_payload(df: DataFrame, id_col: str) -> DataFrame:
     5f term makes every frame distinct, so frame ORDER is checkable
     downstream."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        w, h = 8 + i % 9, 6 + i % 6
+        frames = [_rgb_ramp(i, w, h, 5 * f) for f in range(2 + i % 3)]
+        return (encode_avi_rgb24(w, h, frames, 10 + i % 5),)
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            encode_avi_rgb24,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 9, 6 + i % 6
-                fps, nf = 10 + i % 5, 2 + i % 3
-                frames = []
-                for f in range(nf):
-                    buf = bytearray()
-                    for y in range(h):
-                        for x in range(w):
-                            buf += bytes(
-                                (
-                                    (i + x + 2 * y + 5 * f) % 256,
-                                    (3 * i + x + 2 * y + 5 * f) % 256,
-                                    (5 * i + x + 2 * y + 5 * f) % 256,
-                                )
-                            )
-                    frames.append(bytes(buf))
-                rows.append((i, encode_avi_rgb24(w, h, frames, fps)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def avi_decode_features(df: DataFrame) -> DataFrame:
@@ -1278,49 +965,11 @@ def avi_decode_features(df: DataFrame) -> DataFrame:
     Out-of-scope AVIs are ok=false rows. Narrow Arrow map; frames
     never leave the worker."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, fps, nf, frames = decode_avi(payload)
+        return w, h, fps, nf, sum(sum(f) for f in frames), sum(frames[-1])
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            decode_avi,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, fps, nf, frames = decode_avi(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            fps,
-                            nf,
-                            sum(sum(f) for f in frames),
-                            sum(frames[-1]),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "fps",
-                    "n_frames",
-                    "total_pixel_sum",
-                    "last_frame_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, AVI_FEATURE_SCHEMA
-    )
+    return _decode_map(df, AVI_FEATURE_SCHEMA, features)
 
 
 def attach_srt_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -1331,33 +980,21 @@ def attach_srt_payload(df: DataFrame, id_col: str) -> DataFrame:
     the sidecar format every video-caption pipeline parses next to
     the container."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fmt(ms: int) -> str:
+        return (
+            f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
+            f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
+        )
 
-        def fmt(ms: int) -> str:
-            return (
-                f"{ms // 3600000:02d}:{ms % 3600000 // 60000:02d}:"
-                f"{ms % 60000 // 1000:02d},{ms % 1000:03d}"
-            )
+    def make(i: int) -> tuple:
+        blocks = []
+        for j in range(2 + i % 4):
+            s = j * 1500 + (i % 7) * 100
+            e = s + 900 + (i % 5) * 50
+            blocks.append(f"{j + 1}\n{fmt(s)} --> {fmt(e)}\ncue {j} of doc {i}")
+        return ("\n\n".join(blocks),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                blocks = []
-                for j in range(2 + i % 4):
-                    s = j * 1500 + (i % 7) * 100
-                    e = s + 900 + (i % 5) * 50
-                    blocks.append(
-                        f"{j + 1}\n{fmt(s)} --> {fmt(e)}\n"
-                        f"cue {j} of doc {i}"
-                    )
-                rows.append((i, "\n\n".join(blocks)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload string"
-    )
+    return _synthesize(df, id_col, make, "doc_id long, payload string")
 
 
 PNG16_FEATURE_SCHEMA = (
@@ -1372,32 +1009,16 @@ def attach_png16_payload(df: DataFrame, id_col: str) -> DataFrame:
     mod 65536 — full-range 16-bit values so a high/low byte swap or an
     8-bit truncation anywhere is unmissable in the sums."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def make(i: int) -> tuple:
+        w, h = 8 + i % 8, 8 + i % 4
+        arr = np.empty((h, w * 3), dtype=np.uint16)
+        for y in range(h):
+            for x in range(w):
+                for c in range(3):
+                    arr[y, 3 * x + c] = (i * 257 + c * 9999 + 1000 * y + x) % 65536
+        return (encode_png16(w, h, 3, arr),)
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            encode_png16,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 8 + i % 8, 8 + i % 4
-                arr = np.empty((h, w * 3), dtype=np.uint16)
-                for y in range(h):
-                    for x in range(w):
-                        for c in range(3):
-                            arr[y, 3 * x + c] = (
-                                i * 257 + c * 9999 + 1000 * y + x
-                            ) % 65536
-                rows.append((i, encode_png16(w, h, 3, arr)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def png16_decode_features(df: DataFrame) -> DataFrame:
@@ -1405,49 +1026,11 @@ def png16_decode_features(df: DataFrame) -> DataFrame:
     five filters at bpp = 6, reassemble big-endian uint16 samples, and
     emit exact integer statistics. Narrow Arrow map, no shuffle."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, c, u16 = decode_png16(payload)
+        return w, h, c, w * h * c, int(u16.astype("int64").sum()), int(u16.max())
 
-        from shippai_knowledge_etl_spark.operators.png_codec import (
-            decode_png16,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c, u16 = decode_png16(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            c,
-                            w * h * c,
-                            int(u16.astype("int64").sum()),
-                            int(u16.max()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 6 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_samples",
-                    "sample_sum",
-                    "max_sample",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PNG16_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PNG16_FEATURE_SCHEMA, features)
 
 
 JPEG_FEATURE_SCHEMA = (
@@ -1473,76 +1056,11 @@ def attach_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     DC prediction across restarts, byte stuffing, and 4:2:0
     upsampling."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        w, h, comps = _jpeg_flat_components(i)
+        return (encode_jpeg(w, h, comps, restart_interval=3 if i % 2 == 0 else 2),)
 
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            encode_jpeg,
-            flat_block,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                if i % 2 == 0:
-                    w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
-                    coeffs = [
-                        [
-                            flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(h // 8)
-                    ]
-                    data = encode_jpeg(
-                        w,
-                        h,
-                        [{"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}],
-                        restart_interval=3,
-                    )
-                else:
-                    w, h = 32 + 16 * ((i // 2) % 2), 32
-                    ly = [
-                        [
-                            flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(4)
-                    ]
-                    cb = [
-                        [
-                            flat_block(
-                                (3 * i + 17 * mx + 29 * my) % 256, 6
-                            )
-                            for mx in range(w // 16)
-                        ]
-                        for my in range(2)
-                    ]
-                    cr = [
-                        [
-                            flat_block(
-                                (5 * i + 23 * mx + 31 * my) % 256, 6
-                            )
-                            for mx in range(w // 16)
-                        ]
-                        for my in range(2)
-                    ]
-                    data = encode_jpeg(
-                        w,
-                        h,
-                        [
-                            {"coeffs": ly, "q": [5] * 64, "hv": (2, 2)},
-                            {"coeffs": cb, "q": [6] * 64, "hv": (1, 1)},
-                            {"coeffs": cr, "q": [6] * 64, "hv": (1, 1)},
-                        ],
-                        restart_interval=2,
-                    )
-                rows.append((i, data))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def jpeg_decode_features(df: DataFrame) -> DataFrame:
@@ -1559,59 +1077,12 @@ def jpeg_decode_features(df: DataFrame) -> DataFrame:
     in the Python worker; six small values per image return to the
     JVM (the mm_png_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, nc, pix = decode_jpeg(payload)
+        pixel_sum, wsum = _weighted_sums(_samples(pix).reshape(h, w, nc))
+        return w, h, nc, "gray8" if nc == 1 else "ycbcr420", pixel_sum, wsum
 
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, nc, pix = decode_jpeg(bytes(payload))
-                    a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-                    a = a.reshape(h, w, nc)
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 2 * np.arange(h, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    rows.append(
-                        (
-                            int(doc_id),
-                            w,
-                            h,
-                            nc,
-                            "gray8" if nc == 1 else "ycbcr420",
-                            int(a.sum()),
-                            int((a.sum(axis=2) * wgt).sum()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "mode",
-                    "pixel_sum",
-                    "wsum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, JPEG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, JPEG_FEATURE_SCHEMA, features)
 
 
 JPEG_PROG_SCHEMA = (
@@ -1641,91 +1112,27 @@ def attach_jpeg_progressive_payload(df: DataFrame, id_col: str) -> DataFrame:
     on these is the EQUIVALENCE: both decodes must agree pixel for
     pixel (diff sums 0)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            ZIGZAG,
-            encode_jpeg,
-            encode_jpeg_progressive,
-            flat_block,
+    def make(i: int) -> tuple:
+        ri = 3 if i % 2 == 0 else 2
+        w, h, comps = _jpeg_flat_components(i)
+        flat_prog = encode_jpeg_progressive(w, h, comps, restart_interval=ri)
+        for ci, c in enumerate(comps):  # dense AC on top of the flat DC
+            for by, row in enumerate(c["coeffs"]):
+                for bx, blk in enumerate(row):
+                    for k in range(1, 12 if ci == 0 else 6):
+                        blk[ZIGZAG[k]] = (
+                            (i * 31 + ci * 11 + bx * 7 + by * 13 + k * 5) % 15
+                        ) - 7
+        return (
+            flat_prog,
+            encode_jpeg(w, h, comps, restart_interval=ri),
+            encode_jpeg_progressive(w, h, comps, restart_interval=ri),
         )
 
-        def grids(i: int):
-            """(w, h, components) with flat DC; AC added by caller."""
-            if i % 2 == 0:
-                w, h = 24 + 8 * (i % 3), 16 + 8 * (i % 2)
-                coeffs = [
-                    [
-                        flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                        for bx in range(w // 8)
-                    ]
-                    for by in range(h // 8)
-                ]
-                return w, h, [
-                    {"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}
-                ]
-            w, h = 32 + 16 * ((i // 2) % 2), 32
-            ly = [
-                [
-                    flat_block((i + 7 * bx + 13 * by) % 256, 5)
-                    for bx in range(w // 8)
-                ]
-                for by in range(4)
-            ]
-            cb = [
-                [
-                    flat_block((3 * i + 17 * mx + 29 * my) % 256, 6)
-                    for mx in range(w // 16)
-                ]
-                for my in range(2)
-            ]
-            cr = [
-                [
-                    flat_block((5 * i + 23 * mx + 31 * my) % 256, 6)
-                    for mx in range(w // 16)
-                ]
-                for my in range(2)
-            ]
-            return w, h, [
-                {"coeffs": ly, "q": [5] * 64, "hv": (2, 2)},
-                {"coeffs": cb, "q": [6] * 64, "hv": (1, 1)},
-                {"coeffs": cr, "q": [6] * 64, "hv": (1, 1)},
-            ]
-
-        def add_ac(comps, i: int):
-            for ci, c in enumerate(comps):
-                nac = 11 if ci == 0 else 5
-                for by, row in enumerate(c["coeffs"]):
-                    for bx, blk in enumerate(row):
-                        for k in range(1, 1 + nac):
-                            blk[ZIGZAG[k]] = (
-                                (i * 31 + ci * 11 + bx * 7 + by * 13 + k * 5)
-                                % 15
-                            ) - 7
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                ri = 3 if i % 2 == 0 else 2
-                w, h, comps = grids(i)
-                flat_prog = encode_jpeg_progressive(
-                    w, h, comps, restart_interval=ri
-                )
-                add_ac(comps, i)
-                acb_base = encode_jpeg(w, h, comps, restart_interval=ri)
-                acb_prog = encode_jpeg_progressive(
-                    w, h, comps, restart_interval=ri
-                )
-                rows.append((i, flat_prog, acb_base, acb_prog))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "flat_prog", "acb_base", "acb_prog"],
-            )
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches,
+    return _synthesize(
+        df,
+        id_col,
+        make,
         "doc_id long, flat_prog binary, acb_base binary, acb_prog binary",
     )
 
@@ -1744,70 +1151,19 @@ def jpeg_progressive_features(df: DataFrame) -> DataFrame:
     row stay in the Python worker; eight small values per image return
     to the JVM (the mm_png_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def features(_i: int, fp: bytes, ab: bytes, ap: bytes) -> tuple:
+        w, h, nc, pix = decode_jpeg(fp)
+        psum, wsum = _weighted_sums(_samples(pix).reshape(h, w, nc))
+        bw, bh, bn, bpix = decode_jpeg(ab)
+        pw, ph, pn, ppix = decode_jpeg(ap)
+        if (bw, bh, bn) != (pw, ph, pn):
+            raise ValueError("geometry mismatch base vs prog")
+        d = np.abs(_samples(ppix) - _samples(bpix)).reshape(bh, bw, bn)
+        return (w, h, nc, fp.count(b"\xff\xda"), psum, wsum, *_weighted_sums(d))
 
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
-        )
-
-        def sums(w, h, nc, pix):
-            a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-            a = a.reshape(h, w, nc).sum(axis=2)
-            wgt = (
-                np.arange(w, dtype=np.int64)[None, :]
-                + 2 * np.arange(h, dtype=np.int64)[:, None]
-                + 1
-            )
-            return int(a.sum()), int((a * wgt).sum())
-
-        for pdf in it:
-            rows = []
-            for doc_id, fp, ab, ap in zip(
-                pdf["doc_id"], pdf["flat_prog"], pdf["acb_base"],
-                pdf["acb_prog"],
-            ):
-                try:
-                    fp = bytes(fp)
-                    w, h, nc, pix = decode_jpeg(fp)
-                    psum, wsum = sums(w, h, nc, pix)
-                    n_scans = fp.count(b"\xff\xda")
-                    bw, bh, bn, bpix = decode_jpeg(bytes(ab))
-                    pw, ph, pn, ppix = decode_jpeg(bytes(ap))
-                    if (bw, bh, bn) != (pw, ph, pn):
-                        raise ValueError("geometry mismatch base vs prog")
-                    d = np.frombuffer(ppix, dtype=np.uint8).astype(
-                        np.int64
-                    ) - np.frombuffer(bpix, dtype=np.uint8).astype(np.int64)
-                    d = np.abs(d).reshape(bh, bw, bn).sum(axis=2)
-                    wgt = (
-                        np.arange(bw, dtype=np.int64)[None, :]
-                        + 2 * np.arange(bh, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    rows.append(
-                        (
-                            int(doc_id), w, h, nc, n_scans, psum, wsum,
-                            int(d.sum()), int((d * wgt).sum()), True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "n_scans",
-                    "pixel_sum", "wsum", "diff_sum", "diff_wsum", "ok",
-                ],
-            )
-
-    return df.select(
-        "doc_id", "flat_prog", "acb_base", "acb_prog"
-    ).mapInPandas(batches, JPEG_PROG_SCHEMA)
+    return _decode_map(
+        df, JPEG_PROG_SCHEMA, features, ("flat_prog", "acb_base", "acb_prog")
+    )
 
 
 ADPCM_FEATURE_SCHEMA = (
@@ -1825,30 +1181,11 @@ def attach_adpcm_payload(df: DataFrame, id_col: str) -> DataFrame:
     samples-per-block 33 and initial step index id mod 89 — the whole
     step table gets exercised across the corpus."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        samples = _ima_samples(i, 33 * (2 + i % 2))
+        return (encode_wav_ima(samples, 8000, 33, init_index=i % 89),)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_ima,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 33 * (2 + i % 2)
-                samples = [
-                    ((i * 2654435761 + k * k * 40503) % 8192) - 4096
-                    for k in range(n)
-                ]
-                rows.append(
-                    (i, encode_wav_ima(samples, 8000, 33, init_index=i % 89))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def adpcm_decode_features(df: DataFrame) -> DataFrame:
@@ -1862,55 +1199,18 @@ def adpcm_decode_features(df: DataFrame) -> DataFrame:
     Scale shape: one narrow Arrow map, no shuffle — the mm_wav_mulaw
     class; six integers per clip return to the JVM."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav_ima,
+    def features(i: int, payload: bytes) -> tuple:
+        _rate, spb, dec = decode_wav_ima(payload)
+        n = len(dec)
+        return (
+            n,
+            n // spb,
+            sum(dec),
+            max(abs(s) for s in dec),
+            sum(abs(a - b) for a, b in zip(_ima_samples(i, n), dec)),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    i = int(doc_id)
-                    _rate, spb, dec = decode_wav_ima(bytes(payload))
-                    n = len(dec)
-                    orig = [
-                        ((i * 2654435761 + k * k * 40503) % 8192) - 4096
-                        for k in range(n)
-                    ]
-                    rows.append(
-                        (
-                            i,
-                            n,
-                            n // spb,
-                            sum(dec),
-                            max(abs(s) for s in dec),
-                            sum(abs(a - b) for a, b in zip(orig, dec)),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "n_blocks",
-                    "sum_decoded",
-                    "max_abs",
-                    "sum_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, ADPCM_FEATURE_SCHEMA
-    )
+    return _decode_map(df, ADPCM_FEATURE_SCHEMA, features)
 
 
 TIFF_FEATURE_SCHEMA = (
@@ -1928,44 +1228,23 @@ def attach_tiff_payload(df: DataFrame, id_col: str) -> DataFrame:
     strip 3) with the run-friendly pattern (5id + 31·(x//6) + 11y)
     mod 256 so the RLE encoder emits genuine repeat packets."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tiff_codec import (
-            encode_tiff,
+    def make(i: int) -> tuple:
+        if i % 2 == 0:
+            w, h = 17 + i % 7, 9 + i % 5
+            pix = bytes((i + 3 * x + 7 * y) % 256 for y in range(h) for x in range(w))
+            return (
+                encode_tiff(
+                    w, h, pix, compression=1, rows_per_strip=4,
+                    big_endian=(i % 4 == 2),
+                ),
+            )
+        w, h = 18 + i % 6, 8 + i % 4
+        pix = bytes(
+            (5 * i + 31 * (x // 6) + 11 * y) % 256 for y in range(h) for x in range(w)
         )
+        return (encode_tiff(w, h, pix, compression=32773, rows_per_strip=3),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                if i % 2 == 0:
-                    w, h = 17 + i % 7, 9 + i % 5
-                    pix = bytes(
-                        (i + 3 * x + 7 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    data = encode_tiff(
-                        w, h, pix, compression=1, rows_per_strip=4,
-                        big_endian=(i % 4 == 2),
-                    )
-                else:
-                    w, h = 18 + i % 6, 8 + i % 4
-                    pix = bytes(
-                        (5 * i + 31 * (x // 6) + 11 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    data = encode_tiff(
-                        w, h, pix, compression=32773, rows_per_strip=3
-                    )
-                rows.append((i, data))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def tiff_decode_features(df: DataFrame) -> DataFrame:
@@ -1978,64 +1257,21 @@ def tiff_decode_features(df: DataFrame) -> DataFrame:
     Scale shape: one narrow Arrow map — strips and pixels stay in the
     worker (the mm_png_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tiff_codec import (
-            decode_tiff,
+    def features(i: int, raw: bytes) -> tuple:
+        w, h, pix = decode_tiff(raw)
+        pixel_sum, wsum = _weighted_sums(_samples(pix).reshape(h, w, 1))
+        even = i % 2 == 0
+        return (
+            w,
+            h,
+            "raw" if even else "packbits",
+            "MM" if raw[:2] == b"MM" else "II",
+            -(-h // (4 if even else 3)),
+            pixel_sum,
+            wsum,
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    w, h, pix = decode_tiff(raw)
-                    a = np.frombuffer(pix, dtype=np.uint8).astype(np.int64)
-                    a = a.reshape(h, w)
-                    wgt = (
-                        np.arange(w, dtype=np.int64)[None, :]
-                        + 2 * np.arange(h, dtype=np.int64)[:, None]
-                        + 1
-                    )
-                    i = int(doc_id)
-                    rows.append(
-                        (
-                            i,
-                            w,
-                            h,
-                            "raw" if i % 2 == 0 else "packbits",
-                            "MM" if raw[:2] == b"MM" else "II",
-                            -(-h // (4 if i % 2 == 0 else 3)),
-                            int(a.sum()),
-                            int((a * wgt).sum()),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "mode",
-                    "byte_order",
-                    "n_strips",
-                    "pixel_sum",
-                    "wsum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, TIFF_FEATURE_SCHEMA
-    )
+    return _decode_map(df, TIFF_FEATURE_SCHEMA, features)
 
 
 MJPEG_FEATURE_SCHEMA = (
@@ -2052,45 +1288,14 @@ def attach_mjpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     in an AVI 'MJPG' stream. The whole encode path is real: Annex-K
     Huffman per frame, RIFF/movi '00dc' chunking around them."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        frames = []
+        for f in range(2 + i % 3):
+            gray = {"coeffs": _flat_luma(i + 31 * f, 3, 2), "q": [5] * 64, "hv": (1, 1)}
+            frames.append(encode_jpeg(24, 16, [gray]))
+        return (encode_avi_mjpeg(24, 16, frames, fps=10),)
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            encode_avi_mjpeg,
-        )
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            encode_jpeg,
-            flat_block,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 24, 16
-                frames = []
-                for f in range(2 + i % 3):
-                    coeffs = [
-                        [
-                            flat_block(
-                                (i + 7 * bx + 13 * by + 31 * f) % 256, 5
-                            )
-                            for bx in range(w // 8)
-                        ]
-                        for by in range(h // 8)
-                    ]
-                    frames.append(
-                        encode_jpeg(
-                            w, h,
-                            [{"coeffs": coeffs, "q": [5] * 64, "hv": (1, 1)}],
-                        )
-                    )
-                rows.append((i, encode_avi_mjpeg(w, h, frames, fps=10)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def mjpeg_decode_features(df: DataFrame) -> DataFrame:
@@ -2103,61 +1308,19 @@ def mjpeg_decode_features(df: DataFrame) -> DataFrame:
     Scale shape: one narrow Arrow map; frames and pixels stay in the
     worker (the mm_avi_decode class)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        w, h, fps, frames = decode_avi_mjpeg(payload)
+        total = ordered = 0
+        for f, jf in enumerate(frames):
+            fw, fh, nc, pix = decode_jpeg(jf)
+            if (fw, fh, nc) != (w, h, 1):
+                raise ValueError("frame geometry mismatch")
+            s = int(_samples(pix).sum())
+            total += s
+            ordered += (f + 1) * s
+        return w, h, fps, len(frames), total, ordered
 
-        from shippai_knowledge_etl_spark.operators.avi_codec import (
-            decode_avi_mjpeg,
-        )
-        from shippai_knowledge_etl_spark.operators.jpeg_codec import (
-            decode_jpeg,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, fps, frames = decode_avi_mjpeg(bytes(payload))
-                    total = 0
-                    ordered = 0
-                    for f, jf in enumerate(frames):
-                        fw, fh, nc, pix = decode_jpeg(jf)
-                        if (fw, fh, nc) != (w, h, 1):
-                            raise ValueError("frame geometry mismatch")
-                        s = int(
-                            np.frombuffer(pix, dtype=np.uint8)
-                            .astype(np.int64)
-                            .sum()
-                        )
-                        total += s
-                        ordered += (f + 1) * s
-                    rows.append(
-                        (int(doc_id), w, h, fps, len(frames), total,
-                         ordered, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "fps",
-                    "n_frames",
-                    "pixel_sum",
-                    "ordered_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MJPEG_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MJPEG_FEATURE_SCHEMA, features)
 
 
 TAR_FEATURE_SCHEMA = (
@@ -2174,33 +1337,19 @@ def attach_tar_payload(df: DataFrame, id_col: str) -> DataFrame:
     256, length 40 + (id+m) mod 17, through the real header/checksum
     encoder (operators/tar_codec.py)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        members = [
+            (
+                f"doc{i}_{m}.txt",
+                bytes(
+                    (7 * i + 13 * m + 31 * j) % 256 for j in range(40 + (i + m) % 17)
+                ),
+            )
+            for m in range(2 + i % 2)
+        ]
+        return (encode_tar(members),)
 
-        from shippai_knowledge_etl_spark.operators.tar_codec import (
-            encode_tar,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                members = [
-                    (
-                        f"doc{i}_{m}.txt",
-                        bytes(
-                            (7 * i + 13 * m + 31 * j) % 256
-                            for j in range(40 + (i + m) % 17)
-                        ),
-                    )
-                    for m in range(2 + i % 2)
-                ]
-                rows.append((i, encode_tar(members)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def tar_extract_features(df: DataFrame) -> DataFrame:
@@ -2209,53 +1358,17 @@ def tar_extract_features(df: DataFrame) -> DataFrame:
     exact member counts, byte totals, the payload byte sum and the
     member-order-weighted ordered_sum. Malformed → ok=false."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.tar_codec import (
-            decode_tar,
+    def features(_i: int, raw: bytes) -> tuple:
+        members = decode_tar(raw)
+        return (
+            len(members),
+            len(raw),
+            sum(len(p) for _n, p in members),
+            sum(sum(p) for _n, p in members),
+            sum((m + 1) * sum(p) for m, (_n, p) in enumerate(members)),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload)
-                    members = decode_tar(raw)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(members),
-                            len(raw),
-                            sum(len(p) for _n, p in members),
-                            sum(sum(p) for _n, p in members),
-                            sum(
-                                (m + 1) * sum(p)
-                                for m, (_n, p) in enumerate(members)
-                            ),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_members",
-                    "archive_bytes",
-                    "total_payload_bytes",
-                    "payload_byte_sum",
-                    "ordered_sum",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, TAR_FEATURE_SCHEMA
-    )
+    return _decode_map(df, TAR_FEATURE_SCHEMA, features)
 
 
 WARC_FEATURE_SCHEMA = (
@@ -2281,49 +1394,30 @@ def attach_warc_payload(df: DataFrame, id_col: str) -> DataFrame:
     per record, the Common Crawl layout — even ids stay plain, so
     both intake paths hold a driver witness."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        recs = [
+            {
+                "type": "warcinfo",
+                "uri": None,
+                "record_id": f"w{i}",
+                "payload": b"software: shippai-etl-spark/11",
+            }
+        ]
+        for m in range(2 + i % 2):
+            body = WARC_TRAP + bytes(
+                97 + (7 * i + 13 * m + j) % 26 for j in range(30 + (i + m) % 11)
+            )
+            recs.append(
+                {
+                    "type": "response",
+                    "uri": f"http://example.com/{i}/{m}",
+                    "record_id": f"r{i}-{m}",
+                    "payload": http_response(404 if (i + m) % 5 == 0 else 200, body),
+                }
+            )
+        return ((encode_warc_gzip if i % 2 else encode_warc)(recs),)
 
-        from shippai_knowledge_etl_spark.operators.warc_codec import (
-            encode_warc,
-            encode_warc_gzip,
-            http_response,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                recs = [
-                    {
-                        "type": "warcinfo",
-                        "uri": None,
-                        "record_id": f"w{i}",
-                        "payload": b"software: shippai-etl-spark/11",
-                    }
-                ]
-                for m in range(2 + i % 2):
-                    body = WARC_TRAP + bytes(
-                        97 + (7 * i + 13 * m + j) % 26
-                        for j in range(30 + (i + m) % 11)
-                    )
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://example.com/{i}/{m}",
-                            "record_id": f"r{i}-{m}",
-                            "payload": http_response(
-                                404 if (i + m) % 5 == 0 else 200, body
-                            ),
-                        }
-                    )
-                enc = encode_warc_gzip if i % 2 else encode_warc
-                rows.append((i, enc(recs)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def warc_parse_features(df: DataFrame) -> DataFrame:
@@ -2334,57 +1428,20 @@ def warc_parse_features(df: DataFrame) -> DataFrame:
     are walked member by member and n_gz_members pins the per-record
     framing contract (== n_records for .warc.gz, 0 for plain)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.warc_codec import (
-            decode_warc_auto,
+    def features(_i: int, payload: bytes) -> tuple:
+        recs, n_gz = decode_warc_auto(payload)
+        resp = [r for r in recs if r["type"] == "response"]
+        return (
+            len(recs),
+            len(resp),
+            sum(r["status"] for r in resp),
+            sum((m + 1) * r["status"] for m, r in enumerate(resp)),
+            sum(len(r["body"]) for r in resp),
+            sum(sum(r["body"]) for r in resp),
+            n_gz,
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs, n_gz = decode_warc_auto(bytes(payload))
-                    resp = [r for r in recs if r["type"] == "response"]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(recs),
-                            len(resp),
-                            sum(r["status"] for r in resp),
-                            sum(
-                                (m + 1) * r["status"]
-                                for m, r in enumerate(resp)
-                            ),
-                            sum(len(r["body"]) for r in resp),
-                            sum(sum(r["body"]) for r in resp),
-                            n_gz,
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id),) + (None,) * 7 + (False,)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_records",
-                    "n_responses",
-                    "status_sum",
-                    "ordered_status",
-                    "body_bytes",
-                    "body_byte_sum",
-                    "n_gz_members",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, WARC_FEATURE_SCHEMA
-    )
+    return _decode_map(df, WARC_FEATURE_SCHEMA, features)
 
 
 ZIP_FEATURE_SCHEMA = (
@@ -2403,35 +1460,21 @@ def attach_zip_payload(df: DataFrame, id_col: str) -> DataFrame:
     gated sums are all over the INFLATED bytes, so a wrong inflate
     cannot reproduce them OR the stored CRCs."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        members = [
+            (
+                f"f{i}_{m}.bin",
+                bytes(
+                    (i * 2654435761 + 97 * m + 131 * j) % 256
+                    for j in range(24 + (i + m) % 9)
+                ),
+            )
+            for m in range(2 + i % 2)
+        ]
+        methods = [8 if (i + m) % 2 else 0 for m in range(2 + i % 2)]
+        return (encode_zip(members, methods),)
 
-        from shippai_knowledge_etl_spark.operators.zip_codec import (
-            encode_zip,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                members = [
-                    (
-                        f"f{i}_{m}.bin",
-                        bytes(
-                            (i * 2654435761 + 97 * m + 131 * j) % 256
-                            for j in range(24 + (i + m) % 9)
-                        ),
-                    )
-                    for m in range(2 + i % 2)
-                ]
-                methods = [8 if (i + m) % 2 else 0
-                           for m in range(2 + i % 2)]
-                rows.append((i, encode_zip(members, methods)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def zip_extract_features(df: DataFrame) -> DataFrame:
@@ -2442,49 +1485,17 @@ def zip_extract_features(df: DataFrame) -> DataFrame:
     gate, where the oracle re-derives them bit-for-bit from the
     polynomial via a recursive CTE."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from shippai_knowledge_etl_spark.operators.zip_codec import (
-            decode_zip,
+    def features(_i: int, payload: bytes) -> tuple:
+        members = decode_zip(payload)
+        return (
+            len(members),
+            sum(len(p) for _n, p, _c, _m in members),
+            sum(sum(p) for _n, p, _c, _m in members),
+            sum(c for _n, _p, c, _m in members),
+            sum(1 for _n, _p, _c, m in members if m == 8),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    members = decode_zip(bytes(payload))
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(members),
-                            sum(len(p) for _n, p, _c, _m in members),
-                            sum(sum(p) for _n, p, _c, _m in members),
-                            sum(c for _n, _p, c, _m in members),
-                            sum(1 for _n, _p, _c, m in members if m == 8),
-                            True,
-                        )
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_members",
-                    "total_bytes",
-                    "payload_byte_sum",
-                    "crc_sum",
-                    "n_deflated",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, ZIP_FEATURE_SCHEMA
-    )
+    return _decode_map(df, ZIP_FEATURE_SCHEMA, features)
 
 
 PDFTEXT_FEATURE_SCHEMA = (
@@ -2503,41 +1514,21 @@ def attach_pdf_payload(df: DataFrame, id_col: str) -> DataFrame:
     chars chr(0x3042 + (id+p+m+j)%60) that forces the /F2 UTF-16BE
     hex path — the CID encoding real Japanese PDFs use."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        pages = []
+        for p in range(1 + i % 2):
+            ops = []
+            for m in range(2 + (i + p) % 2):
+                latin = f"doc({i})-{p}-{m}\\end"
+                cjk = "".join(
+                    chr(0x3042 + (i + p + m + j) % 60) for j in range(5 + (i + m) % 4)
+                )
+                ops.append({"op": "text", "x": 100, "y": 200 + 30 * m, "label": latin})
+                ops.append({"op": "text", "x": 100, "y": 900 + 30 * m, "label": cjk})
+            pages.append({"ops": ops, "w": 2100.0, "h": 2970.0})
+        return (pdf_document(pages),)
 
-        from shippai_knowledge_etl_spark.sources.pdf_writer import (
-            pdf_document,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                pages = []
-                for p in range(1 + i % 2):
-                    ops = []
-                    for m in range(2 + (i + p) % 2):
-                        latin = f"doc({i})-{p}-{m}\\end"
-                        cjk = "".join(
-                            chr(0x3042 + (i + p + m + j) % 60)
-                            for j in range(5 + (i + m) % 4)
-                        )
-                        ops.append(
-                            {"op": "text", "x": 100, "y": 200 + 30 * m,
-                             "label": latin}
-                        )
-                        ops.append(
-                            {"op": "text", "x": 100, "y": 900 + 30 * m,
-                             "label": cjk}
-                        )
-                    pages.append({"ops": ops, "w": 2100.0, "h": 2970.0})
-                rows.append((i, pdf_document(pages)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def attach_pdf_flate_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -2554,72 +1545,59 @@ def attach_pdf_flate_payload(df: DataFrame, id_col: str) -> DataFrame:
     so only a parser that trusts the xref, inflates the framed bytes
     and understands TJ semantics reproduces the sums."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import zlib
-
-        import pandas as pd
-
-        def build_pdf(i: int) -> bytes:
-            npages = 1 + i % 2
-            objs: dict[int, bytes] = {}
-            for p in range(npages):
-                parts = [b"BT /F1 12 Tf "]
-                for m in range(2 + (i + p) % 2):
-                    parts.append(b"/F1 12 Tf [(d%d\\() -%d (p%d) -%d (\\)%d)] TJ "
-                                 % (i, 10 + m, p, 11 + m, m))
-                    cjk = "".join(
-                        chr(0x3042 + (i + 2 * p + 3 * m + j) % 60)
-                        for j in range(4 + (i + m) % 3)
-                    )
-                    hexs = cjk.encode("utf-16-be").hex().encode()
-                    parts.append(b"/F2 14 Tf <" + hexs + b"> Tj ")
-                parts.append(b"ET")
-                content = b"".join(parts)
-                comp = zlib.compress(content, 9)
-                objs[10 + p] = (
-                    b"<< /Length %d /Filter /FlateDecode >>\nstream\n"
-                    % len(comp) + comp + b"\nendstream"
+    def make(i: int) -> tuple:
+        npages = 1 + i % 2
+        objs: dict[int, bytes] = {}
+        for p in range(npages):
+            parts = [b"BT /F1 12 Tf "]
+            for m in range(2 + (i + p) % 2):
+                parts.append(b"/F1 12 Tf [(d%d\\() -%d (p%d) -%d (\\)%d)] TJ "
+                             % (i, 10 + m, p, 11 + m, m))
+                cjk = "".join(
+                    chr(0x3042 + (i + 2 * p + 3 * m + j) % 60)
+                    for j in range(4 + (i + m) % 3)
                 )
-                objs[3 + p] = (
-                    b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
-                    % (10 + p)
-                )
-            kids = b" ".join(b"%d 0 R" % (3 + p) for p in range(npages))
-            objs[2] = (
-                b"<< /Type /Pages /Kids [ " + kids + b" ] /Count %d >>"
-                % npages
+                hexs = cjk.encode("utf-16-be").hex().encode()
+                parts.append(b"/F2 14 Tf <" + hexs + b"> Tj ")
+            parts.append(b"ET")
+            content = b"".join(parts)
+            comp = zlib.compress(content, 9)
+            objs[10 + p] = (
+                b"<< /Length %d /Filter /FlateDecode >>\nstream\n"
+                % len(comp) + comp + b"\nendstream"
             )
-            objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-            out = bytearray(b"%PDF-1.5\n%\xe2\xe3\xcf\xd3\n")
-            offsets: dict[int, int] = {}
-            # physical order scrambled: content streams first,
-            # structure LAST — the xref is the only valid map
-            for oid in sorted(objs, reverse=True):
-                offsets[oid] = len(out)
-                out += b"%d 0 obj\n" % oid + objs[oid] + b"\nendobj\n"
-            xref_at = len(out)
-            maxid = max(objs)
-            out += b"xref\n0 %d\n" % (maxid + 1)
-            for oid in range(maxid + 1):
-                if oid in offsets:
-                    out += b"%010d 00000 n \n" % offsets[oid]
-                else:
-                    out += b"0000000000 65535 f \n"
-            out += (
-                b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n"
-                b"%%%%EOF\n" % (maxid + 1, xref_at)
+            objs[3 + p] = (
+                b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
+                % (10 + p)
             )
-            return bytes(out)
+        kids = b" ".join(b"%d 0 R" % (3 + p) for p in range(npages))
+        objs[2] = (
+            b"<< /Type /Pages /Kids [ " + kids + b" ] /Count %d >>"
+            % npages
+        )
+        objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
+        out = bytearray(b"%PDF-1.5\n%\xe2\xe3\xcf\xd3\n")
+        offsets: dict[int, int] = {}
+        # physical order scrambled: content streams first,
+        # structure LAST — the xref is the only valid map
+        for oid in sorted(objs, reverse=True):
+            offsets[oid] = len(out)
+            out += b"%d 0 obj\n" % oid + objs[oid] + b"\nendobj\n"
+        xref_at = len(out)
+        maxid = max(objs)
+        out += b"xref\n0 %d\n" % (maxid + 1)
+        for oid in range(maxid + 1):
+            if oid in offsets:
+                out += b"%010d 00000 n \n" % offsets[oid]
+            else:
+                out += b"0000000000 65535 f \n"
+        out += (
+            b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n"
+            b"%%%%EOF\n" % (maxid + 1, xref_at)
+        )
+        return (bytes(out),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                rows.append((int(doc_id), build_pdf(int(doc_id))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def pdf_text_features(df: DataFrame) -> DataFrame:
@@ -2634,53 +1612,21 @@ def pdf_text_features(df: DataFrame) -> DataFrame:
     class; six integers per document return to the JVM. At 100 TB
     this is the document-corpus text-extraction pass."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(_i: int, payload: bytes) -> tuple:
+        pages = extract_pdf_text(payload)
+        latin = cjk = ordered = 0
+        for p, texts in enumerate(pages):
+            for k, s in enumerate(texts):
+                cp = sum(ord(ch) for ch in s)
+                m, which = divmod(k, 2)
+                if which == 0:
+                    latin += cp
+                else:
+                    cjk += cp
+                ordered += cp * (p * 1000 + m * 10 + which + 1)
+        return len(pages), sum(len(p) for p in pages), latin, cjk, ordered
 
-        from shippai_knowledge_etl_spark.sources.pdf_reader import (
-            extract_pdf_text,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    pages = extract_pdf_text(bytes(payload))
-                    n_str = sum(len(p) for p in pages)
-                    latin = cjk = ordered = 0
-                    for p, texts in enumerate(pages):
-                        for k, s in enumerate(texts):
-                            cp = sum(ord(ch) for ch in s)
-                            m, which = divmod(k, 2)
-                            if which == 0:
-                                latin += cp
-                            else:
-                                cjk += cp
-                            ordered += cp * (p * 1000 + m * 10 + which + 1)
-                    rows.append(
-                        (int(doc_id), len(pages), n_str, latin, cjk,
-                         ordered, True)
-                    )
-                except Exception:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_pages",
-                    "n_strings",
-                    "latin_cp_sum",
-                    "cjk_cp_sum",
-                    "ordered_cp",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, PDFTEXT_FEATURE_SCHEMA
-    )
+    return _decode_map(df, PDFTEXT_FEATURE_SCHEMA, features)
 
 
 def attach_alaw_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -2691,70 +1637,19 @@ def attach_alaw_payload(df: DataFrame, id_col: str) -> DataFrame:
     audioop over the full 16-bit range, tests/test_multimodal.py)
     into a format-tag-6 container."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int) -> tuple:
+        return (encode_wav_alaw(_pcm16(i, 64 + 2 * (i % 32)), 8000),)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            encode_wav_alaw,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n = 64 + 2 * (i % 32)
-                samples = [
-                    ((i * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                rows.append((i, encode_wav_alaw(samples, 8000)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)
 
 
 def wav_alaw_features(df: DataFrame) -> DataFrame:
     """REAL A-law decode + quantization-error profile against the
     regenerated original — the mm_wav_mulaw shape on format tag 6."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def features(i: int, payload: bytes) -> tuple:
+        _rate, _ch, _bits, dec = decode_wav(payload)
+        errs = [abs(a - b) for a, b in zip(_pcm16(i, len(dec)), dec)]
+        return len(dec), sum(dec), sum(errs), max(errs)
 
-        from shippai_knowledge_etl_spark.operators.wav_codec import (
-            decode_wav,
-        )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    i = int(doc_id)
-                    _rate, _ch, _bits, dec = decode_wav(bytes(payload))
-                    n = len(dec)
-                    orig = [
-                        ((i * 2654435761 + k * 40503) % 65536) - 32768
-                        for k in range(n)
-                    ]
-                    errs = [abs(a - b) for a, b in zip(orig, dec)]
-                    rows.append(
-                        (i, n, sum(dec), sum(errs), max(errs), True)
-                    )
-                except Exception:
-                    rows.append((int(doc_id),) + (None,) * 4 + (False,))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "sum_expanded",
-                    "sum_abs_err",
-                    "max_abs_err",
-                    "ok",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, MULAW_FEATURE_SCHEMA
-    )
+    return _decode_map(df, MULAW_FEATURE_SCHEMA, features)

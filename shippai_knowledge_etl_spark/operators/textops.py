@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from shippai_knowledge_etl_spark.tables import scale_out
+from shippai_knowledge_etl_spark.operators.multimodal import _synthesize
 
 # Tiny per-language marker sets for the n-gram/stopword heuristic.
 # Deliberately small: the operator shape (tokenize → bucket-count →
@@ -485,25 +485,15 @@ def attach_utf8_payload(df: DataFrame, id_col: str) -> DataFrame:
     accepted slash) / surrogate ED A0 80 (three) / truncated E3 81 at
     END of stream (one, the maximal-subpart case), with a trailing
     'z' except in the truncated case."""
-    from typing import Iterator as _It
+    planted = (b"\x80", b"\xc0\xaf", b"\xed\xa0\x80", b"\xe3\x81")
 
-    import pandas as _pd
+    def make(i: int) -> tuple:
+        p = b"u" + str(i).encode()
+        p += chr(0x3042 + i % 60).encode()
+        if i % 5 != 0:
+            p += planted[i % 4]
+        if not (i % 5 != 0 and i % 4 == 3):
+            p += b"z"
+        return (p,)
 
-    def batches(it: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        planted = (b"\x80", b"\xc0\xaf", b"\xed\xa0\x80", b"\xe3\x81")
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                p = b"u" + str(i).encode()
-                p += chr(0x3042 + i % 60).encode()
-                if i % 5 != 0:
-                    p += planted[i % 4]
-                if not (i % 5 != 0 and i % 4 == 3):
-                    p += b"z"
-                rows.append((i, p))
-            yield _pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return scale_out(df.select(F.col(id_col).alias("doc_id"))).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, make)

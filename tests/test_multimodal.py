@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_resize_images_exact_pixels(spark):
@@ -25,19 +26,6 @@ def test_resize_images_exact_pixels(spark):
     assert bytes(out["pixels"]) == expected
     assert out["pixel_md5"] == hashlib.md5(expected).hexdigest()
     assert out["ok"]
-
-
-def test_resize_images_real_decoder_raises(spark):
-    import pytest as _pytest
-
-    from shippai_knowledge_etl_spark.operators import multimodal as M
-
-    df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    with _pytest.raises(Exception):
-        M.resize_images(
-            M.attach_payload(df, "doc_id", "text"), 8, 8,
-            use_real_decoder=True,
-        ).collect()
 
 
 def test_resize_images_empty_payload_zero_grid(spark):
@@ -1767,3 +1755,132 @@ def test_pdf_reader_flate_and_tj_arrays():
             b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(bad)
             + bytes(bad) + b"\nendstream"
         ))
+
+
+ATTACH_PAYLOADS = (
+    "attach_png_payload",
+    "attach_wav_payload",
+    "attach_gif_payload",
+    "attach_mulaw_payload",
+    "attach_bmp_payload",
+    "attach_avi_payload",
+    "attach_srt_payload",
+    "attach_png16_payload",
+    "attach_jpeg_payload",
+    "attach_jpeg_progressive_payload",
+    "attach_adpcm_payload",
+    "attach_tiff_payload",
+    "attach_mjpeg_payload",
+    "attach_tar_payload",
+    "attach_warc_payload",
+    "attach_zip_payload",
+    "attach_pdf_payload",
+    "attach_pdf_flate_payload",
+    "attach_alaw_payload",
+    "attach_utf8_payload",
+)
+
+
+@pytest.mark.parametrize("name", ATTACH_PAYLOADS)
+def test_attach_payload_reads_any_id_column(spark, name):
+    """The ingestion edge renames the id column to doc_id, so an id
+    column with any other name gives the same rows as one named
+    doc_id (reading pdf[id_col] after the rename used to KeyError)."""
+    from shippai_knowledge_etl_spark.operators import multimodal, textops
+
+    fn = getattr(textops if name == "attach_utf8_payload" else multimodal, name)
+    ids = spark.range(3)
+    by_doc = sorted(fn(ids.withColumnRenamed("id", "doc_id"), "doc_id").collect())
+    by_case = sorted(fn(ids.withColumnRenamed("id", "case_id"), "case_id").collect())
+    assert [r["doc_id"] for r in by_case] == [0, 1, 2]
+    assert by_case == by_doc
+
+
+REAL_CODEC_MAPS = (
+    "png_decode_features",
+    "wav_decode_features",
+    "wav_vad_features",
+    "png_downsample_features",
+    "gif_decode_features",
+    "wav_mulaw_features",
+    "bmp_decode_features",
+    "png_tile_signatures",
+    "wav_resample_features",
+    "avi_decode_features",
+    "png16_decode_features",
+    "jpeg_decode_features",
+    "jpeg_progressive_features",
+    "adpcm_decode_features",
+    "tiff_decode_features",
+    "mjpeg_decode_features",
+    "tar_extract_features",
+    "warc_parse_features",
+    "zip_extract_features",
+    "pdf_text_features",
+    "wav_alaw_features",
+)
+
+
+@pytest.mark.parametrize("name", REAL_CODEC_MAPS)
+def test_decode_map_garbage_and_empty_input(spark, name):
+    """Errors are data on degenerate input: a payload no codec accepts
+    gives exactly one (doc_id, all-null features, ok=false) row, and an
+    empty frame gives no rows."""
+    from shippai_knowledge_etl_spark.operators import multimodal
+
+    fn = getattr(multimodal, name)
+    cols = (
+        ("flat_prog", "acb_base", "acb_prog")
+        if name == "jpeg_progressive_features"
+        else ("payload",)
+    )
+    schema = "doc_id long, " + ", ".join(f"{c} binary" for c in cols)
+    garbage = spark.createDataFrame([(7, *[b"not a codec stream"] * len(cols))], schema)
+    rows = fn(garbage).collect()
+    assert len(rows) == 1
+    row = rows[0].asDict()
+    assert row.pop("doc_id") == 7 and row.pop("ok") is False
+    assert row and set(row.values()) == {None}
+    assert fn(spark.createDataFrame([], schema)).collect() == []
+
+
+def test_multimodal_edges_call_sites():
+    """Spark-free AST guard: in operators/multimodal.py only the two
+    shared edges and the three maps that cannot use them call
+    mapInPandas, and the PCM16 LCG stream is written once in
+    operators/ (multimodal._pcm16)."""
+    import ast
+    from pathlib import Path
+
+    import shippai_knowledge_etl_spark as pkg
+
+    allowed = {
+        "_synthesize",
+        "_decode_map",
+        "decode_image_features",
+        "sample_frames",
+        "audio_energy_frames",
+    }
+    root = Path(pkg.__file__).parent / "operators"
+    tree = ast.parse((root / "multimodal.py").read_text(encoding="utf-8"))
+    sites = [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "mapInPandas"
+    ]
+    assert sorted(sites) == sorted(allowed), sites
+
+    def is_const(node, value):
+        return isinstance(node, ast.Constant) and node.value == value
+
+    n_streams = sum(
+        isinstance(n, ast.BinOp)
+        and isinstance(n.op, ast.Mod)
+        and is_const(n.right, 65536)
+        and any(is_const(c, 40503) for c in ast.walk(n.left))
+        for path in sorted(root.glob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+    )
+    assert n_streams == 1, n_streams
