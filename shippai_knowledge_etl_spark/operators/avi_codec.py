@@ -21,19 +21,123 @@ camera corpora actually ship. Out-of-scope modes still raise
 NotImplementedError loudly (multiple streams, other compressions,
 idx1-dependent layouts): the multimodal posture of
 operators/multimodal.py.
+
+Both encoders write one layout, ``_avi``, and both decoders read it
+with one header/movi walk, ``_read_avi``; RIFF framing comes from
+operators/riff.py and the DIB rows from operators/bmp_codec.py.
 """
 
 from __future__ import annotations
 
 import struct
 
+from shippai_knowledge_etl_spark.operators import riff
+from shippai_knowledge_etl_spark.operators.bmp_codec import (
+    dib_rows,
+    dib_stride,
+    rgb_from_dib,
+)
 
-def _pad2(n: int) -> int:
-    return n & 1  # RIFF chunks pad to 16-bit boundaries
+# 'MJPG' biCompression fourcc, little-endian
+_MJPG_FOURCC = 0x47504A4D
 
 
-def _row_pad(width: int) -> int:
-    return (-width * 3) % 4
+def _avi(
+    width: int,
+    height: int,
+    fps: int,
+    handler: bytes,
+    compression: int,
+    image_size: int,
+    frame_cid: bytes,
+    frames: list[bytes],
+) -> bytes:
+    """RIFF 'AVI ': hdrl(avih, strl(strh, strf)) + movi with one
+    ``frame_cid`` chunk per frame; no idx1."""
+    buffer_size = max(len(f) for f in frames)
+    avih = struct.pack(
+        "<IIIIIIIIII4I",
+        1_000_000 // fps, buffer_size * fps, 0,  # us/frame, bytes/s, padding
+        # dwFlags = 0: no idx1 chunk is written, so AVIF_HASINDEX
+        # (0x10) must stay clear — advertising an index the file lacks
+        # would send strict third-party parsers chasing a missing
+        # chunk (round-10 ADVICE). The in-repo decoder ignores flags.
+        0,
+        len(frames), 0, 1, buffer_size,  # frames, initial, streams, buffer
+        width, height, 0, 0, 0, 0,
+    )
+    strh = b"vids" + handler + struct.pack(
+        "<IHH8I4H",
+        0, 0, 0, 0,  # flags, priority, language, initial frames
+        1, fps, 0, len(frames),  # scale, rate, start, length
+        # suggested buffer, default quality, sample size (0 = one
+        # sample per chunk), frame rectangle
+        buffer_size, 0xFFFFFFFF, 0, 0, 0, width, height,
+    )
+    strf = struct.pack(
+        "<IiiHHIIiiII",
+        40, width, height, 1, 24, compression, image_size, 0, 0, 0, 0,
+    )
+    return riff.form(
+        b"AVI ",
+        riff.lst(
+            b"hdrl",
+            riff.chunk(b"avih", avih),
+            riff.lst(b"strl", riff.chunk(b"strh", strh), riff.chunk(b"strf", strf)),
+        ),
+        riff.lst(b"movi", *(riff.chunk(frame_cid, f) for f in frames)),
+    )
+
+
+def _read_avi(data: bytes, handler: bytes | None, check_strf, frame) -> tuple:
+    """Walk hdrl and movi → ``(width, height, fps, frames)``. ``handler``
+    (if set) is the required strh fccHandler; ``check_strf(hdr_size,
+    height, bpp, compression)`` validates the stream format; ``frame(cid,
+    payload, declared size, width, height)`` turns each movi chunk into
+    a frame or None (skipped) as the chunks are met, so the first error
+    in stream order is the one raised."""
+    width = height = fps = None
+    n_frames_hdr = None
+    frames: list[bytes] = []
+    for cid, body, size in riff.chunks(data, b"AVI "):
+        if cid != b"LIST":
+            continue
+        ltype = data[body : body + 4]
+        if ltype == b"hdrl":
+            for c2, b2, s2 in riff.walk(data, body + 4, body + size):
+                if c2 == b"avih":
+                    vals = riff.unpack("<IIIIIIIIII", data, b2)
+                    n_frames_hdr = vals[4]
+                    if vals[6] != 1:
+                        raise NotImplementedError("multi-stream AVI")
+                elif c2 == b"LIST" and data[b2 : b2 + 4] == b"strl":
+                    for c3, b3, _s3 in riff.walk(data, b2 + 4, b2 + s2):
+                        if c3 == b"strh":
+                            if data[b3 : b3 + 4] != b"vids":
+                                raise NotImplementedError("non-video stream")
+                            if handler and data[b3 + 4 : b3 + 8] != handler:
+                                raise NotImplementedError(
+                                    f"non-{handler.decode()} handler (use "
+                                    "decode_avi for DIB streams)"
+                                )
+                            scale, fps = riff.unpack("<II", data, b3 + 20)
+                            if scale != 1:
+                                raise NotImplementedError("non-unit strh scale")
+                        elif c3 == b"strf":
+                            hdr_size, width, height, _planes, bpp, comp = (
+                                riff.unpack("<IiiHHI", data, b3)
+                            )
+                            check_strf(hdr_size, height, bpp, comp)
+        elif ltype == b"movi":
+            for c2, b2, s2 in riff.walk(data, body + 4, body + size):
+                f = frame(c2, data[b2 : b2 + s2], s2, width, height)
+                if f is not None:
+                    frames.append(f)
+    if width is None or fps is None or n_frames_hdr is None:
+        raise ValueError("missing AVI headers")
+    if len(frames) != n_frames_hdr:
+        raise ValueError("frame count disagrees with avih header")
+    return width, height, fps, frames
 
 
 def encode_avi_rgb24(
@@ -46,95 +150,29 @@ def encode_avi_rgb24(
     for f in frames:
         if len(f) != width * height * 3:
             raise ValueError("frame length != w*h*3")
-    pad = _row_pad(width)
-    dibs = []
-    for f in frames:
-        body = bytearray()
-        for y in range(height - 1, -1, -1):
-            row = f[y * width * 3 : (y + 1) * width * 3]
-            for x in range(width):
-                r, g, b = row[3 * x : 3 * x + 3]
-                body += bytes((b, g, r))
-            body += b"\x00" * pad
-        dibs.append(bytes(body))
-    frame_bytes = len(dibs[0])
+    dibs = [dib_rows(width, height, f) for f in frames]
+    return _avi(width, height, fps, b"DIB ", 0, len(dibs[0]), b"00db", dibs)
 
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        return (
-            cid
-            + struct.pack("<I", len(payload))
-            + payload
-            + b"\x00" * _pad2(len(payload))
+
+def _strf_dib(hdr_size: int, height: int, bpp: int, comp: int) -> None:
+    if hdr_size != 40 or bpp != 24 or comp != 0:
+        raise NotImplementedError("compressed or non-24bpp frames")
+    if height < 0:
+        raise NotImplementedError("top-down DIB")
+
+
+def _dib_frame(cid, payload, size, width, height):
+    if cid == b"00dc":
+        raise NotImplementedError(
+            "compressed frame chunk (MJPG streams go through decode_avi_mjpeg)"
         )
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        1_000_000 // fps,  # microseconds per frame
-        frame_bytes * fps,  # max bytes/sec
-        0,  # padding granularity
-        # dwFlags = 0: no idx1 chunk is written, so AVIF_HASINDEX
-        # (0x10) must stay clear — advertising an index the file lacks
-        # would send strict third-party parsers chasing a missing
-        # chunk (round-10 ADVICE). The in-repo decoder ignores flags.
-        0,
-        len(frames),
-        0,
-        1,  # one stream
-        frame_bytes,
-        width,
-        height,
-        0,
-        0,
-        0,
-        0,
-    )
-    strh = (
-        b"vids"
-        + b"DIB "
-        + struct.pack(
-            "<IHH8I4H",
-            0,  # flags
-            0,  # priority
-            0,  # language
-            0,  # initial frames
-            1,  # scale
-            fps,  # rate
-            0,  # start
-            len(frames),  # length
-            frame_bytes,  # suggested buffer
-            0xFFFFFFFF,  # quality (default)
-            0,  # sample size (0 = one sample per chunk)
-            0,
-            0,
-            width,
-            height,
-        )
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40,
-        width,
-        height,
-        1,
-        24,
-        0,
-        frame_bytes,
-        0,
-        0,
-        0,
-        0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", d) for d in dibs))
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+    if cid != b"00db":
+        return None
+    if width is None:
+        raise ValueError("movi before hdrl")
+    if size != dib_stride(width) * height:
+        raise ValueError("frame chunk size mismatch")
+    return rgb_from_dib(payload, 0, width, height)
 
 
 def decode_avi(data: bytes) -> tuple[int, int, int, int, list[bytes]]:
@@ -142,103 +180,15 @@ def decode_avi(data: bytes) -> tuple[int, int, int, int, list[bytes]]:
     [top-down RGB frame bytes, in stream order]). Validates the single
     'vids' BI_RGB 24bpp stream; raises ValueError on malformed input
     and NotImplementedError on out-of-scope modes."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI stream")
-
-    def walk(buf: bytes, pos: int, end: int):
-        while pos + 8 <= end:
-            cid = buf[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", buf, pos + 4)
-            yield cid, pos + 8, size
-            pos += 8 + size + _pad2(size)
-
-    width = height = fps = None
-    n_frames_hdr = None
-    frames: list[bytes] = []
-    for cid, body, size in walk(data, 12, len(data)):
-        if cid != b"LIST":
-            continue
-        ltype = data[body : body + 4]
-        if ltype == b"hdrl":
-            for c2, b2, s2 in walk(data, body + 4, body + size):
-                if c2 == b"avih":
-                    vals = struct.unpack_from("<IIIIIIIIII", data, b2)
-                    n_frames_hdr = vals[4]
-                    if vals[6] != 1:
-                        raise NotImplementedError("multi-stream AVI")
-                elif c2 == b"LIST" and data[b2 : b2 + 4] == b"strl":
-                    for c3, b3, s3 in walk(data, b2 + 4, b2 + s2):
-                        if c3 == b"strh":
-                            if data[b3 : b3 + 4] != b"vids":
-                                raise NotImplementedError(
-                                    "non-video stream"
-                                )
-                            scale, rate = struct.unpack_from(
-                                "<II", data, b3 + 20
-                            )
-                            if scale != 1:
-                                raise NotImplementedError(
-                                    "non-unit strh scale"
-                                )
-                            fps = rate
-                        elif c3 == b"strf":
-                            (
-                                hdr_size,
-                                width,
-                                height,
-                                _planes,
-                                bpp,
-                                comp,
-                            ) = struct.unpack_from("<IiiHHI", data, b3)
-                            if hdr_size != 40 or bpp != 24 or comp != 0:
-                                raise NotImplementedError(
-                                    "compressed or non-24bpp frames"
-                                )
-                            if height < 0:
-                                raise NotImplementedError("top-down DIB")
-        elif ltype == b"movi":
-            for c2, b2, s2 in walk(data, body + 4, body + size):
-                if c2 == b"00dc":
-                    raise NotImplementedError(
-                        "compressed frame chunk (MJPG streams go "
-                        "through decode_avi_mjpeg)"
-                    )
-                if c2 != b"00db":
-                    continue
-                if width is None:
-                    raise ValueError("movi before hdrl")
-                pad = _row_pad(width)
-                expected = (width * 3 + pad) * height
-                if s2 != expected:
-                    raise ValueError("frame chunk size mismatch")
-                out = bytearray(width * height * 3)
-                pos = b2
-                for y in range(height - 1, -1, -1):
-                    row = data[pos : pos + width * 3]
-                    pos += width * 3 + pad
-                    base = y * width * 3
-                    for x in range(width):
-                        bb, gg, rr = row[3 * x : 3 * x + 3]
-                        out[base + 3 * x : base + 3 * x + 3] = bytes(
-                            (rr, gg, bb)
-                        )
-                frames.append(bytes(out))
-    if width is None or fps is None or n_frames_hdr is None:
-        raise ValueError("missing AVI headers")
-    if len(frames) != n_frames_hdr:
-        raise ValueError("frame count disagrees with avih header")
+    width, height, fps, frames = _read_avi(data, None, _strf_dib, _dib_frame)
     return width, height, fps, len(frames), frames
-
-
-# 'MJPG' biCompression fourcc, little-endian
-_MJPG_FOURCC = 0x47504A4D
 
 
 def encode_avi_mjpeg(
     width: int, height: int, jpeg_frames: list[bytes], fps: int = 10
 ) -> bytes:
-    """AVI with a Motion-JPEG video stream (round 11): same RIFF
-    skeleton as encode_avi_rgb24 but fccHandler/biCompression 'MJPG'
+    """AVI with a Motion-JPEG video stream (round 11): the ``_avi``
+    layout of encode_avi_rgb24 with fccHandler/biCompression 'MJPG'
     and one '00dc' (compressed) chunk per frame holding a complete
     baseline JPEG — the most common legacy camera/webcam capture
     format, and the container+codec COMPOSITION a real video corpus
@@ -248,57 +198,25 @@ def encode_avi_mjpeg(
     for f in jpeg_frames:
         if f[:2] != b"\xff\xd8":
             raise ValueError("frame is not a JPEG (missing SOI)")
-    max_bytes = max(len(f) for f in jpeg_frames)
+    return _avi(
+        width, height, fps, b"MJPG", _MJPG_FOURCC, width * height * 3,
+        b"00dc", jpeg_frames,
+    )
 
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        return (
-            cid
-            + struct.pack("<I", len(payload))
-            + payload
-            + b"\x00" * _pad2(len(payload))
-        )
 
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
+def _strf_mjpg(hdr_size: int, _height: int, _bpp: int, comp: int) -> None:
+    if hdr_size != 40 or comp != _MJPG_FOURCC:
+        raise NotImplementedError("strf compression is not MJPG")
 
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        1_000_000 // fps,
-        max_bytes * fps,
-        0,
-        0,  # no idx1 chunk → AVIF_HASINDEX stays clear
-        len(jpeg_frames),
-        0,
-        1,
-        max_bytes,
-        width,
-        height,
-        0, 0, 0, 0,
-    )
-    strh = (
-        b"vids"
-        + b"MJPG"
-        + struct.pack(
-            "<IHH8I4H",
-            0, 0, 0, 0,
-            1, fps, 0, len(jpeg_frames),
-            max_bytes, 0xFFFFFFFF, 0,
-            0, 0, width, height,
-        )
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 24, _MJPG_FOURCC,
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in jpeg_frames))
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+
+def _mjpg_frame(cid, payload, _size, _width, _height):
+    if cid == b"00db":
+        raise ValueError("uncompressed chunk in MJPG stream")
+    if cid != b"00dc":
+        return None
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("frame chunk is not a JPEG")
+    return payload
 
 
 def decode_avi_mjpeg(data: bytes) -> tuple[int, int, int, list[bytes]]:
@@ -307,64 +225,4 @@ def decode_avi_mjpeg(data: bytes) -> tuple[int, int, int, list[bytes]]:
     each frame to jpeg_codec.decode_jpeg. Uncompressed '00db' chunks
     in an MJPG stream raise ValueError; other stream types raise the
     usual NotImplementedError."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI stream")
-
-    def walk(buf: bytes, pos: int, end: int):
-        while pos + 8 <= end:
-            cid = buf[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", buf, pos + 4)
-            yield cid, pos + 8, size
-            pos += 8 + size + _pad2(size)
-
-    width = height = fps = None
-    n_frames_hdr = None
-    frames: list[bytes] = []
-    for cid, body, size in walk(data, 12, len(data)):
-        if cid != b"LIST":
-            continue
-        ltype = data[body : body + 4]
-        if ltype == b"hdrl":
-            for c2, b2, s2 in walk(data, body + 4, body + size):
-                if c2 == b"avih":
-                    vals = struct.unpack_from("<IIIIIIIIII", data, b2)
-                    n_frames_hdr = vals[4]
-                    if vals[6] != 1:
-                        raise NotImplementedError("multi-stream AVI")
-                elif c2 == b"LIST" and data[b2 : b2 + 4] == b"strl":
-                    for c3, b3, s3 in walk(data, b2 + 4, b2 + s2):
-                        if c3 == b"strh":
-                            if data[b3 : b3 + 4] != b"vids":
-                                raise NotImplementedError("non-video stream")
-                            if data[b3 + 4 : b3 + 8] != b"MJPG":
-                                raise NotImplementedError(
-                                    "non-MJPG handler (use decode_avi "
-                                    "for DIB streams)"
-                                )
-                            scale, rate = struct.unpack_from("<II", data, b3 + 20)
-                            if scale != 1:
-                                raise NotImplementedError("non-unit strh scale")
-                            fps = rate
-                        elif c3 == b"strf":
-                            hdr_size, width, height, _pl, _bpp, comp = (
-                                struct.unpack_from("<IiiHHI", data, b3)
-                            )
-                            if hdr_size != 40 or comp != _MJPG_FOURCC:
-                                raise NotImplementedError(
-                                    "strf compression is not MJPG"
-                                )
-        elif ltype == b"movi":
-            for c2, b2, s2 in walk(data, body + 4, body + size):
-                if c2 == b"00db":
-                    raise ValueError("uncompressed chunk in MJPG stream")
-                if c2 != b"00dc":
-                    continue
-                frame = data[b2 : b2 + s2]
-                if frame[:2] != b"\xff\xd8":
-                    raise ValueError("frame chunk is not a JPEG")
-                frames.append(frame)
-    if width is None or fps is None or n_frames_hdr is None:
-        raise ValueError("missing AVI headers")
-    if len(frames) != n_frames_hdr:
-        raise ValueError("frame count disagrees with avih header")
-    return width, height, fps, frames
+    return _read_avi(data, b"MJPG", _strf_mjpg, _mjpg_frame)

@@ -26,8 +26,39 @@ _FILE_HDR = struct.Struct("<2sIHHI")  # magic, file size, res, res, offset
 _INFO_HDR = struct.Struct("<IiiHHIIiiII")
 
 
-def _pad(row_bytes: int) -> int:
-    return (-row_bytes) % 4
+def dib_stride(width: int) -> int:
+    """Bytes per 24bpp DIB row: 3 per pixel, padded to a multiple of 4."""
+    return width * 3 + (-width * 3) % 4
+
+
+def dib_rows(width: int, height: int, rgb: bytes) -> bytes:
+    """Top-down RGB → 24bpp DIB pixel data: bottom-up rows, BGR byte
+    order, each row padded to 4 bytes (BMP and the AVI DIB stream)."""
+    pad = b"\x00" * (dib_stride(width) - width * 3)
+    body = bytearray()
+    for y in range(height - 1, -1, -1):
+        row = rgb[y * width * 3 : (y + 1) * width * 3]
+        for x in range(width):
+            r, g, b = row[3 * x : 3 * x + 3]
+            body += bytes((b, g, r))
+        body += pad
+    return bytes(body)
+
+
+def rgb_from_dib(buf: bytes, pos: int, width: int, height: int) -> bytes:
+    """24bpp DIB pixel data at ``buf[pos:]`` → top-down RGB bytes, the
+    inverse of :func:`dib_rows`. A short buffer fails unpacking a pixel
+    (``ValueError``); callers that want their own message check first."""
+    stride = dib_stride(width)
+    out = bytearray(width * height * 3)
+    for y in range(height - 1, -1, -1):
+        row = buf[pos : pos + width * 3]
+        pos += stride
+        base = y * width * 3
+        for x in range(width):
+            b, g, r = row[3 * x : 3 * x + 3]
+            out[base + 3 * x : base + 3 * x + 3] = bytes((r, g, b))
+    return bytes(out)
 
 
 def encode_bmp_rgb24(width: int, height: int, rgb: bytes) -> bytes:
@@ -35,18 +66,11 @@ def encode_bmp_rgb24(width: int, height: int, rgb: bytes) -> bytes:
     bytes. ``rgb`` is top-down RGB (3 bytes/pixel)."""
     if len(rgb) != width * height * 3:
         raise ValueError("rgb length != w*h*3")
-    pad = _pad(width * 3)
-    body = bytearray()
-    for y in range(height - 1, -1, -1):
-        row = rgb[y * width * 3 : (y + 1) * width * 3]
-        for x in range(width):
-            r, g, b = row[3 * x : 3 * x + 3]
-            body += bytes((b, g, r))
-        body += b"\x00" * pad
+    body = dib_rows(width, height, rgb)
     info = _INFO_HDR.pack(40, width, height, 1, 24, 0, len(body), 0, 0, 0, 0)
     offset = _FILE_HDR.size + len(info)
     head = _FILE_HDR.pack(b"BM", offset + len(body), 0, 0, offset)
-    return head + info + bytes(body)
+    return head + info + body
 
 
 def _rle8_encode_row(row: bytes) -> bytes:
@@ -97,19 +121,9 @@ def decode_bmp(data: bytes) -> tuple[int, int, int, bytes]:
     if len(data) < _FILE_HDR.size + 40 or data[:2] != b"BM":
         raise ValueError("not a BMP")
     _, _, _, _, offset = _FILE_HDR.unpack_from(data, 0)
-    (
-        hdr_size,
-        width,
-        height,
-        planes,
-        bpp,
-        compression,
-        _img_size,
-        _xppm,
-        _yppm,
-        clr_used,
-        _clr_imp,
-    ) = _INFO_HDR.unpack_from(data, _FILE_HDR.size)
+    hdr_size, width, height, planes, bpp, compression, *_, clr_used, _ = (
+        _INFO_HDR.unpack_from(data, _FILE_HDR.size)
+    )
     if hdr_size != 40:
         raise NotImplementedError(f"BMP header size {hdr_size}")
     if height < 0:
@@ -117,19 +131,11 @@ def decode_bmp(data: bytes) -> tuple[int, int, int, bytes]:
     if planes != 1 or width <= 0 or height == 0:
         raise ValueError("bad BMP geometry")
     if bpp == 24 and compression == 0:
-        pad = _pad(width * 3)
-        out = bytearray(width * height * 3)
-        pos = offset
-        for y in range(height - 1, -1, -1):
-            if pos + width * 3 > len(data):
-                raise ValueError("truncated BMP pixel data")
-            row = data[pos : pos + width * 3]
-            pos += width * 3 + pad
-            base = y * width * 3
-            for x in range(width):
-                b, g, r = row[3 * x : 3 * x + 3]
-                out[base + 3 * x : base + 3 * x + 3] = bytes((r, g, b))
-        return width, height, 3, bytes(out)
+        # rows are stored bottom-up, so the top row is the last to fit
+        last = offset + (height - 1) * dib_stride(width)
+        if last + width * 3 > len(data):
+            raise ValueError("truncated BMP pixel data")
+        return width, height, 3, rgb_from_dib(data, offset, width, height)
     if bpp == 8 and compression == 1:
         n_pal = clr_used or 256
         pal_off = _FILE_HDR.size + hdr_size

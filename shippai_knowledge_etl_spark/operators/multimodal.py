@@ -461,7 +461,8 @@ def decode_audio_features(df: DataFrame, sample_rate: int = 16000) -> DataFrame:
 def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
     """Video-style frame sampling stub: split the payload into n equal
     byte windows ("frames") and fingerprint each — the UDTF-shaped
-    one-row→many-rows pattern over binary columns."""
+    one-row→many-rows pattern over binary columns. A null payload
+    emits no rows."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -469,6 +470,8 @@ def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:
+                    continue
                 raw = bytes(payload)
                 step = max(1, len(raw) // n_frames)
                 for i in range(n_frames):
@@ -602,7 +605,8 @@ def audio_energy_frames(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
     pass runs, with the decode step env-stubbed like every mm_*
     operator. Only FULL frames are emitted (a trailing partial frame
     would make the last energy depend on padding policy — the oracle
-    mirrors the same truncation). Int sums of uint8 bytes → exact."""
+    mirrors the same truncation; a null payload emits no rows, like one
+    shorter than a frame). Int sums of uint8 bytes → exact."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -610,6 +614,8 @@ def audio_energy_frames(df: DataFrame, frame_bytes: int = 256) -> DataFrame:
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:
+                    continue
                 raw = np.frombuffer(bytes(payload), dtype=np.uint8)
                 nf = len(raw) // frame_bytes
                 if nf == 0:

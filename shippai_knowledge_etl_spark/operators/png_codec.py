@@ -30,6 +30,13 @@ sequentially). Semantics are pinned pixel-exact by
 tests/test_multimodal.py and the closed-form pixel-sum oracles of
 mm_png_decode, so this rewrite is hash-checked, not just unit-checked.
 
+Each container step is written once and shared by the 8-bit, Adam7
+and 16-bit paths: ``_read_png`` walks the chunks, checks IHDR through
+the caller's validator and returns IHDR, PLTE and the inflated IDAT
+(malformed or truncated input raises ``ValueError``);
+``_unfilter_rows`` / ``_filter_rows`` run the scanline loop over one
+(sub-)image; ``_png`` assembles IHDR+IDAT+IEND.
+
 Reference analog: ``download_image`` (src/render_pdf.py:90-98)
 returns raw bytes the reference never decodes; decoding is
 beyond-reference [EXT] surface.
@@ -45,6 +52,7 @@ import numpy as np
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+_COLOR_TYPE = {1: 0, 2: 4, 3: 2, 4: 6}  # channels → color type (encoders)
 
 # Adam7 pass grid (RFC 2083 §2.6): (x0, y0, dx, dy) per pass.
 ADAM7 = (
@@ -58,14 +66,14 @@ ADAM7 = (
 )
 
 
-def _adam7_dims(width: int, height: int):
-    """Per-pass (x0, y0, dx, dy, w_p, h_p); empty passes have 0 dims."""
-    out = []
+def _adam7_passes(width: int, height: int):
+    """(x0, y0, dx, dy, w_p, h_p) of each non-empty Adam7 pass; empty
+    passes contribute no bytes."""
     for x0, y0, dx, dy in ADAM7:
         w_p = (width - x0 + dx - 1) // dx if width > x0 else 0
         h_p = (height - y0 + dy - 1) // dy if height > y0 else 0
-        out.append((x0, y0, dx, dy, w_p, h_p))
-    return out
+        if w_p and h_p:
+            yield x0, y0, dx, dy, w_p, h_p
 
 
 def _unfilter_scanline(
@@ -119,6 +127,67 @@ def _unfilter_scanline(
     raise ValueError(f"invalid PNG filter type {ftype}")
 
 
+def _unfilter_rows(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
+    """Reconstruct ``height`` filtered scanlines of ``stride`` bytes
+    (each led by its filter byte) → (height, stride) uint8 array."""
+    rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, 1 + stride)
+    out = np.empty((height, stride), dtype=np.uint8)
+    prev = np.zeros(stride, dtype=np.uint8)
+    for y in range(height):
+        prev = _unfilter_scanline(int(rows[y, 0]), rows[y, 1:], prev, bpp)
+        out[y] = prev
+    return out
+
+
+def _read_png(data: bytes, check_ihdr) -> tuple[tuple, bytes, bytes]:
+    """Walk the chunks → ``(IHDR fields, PLTE payload, inflated IDAT)``.
+    ``check_ihdr(bit_depth, color_type, compression, filter,
+    interlace)`` validates each IHDR as it is met; chunks after IEND
+    are ignored and CRCs are not checked."""
+    if not data.startswith(PNG_MAGIC):
+        raise ValueError("not a PNG: bad signature")
+    pos = 8
+    ihdr = None
+    palette = b""
+    idat = bytearray()
+    while pos + 8 <= len(data):
+        (length,) = struct.unpack_from(">I", data, pos)
+        ctype = data[pos + 4 : pos + 8]
+        chunk = data[pos + 8 : pos + 8 + length]
+        pos += 12 + length  # 4 len + 4 type + data + 4 crc
+        if ctype == b"IHDR":
+            if len(chunk) != 13:
+                raise ValueError(f"IHDR chunk of {len(chunk)} bytes, not 13")
+            ihdr = struct.unpack(">IIBBBBB", chunk)
+            check_ihdr(*ihdr[2:])
+        elif ctype == b"PLTE":
+            palette = chunk
+        elif ctype == b"IDAT":
+            idat += chunk
+        elif ctype == b"IEND":
+            break
+    if ihdr is None:
+        raise ValueError("PNG missing IHDR")
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError(f"bad PNG IDAT stream: {e}") from None
+    return ihdr, palette, raw
+
+
+def _check_ihdr8(bit_depth, color_type, comp, filt, interlace) -> None:
+    if bit_depth != 8:
+        raise NotImplementedError(
+            f"PNG bit depth {bit_depth} unsupported (8 only)"
+        )
+    if interlace not in (0, 1):
+        raise ValueError(f"invalid interlace method {interlace}")
+    if comp != 0 or filt != 0:
+        raise ValueError("invalid IHDR compression/filter method")
+    if color_type not in _CHANNELS:
+        raise ValueError(f"invalid PNG color type {color_type}")
+
+
 def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     """Decode a PNG byte string → ``(width, height, channels, pixels)``
     with ``pixels`` the row-major reconstructed samples (palette images
@@ -126,94 +195,34 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     ``ValueError`` on malformed input and ``NotImplementedError``
     outside the 8-bit scope. Both interlace methods decode (Adam7
     since round 10)."""
-    if not data.startswith(PNG_MAGIC):
-        raise ValueError("not a PNG: bad signature")
-    pos = 8
-    width = height = None
-    color_type = None
-    interlaced = 0
-    palette = b""
-    idat = bytearray()
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        ctype = data[pos + 4 : pos + 8]
-        chunk = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # 4 len + 4 type + data + 4 crc
-        if ctype == b"IHDR":
-            (width, height, bit_depth, color_type, comp, filt, interlace) = (
-                struct.unpack(">IIBBBBB", chunk)
-            )
-            if bit_depth != 8:
-                raise NotImplementedError(
-                    f"PNG bit depth {bit_depth} unsupported (8 only)"
-                )
-            if interlace not in (0, 1):
-                raise ValueError(f"invalid interlace method {interlace}")
-            if comp != 0 or filt != 0:
-                raise ValueError("invalid IHDR compression/filter method")
-            if color_type not in _CHANNELS:
-                raise ValueError(f"invalid PNG color type {color_type}")
-            interlaced = interlace
-        elif ctype == b"PLTE":
-            palette = chunk
-        elif ctype == b"IDAT":
-            idat += chunk
-        elif ctype == b"IEND":
-            break
-    if width is None:
-        raise ValueError("PNG missing IHDR")
+    (width, height, _, color_type, _, _, interlaced), palette, raw = (
+        _read_png(data, _check_ihdr8)
+    )
     channels = _CHANNELS[color_type]
     stride = width * channels
-    raw = zlib.decompress(bytes(idat))
     if interlaced == 0:
         if len(raw) != (stride + 1) * height:
             raise ValueError(
                 f"PNG pixel data length {len(raw)} != expected "
                 f"{(stride + 1) * height}"
             )
-        # (height, 1 + stride): filter byte column 0, rest the line
-        rows = np.frombuffer(raw, dtype=np.uint8).reshape(
-            height, 1 + stride
-        )
-        out = np.empty((height, stride), dtype=np.uint8)
-        prev = np.zeros(stride, dtype=np.uint8)
-        for y in range(height):
-            prev = _unfilter_scanline(
-                int(rows[y, 0]), rows[y, 1:], prev, channels
-            )
-            out[y] = prev
+        out = _unfilter_rows(raw, height, stride, channels)
     else:
         # Adam7: seven independently-filtered sub-images, scattered
         # back through the pass grid (empty passes contribute nothing)
-        dims = _adam7_dims(width, height)
-        expected = sum(
-            h_p * (1 + w_p * channels)
-            for (_, _, _, _, w_p, h_p) in dims
-            if w_p and h_p
-        )
+        passes = list(_adam7_passes(width, height))
+        expected = sum(h_p * (1 + w_p * channels) for *_, w_p, h_p in passes)
         if len(raw) != expected:
             raise ValueError(
                 f"interlaced PNG data length {len(raw)} != {expected}"
             )
-        buf = np.frombuffer(raw, dtype=np.uint8)
         out3 = np.empty((height, width, channels), dtype=np.uint8)
-        pos2 = 0
-        for x0, y0, dx, dy, w_p, h_p in dims:
-            if not (w_p and h_p):
-                continue
-            pstride = w_p * channels
-            rows = buf[pos2 : pos2 + h_p * (1 + pstride)].reshape(
-                h_p, 1 + pstride
-            )
-            pos2 += h_p * (1 + pstride)
-            prev = np.zeros(pstride, dtype=np.uint8)
-            sub = np.empty((h_p, pstride), dtype=np.uint8)
-            for j in range(h_p):
-                prev = _unfilter_scanline(
-                    int(rows[j, 0]), rows[j, 1:], prev, channels
-                )
-                sub[j] = prev
+        pos = 0
+        for x0, y0, dx, dy, w_p, h_p in passes:
+            n = h_p * (1 + w_p * channels)
+            sub = _unfilter_rows(raw[pos : pos + n], h_p, w_p * channels, channels)
             out3[y0::dy, x0::dx, :] = sub.reshape(h_p, w_p, channels)
+            pos += n
         out = out3.reshape(height, stride)
     if color_type == 3:
         if not palette:
@@ -265,13 +274,33 @@ def _filter_scanline(
     raise ValueError(f"invalid PNG filter type {ftype}")
 
 
+def _filter_rows(img: np.ndarray, bpp: int, filter_cycle: bool) -> bytes:
+    """Filter each row of a (rows, stride) uint8 image, row y with
+    filter y % 5 (or None), each led by its filter byte."""
+    body = bytearray()
+    prev = np.zeros(img.shape[1], dtype=np.uint8)
+    for y, line in enumerate(img):
+        ftype = y % 5 if filter_cycle else 0
+        body.append(ftype)
+        body += _filter_scanline(ftype, line, prev, bpp).tobytes()
+        prev = line
+    return bytes(body)
+
+
 def _chunk(ctype: bytes, payload: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(payload))
-        + ctype
-        + payload
-        + struct.pack(">I", zlib.crc32(ctype + payload) & 0xFFFFFFFF)
+    crc = zlib.crc32(ctype + payload) & 0xFFFFFFFF
+    return struct.pack(">I", len(payload)) + ctype + payload + struct.pack(">I", crc)
+
+
+def _png(
+    width: int, height: int, depth: int, color_type: int, interlace: int,
+    body: bytes,
+) -> bytes:
+    ihdr = struct.pack(
+        ">IIBBBBB", width, height, depth, color_type, 0, 0, interlace
     )
+    idat = _chunk(b"IDAT", zlib.compress(body, 6))
+    return PNG_MAGIC + _chunk(b"IHDR", ihdr) + idat + _chunk(b"IEND", b"")
 
 
 def encode_png(
@@ -291,49 +320,44 @@ def encode_png(
     ``interlace`` the image is written Adam7: seven independently
     filtered passes in grid order, the filter cycle restarting per
     pass."""
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
+    color_type = _COLOR_TYPE[channels]
     stride = width * channels
     if len(pixels) != stride * height:
         raise ValueError(
             f"pixel buffer {len(pixels)} != {stride}*{height}"
         )
     img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, stride)
-    body = bytearray()
-    if not interlace:
-        prev = np.zeros(stride, dtype=np.uint8)
-        for y in range(height):
-            line = img[y]
-            ftype = y % 5 if filter_cycle else 0
-            body.append(ftype)
-            body += _filter_scanline(
-                ftype, line, prev, channels
-            ).tobytes()
-            prev = line
-    else:
-        img3 = img.reshape(height, width, channels)
-        for x0, y0, dx, dy, w_p, h_p in _adam7_dims(width, height):
-            if not (w_p and h_p):
-                continue
-            sub = img3[y0::dy, x0::dx, :].reshape(h_p, w_p * channels)
-            prev = np.zeros(w_p * channels, dtype=np.uint8)
-            for j in range(h_p):
-                line = np.ascontiguousarray(sub[j])
-                ftype = j % 5 if filter_cycle else 0
-                body.append(ftype)
-                body += _filter_scanline(
-                    ftype, line, prev, channels
-                ).tobytes()
-                prev = line
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, 8, color_type, 0, 0,
-        1 if interlace else 0,
+    img3 = img.reshape(height, width, channels)
+    # a flat image is one pass over the whole grid
+    passes = (
+        _adam7_passes(width, height) if interlace
+        else [(0, 0, 1, 1, width, height)]
     )
-    return (
-        PNG_MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(body), 6))
-        + _chunk(b"IEND", b"")
+    body = b"".join(
+        _filter_rows(
+            img3[y0::dy, x0::dx, :].reshape(h_p, w_p * channels),
+            channels,
+            filter_cycle,
+        )
+        for x0, y0, dx, dy, w_p, h_p in passes
     )
+    return _png(width, height, 8, color_type, 1 if interlace else 0, body)
+
+
+def _check_ihdr16(bit_depth, color_type, comp, filt, interlace) -> None:
+    if bit_depth != 16:
+        raise ValueError(
+            f"decode_png16 got bit depth {bit_depth}; use "
+            "decode_png for 8-bit"
+        )
+    if color_type == 3:
+        raise ValueError("palette PNGs cannot be 16-bit")
+    if color_type not in _CHANNELS:
+        raise ValueError(f"invalid PNG color type {color_type}")
+    if interlace != 0:
+        raise NotImplementedError("16-bit Adam7 unsupported")
+    if comp != 0 or filt != 0:
+        raise ValueError("invalid IHDR compression/filter method")
 
 
 def decode_png16(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
@@ -346,54 +370,17 @@ def decode_png16(data: bytes) -> tuple[int, int, int, "np.ndarray"]:
     depth gap (round 10); palette (color type 3) cannot be 16-bit per
     the spec and raises ValueError. Non-interlaced only — a 16-bit
     Adam7 stream is vanishingly rare and raises loudly."""
-    if not data.startswith(PNG_MAGIC):
-        raise ValueError("not a PNG: bad signature")
-    pos = 8
-    width = height = None
-    color_type = None
-    idat = bytearray()
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        ctype = data[pos + 4 : pos + 8]
-        chunk = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if ctype == b"IHDR":
-            (width, height, bit_depth, color_type, comp, filt, interlace) = (
-                struct.unpack(">IIBBBBB", chunk)
-            )
-            if bit_depth != 16:
-                raise ValueError(
-                    f"decode_png16 got bit depth {bit_depth}; use "
-                    "decode_png for 8-bit"
-                )
-            if color_type == 3:
-                raise ValueError("palette PNGs cannot be 16-bit")
-            if color_type not in _CHANNELS:
-                raise ValueError(f"invalid PNG color type {color_type}")
-            if interlace != 0:
-                raise NotImplementedError("16-bit Adam7 unsupported")
-            if comp != 0 or filt != 0:
-                raise ValueError("invalid IHDR compression/filter method")
-        elif ctype == b"IDAT":
-            idat += chunk
-        elif ctype == b"IEND":
-            break
-    if width is None:
-        raise ValueError("PNG missing IHDR")
+    (width, height, _, color_type, _, _, _), _, raw = _read_png(
+        data, _check_ihdr16
+    )
     channels = _CHANNELS[color_type]
     bpp = 2 * channels
     stride = width * bpp
-    raw = zlib.decompress(bytes(idat))
     if len(raw) != (stride + 1) * height:
         raise ValueError(
             f"PNG pixel data length {len(raw)} != {(stride + 1) * height}"
         )
-    rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, 1 + stride)
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        prev = _unfilter_scanline(int(rows[y, 0]), rows[y, 1:], prev, bpp)
-        out[y] = prev
+    out = _unfilter_rows(raw, height, stride, bpp)
     samples = out.reshape(height, width * channels, 2)
     u16 = (
         samples[:, :, 0].astype(np.uint16) << 8
@@ -412,27 +399,12 @@ def encode_png16(
     values) as a valid 16-bit PNG: big-endian sample bytes, the same
     five-filter cycle as the 8-bit encoder but with bpp = 2·channels
     byte offsets."""
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    bpp = 2 * channels
-    stride = width * bpp
+    color_type = _COLOR_TYPE[channels]
     arr = np.asarray(samples, dtype=np.uint16).reshape(
         height, width * channels
     )
-    be = np.empty((height, stride), dtype=np.uint8)
+    be = np.empty((height, 2 * width * channels), dtype=np.uint8)
     be[:, 0::2] = (arr >> 8).astype(np.uint8)
     be[:, 1::2] = (arr & 0xFF).astype(np.uint8)
-    body = bytearray()
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        line = be[y]
-        ftype = y % 5 if filter_cycle else 0
-        body.append(ftype)
-        body += _filter_scanline(ftype, line, prev, bpp).tobytes()
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 16, color_type, 0, 0, 0)
-    return (
-        PNG_MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(body), 6))
-        + _chunk(b"IEND", b"")
-    )
+    body = _filter_rows(be, 2 * channels, filter_cycle)
+    return _png(width, height, 16, color_type, 0, body)

@@ -17,14 +17,22 @@ Round 10 adds format tag 7 (G.711 mu-law, ITU-T G.711 1988 — the
 8 kHz telephony companding every speech corpus ships in): stored
 bytes expand to linear through the standard segment/mantissa table
 arithmetic (``mulaw_expand``), and ``encode_wav_mulaw`` compresses
-16-bit linear to the container. IEEE-float (tag 3), A-law (6),
-ADPCM (2/17) and 24/32-bit depths raise ``NotImplementedError``
-naming the reason.
+16-bit linear to the container. A-law (tag 6) decodes the same way
+and IMA ADPCM (tag 0x11) through ``decode_wav_ima``; IEEE-float
+(tag 3), MS ADPCM (2) and 24/32-bit depths raise
+``NotImplementedError`` naming the reason.
 
 Decoded samples are returned exactly as stored: 16-bit as signed
 ints in [-32768, 32767], 8-bit as unsigned ints in [0, 255] (the WAV
 convention), interleaved across channels — making every downstream
 statistic integer-exact and hash-gateable.
+
+Framing is written once: RIFF chunks come from ``operators/riff.py``;
+every encoder builds its file with ``_wave(fmt, data)`` and every
+decoder reads it with ``_read_wave(data, check_fmt)``, which walks the
+chunks, length-checks the fmt body and hands its fields to the
+decoder's own validator. ``_check_linear`` is the one sample-range
+check and ``_encode_g711`` the one mu-law/A-law encoder body.
 
 Reference analog: the reference downloads media bytes it never
 decodes (src/render_pdf.py:90-98); decoding is beyond-reference
@@ -34,6 +42,8 @@ decodes (src/render_pdf.py:90-98); decoding is beyond-reference
 from __future__ import annotations
 
 import struct
+
+from shippai_knowledge_etl_spark.operators import riff
 
 # WAVE_FORMAT_EXTENSIBLE SubFormat GUID for PCM: the 16-bit format tag
 # followed by the fixed media-subtype suffix.
@@ -76,6 +86,47 @@ def mulaw_expand(b: int) -> int:
     return -mag if b & 0x80 else mag
 
 
+def _wave(fmt: bytes, data: bytes) -> bytes:
+    return riff.form(b"WAVE", riff.chunk(b"fmt ", fmt), riff.chunk(b"data", data))
+
+
+def _pcm_fmt(tag: int, channels: int, sample_rate: int, bits: int) -> bytes:
+    block_align = channels * bits // 8
+    return struct.pack(
+        "<HHIIHH", tag, channels, sample_rate, sample_rate * block_align,
+        block_align, bits,
+    )
+
+
+def _check_linear(
+    samples: list[int], channels: int, lo: int, hi: int, kind: str
+) -> None:
+    if channels < 1 or len(samples) % channels:
+        raise ValueError("sample count must be a positive multiple of channels")
+    for s in samples:
+        if not lo <= s <= hi:
+            raise ValueError(f"sample {s} outside {kind} range")
+
+
+def _read_wave(data: bytes, check_fmt) -> tuple:
+    """Walk a RIFF/WAVE stream → ``(check_fmt(fields, fmt body), data
+    chunk body)``. ``fields`` is the common ``<HHIIHH`` fmt prefix (tag,
+    channels, rate, byte rate, block align, bits); unknown chunks are
+    skipped, and a later fmt or data chunk replaces an earlier one."""
+    fmt = pcm = None
+    for cid, pos, size in riff.chunks(data, b"WAVE"):
+        body = data[pos : pos + size]
+        if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("fmt chunk too short")
+            fmt = check_fmt(struct.unpack_from("<HHIIHH", body), body)
+        elif cid == b"data":
+            pcm = body
+    if fmt is None or pcm is None:
+        raise ValueError("missing fmt or data chunk")
+    return fmt, pcm
+
+
 def encode_wav(
     samples: list[int], sample_rate: int, channels: int = 1, bits: int = 16
 ) -> bytes:
@@ -93,28 +144,17 @@ def encode_wav(
         lo, hi, fmt_char = 0, 255, "B"
     else:
         raise NotImplementedError(f"{bits}-bit PCM encode not supported")
-    if channels < 1 or len(samples) % channels:
-        raise ValueError("sample count must be a positive multiple of channels")
-    for s in samples:
-        if not lo <= s <= hi:
-            raise ValueError(f"sample {s} outside {bits}-bit PCM range")
-    block_align = channels * bits // 8
-    byte_rate = sample_rate * block_align
+    _check_linear(samples, channels, lo, hi, f"{bits}-bit PCM")
     data = struct.pack(f"<{len(samples)}{fmt_char}", *samples)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, byte_rate, block_align, bits
-    )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-        + (b"\x00" if len(data) % 2 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wave(_pcm_fmt(1, channels, sample_rate, bits), data)
+
+
+def _encode_g711(
+    samples: list[int], sample_rate: int, channels: int, tag: int, compress
+) -> bytes:
+    _check_linear(samples, channels, -32768, 32767, "16-bit linear")
+    data = bytes(compress(s) for s in samples)
+    return _wave(_pcm_fmt(tag, channels, sample_rate, 8), data)
 
 
 def encode_wav_mulaw(
@@ -123,28 +163,32 @@ def encode_wav_mulaw(
     """Compress interleaved 16-bit linear samples to a mu-law WAV
     (format tag 7, 8 bits stored). Same container layout as PCM with
     the G.711 byte stream in the data chunk."""
-    if channels < 1 or len(samples) % channels:
-        raise ValueError("sample count must be a positive multiple of channels")
-    for s in samples:
-        if not -32768 <= s <= 32767:
-            raise ValueError(f"sample {s} outside 16-bit linear range")
-    data = bytes(mulaw_compress(s) for s in samples)
-    block_align = channels  # 1 byte per sample per channel
-    fmt = struct.pack(
-        "<HHIIHH", 7, channels, sample_rate, sample_rate * block_align,
-        block_align, 8,
-    )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-        + (b"\x00" if len(data) % 2 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _encode_g711(samples, sample_rate, channels, 7, mulaw_compress)
+
+
+def _check_pcm_fmt(fields: tuple, body: bytes) -> tuple:
+    tag, channels, rate, _byte_rate, _align, bits = fields
+    if tag == 0xFFFE:
+        # Extensible: the real format lives in the SubFormat GUID
+        # at offset 24 of the fmt body (after cbSize + union).
+        if body[24:40] != _PCM_SUBFORMAT:
+            raise NotImplementedError(
+                "WAVE_FORMAT_EXTENSIBLE with non-PCM SubFormat"
+            )
+        tag = 1
+    if tag in (6, 7):
+        if bits != 8:
+            raise ValueError(f"G.711 (tag {tag}) with {bits}-bit storage")
+    elif tag != 1:
+        raise NotImplementedError(
+            f"WAV format tag {tag} (integer PCM, G.711 mu-law/"
+            "A-law are supported here; IMA ADPCM via "
+            "decode_wav_ima; float needs audio libs absent "
+            "in this container)"
+        )
+    elif bits not in (8, 16):
+        raise NotImplementedError(f"{bits}-bit PCM decode not supported")
+    return rate, channels, bits, tag
 
 
 def decode_wav(data: bytes) -> tuple[int, int, int, list[int]]:
@@ -158,50 +202,7 @@ def decode_wav(data: bytes) -> tuple[int, int, int, list[int]]:
     (``mulaw_expand`` per stored byte) while ``bits`` reports the
     8-bit storage width.
     """
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE stream")
-    pos = 12
-    fmt_fields = None
-    pcm_bytes = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            if size < 16:
-                raise ValueError("fmt chunk too short")
-            tag, channels, rate, _byte_rate, _align, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if tag == 0xFFFE:
-                # Extensible: the real format lives in the SubFormat GUID
-                # at offset 24 of the fmt body (after cbSize + union).
-                if size < 40 or body[24:40] != _PCM_SUBFORMAT:
-                    raise NotImplementedError(
-                        "WAVE_FORMAT_EXTENSIBLE with non-PCM SubFormat"
-                    )
-                tag = 1
-            if tag in (6, 7):
-                if bits != 8:
-                    raise ValueError(
-                        f"G.711 (tag {tag}) with {bits}-bit storage"
-                    )
-            elif tag != 1:
-                raise NotImplementedError(
-                    f"WAV format tag {tag} (integer PCM, G.711 mu-law/"
-                    "A-law are supported here; IMA ADPCM via "
-                    "decode_wav_ima; float needs audio libs absent "
-                    "in this container)"
-                )
-            elif bits not in (8, 16):
-                raise NotImplementedError(f"{bits}-bit PCM decode not supported")
-            fmt_fields = (rate, channels, bits, tag)
-        elif cid == b"data":
-            pcm_bytes = body
-        pos += 8 + size + (size % 2)  # chunks are word-aligned
-    if fmt_fields is None or pcm_bytes is None:
-        raise ValueError("missing fmt or data chunk")
-    rate, channels, bits, tag = fmt_fields
+    (rate, channels, bits, tag), pcm_bytes = _read_wave(data, _check_pcm_fmt)
     if tag == 7:
         # mu-law: stored width is 8 but the DECODED samples are the
         # expanded linear values — that is what decoding means here;
@@ -310,27 +311,25 @@ def encode_wav_ima(
             data.append(lo | (hi << 4))
     block_align = 4 + (samples_per_block - 1 + 1) // 2
     fmt = struct.pack(
-        "<HHIIHHHH",
-        0x11,
-        1,
-        sample_rate,
-        sample_rate * block_align // samples_per_block,
-        block_align,
-        4,
-        2,  # cbSize
-        samples_per_block,
+        "<HHIIHHHH", 0x11, 1, sample_rate,
+        sample_rate * block_align // samples_per_block, block_align, 4,
+        2, samples_per_block,  # cbSize, then wSamplesPerBlock
     )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + bytes(data)
-        + (b"\x00" if len(data) % 2 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wave(fmt, bytes(data))
+
+
+def _check_ima_fmt(fields: tuple, body: bytes) -> tuple:
+    tag, channels, rate, _br, align, bits = fields
+    if tag != 0x11:
+        raise ValueError(f"not IMA ADPCM (format tag {tag})")
+    if channels != 1:
+        raise NotImplementedError("multi-channel IMA ADPCM")
+    if bits != 4:
+        raise NotImplementedError(f"{bits}-bit IMA ADPCM")
+    if len(body) < 20:
+        raise ValueError("IMA fmt chunk missing wSamplesPerBlock")
+    (spb,) = struct.unpack_from("<H", body, 18)
+    return rate, align, spb
 
 
 def decode_wav_ima(data: bytes) -> tuple[int, int, list[int]]:
@@ -340,35 +339,7 @@ def decode_wav_ima(data: bytes) -> tuple[int, int, list[int]]:
     step-table entry, index clamp, or nibble order shifts every
     subsequent sample, which is what lets a recursive-CTE oracle
     hash-gate the whole decode."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE stream")
-    pos = 12
-    fmt_fields = None
-    adpcm = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            tag, channels, rate, _br, align, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if tag != 0x11:
-                raise ValueError(f"not IMA ADPCM (format tag {tag})")
-            if channels != 1:
-                raise NotImplementedError("multi-channel IMA ADPCM")
-            if bits != 4:
-                raise NotImplementedError(f"{bits}-bit IMA ADPCM")
-            if size < 20:
-                raise ValueError("IMA fmt chunk missing wSamplesPerBlock")
-            (spb,) = struct.unpack_from("<H", body, 18)
-            fmt_fields = (rate, align, spb)
-        elif cid == b"data":
-            adpcm = body
-        pos += 8 + size + (size % 2)
-    if fmt_fields is None or adpcm is None:
-        raise ValueError("missing fmt or data chunk")
-    rate, align, spb = fmt_fields
+    (rate, align, spb), adpcm = _read_wave(data, _check_ima_fmt)
     if align < 4 or len(adpcm) % align:
         raise ValueError("data chunk does not tile the block align")
     out: list[int] = []
@@ -443,25 +414,4 @@ def encode_wav_alaw(
 ) -> bytes:
     """Compress interleaved 16-bit linear samples to an A-law WAV
     (format tag 6, 8 bits stored) — same container layout as mu-law."""
-    if channels < 1 or len(samples) % channels:
-        raise ValueError("sample count must be a positive multiple of channels")
-    for s in samples:
-        if not -32768 <= s <= 32767:
-            raise ValueError(f"sample {s} outside 16-bit linear range")
-    data = bytes(alaw_compress(s) for s in samples)
-    block_align = channels
-    fmt = struct.pack(
-        "<HHIIHH", 6, channels, sample_rate, sample_rate * block_align,
-        block_align, 8,
-    )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-        + (b"\x00" if len(data) % 2 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _encode_g711(samples, sample_rate, channels, 6, alaw_compress)
