@@ -92,10 +92,10 @@ def _avi(
 def _read_avi(data: bytes, handler: bytes | None, check_strf, frame) -> tuple:
     """Walk hdrl and movi → ``(width, height, fps, frames)``. ``handler``
     (if set) is the required strh fccHandler; ``check_strf(hdr_size,
-    height, bpp, compression)`` validates the stream format; ``frame(cid,
-    payload, declared size, width, height)`` turns each movi chunk into
-    a frame or None (skipped) as the chunks are met, so the first error
-    in stream order is the one raised."""
+    width, height, bpp, compression)`` validates the stream format;
+    ``frame(cid, payload, declared size, width, height)`` turns each
+    movi chunk into a frame or None (skipped) as the chunks are met, so
+    the first error in stream order is the one raised."""
     width = height = fps = None
     n_frames_hdr = None
     frames: list[bytes] = []
@@ -127,7 +127,7 @@ def _read_avi(data: bytes, handler: bytes | None, check_strf, frame) -> tuple:
                             hdr_size, width, height, _planes, bpp, comp = (
                                 riff.unpack("<IiiHHI", data, b3)
                             )
-                            check_strf(hdr_size, height, bpp, comp)
+                            check_strf(hdr_size, width, height, bpp, comp)
         elif ltype == b"movi":
             for c2, b2, s2 in riff.walk(data, body + 4, body + size):
                 f = frame(c2, data[b2 : b2 + s2], s2, width, height)
@@ -154,11 +154,17 @@ def encode_avi_rgb24(
     return _avi(width, height, fps, b"DIB ", 0, len(dibs[0]), b"00db", dibs)
 
 
-def _strf_dib(hdr_size: int, height: int, bpp: int, comp: int) -> None:
+def _strf_dib(
+    hdr_size: int, width: int, height: int, bpp: int, comp: int
+) -> None:
     if hdr_size != 40 or bpp != 24 or comp != 0:
         raise NotImplementedError("compressed or non-24bpp frames")
     if height < 0:
         raise NotImplementedError("top-down DIB")
+    # width 0 makes every row empty, so a frame of any height passes
+    # the chunk-size check and the decoder walks all of its rows
+    if width <= 0:
+        raise ValueError("bad strf width")
 
 
 def _dib_frame(cid, payload, size, width, height):
@@ -204,7 +210,9 @@ def encode_avi_mjpeg(
     )
 
 
-def _strf_mjpg(hdr_size: int, _height: int, _bpp: int, comp: int) -> None:
+def _strf_mjpg(
+    hdr_size: int, _width: int, _height: int, _bpp: int, comp: int
+) -> None:
     if hdr_size != 40 or comp != _MJPG_FOURCC:
         raise NotImplementedError("strf compression is not MJPG")
 

@@ -139,6 +139,12 @@ def decode_bmp(data: bytes) -> tuple[int, int, int, bytes]:
     if bpp == 8 and compression == 1:
         n_pal = clr_used or 256
         pal_off = _FILE_HDR.size + hdr_size
+        # both bounds before the palette loop: clr_used is a u32 the
+        # loop would otherwise walk up to 4G times
+        if n_pal > 256:
+            raise ValueError(f"RLE8 palette of {n_pal} colors")
+        if pal_off + 4 * n_pal > len(data):
+            raise ValueError("RLE8 palette outside the file")
         palette = [
             tuple(data[pal_off + 4 * j : pal_off + 4 * j + 3][::-1])
             for j in range(n_pal)

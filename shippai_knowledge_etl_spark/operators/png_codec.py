@@ -230,6 +230,8 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         # one fancy-index take replaces the per-index Python loop
         lut = np.frombuffer(palette, dtype=np.uint8)
         lut = lut[: (len(lut) // 3) * 3].reshape(-1, 3)
+        if out.size and int(out.max()) >= len(lut):
+            raise ValueError("PNG palette index outside PLTE")
         rgb = lut[out.reshape(-1)]
         return width, height, 3, rgb.tobytes()
     return width, height, channels, out.tobytes()

@@ -11,11 +11,15 @@ Routing (src/run.py:66-77): ``/lis/`` list pages are expanded by
 fetching and parsing their ``ul.list_all`` anchor list (S2,
 src/extract.py:396-407) with ``--limit`` case links kept per list;
 ``/cf/`` URLs are direct case pages; anything else warns and is
-skipped. An empty worklist exits 1 (src/run.py:79-81).
+skipped. An empty worklist exits 1 (src/run.py:79-81). argv and its
+list pages are driver-sized, so ``expand_worklist`` routes, fetches and
+parses them on the driver and runs no Spark job: the first job of a
+call is the records checkpoint below.
 
 Where the reference loops sequentially with 30 s timeouts per fetch,
-the worklist here is a DataFrame that ``expand_worklist`` spreads over
-``defaultParallelism`` partitions, so fetches fan out partition-parallel
+the case worklist here is one ``createDataFrame`` over the driver's
+rows in worklist order, which PySpark slices into ``defaultParallelism``
+near-equal partitions, so case fetches fan out partition-parallel
 on every core (errors are data, never task failures), the parse edges are
 Arrow-batched HTML UDFs — ONE parse per page via a Generate barrier —
 and everything downstream is column expressions: the scenario sub-page
@@ -47,6 +51,7 @@ import argparse
 import os
 import shutil
 import sys
+import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,10 +59,10 @@ from pyspark.sql import functions as F
 from shippai_knowledge_etl_spark.functions import listparse, nested, scalar
 from shippai_knowledge_etl_spark.operators import quality
 from shippai_knowledge_etl_spark.sources import sinks
-from shippai_knowledge_etl_spark.sources.fetch import fetch_html
+from shippai_knowledge_etl_spark.sources.fetch import _fetch_one, fetch_html
 from shippai_knowledge_etl_spark.sources.html_parse import (
     case_page_facets,
-    list_page_links,
+    parse_list_page,
     scenario_page_facts,
 )
 
@@ -108,81 +113,60 @@ def _warn(lines: list[str], more: str) -> None:
 
 def expand_worklist(
     spark: SparkSession, urls: list[str], limit: int | None
-) -> DataFrame:
+) -> DataFrame | None:
     """argv URLs → the case worklist: one row per case URL
     (``case_url``) with ``seq``, a bigint sort key holding the URL's
     argv position in its high 32 bits and, for a link expanded from a
     list page, the link's position on that page in its low 32. Ordering
     by ``seq`` is worklist order, so the manifest lists cases the way
     the reference's sequential loop appends them (src/run.py:66-77).
+    ``None`` when no case URL survives.
 
-    argv is a handful of strings, so routing and the skip warnings run
-    on the driver; only list pages touch Spark. They are fetched and
-    parsed once into an eager checkpoint, whose failures are collected
-    for the warnings before the links are exploded.
+    argv and its list pages are driver-sized (a handful of URLs, one
+    page of anchors each), so routing, list-page fetch (the one fetch
+    definition, ``fetch._fetch_one``) and link extraction
+    (``parse_list_page``, the body of the ``list_page_links`` UDF) run
+    on the driver, and no Spark job runs here. ``case_url`` stays a
+    lazy ``resolve_url`` column over ``(base, href)``; a direct URL has
+    a null href and passes through as typed.
 
     The worklist is where ``process_cases`` gets its fan-out: the rows
-    come back spread over ``defaultParallelism`` partitions whose sizes
-    differ by at most one, so case fetch, parse and record assembly run
-    on every core. Direct-only argv runs no Spark job: its rows are
-    parallelized from the driver, already in that many equal slices.
+    are parallelized from the driver in ``seq`` order, and PySpark cuts
+    a local list into ``defaultParallelism`` contiguous slices whose
+    sizes differ by at most one, so case fetch, parse and record
+    assembly run on every core.
     """
-    cases: list[tuple[str, int, int]] = []
-    lists: list[tuple[int, str]] = []
+    rows: list[tuple[str, str | None, int, int]] = []
     skipped: list[str] = []
+    failed: list[str] = []
+    opener = urllib.request.build_opener()
     for pos, url in enumerate(urls):
         if "/lis/" in url:
-            lists.append((pos, url))
+            body, _, error = _fetch_one(opener, url, binary=False)
+            # a failed list fetch must be LOUD, not an empty expansion
+            # (reference surfaces list-expansion failures, src/run.py:66-77)
+            if error is not None:
+                failed.append(
+                    f"list page fetch failed ({error}), 0 cases expanded: {url}"
+                )
+            hrefs = [h for _, h, _ in parse_list_page(body or "") if "/cf/" in h]
+            rows += [(url, h, pos, i) for i, h in enumerate(hrefs[:limit])]
         elif "/cf/" in url:
-            cases.append((url, pos, 0))
+            rows.append((url, None, pos, 0))
         else:
             skipped.append(f"unrecognized URL pattern, skipping: {url}")
     _warn(skipped, "unrecognized URLs")
-
-    direct = spark.createDataFrame(cases, "case_url string, pos long, link int")
-    seq = F.shiftleft("pos", 32).bitwiseOR(F.col("link")).alias("seq")
-    if not lists:
-        return direct.select("case_url", seq)
-
-    links = F.filter(
-        list_page_links(F.col("page.body")),
-        lambda r: r.getField("href").contains("/cf/"),
-    )
-    if limit is not None:
-        links = F.slice(links, 1, limit)
-    pages = (
-        spark.createDataFrame(lists, "pos long, url string")
-        .select("pos", "url", fetch_html(F.col("url")).alias("page"))
-        .select("pos", "url", F.col("page.error").alias("error"),
-                links.alias("links"))
-        .localCheckpoint(eager=True)
-    )
-    # a failed list fetch must be LOUD, not an empty expansion: the
-    # explode below would silently drop the whole list page (reference
-    # surfaces list-expansion failures, src/run.py:66-77)
-    failed = pages.filter(F.col("error").isNotNull()).collect()
-    _warn(
-        [f"list page fetch failed ({r.error}), 0 cases expanded: {r.url}"
-         for r in sorted(failed, key=lambda r: r.pos)],
-        "failed list fetches",
-    )
-    expanded = pages.select(
-        "pos", "url", F.posexplode("links").alias("link", "r")
+    _warn(failed, "failed list fetches")
+    if not rows:
+        return None
+    base, href = F.col("base"), F.col("href")
+    return spark.createDataFrame(
+        rows, "base string, href string, pos long, link int"
     ).select(
-        scalar.resolve_url(F.col("url"), F.col("r.href")).alias("case_url"),
-        "pos", "link",
-    )
-    # round-robin from ONE input partition deals the rows out evenly;
-    # seq is computed between the two so the optimizer cannot fold
-    # coalesce(1) into the repartition. The eager checkpoint pins the
-    # spread and keeps later actions from re-reading the list pages
-    # through lineage.
-    return (
-        direct.unionByName(expanded)
-        .coalesce(1)
-        .select("case_url", seq)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
+        F.when(href.isNull(), base)
+        .otherwise(scalar.resolve_url(base, href))
+        .alias("case_url"),
+        F.shiftleft("pos", 32).bitwiseOR(F.col("link")).alias("seq"),
     )
 
 
@@ -510,13 +494,21 @@ def _render_pdfs(successes: DataFrame, out_dir: str) -> None:
     sinks.render_pdf_sink(draw, out_dir)
 
 
+def _non_negative(text: str) -> int:
+    """``--limit`` type: an int >= 0 (0 expands no case from a list)."""
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(
         prog="shippai_knowledge_etl_spark.run",
         description="Extract failure-knowledge cases (Spark engine)",
     )
     p.add_argument("urls", nargs="+", help="case (/cf/) or list (/lis/) URLs")
-    p.add_argument("--limit", type=int, default=None,
+    p.add_argument("--limit", type=_non_negative, default=None,
                    help="max cases expanded per list page")
     p.add_argument("--output-dir", default="data")
     p.add_argument("--pdf", action="store_true",
@@ -527,7 +519,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("shippai-etl-run")
     worklist = expand_worklist(spark, args.urls, args.limit)
-    if worklist.isEmpty():  # src/run.py:79-81
+    if worklist is None:  # src/run.py:79-81
         print("error: empty worklist", file=sys.stderr)
         return 1
 

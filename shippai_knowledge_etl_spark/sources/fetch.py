@@ -12,6 +12,10 @@ in flight equal the running tasks and the fan-out is the partitioning
 of the input: the CLI's ``run.expand_worklist`` spreads the case
 worklist evenly over ``defaultParallelism`` partitions.
 
+``_fetch_one`` is the one fetch definition (timeout, decoding, error
+strings). Both UDFs call it per row, and ``run.expand_worklist`` calls
+it on the driver for the CLI's list pages.
+
 Correctness tests use a loopback HTTP server (tests/test_fetch.py);
 live-network use is smoke-only (SURVEY §7.4 item 6).
 """

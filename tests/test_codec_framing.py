@@ -3,6 +3,7 @@ codecs: encoder byte goldens, the decoders' error contract on truncated
 input, and the single home of each container layout."""
 
 import hashlib
+import struct
 
 import numpy as np
 import pytest
@@ -166,3 +167,46 @@ def test_container_layouts_have_one_home():
         and n.args[0].value == ">IIBBBBB"
     ]
     assert len(ihdr_unpacks) == 1, ihdr_unpacks
+
+
+def test_png_palette_index_outside_plte():
+    """A palette index past the end of PLTE is malformed input: the
+    documented ValueError, not a raw IndexError from the lookup."""
+    png = png_codec._png(2, 1, 8, 3, 0, bytes([0, 0, 5]))  # indices 0, 5
+    ihdr_end = len(png_codec.PNG_MAGIC) + 8 + 13 + 4
+    data = png[:ihdr_end] + png_codec._chunk(b"PLTE", bytes([255, 0, 0])) + png[ihdr_end:]
+    with pytest.raises(ValueError, match="palette index"):
+        png_codec.decode_png(data)
+
+
+@pytest.mark.parametrize("width", [0, -1])
+def test_avi_rejects_empty_row_width(width):
+    """A strf width that makes every DIB row empty would let one
+    zero-byte frame declare 2**31 - 1 rows for the decoder to walk."""
+    data = bytearray(avi_codec._avi(1, 1, 10, b"DIB ", 0, 0, b"00db", [b""]))
+    struct.pack_into("<ii", data, data.find(b"strf") + 12, width, 2**31 - 1)
+    with pytest.raises(ValueError, match="width"):
+        avi_codec.decode_avi(bytes(data))
+
+
+def _rle8_bmp(clr_used: int, n_pal: int) -> bytes:
+    """2x1 BI_RLE8 BMP (indices 0, 1) declaring ``clr_used`` colors and
+    carrying ``n_pal`` BGRX palette entries before the pixel data."""
+    body = bytes([1, 0, 1, 1, 0, 1])  # run of 0, run of 1, EOB
+    offset = 14 + 40 + 4 * n_pal
+    return (
+        struct.pack("<2sIHHI", b"BM", offset + len(body), 0, 0, offset)
+        + struct.pack("<IiiHHIIiiII", 40, 2, 1, 1, 8, 1, len(body), 0, 0, clr_used, 0)
+        + bytes([0, 0, 255, 0, 255, 0, 0, 0])[: 4 * n_pal]
+        + body
+    )
+
+
+def test_bmp_rle8_palette_bounds():
+    """clr_used past 256, or a palette running past the end of the file,
+    is rejected before the palette is read."""
+    assert bmp_codec.decode_bmp(_rle8_bmp(2, 2)) == (2, 1, 3, bytes([255, 0, 0, 0, 0, 255]))
+    with pytest.raises(ValueError, match="palette"):
+        bmp_codec.decode_bmp(_rle8_bmp(2_147_483_904, 2))
+    with pytest.raises(ValueError, match="palette"):
+        bmp_codec.decode_bmp(_rle8_bmp(0, 2))  # 0 = 256 colors, 2 present

@@ -333,13 +333,13 @@ def test_expand_worklist_spreads_rows_in_argv_order(spark, site):
 
 def test_expand_worklist_warnings(spark, site, capsys):
     """Unrecognized URLs and failed list fetches warn on stderr with the
-    reference-facing text; a 404 list page expands to zero cases."""
+    reference-facing text; a 404 list page expands to zero cases, and
+    an argv with no case URL left gives no worklist."""
     from shippai_knowledge_etl_spark.run import expand_worklist
 
     unknown = f"{site}/xx/unknown.html"
     missing = f"{site}/lis/missing.html"
-    worklist = expand_worklist(spark, [unknown, missing], None)
-    assert worklist.count() == 0
+    assert expand_worklist(spark, [unknown, missing], None) is None
     warned = [ln for ln in capsys.readouterr().err.splitlines()
               if ln.startswith("warning: ")]
     assert warned == [
@@ -356,9 +356,8 @@ def test_expand_worklist_warnings(spark, site, capsys):
 
 
 def test_expand_worklist_job_count(spark, site):
-    """Routing stays on the driver: direct URLs alone run no Spark job,
-    and one list page runs the list checkpoint, the failure collect and
-    the spread checkpoint (shuffle map stage + result): 4 jobs."""
+    """Routing, list-page fetch and link parsing stay on the driver:
+    neither direct URLs nor a list page run a Spark job."""
     from shippai_knowledge_etl_spark.run import expand_worklist
 
     direct = [f"{site}/cf/CA0000001.html", f"{site}/cf/CA0000002.html"]
@@ -370,7 +369,35 @@ def test_expand_worklist_job_count(spark, site):
         spark, "expand-list",
         lambda: expand_worklist(spark, [f"{site}/lis/lis1.html"], None),
     )
-    assert n_list <= 4, n_list
+    assert n_list == 0, n_list
+
+
+def test_main_unrecognized_argv_runs_no_job(spark, tmp_path):
+    """An argv whose URLs are all skipped exits 1 before any Spark job."""
+    from shippai_knowledge_etl_spark.run import main
+
+    argv = ["http://x/unknown/route.html", "http://x/other.html",
+            "--output-dir", str(tmp_path)]
+    rc = []
+    assert _job_count(spark, "main-empty", lambda: rc.append(main(argv))) == 0
+    assert rc == [1]
+
+
+@pytest.mark.parametrize("limit,cases", [("-1", None), ("0", 0)])
+def test_limit_must_not_be_negative(spark, site, tmp_path, capsys, limit, cases):
+    """``--limit -1`` is a usage error (exit 2); ``--limit 0`` expands no
+    case from a list page, so a list-only argv has an empty worklist."""
+    from shippai_knowledge_etl_spark.run import main
+
+    argv = [f"{site}/lis/lis1.html", "--limit", limit, "--output-dir", str(tmp_path)]
+    if cases is None:
+        with pytest.raises(SystemExit) as e:
+            main(argv)
+        assert e.value.code == 2
+        assert "--limit" in capsys.readouterr().err
+    else:
+        assert main(argv) == 1
+        assert "error: empty worklist" in capsys.readouterr().err
 
 
 @pytest.fixture(scope="module")
@@ -416,9 +443,11 @@ def test_sinks_plan_over_checkpointed_records(pdf_run):
 
 @pytest.mark.slow
 def test_each_page_fetched_once(pdf_run):
-    """One call requests every page and image once; the scenario page
-    both cases link is requested once per linking case."""
+    """One call requests every page and image once (the list page too,
+    fetched on the driver); the scenario page both cases link is
+    requested once per linking case."""
     _, hits = pdf_run
+    assert hits["/fkd/lis/lis1.html"] == 1
     assert hits == {
         "/fkd/lis/lis1.html": 1,
         "/fkd/cf/CA0000001.html": 1,
