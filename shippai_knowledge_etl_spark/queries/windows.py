@@ -9,7 +9,7 @@ tests/test_streaming.py with availableNow triggers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.catalog import register
@@ -17,6 +17,13 @@ from shippai_knowledge_etl_spark.operators.fixpoint import iterate
 from shippai_knowledge_etl_spark.schemas import CASE_SCHEMA
 from shippai_knowledge_etl_spark.streaming import windows as W
 from shippai_knowledge_etl_spark.tables import load, scale_out, table_rowcount
+
+
+def _day() -> Column:
+    """The UTC day bucket of ``ts`` (epoch days), aliased ``day`` — the
+    oracles' ``CAST(floor(epoch(ts)) AS BIGINT) // 86400``. A function,
+    not a module Column: building a Column needs a live session."""
+    return F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day")
 
 
 @register(
@@ -1258,6 +1265,44 @@ def behavior_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, day, n) event-count rollup under the grid."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy("event_type", _day()).agg(F.count(F.lit(1)).alias("n"))
+
+
+def _daily_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dense (event_type, day, n) daily-volume grid: every type crossed
+    with every day that has any event, missing cells counted as 0, so
+    ROWS frames equal true time windows. The one grid fill of the
+    time-series family — w19, w20, w21, w22, w23, w28, w35,
+    stream_holt_replay, w37 and stream_hw_replay all read it (the
+    oracles' ``_DAILY_GRID_SQL`` / ``grid`` CTEs)."""
+    daily = _daily_counts(spark, sf_dir)
+    days = daily.select("day").distinct()
+    types = daily.select("event_type").distinct()
+    grid = types.crossJoin(days)
+    return grid.join(daily, ["event_type", "day"], "left").select(
+        "event_type", "day", F.coalesce("n", F.lit(0)).alias("n")
+    )
+
+
+_DAILY_GRID_SQL = """
+    daily AS (
+      SELECT event_type,
+             CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+             count(*) AS n
+      FROM events GROUP BY event_type, day),
+    days AS (SELECT DISTINCT day FROM daily),
+    types AS (SELECT DISTINCT event_type FROM daily),
+    grid AS (SELECT t.event_type, d.day FROM types t CROSS JOIN days d),
+    filled AS (
+      SELECT g.event_type, g.day, coalesce(x.n, 0) AS n
+      FROM grid g LEFT JOIN daily x
+        ON x.event_type = g.event_type AND x.day = g.day)
+"""
+
+
 @register(
     "w19_burst_detection",
     survey_ref="§2.9-adjacent (beyond-reference built-in): per-key "
@@ -1313,17 +1358,7 @@ def w19_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup."""
     from pyspark.sql import Window
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = types.crossJoin(days)
-    filled = grid.join(daily, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("n", F.lit(0)).alias("n")
-    )
+    filled = _daily_grid(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -1401,20 +1436,7 @@ def w20_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers with one rounded division per type."""
     from pyspark.sql import Window
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    filled = (
-        types.crossJoin(days)
-        .join(daily, ["event_type", "day"], "left")
-        .select(
-            "event_type", "day", F.coalesce("n", F.lit(0)).alias("n")
-        )
-    )
+    filled = _daily_grid(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     preds = filled.withColumn("pred", F.lag("n", 7).over(w)).filter(
         F.col("pred").isNotNull()
@@ -1429,40 +1451,6 @@ def w20_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mae"),
     )
 
-
-def _daily_grid(spark: SparkSession, sf_dir: str):
-    """Dense (event_type, day) daily-volume grid — the shared input of
-    the w19/w20/w21/w22 time-series family (missing days count as 0 so
-    ROWS frames equal true time windows)."""
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = types.crossJoin(days)
-    return grid.join(daily, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("n", F.lit(0)).alias("n")
-    )
-
-
-_DAILY_GRID_SQL = """
-    daily AS (
-      SELECT event_type,
-             CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-             count(*) AS n
-      FROM events GROUP BY event_type, day),
-    days AS (SELECT DISTINCT day FROM daily),
-    types AS (SELECT DISTINCT event_type FROM daily),
-    grid AS (SELECT t.event_type, d.day FROM types t CROSS JOIN days d),
-    filled AS (
-      SELECT g.event_type, g.day, coalesce(x.n, 0) AS n
-      FROM grid g LEFT JOIN daily x
-        ON x.event_type = g.event_type AND x.day = g.day)
-"""
 
 # Dyadic EWMA kernel: alpha = 1/2 truncated at 7 taps. Integer weights
 # 64..1 (newest..oldest) sum to 127, so the smoother is ONE integer
@@ -1743,6 +1731,29 @@ def behavior_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _boundary_sweep(spark: SparkSession, sf_dir: str):
+    """The sweep line w24 and w29 share: each event opens a 5-minute
+    interval [s, s + 300), whose ends become +1/−1 boundary points
+    ``(user_id, t, d)``. Returns the points, their user-keyed window
+    ordered (t, d DESC) — an interval opening at the second another
+    closes keeps the count contiguous — and the running active count
+    over it, aliased ``active``."""
+    from pyspark.sql import Window
+
+    ev = load(spark, sf_dir, "events").select(
+        "user_id", F.unix_timestamp("ts").alias("s")
+    )
+    iv = ev.select("user_id", "s", (F.col("s") + 300).alias("e"))
+    pts = iv.select(
+        "user_id", F.col("s").alias("t"), F.lit(1).alias("d")
+    ).unionAll(
+        iv.select("user_id", F.col("e").alias("t"), F.lit(-1).alias("d"))
+    )
+    w = Window.partitionBy("user_id").orderBy(F.col("t"), F.col("d").desc())
+    active = F.sum("d").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    return pts, w, active.alias("active")
+
+
 @register(
     "w24_interval_coverage",
     survey_ref="§2.9-adjacent (beyond-reference built-in): interval "
@@ -1797,26 +1808,9 @@ def w24_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead, and the per-user rollup all share ONE user-keyed shuffle
     (the w12/w13/w14 behavioral-family partitioning). Pure integer
     epoch arithmetic — exact at any parallelism."""
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("s")
-    )
-    iv = ev.select("user_id", "s", (F.col("s") + 300).alias("e"))
-    pts = iv.select(
-        "user_id", F.col("s").alias("t"), F.lit(1).alias("d")
-    ).unionAll(
-        iv.select("user_id", F.col("e").alias("t"), F.lit(-1).alias("d"))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("t"), F.col("d").desc())
+    pts, w, active = _boundary_sweep(spark, sf_dir)
     sw = pts.select(
-        "user_id",
-        "t",
-        "d",
-        F.sum("d").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "active"
-        ),
-        F.lead("t").over(w).alias("nxt"),
+        "user_id", "t", "d", active, F.lead("t").over(w).alias("nxt")
     )
     sg = sw.withColumn(
         "prev", F.coalesce(F.lag("active").over(w), F.lit(0))
@@ -1890,9 +1884,7 @@ def w25_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day")
-    ).agg(
+    daily = ev.groupBy(_day()).agg(
         F.sum((F.col("event_type") == "click").cast("int")).alias("x"),
         F.sum((F.col("event_type") == "purchase").cast("int")).alias("y"),
     )
@@ -1955,7 +1947,7 @@ def w26_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable-sketch path for heavier tails is ext_hist_quantiles."""
     ev = load(spark, sf_dir, "events")
     c = ev.select(
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
+        _day(),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     return c.groupBy("day").agg(
@@ -2055,10 +2047,7 @@ def behavior_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash-safety: distinct integer counts and one rounded division."""
     ev = load(spark, sf_dir, "events")
-    du = ev.select(
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-        "user_id",
-    ).distinct()
+    du = ev.select(_day(), "user_id").distinct()
     days = du.select("day").distinct()
     dau = du.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     d = days.alias("d")
@@ -2138,11 +2127,7 @@ def behavior_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact integer counts; three rounded divisions with identical
     operand order."""
     ev = load(spark, sf_dir, "events")
-    items = ev.select(
-        "user_id",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-        "event_type",
-    ).distinct()
+    items = ev.select("user_id", _day(), "event_type").distinct()
     nb = items.select("user_id", "day").distinct().agg(
         F.count(F.lit(1)).alias("n_baskets")
     )
@@ -2432,23 +2417,10 @@ def w29_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed shuffle."""
     from pyspark.sql import Window
 
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("s")
+    pts, _w, active = _boundary_sweep(spark, sf_dir)
+    sw = pts.select("user_id", "t", active).withColumn(
+        "m", F.max("active").over(Window.partitionBy("user_id"))
     )
-    iv = ev.select("user_id", "s", (F.col("s") + 300).alias("e"))
-    pts = iv.select(
-        "user_id", F.col("s").alias("t"), F.lit(1).alias("d")
-    ).unionAll(
-        iv.select("user_id", F.col("e").alias("t"), F.lit(-1).alias("d"))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("t"), F.col("d").desc())
-    sw = pts.select(
-        "user_id",
-        "t",
-        F.sum("d").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "active"
-        ),
-    ).withColumn("m", F.max("active").over(Window.partitionBy("user_id")))
     return sw.groupBy("user_id").agg(
         F.max("active").cast("long").alias("peak_concurrent"),
         F.min(F.when(F.col("active") == F.col("m"), F.col("t")))
@@ -2517,6 +2489,15 @@ def w30_usage_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _generations(good: DataFrame, batch) -> DataFrame:
+    """Three stand-in micro-batches (``event_id`` mod 3), each through
+    ``batch``, unioned in generation order — the partial states a
+    replay witness then merges the way its state store would."""
+    gen = F.col("event_id") % 3
+    g0, g1, g2 = (batch(good.filter(gen == i)) for i in range(3))
+    return g0.unionAll(g1).unionAll(g2)
+
+
 @register(
     "stream_window_replay",
     survey_ref=(
@@ -2569,11 +2550,7 @@ def stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     good, _bad = W.dead_letter_split(ev)
-    parts = [
-        W.tumbling_counts(good.filter(F.col("event_id") % 3 == i))
-        for i in range(3)
-    ]
-    u = parts[0].unionAll(parts[1]).unionAll(parts[2])
+    u = _generations(good, W.tumbling_counts)
     merged = u.groupBy("window_start", "event_type").agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("sum_value").alias("sv"),
@@ -2650,20 +2627,11 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     good, _bad = W.dead_letter_split(ev)
-    parts = [
-        W.session_counts(good.filter(F.col("event_id") % 3 == i))
-        for i in range(3)
-    ]
-    segs = (
-        parts[0]
-        .unionAll(parts[1])
-        .unionAll(parts[2])
-        .select(
-            "user_id",
-            F.col("session_start").alias("s"),
-            (F.col("session_end") - F.lit(1800)).alias("l"),  # last event
-            "n",
-        )
+    segs = _generations(good, W.session_counts).select(
+        "user_id",
+        F.col("session_start").alias("s"),
+        (F.col("session_end") - F.lit(1800)).alias("l"),  # last event
+        "n",
     )
     w = SqlWindow.partitionBy("user_id").orderBy("s", "l")
     prev_max_l = F.max("l").over(
@@ -2768,10 +2736,7 @@ def w31_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; segments re-aggregate the bounded ≤|days| grid; the
     stats join moves |event_type| rows. Letters per (type, week) —
     constant-size output at any event volume."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("unix_timestamp(ts) div 86400").alias("day"),
-    )
+    ev = load(spark, sf_dir, "events").select("event_type", _day())
     daily = ev.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -2867,26 +2832,17 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     good, _bad = W.dead_letter_split(ev)
-    parts = [
-        good.filter(F.col("event_id") % 3 == i)
-        .groupBy("user_id", "event_type")
-        .agg(
+    first = _generations(
+        good,
+        lambda g: g.groupBy("user_id", "event_type").agg(
             F.min(F.unix_timestamp("ts")).alias("fs"),
             F.count(F.lit(1)).alias("n"),
-        )
-        for i in range(3)
-    ]
-    merged = (
-        parts[0]
-        .unionAll(parts[1])
-        .unionAll(parts[2])
-        .groupBy("user_id", "event_type")
-        .agg(
-            F.min("fs").cast("long").alias("first_seen"),
-            F.sum("n").cast("long").alias("n_events"),
-        )
+        ),
     )
-    return merged
+    return first.groupBy("user_id", "event_type").agg(
+        F.min("fs").cast("long").alias("first_seen"),
+        F.sum("n").cast("long").alias("n_events"),
+    )
 
 
 @register(
@@ -3541,9 +3497,7 @@ def behavior_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled stats are a 1-row broadcast (allowlisted) onto the 2-row
     variant table; the min-date anchor is a 1-row broadcast too."""
     ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.expr("unix_timestamp(ts) div 86400").alias("day"),
+        "user_id", "event_type", _day()
     )
     mn = ev.agg(F.min("day").alias("d0"))
     u = (
@@ -4115,6 +4069,143 @@ def behavior_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Scaled-integer smoothing folds shared by w35/stream_holt_replay
+# (Holt) and w37/stream_hw_replay (Holt-Winters): α = β = γ = 1/2 in
+# micro-units, floor division by 2 done as (v + 2^41) // 2 − 2^40 so
+# every numerator is non-negative, where Python //, Spark div and
+# DuckDB // agree. Module-level so each batch query and its replay
+# witness run the SAME fold, and the split-at-every-point identities
+# are pytest-pinnable (tests/test_streaming.py, test_windows_ext.py).
+_S, _B = 1_000_000, 1 << 41
+_H = _B // 2
+_HW_SCHEMA = (
+    "event_type string, n_days long, level_scaled long, "
+    "trend_scaled long, season_next_scaled long"
+)
+
+
+def _holt_step(c_t: int, lvl: int, b: int) -> tuple:
+    """One Holt update, l' = ⌊(x + l + b)/2⌋ and b' = ⌊(l' − l + b)/2⌋,
+    with x = c_t in micro-units."""
+    ln = (c_t * _S + lvl + b + _B) // 2 - _H
+    return ln, (ln - lvl + b + _B) // 2 - _H
+
+
+def _holt_resume(lvl: int, b: int, c: list) -> tuple:
+    """Continue the Holt fold from (level, trend) over counts c."""
+    for c_t in c:
+        lvl, b = _holt_step(c_t, lvl, b)
+    return lvl, b
+
+
+def _holt_state_after(c: list) -> tuple:
+    """(level, trend) after folding counts c from t=0: level seeded
+    with c0, trend with c1 − c0 (0 while only one count is seen)."""
+    b = (c[1] - c[0]) * _S if len(c) >= 2 else 0
+    return _holt_resume(c[0] * _S, b, c[1:])
+
+
+def _holt_row(n: int, lvl: int, b: int) -> dict:
+    """A Holt output row: n days folded to (level, trend)."""
+    return {"n_days": n, "level_scaled": lvl, "trend_scaled": b}
+
+
+def _hw_state_after(c: list) -> tuple:
+    """(n, level, trend, seasonal[7]) after folding counts c from t=0.
+    Below 7 counts the init window is still filling — level/trend/s
+    are not yet defined (the caller carries raw counts instead)."""
+    n = len(c)
+    if n < 7:
+        return n, 0, 0, [0] * 7
+    lvl = (sum(c[:7]) * _S) // 7
+    b = 0
+    s = [c[j] * _S - lvl for j in range(7)]
+    for t in range(7, n):
+        lvl, b = _hw_step(c[t], t, lvl, b, s)
+    return n, lvl, b, s
+
+
+def _hw_step(c_t: int, t: int, lvl: int, b: int, s: list) -> tuple:
+    """One Holt-Winters update at absolute position t (mutates s)."""
+    x = c_t * _S
+    dow = t % 7
+    ln = (x - s[dow] + lvl + b + _B) // 2 - _H
+    bn = (ln - lvl + b + _B) // 2 - _H
+    s[dow] = (x - ln + s[dow] + _B) // 2 - _H
+    return ln, bn
+
+
+def _hw_resume(n1: int, lvl: int, b: int, s: list, c2: list) -> tuple:
+    """Continue the fold from carried state over generation-2 counts."""
+    s = list(s)
+    for i, c_t in enumerate(c2):
+        lvl, b = _hw_step(c_t, n1 + i, lvl, b, s)
+    return n1 + len(c2), lvl, b, s
+
+
+def _hw_row(n: int, lvl: int, b: int, s: list) -> dict | None:
+    """A Holt-Winters output row, or None below 7 days: the oracles'
+    recursion starts at t = 6, so a shorter series has no state."""
+    if n < 7:
+        return None
+    return {
+        "n_days": n,
+        "level_scaled": lvl,
+        "trend_scaled": b,
+        "season_next_scaled": s[n % 7],
+    }
+
+
+def _grouped_fold(grid: DataFrame, fold, schema: str) -> DataFrame:
+    """Per-type grouped map of a pure fold over the daily grid: each
+    type's rows reach ``fold`` as its day-ordered counts — plus, when
+    ``grid`` carries columns beyond (event_type, day, n), the first
+    row's values of them as a dict (None where a left join found no
+    state) — and ``fold`` returns the type's output columns, or None
+    for no row."""
+    extra = [c for c in grid.columns if c not in ("event_type", "day", "n")]
+
+    def run(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("day")
+        first = pdf.iloc[0]
+        c = [int(v) for v in pdf["n"]]
+        if extra:
+            st = None if pd.isna(first[extra[0]]) else {
+                k: int(first[k]) for k in extra
+            }
+            row = fold(c, st)
+        else:
+            row = fold(c)
+        if row is None:
+            return pd.DataFrame([])
+        return pd.DataFrame([{"event_type": first["event_type"], **row}])
+
+    return grid.groupBy("event_type").applyInPandas(run, schema)
+
+
+def _split_replay(
+    spark: SparkSession, sf_dir: str, gen1, state_schema: str, gen2, schema
+) -> DataFrame:
+    """Two micro-batch generations over the daily grid: the days below
+    the corpus midpoint ⌈(min + max) / 2⌉ fold per type in ``gen1``
+    into one state row (``state_schema``), which a left join hands to
+    ``gen2`` with the remaining days (None where a type has no
+    generation-1 rows) — what a stateful streaming operator's store
+    does between micro-batches. The midpoint is a 1-row broadcast, the
+    behavior_did threshold class."""
+    days = _daily_counts(spark, sf_dir).select("day").distinct()
+    mid = days.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
+    g = _daily_grid(spark, sf_dir).crossJoin(F.broadcast(mid))
+    cols = ("event_type", "day", "n")
+    state = _grouped_fold(
+        g.filter(F.col("day") < F.col("mid")).select(*cols), gen1, state_schema
+    )
+    late = g.filter(F.col("day") >= F.col("mid")).select(*cols)
+    return _grouped_fold(late.join(state, "event_type", "left"), gen2, schema)
+
+
 @register(
     "w35_holt_linear",
     survey_ref=(
@@ -4191,45 +4282,9 @@ def w35_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped-map holds two integers per type regardless of history
     length. At 100 TB the recurrence still touches only the
     |types|×|days| grid."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = (
-        types.crossJoin(days)
-        .join(daily, ["event_type", "day"], "left")
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("c"))
-    )
-
-    def holt(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c = [int(v) for v in pdf["c"]]
-        S, B = 1_000_000, 1 << 41
-        H = B // 2
-        lvl = c[0] * S
-        b = (c[1] - c[0]) * S if len(c) >= 2 else 0
-        for t in range(1, len(c)):
-            ln = (c[t] * S + lvl + b + B) // 2 - H
-            b = (ln - lvl + b + B) // 2 - H
-            lvl = ln
-        return pd.DataFrame(
-            [
-                {
-                    "event_type": pdf["event_type"].iloc[0],
-                    "n_days": len(c),
-                    "level_scaled": lvl,
-                    "trend_scaled": b,
-                }
-            ]
-        )
-
-    out = grid.groupBy("event_type").applyInPandas(
-        holt,
+    out = _grouped_fold(
+        _daily_grid(spark, sf_dir),
+        lambda c: _holt_row(len(c), *_holt_state_after(c)),
         "event_type string, n_days long, level_scaled long, "
         "trend_scaled long",
     )
@@ -4316,7 +4371,7 @@ def behavior_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     only when n=0 — here counts are corpus-guaranteed positive)."""
     ev = load(spark, sf_dir, "events").select(
         (F.col("user_id") % 2 == 1).alias("treat"),
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
+        _day(),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
     )
     bounds = ev.agg(
@@ -4427,10 +4482,9 @@ def w36_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     class), the (type, dow) grid is ≤ 7 rows per type, and everything
     after is per-type arithmetic — no joins at all."""
     ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = ev.groupBy("event_type", _day()).agg(
+        F.count(F.lit(1)).alias("x")
+    )
     g = daily.groupBy("event_type", (F.col("day") % 7).alias("dow")).agg(
         F.count(F.lit(1)).alias("n_g"),
         F.sum("x").alias("s_g"),
@@ -4687,105 +4741,34 @@ def stream_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state join (|types| rows); the 1-row midpoint broadcast is the
     behavior_did threshold class. State is two integers per type
     regardless of history length — the streaming-store contract."""
-    import pandas as _pd  # noqa: F401 — grouped-map dependency
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = (
-        types.crossJoin(days)
-        .join(daily, ["event_type", "day"], "left")
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("c"))
-    )
-    mid = days.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
-    g = grid.crossJoin(F.broadcast(mid))
-
-    S, B = 1_000_000, 1 << 41
-    H = B // 2
-
-    def step(c_t, lvl, b):
-        ln = (c_t * S + lvl + b + B) // 2 - H
-        return ln, (ln - lvl + b + B) // 2 - H
-
-    def gen1(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c = [int(v) for v in pdf["c"]]
-        # the state a stream store would hold after these counts:
+    def gen1(c):
+        # the state a stream store would hold after these counts;
         # n1 == 1 is the BRIDGE case — the trend seed needs the NEXT
         # count (which lives in generation 2), so carry c0 and defer
-        if len(c) >= 2:
-            lvl, b = c[0] * S, (c[1] - c[0]) * S
-            for t in range(1, len(c)):
-                lvl, b = step(c[t], lvl, b)
-        else:
-            lvl, b = c[0] * S, 0  # b unseeded; c0 carried for gen 2
-        return pd.DataFrame(
-            [
-                {
-                    "event_type": pdf["event_type"].iloc[0],
-                    "l1": lvl,
-                    "b1": b,
-                    "n1": len(c),
-                    "c0": c[0],
-                }
-            ]
-        )
+        lvl, b = _holt_state_after(c)
+        return {"l1": lvl, "b1": b, "n1": len(c), "c0": c[0]}
 
-    def gen2(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c = [int(v) for v in pdf["c"]]
-        n1 = 0 if pd.isna(pdf["n1"].iloc[0]) else int(pdf["n1"].iloc[0])
-        if n1 == 0:
+    def gen2(c, st):
+        if st is None:
             # empty generation 1: fresh batch init on this slice
-            lvl, b = c[0] * S, (c[1] - c[0]) * S if len(c) >= 2 else 0
-            start = 1
-        elif n1 == 1:
+            n1, (lvl, b) = 0, _holt_state_after(c)
+        elif st["n1"] == 1:
             # bridge: one-shot's b-init straddles the generation split
-            c0 = int(pdf["c0"].iloc[0])
-            lvl, b = c0 * S, (c[0] - c0) * S
-            start = 0
+            c0 = st["c0"]
+            n1, (lvl, b) = 1, _holt_resume(c0 * _S, (c[0] - c0) * _S, c)
         else:
-            lvl, b = int(pdf["l1"].iloc[0]), int(pdf["b1"].iloc[0])
-            start = 0
-        for t in range(start, len(c)):
-            lvl, b = step(c[t], lvl, b)
-        return pd.DataFrame(
-            [
-                {
-                    "event_type": pdf["event_type"].iloc[0],
-                    "n_days": n1 + len(c),
-                    "level_scaled": lvl,
-                    "trend_scaled": b,
-                }
-            ]
-        )
+            n1, (lvl, b) = st["n1"], _holt_resume(st["l1"], st["b1"], c)
+        return _holt_row(n1 + len(c), lvl, b)
 
-    state = (
-        g.filter(F.col("day") < F.col("mid"))
-        .select("event_type", "day", "c")
-        .groupBy("event_type")
-        .applyInPandas(
-            gen1, "event_type string, l1 long, b1 long, n1 long, c0 long"
-        )
-    )
-    out = (
-        g.filter(F.col("day") >= F.col("mid"))
-        .select("event_type", "day", "c")
-        .join(state, "event_type", "left")
-        .groupBy("event_type")
-        .applyInPandas(
-            gen2,
-            "event_type string, n_days long, level_scaled long, "
-            "trend_scaled long",
-        )
+    out = _split_replay(
+        spark,
+        sf_dir,
+        gen1,
+        "event_type string, l1 long, b1 long, n1 long, c0 long",
+        gen2,
+        "event_type string, n_days long, level_scaled long, "
+        "trend_scaled long",
     )
     return out.select(
         "event_type",
@@ -4799,11 +4782,6 @@ def stream_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Holt-Winters seasonal slot update: the recursive CTE carries the
 # 7-slot seasonal state as columns s0..s6; each step rewrites ONE slot
 # (the current t mod 7) and copies the rest.
-_HW_SPREV = (
-    "(CASE (t0 % 7) "
-    + " ".join(f"WHEN {j} THEN s{j}" for j in range(7))
-    + " END)"
-)
 _HW_SCOPY = ", ".join(
     f"CASE WHEN (t0 % 7) = {j} THEN snew ELSE s{j} END" for j in range(7)
 )
@@ -4909,59 +4887,18 @@ def w37_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped-map; the oracle carries it as SEVEN COLUMNS of a
     recursive CTE rewriting one slot per step — two execution models,
     one integer fixpoint, now with vector state (the w35 class
-    extended).
+    extended). A corpus spanning fewer than 7 days has no first week
+    to initialize from, so the query emits NO row — the oracle's
+    recursion starts at t = 6 and never reaches t = n_days − 1.
 
     Scale shape: one (type, day) rollup cuts the stream; the
     grouped-map holds nine integers per type regardless of history
     length. At 100 TB the recurrence still touches only the
     |types|×|days| grid."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = (
-        types.crossJoin(days)
-        .join(daily, ["event_type", "day"], "left")
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("c"))
-    )
-
-    def hw(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c = [int(v) for v in pdf["c"]]
-        S, B = 1_000_000, 1 << 41
-        H = B // 2
-        T = len(c)
-        lvl = (sum(c[:7]) * S) // 7
-        b = 0
-        s = [c[j] * S - lvl for j in range(7)]
-        for t in range(7, T):
-            x = c[t] * S
-            dow = t % 7
-            ln = (x - s[dow] + lvl + b + B) // 2 - H
-            bn = (ln - lvl + b + B) // 2 - H
-            s[dow] = (x - ln + s[dow] + B) // 2 - H
-            lvl, b = ln, bn
-        return pd.DataFrame(
-            [
-                {
-                    "event_type": pdf["event_type"].iloc[0],
-                    "n_days": T,
-                    "level_scaled": lvl,
-                    "trend_scaled": b,
-                    "season_next_scaled": s[T % 7],
-                }
-            ]
-        )
-
-    out = grid.groupBy("event_type").applyInPandas(
-        hw,
-        "event_type string, n_days long, level_scaled long, "
-        "trend_scaled long, season_next_scaled long",
+    out = _grouped_fold(
+        _daily_grid(spark, sf_dir),
+        lambda c: _hw_row(*_hw_state_after(c)),
+        _HW_SCHEMA,
     )
     return out.select(
         "event_type",
@@ -4979,46 +4916,6 @@ def w37_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("forecast_next"),
     )
-
-
-# Shared Holt-Winters fold (alpha=beta=gamma=1/2, period 7, micro-unit
-# integers, w35 bias trick) — module-level so the split-at-every-point
-# identity is pytest-pinnable (tests/test_windows_ext.py) and both
-# grouped-maps of stream_hw_replay call the SAME arithmetic.
-_HW_S, _HW_B, _HW_H = 1_000_000, 1 << 41, 1 << 40
-
-
-def _hw_state_after(c: list) -> tuple:
-    """(n, level, trend, seasonal[7]) after folding counts c from t=0.
-    Below 7 counts the init window is still filling — level/trend/s
-    are not yet defined (the caller carries raw counts instead)."""
-    n = len(c)
-    if n < 7:
-        return n, 0, 0, [0] * 7
-    lvl = (sum(c[:7]) * _HW_S) // 7
-    b = 0
-    s = [c[j] * _HW_S - lvl for j in range(7)]
-    for t in range(7, n):
-        lvl, b = _hw_step(c[t], t, lvl, b, s)
-    return n, lvl, b, s
-
-
-def _hw_step(c_t: int, t: int, lvl: int, b: int, s: list) -> tuple:
-    """One Holt-Winters update at absolute position t (mutates s)."""
-    x = c_t * _HW_S
-    dow = t % 7
-    ln = (x - s[dow] + lvl + b + _HW_B) // 2 - _HW_H
-    bn = (ln - lvl + b + _HW_B) // 2 - _HW_H
-    s[dow] = (x - ln + s[dow] + _HW_B) // 2 - _HW_H
-    return ln, bn
-
-
-def _hw_resume(n1: int, lvl: int, b: int, s: list, c2: list) -> tuple:
-    """Continue the fold from carried state over generation-2 counts."""
-    s = list(s)
-    for i, c_t in enumerate(c2):
-        lvl, b = _hw_step(c_t, n1 + i, lvl, b, s)
-    return n1 + len(c2), lvl, b, s
 
 
 @register(
@@ -5115,91 +5012,40 @@ def stream_hw_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the split fold reproduces the one-shot fold to the
     last micro-unit, vector state included. The split-at-EVERY-point
     identity (including mid < 7 bridges this corpus never hits) is
-    pytest-pinned over the shared fold helpers.
+    pytest-pinned over the shared fold helpers. Below 7 days in all
+    the fold never initializes and, as in w37 and the oracle, no row
+    is emitted.
 
     Scale shape: two (type, day)-grid grouped-maps + one |types|-row
     state join; the 1-row midpoint broadcast is the behavior_did
     class. State is nine integers per type regardless of history."""
-    import pandas as _pd  # noqa: F401 — grouped-map dependency
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) AS LONG) div 86400").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    days = daily.select("day").distinct()
-    types = daily.select("event_type").distinct()
-    grid = (
-        types.crossJoin(days)
-        .join(daily, ["event_type", "day"], "left")
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("c"))
-    )
-    mid = days.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
-    g = grid.crossJoin(F.broadcast(mid))
+    def gen1(c):
+        n1, lvl, b, s = _hw_state_after(c)
+        craw = (c + [0] * 7)[:7] if n1 < 7 else [0] * 7
+        row = {"n1": n1, "l": lvl, "b": b}
+        row.update({f"s{j}": s[j] for j in range(7)})
+        row.update({f"craw{j}": craw[j] for j in range(7)})
+        return row
 
-    state_schema = (
+    def gen2(c2, st):
+        n1 = 0 if st is None else st["n1"]
+        if n1 < 7:
+            carried = [st[f"craw{j}"] for j in range(n1)]
+            return _hw_row(*_hw_state_after(carried + c2))
+        s = [st[f"s{j}"] for j in range(7)]
+        return _hw_row(*_hw_resume(n1, st["l"], st["b"], s, c2))
+
+    out = _split_replay(
+        spark,
+        sf_dir,
+        gen1,
         "event_type string, n1 long, l long, b long, "
         + ", ".join(f"s{j} long" for j in range(7))
         + ", "
-        + ", ".join(f"craw{j} long" for j in range(7))
-    )
-
-    def gen1(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c = [int(v) for v in pdf["c"]]
-        n1, lvl, b, s = _hw_state_after(c)
-        craw = (c + [0] * 7)[:7] if n1 < 7 else [0] * 7
-        row = {"event_type": pdf["event_type"].iloc[0], "n1": n1,
-               "l": lvl, "b": b}
-        row.update({f"s{j}": s[j] for j in range(7)})
-        row.update({f"craw{j}": craw[j] for j in range(7)})
-        return pd.DataFrame([row])
-
-    def gen2(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        c2 = [int(v) for v in pdf["c"]]
-        n1 = 0 if pd.isna(pdf["n1"].iloc[0]) else int(pdf["n1"].iloc[0])
-        if n1 < 7:
-            carried = [int(pdf[f"craw{j}"].iloc[0]) for j in range(n1)] \
-                if n1 else []
-            n, lvl, b, s = _hw_state_after(carried + c2)
-        else:
-            lvl = int(pdf["l"].iloc[0])
-            b = int(pdf["b"].iloc[0])
-            s = [int(pdf[f"s{j}"].iloc[0]) for j in range(7)]
-            n, lvl, b, s = _hw_resume(n1, lvl, b, s, c2)
-        return pd.DataFrame(
-            [
-                {
-                    "event_type": pdf["event_type"].iloc[0],
-                    "n_days": n,
-                    "level_scaled": lvl,
-                    "trend_scaled": b,
-                    "season_next_scaled": s[n % 7],
-                }
-            ]
-        )
-
-    state = (
-        g.filter(F.col("day") < F.col("mid"))
-        .select("event_type", "day", "c")
-        .groupBy("event_type")
-        .applyInPandas(gen1, state_schema)
-    )
-    out = (
-        g.filter(F.col("day") >= F.col("mid"))
-        .select("event_type", "day", "c")
-        .join(state, "event_type", "left")
-        .groupBy("event_type")
-        .applyInPandas(
-            gen2,
-            "event_type string, n_days long, level_scaled long, "
-            "trend_scaled long, season_next_scaled long",
-        )
+        + ", ".join(f"craw{j} long" for j in range(7)),
+        gen2,
+        _HW_SCHEMA,
     )
     return out.select(
         "event_type",
@@ -5740,12 +5586,7 @@ def w38_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     step. Reference analog: none; [EXT] time-series surface."""
     from pyspark.sql import Window as SqlWindow
 
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("CAST(floor(unix_timestamp(ts)) AS BIGINT) div 86400").alias(
-            "day"
-        ),
-    )
+    ev = load(spark, sf_dir, "events").select("event_type", _day())
     daily = ev.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).alias("cnt")
     )

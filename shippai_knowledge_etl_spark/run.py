@@ -14,7 +14,10 @@ src/extract.py:396-407) with ``--limit`` case links kept per list;
 skipped. An empty worklist exits 1 (src/run.py:79-81). argv and its
 list pages are driver-sized, so ``expand_worklist`` routes, fetches and
 parses them on the driver and runs no Spark job: the first job of a
-call is the records checkpoint below.
+call is the records checkpoint below. Routing comes before the
+session too: the Spark session is only started once there are case
+rows to parallelize, so an argv that routes to nothing exits without
+starting a JVM.
 
 Where the reference loops sequentially with 30 s timeouts per fetch,
 the case worklist here is one ``createDataFrame`` over the driver's
@@ -53,7 +56,7 @@ import shutil
 import sys
 import urllib.request
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.functions import listparse, nested, scalar
@@ -111,16 +114,16 @@ def _warn(lines: list[str], more: str) -> None:
               file=sys.stderr)
 
 
-def expand_worklist(
-    spark: SparkSession, urls: list[str], limit: int | None
-) -> DataFrame | None:
+def expand_worklist(urls: list[str], limit: int | None) -> DataFrame | None:
     """argv URLs → the case worklist: one row per case URL
     (``case_url``) with ``seq``, a bigint sort key holding the URL's
     argv position in its high 32 bits and, for a link expanded from a
     list page, the link's position on that page in its low 32. Ordering
     by ``seq`` is worklist order, so the manifest lists cases the way
     the reference's sequential loop appends them (src/run.py:66-77).
-    ``None`` when no case URL survives.
+    ``None`` when no case URL survives, and then no Spark session is
+    started: ``session.get_spark`` is called only for the one
+    ``createDataFrame`` at the end.
 
     argv and its list pages are driver-sized (a handful of URLs, one
     page of anchors each), so routing, list-page fetch (the one fetch
@@ -159,6 +162,9 @@ def expand_worklist(
     _warn(failed, "failed list fetches")
     if not rows:
         return None
+    from shippai_knowledge_etl_spark.session import get_spark
+
+    spark = get_spark("shippai-etl-run")  # Columns need a live session
     base, href = F.col("base"), F.col("href")
     return spark.createDataFrame(
         rows, "base string, href string, pos long, link int"
@@ -515,10 +521,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="also render one PDF report per success")
     args = p.parse_args(argv)
 
-    from shippai_knowledge_etl_spark.session import get_spark
-
-    spark = get_spark("shippai-etl-run")
-    worklist = expand_worklist(spark, args.urls, args.limit)
+    worklist = expand_worklist(args.urls, args.limit)
     if worklist is None:  # src/run.py:79-81
         print("error: empty worklist", file=sys.stderr)
         return 1

@@ -319,7 +319,7 @@ def test_expand_worklist_spreads_rows_in_argv_order(spark, site):
     n = par * 4 + 3
     argv = [f"{site}/cf/CA0000001.html", f"{site}/lis/big{n}.html",
             f"{site}/cf/CA0000002.html"]
-    worklist = expand_worklist(spark, argv, None)
+    worklist = expand_worklist(argv, None)
 
     sizes = worklist.rdd.glom().map(len).collect()
     rows = n + 2
@@ -339,7 +339,7 @@ def test_expand_worklist_warnings(spark, site, capsys):
 
     unknown = f"{site}/xx/unknown.html"
     missing = f"{site}/lis/missing.html"
-    assert expand_worklist(spark, [unknown, missing], None) is None
+    assert expand_worklist([unknown, missing], None) is None
     warned = [ln for ln in capsys.readouterr().err.splitlines()
               if ln.startswith("warning: ")]
     assert warned == [
@@ -348,7 +348,7 @@ def test_expand_worklist_warnings(spark, site, capsys):
     ]
 
     # at most 100 lines per kind, then one summary line
-    expand_worklist(spark, [f"http://x/{i}.html" for i in range(101)], None)
+    expand_worklist([f"http://x/{i}.html" for i in range(101)], None)
     warned = [ln for ln in capsys.readouterr().err.splitlines()
               if ln.startswith("warning: ")]
     assert len(warned) == 101
@@ -362,12 +362,12 @@ def test_expand_worklist_job_count(spark, site):
 
     direct = [f"{site}/cf/CA0000001.html", f"{site}/cf/CA0000002.html"]
     n_direct = _job_count(
-        spark, "expand-direct", lambda: expand_worklist(spark, direct, None)
+        spark, "expand-direct", lambda: expand_worklist(direct, None)
     )
     assert n_direct == 0
     n_list = _job_count(
         spark, "expand-list",
-        lambda: expand_worklist(spark, [f"{site}/lis/lis1.html"], None),
+        lambda: expand_worklist([f"{site}/lis/lis1.html"], None),
     )
     assert n_list == 0, n_list
 
@@ -381,6 +381,26 @@ def test_main_unrecognized_argv_runs_no_job(spark, tmp_path):
     rc = []
     assert _job_count(spark, "main-empty", lambda: rc.append(main(argv))) == 0
     assert rc == [1]
+
+
+def test_main_routes_before_the_session(site, tmp_path, monkeypatch, capsys):
+    """argv routing comes first: an argv that routes to no case URL
+    (an unknown route, or a list page under ``--limit 0``) exits 1
+    without asking for a Spark session."""
+    from shippai_knowledge_etl_spark import session
+    from shippai_knowledge_etl_spark.run import main
+
+    def no_session(*_args, **_kwargs):
+        raise AssertionError("get_spark called for an empty worklist")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    out = ["--output-dir", str(tmp_path)]
+    for argv in (
+        ["http://x/unknown/route.html"],
+        [f"{site}/lis/lis1.html", "--limit", "0"],
+    ):
+        assert main(argv + out) == 1
+        assert "error: empty worklist" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize("limit,cases", [("-1", None), ("0", 0)])

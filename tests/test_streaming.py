@@ -229,48 +229,37 @@ def test_session_replay_stitches_bridged_sessions(spark):
 
 
 def test_holt_replay_split_identity_exhaustive():
-    """stream_holt_replay's contract, checked off-cluster: resuming the
-    scaled-integer Holt fold from carried state equals the one-shot
-    fold at EVERY split point — including the empty-gen-1 and the
-    n1 == 1 bridge case (where the trend seed straddles the split)."""
+    """stream_holt_replay's contract, checked off-cluster on the
+    module's own fold: resuming the scaled-integer Holt fold from
+    carried state equals the one-shot fold at EVERY split point —
+    including the empty-gen-1 and the n1 == 1 bridge case (where the
+    trend seed straddles the split)."""
     import random
 
-    S, B = 1_000_000, 1 << 41
-    H = B // 2
-
-    def step(ct, lvl, b):
-        ln = (ct * S + lvl + b + B) // 2 - H
-        return ln, (ln - lvl + b + B) // 2 - H
-
-    def oneshot(c):
-        lvl = c[0] * S
-        b = (c[1] - c[0]) * S if len(c) >= 2 else 0
-        for t in range(1, len(c)):
-            lvl, b = step(c[t], lvl, b)
-        return lvl, b
+    from shippai_knowledge_etl_spark.queries.windows import (
+        _S,
+        _holt_resume,
+        _holt_state_after,
+    )
 
     def split_run(c, k):
         c1, c2 = c[:k], c[k:]
         if not c2:
-            return oneshot(c1)
+            return _holt_state_after(c1)
         if not c1:
-            lvl = c2[0] * S
-            b = (c2[1] - c2[0]) * S if len(c2) >= 2 else 0
-            start = 1
-        elif len(c1) == 1:
-            lvl, b = c1[0] * S, (c2[0] - c1[0]) * S
-            start = 0
-        else:
-            lvl, b = oneshot(c1)
-            start = 0
-        for t in range(start, len(c2)):
-            lvl, b = step(c2[t], lvl, b)
-        return lvl, b
+            return _holt_state_after(c2)
+        if len(c1) == 1:
+            return _holt_resume(c1[0] * _S, (c2[0] - c1[0]) * _S, c2)
+        return _holt_resume(*_holt_state_after(c1), c2)
 
+    # by hand: l0 = 3, b0 = 5 - 3; l1 = (5 + 3 + 2) / 2 = 5,
+    # b1 = (5 - 3 + 2) / 2 = 2; l2 = (4 + 5 + 2) / 2 = 5.5,
+    # b2 = (5.5 - 5 + 2) / 2 = 1.25 (micro-units)
+    assert _holt_state_after([3, 5, 4]) == (5_500_000, 1_250_000)
     rng = random.Random(5)
     for _ in range(200):
         n = rng.randrange(1, 12)
         c = [rng.randrange(0, 1000) for _ in range(n)]
-        exp = oneshot(c)
+        exp = _holt_state_after(c)
         for k in range(0, n + 1):
             assert split_run(c, k) == exp, (c, k)

@@ -1,3 +1,103 @@
+import pytest
+
+# The daily time-series family and the sweep pair: each loads only
+# ``events``, so a short copy of that one table is a whole input.
+SHORT_SERIES = [
+    "w19_burst_detection",
+    "w20_forecast_backtest",
+    "w21_ewma_smoother",
+    "w22_mad_outliers",
+    "w23_theil_sen_trend",
+    "w24_interval_coverage",
+    "w28_anomaly_consensus",
+    "w29_peak_concurrency",
+    "w35_holt_linear",
+    "stream_holt_replay",
+    "w37_holt_winters",
+    "stream_hw_replay",
+]
+
+
+@pytest.fixture(scope="module")
+def three_day_events(tmp_path_factory, sf_dir):
+    """The test scale's ``events`` rows before 2024-01-04 — three days,
+    shorter than the Holt-Winters first week — written with pyarrow
+    as the only table of a scale-factor directory."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    cut = pa.scalar(datetime.datetime(2024, 1, 4), ev.schema.field("ts").type)
+    short = ev.filter(pc.less(ev["ts"], cut))
+    days = pc.count_distinct(pc.floor_temporal(short["ts"], unit="day"))
+    assert days.as_py() == 3
+    out = tmp_path_factory.mktemp("events_3day")
+    pq.write_table(short, out / "events.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name", SHORT_SERIES)
+def test_short_series_matches_oracle(spark, three_day_events, name):
+    """On a 3-day corpus every time-series query still hash-matches its
+    oracle: the Holt-Winters pair emits no row (no first week to
+    initialize from), the rest their ramp-in rows."""
+    import duckdb
+
+    from scripts.driver_sim import frame_mismatch
+    from shippai_knowledge_etl_spark.catalog import oracle_sql, queries
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{three_day_events}/events.parquet')"
+    )
+    got = queries()[name](spark, three_day_events).toPandas()
+    want = con.execute(oracle_sql()[name]).df()
+    con.close()
+    assert frame_mismatch(got, want) is None
+
+
+def test_time_series_decisions_have_one_home():
+    """Spark-free tokenize scan of queries/windows.py: outside comments
+    and multi-line strings (docstrings, oracles), the grid fill, the day
+    bucket, the floor-division bias, the mod-3 generation filter and the
+    sweep's closing boundary are each written exactly once."""
+    import io
+    import re
+    import tokenize
+    from pathlib import Path
+
+    import shippai_knowledge_etl_spark.queries.windows as mod
+
+    src = Path(mod.__file__).read_text(encoding="utf-8")
+    lines = [list(ln) for ln in src.splitlines(keepends=True)]
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        masked = tok.type == tokenize.COMMENT or (
+            tok.type == tokenize.STRING and tok.start[0] != tok.end[0]
+        )
+        if not masked:
+            continue
+        (r0, c0), (r1, c1) = tok.start, tok.end
+        for r in range(r0 - 1, r1):
+            lo = c0 if r == r0 - 1 else 0
+            hi = c1 if r == r1 - 1 else len(lines[r])
+            for c in range(lo, hi):
+                if lines[r][c] != "\n":
+                    lines[r][c] = " "
+    code = "".join("".join(ln) for ln in lines)
+
+    patterns = {
+        "grid fill": r"crossJoin\(days\)",
+        "day bucket": r"unix_timestamp\(ts\)[^\n]*div 86400",
+        "floor-division bias": r"1 << 41",
+        "mod-3 generation": r"event_id\W*% 3",
+        "closing boundary": r'F\.lit\(-1\)\.alias\("d"\)',
+    }
+    counts = {k: len(re.findall(p, code)) for k, p in patterns.items()}
+    assert counts == dict.fromkeys(patterns, 1), counts
 
 
 def test_hw_split_fold_identity_every_point():
