@@ -5,7 +5,9 @@ Usage: python scripts/driver_sim.py [sf_dir] [query ...]
 Runs entry(spark) (smoke), then every queries()[name] at sf_dir
 (default sf0.01) and compares row-count / sorted-column-names /
 order-insensitive canonical values against oracle_sql()[name] via
-DuckDB. Prints one line per query and a final summary.
+DuckDB. Prints one line per query and a final summary; if the JVM
+dies mid-sweep, prints one ``JVM LOST`` line instead of an error per
+remaining query and exits 2.
 
 Faithfulness to the real driver (round-1 lesson — do NOT soften):
   - the driver canonicalizes through pandas (Spark ``toPandas`` vs
@@ -33,6 +35,7 @@ from pathlib import Path
 import duckdb
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -118,6 +121,19 @@ def frame_mismatch(
     return None
 
 
+def jvm_lost(spark, n_left: int) -> str | None:
+    """After a py4j error: the one-line report when the gateway's JVM
+    process has exited (its exit code, or the signal that killed it,
+    and the ``n_left`` queries, the failing one included, that did not
+    run), else None."""
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
+    rc = None if proc is None else proc.poll()
+    if rc is None:
+        return None
+    how = f"killed by signal {-rc}" if rc < 0 else f"exit code {rc}"
+    return f"JVM LOST: gateway process ended ({how}); {n_left} queries not run"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -138,6 +154,7 @@ def main() -> int:
     print(f"entry(): {len(smoke)} rows {'OK' if len(smoke) > 0 else 'FAIL'}")
 
     q, o = e.queries(), e.oracle_sql()
+    todo = [name for name in q if not only or name in only]
     n_pass = n_fail = 0
     for pos, (name, fn) in enumerate(q.items(), 1):
         if only and name not in only:
@@ -165,6 +182,11 @@ def main() -> int:
                 print(f"  {tag}: OK ({len(spdf)} rows, hash-match)")
                 n_pass += 1
         except Exception as ex:
+            if isinstance(ex, (Py4JError, ConnectionError)):
+                lost = jvm_lost(spark, len(todo) - n_pass - n_fail)
+                if lost:
+                    print(f"  {tag}: {lost}")
+                    return 2
             print(f"  {tag}: ERROR {type(ex).__name__}: {ex}")
             traceback.print_exc(limit=3)
             n_fail += 1

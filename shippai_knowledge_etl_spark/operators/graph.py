@@ -28,7 +28,7 @@ semantics, not sizing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from shippai_knowledge_etl_spark.operators.fixpoint import StepFn, iterate
@@ -40,27 +40,75 @@ from shippai_knowledge_etl_spark.tables import (
 SCALE = 1_000_000_000_000  # ranks in units of 1e-12
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The simple undirected graph under ``edges`` (cols ``src``,
+    ``dst``): self-loops dropped, each edge once as (u, v) with u < v,
+    whatever its direction or multiplicity in the input."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("u"),
+            F.greatest("src", "dst").alias("v"),
+        )
+        .distinct()
+    )
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """Both directions of every :func:`_undirected` edge, as (a, b)."""
+    return und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+
+
+def _endpoint_degrees(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The degree table (id, deg) of an :func:`_undirected` edge list,
+    and the edge list with both endpoint degrees (u, v, du, dv)."""
+    deg = (
+        und.select(F.col("u").alias("id"))
+        .unionAll(und.select(F.col("v").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    e = und.join(
+        deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u"
+    ).join(
+        deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), "v"
+    )
+    return deg, e
+
+
 def _pagerank_rounds(
-    nodes: DataFrame, edges: DataFrame, damping_pct: int, n: int
+    nodes: DataFrame,
+    teleport: Column,
+    edges: DataFrame,
+    damping_pct: int,
+    n: int,
 ) -> tuple[DataFrame, StepFn, DataFrame]:
-    """The setup and round shared by :func:`pagerank` and
-    :func:`pagerank_until`: returns (uniform initial ranks, the round
-    step for :func:`iterate`, the persisted degree-annotated edge list
-    the caller unpersists once the state is materialized).
+    """The setup and round shared by :func:`pagerank`,
+    :func:`pagerank_until` and :func:`personalized_pagerank`: returns
+    (initial ranks, the round step for :func:`iterate`, the persisted
+    degree-annotated edge list the caller unpersists once the state is
+    materialized). ``teleport`` is each node's 0/1 teleport weight over
+    ``nodes`` (``F.lit(1)`` for plain PageRank) and ``n`` the size of
+    the teleport set: a node starts at weight·SCALE/n.
 
     Per round: rank/outdeg contribution per edge (integer ``div``),
     sum by dst (map-side partial agg — the only wide shuffle, keyed
     the same every round so AQE reuses the partitioning), then
-    rank' = (reset * (100-d)) div 100 + (d * inflow) div 100 against
-    the full node universe (left join + coalesce keeps zero-inbound
-    nodes, which a bare groupBy(dst) would silently drop). Dangling
-    nodes (outdeg 0 after self-loop removal) simply emit nothing —
-    the standard simplification, documented rather than hidden."""
+    rank' = weight·((SCALE/n)·(100-d) div 100) + (d·inflow) div 100
+    against the full node universe (left join + coalesce keeps
+    zero-inbound nodes, which a bare groupBy(dst) would silently drop).
+    Dangling nodes (outdeg 0 after self-loop removal) simply emit
+    nothing — the standard simplification, documented rather than
+    hidden."""
     edges = edges.filter(F.col("src") != F.col("dst"))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     base = SCALE // n
     reset = (base * (100 - damping_pct)) // 100
-    ranks = nodes.select("id", F.lit(base).alias("rank_scaled"))
+    ranks = nodes.select(
+        "id", (teleport * base).cast("long").alias("rank_scaled")
+    )
     # persist: every iteration re-joins this; without it each round
     # would re-run the edge scan + outdegree agg from source (the same
     # reason dedup.connected_components persists its edge list)
@@ -81,9 +129,11 @@ def _pagerank_rounds(
         ).select(
             "id",
             (
-                F.lit(reset)
+                teleport * reset
                 + F.expr(f"({damping_pct} * coalesce(inflow, 0)) div 100")
-            ).alias("rank_scaled"),
+            )
+            .cast("long")
+            .alias("rank_scaled"),
         )
 
     return ranks, step, deg_edges
@@ -110,7 +160,9 @@ def pagerank(
     n = n_nodes  # caller-supplied: operators never trigger sizing actions
     if n == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
-    ranks, step, deg_edges = _pagerank_rounds(nodes, edges, damping_pct, n)
+    ranks, step, deg_edges = _pagerank_rounds(
+        nodes, F.lit(1), edges, damping_pct, n
+    )
     # eager final checkpoint: materializes the state (and any pending
     # lazy checkpoints) so the cached edge list can be released now
     ranks, _, _ = iterate(
@@ -145,7 +197,9 @@ def pagerank_until(
     n = n_nodes  # caller-supplied (module docstring convention)
     if n == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
-    ranks, step, deg_edges = _pagerank_rounds(nodes, edges, damping_pct, n)
+    ranks, step, deg_edges = _pagerank_rounds(
+        nodes, F.lit(1), edges, damping_pct, n
+    )
 
     def settled(prev: DataFrame, new: DataFrame) -> bool:
         delta = (
@@ -364,25 +418,7 @@ def triangle_counts(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     Clustering = 2·tri / (deg·(deg−1)) — integer operands, ONE double
     division per node, round 6 dp.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionAll(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e = und.join(
-        deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u"
-    ).join(
-        deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), "v"
-    )
+    deg, e = _endpoint_degrees(_undirected(edges))
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
@@ -465,38 +501,25 @@ def k_core(
     like the other iterative graph ops. Directions/parallel edges/
     self-loops are canonicalized away up front.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    adj = adj.persist()
+    adj = _adjacency(_undirected(edges)).persist()
 
-    def step(surv, _i):
-        deg = (
+    def survivor_degrees(surv: DataFrame) -> DataFrame:
+        return (
             adj.join(surv.withColumnRenamed("id", "a"), "a")
             .join(surv.withColumnRenamed("id", "b"), "b")
             .groupBy("a")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
+
+    def step(surv, _i):
+        deg = survivor_degrees(surv)
         return deg.filter(F.col("deg") >= k).select(F.col("a").alias("id"))
 
     surv, _, _ = iterate(
         nodes.select("id"), step, n_iters,
         checkpoint_every=checkpoint_every,
     )
-    final_deg = (
-        adj.join(surv.withColumnRenamed("id", "a"), "a")
-        .join(surv.withColumnRenamed("id", "b"), "b")
-        .groupBy("a")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    final_deg = survivor_degrees(surv)
     out = (
         nodes.join(surv.withColumn("in_core", F.lit(True)), "id", "left")
         .join(final_deg.withColumnRenamed("a", "id"), "id", "left")
@@ -517,32 +540,16 @@ def assortativity(edges: DataFrame) -> DataFrame:
     graph induced by ``edges`` (direction/self-loops/parallels
     canonicalized away): Pearson correlation of endpoint degrees over
     both orientations of every edge. Returns one row
-    (n_endpoints, assortativity).
+    (n_endpoints, assortativity); assortativity is NULL when every
+    endpoint has the same degree (one edge, a cycle): r is undefined
+    at zero variance, where DuckDB's ``/`` also returns NULL.
 
     Scale: one node-keyed degree count, two id equi-joins onto the
     edge list, one 6-column aggregate with map-side partials — no
     windows, no collects. Every sum is an exact integer; only the
     final closed-form correlation runs in double (sqrt is
     IEEE-exactly-rounded in both engines)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("id"))
-        .unionAll(und.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    j = und.join(
-        deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u"
-    ).join(
-        deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), "v"
-    )
+    _, j = _endpoint_degrees(_undirected(edges))
     pairs = j.select(
         F.col("du").alias("x"), F.col("dv").alias("y")
     ).unionAll(j.select(F.col("dv").alias("x"), F.col("du").alias("y")))
@@ -560,7 +567,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     ) * F.sqrt(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
     return s.select(
         F.col("n").cast("long").alias("n_endpoints"),
-        F.round(num / den, 6).alias("assortativity"),
+        F.round(F.try_divide(num, den), 6).alias("assortativity"),
     )
 
 
@@ -594,14 +601,7 @@ def negative_edges(
     when ``n_nodes`` comes in as a literal — and it always does: the
     caller supplies the node count (module docstring convention), so
     this operator plans zero actions and no node-side shuffle."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
+    und = _undirected(edges)
     pos = und.select(
         F.col("u").alias("src"), F.col("v").alias("dst"),
         F.lit(1).alias("label"),
@@ -659,37 +659,29 @@ def link_prediction_scores(edges: DataFrame) -> DataFrame:
     order-independent (the dsir/mixture-KL discipline); the Jaccard
     division happens once per output row.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("u").alias("z"), F.col("v").alias("nb")).unionAll(
-        und.select(F.col("v").alias("z"), F.col("u").alias("nb"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    a1 = adj.join(deg, "z").alias("a1")
+    und = _undirected(edges)
+    # a = the shared neighbor z, b = one of its neighbors
+    adj = _adjacency(und)
+    deg = adj.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    a1 = adj.join(deg, "a").alias("a1")
     a2 = adj.alias("a2")
     aa_term = F.round(F.lit(1.0) / F.log(F.col("a1.deg")), 6).cast(
         "decimal(18,6)"
     )
     pairs = a1.join(
         a2,
-        (F.col("a1.z") == F.col("a2.z")) & (F.col("a1.nb") < F.col("a2.nb")),
+        (F.col("a1.a") == F.col("a2.a")) & (F.col("a1.b") < F.col("a2.b")),
     ).select(
-        F.col("a1.nb").alias("i"),
-        F.col("a2.nb").alias("j"),
+        F.col("a1.b").alias("i"),
+        F.col("a2.b").alias("j"),
         aa_term.alias("aa_term"),
     )
     sc = pairs.groupBy("i", "j").agg(
         F.count(F.lit(1)).alias("common_neighbors"),
         F.sum("aa_term").alias("aa"),
     )
-    di = deg.select(F.col("z").alias("i"), F.col("deg").alias("di"))
-    dj = deg.select(F.col("z").alias("j"), F.col("deg").alias("dj"))
+    di = deg.select(F.col("a").alias("i"), F.col("deg").alias("di"))
+    dj = deg.select(F.col("a").alias("j"), F.col("deg").alias("dj"))
     edge_flag = und.select(
         F.col("u").alias("i"), F.col("v").alias("j"), F.lit(True).alias("ef")
     )
@@ -728,54 +720,25 @@ def personalized_pagerank(
     crawl-focus variant. Same scaled-integer floor arithmetic as
     :func:`pagerank` (exactly oracle-checkable): rank0 = SCALE/|S| on
     seeds else 0; per round rank' = seed_reset + d*inflow/100 where
-    seed_reset = (SCALE/|S|)*(100-d)/100 on seeds else 0.
+    seed_reset = (SCALE/|S|)*(100-d)/100 on seeds else 0 — the
+    :func:`_pagerank_rounds` round with the seed flag as the teleport
+    weight.
 
     Scale shape identical to :func:`pagerank`: 2 longs of state per
     node, one dst-keyed shuffle per round (same key every round — AQE
     reuses the partitioning), localCheckpoint lineage truncation; the
     seed membership rides a broadcast semi-join flag, never a second
     shuffle."""
-    edges = edges.filter(F.col("src") != F.col("dst"))
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     s = n_seeds  # caller-supplied: operators never trigger sizing actions
     if s == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_scaled"))
-    base = SCALE // s
-    reset = (base * (100 - damping_pct)) // 100
     seed_flag = seeds.select(F.col("id"), F.lit(1).alias("_is_seed"))
     marked = nodes.join(F.broadcast(seed_flag), "id", "left").select(
         "id", F.coalesce("_is_seed", F.lit(0)).alias("is_seed")
     )
-    ranks = marked.select(
-        "id",
-        (F.col("is_seed") * base).cast("long").alias("rank_scaled"),
+    ranks, step, deg_edges = _pagerank_rounds(
+        marked, F.col("is_seed"), edges, damping_pct, s
     )
-    deg_edges = edges.join(outdeg, "src").persist()
-
-    def step(state, _i):
-        contribs = (
-            deg_edges.join(state.withColumnRenamed("id", "src"), "src")
-            .select(
-                "dst",
-                F.expr("rank_scaled div outdeg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inflow"))
-        )
-        return marked.join(
-            contribs.withColumnRenamed("dst", "id"), "id", "left"
-        ).select(
-            "id",
-            (
-                F.col("is_seed") * reset
-                + F.expr(
-                    f"({damping_pct} * coalesce(inflow, 0)) div 100"
-                )
-            )
-            .cast("long")
-            .alias("rank_scaled"),
-        )
-
     ranks, _, _ = iterate(
         ranks, step, n_iters,
         checkpoint_every=checkpoint_every, eager_final=True,
@@ -814,18 +777,7 @@ def multi_source_bfs(
     ``localCheckpoint`` truncates lineage so round N doesn't replay
     rounds 1..N-1.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    adj = adj.persist()
+    adj = _adjacency(_undirected(edges)).persist()
 
     def step(state, i):
         # frontier expansion (round-12, guide §2.3): only pairs FIRST

@@ -228,6 +228,48 @@ def _encode_block(bw, coeffs, dc_codes, ac_codes, pred: int) -> int:
     return zz[0]
 
 
+def _mcu_grid(
+    width: int, height: int, components: list[dict]
+) -> tuple[int, int]:
+    """The encoders' geometry check: 1 or 3 components whose block
+    grids exactly tile width×height at their sampling ratios. Returns
+    the (mcux, mcuy) MCU grid."""
+    ncomp = len(components)
+    if ncomp not in (1, 3):
+        raise ValueError(f"JPEG encode supports 1 or 3 components, got {ncomp}")
+    hmax = max(c["hv"][0] for c in components)
+    vmax = max(c["hv"][1] for c in components)
+    if width % (8 * hmax) or height % (8 * vmax):
+        raise ValueError("dimensions must tile the MCU grid exactly")
+    mcux, mcuy = width // (8 * hmax), height // (8 * vmax)
+    for c in components:
+        h, v = c["hv"]
+        if len(c["coeffs"]) != mcuy * v or len(c["coeffs"][0]) != mcux * h:
+            raise ValueError("coefficient grid does not match geometry")
+    return mcux, mcuy
+
+
+def _frame_header(
+    width: int, height: int, components: list[dict], sof: int
+) -> bytearray:
+    """SOI + JFIF APP0 + DQT + the ``sof`` frame header (SOF0 baseline,
+    SOF2 progressive) with its component specs."""
+    ncomp = len(components)
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
+    out += struct.pack(">HHBB", 1, 1, 0, 0)
+    # DQT (tables stored in zigzag order per B.2.4.1)
+    for i, c in enumerate(components[:2]):  # table 0 = luma, 1 = chroma
+        zz = bytes(c["q"][ZIGZAG[k]] for k in range(64))
+        out += b"\xff\xdb" + struct.pack(">HB", 67, i) + zz
+    out += b"\xff" + bytes([sof])
+    out += struct.pack(">HBHHB", 8 + 3 * ncomp, 8, height, width, ncomp)
+    for i, c in enumerate(components):
+        h, v = c["hv"]
+        out += struct.pack(">BBB", i + 1, (h << 4) | v, min(i, 1))
+    return out
+
+
 def encode_jpeg(
     width: int,
     height: int,
@@ -246,31 +288,9 @@ def encode_jpeg(
     anything else raises ValueError. Huffman tables are the Annex K
     standard set (DC/AC 0 for component 0, DC/AC 1 for the rest).
     """
+    mcux, mcuy = _mcu_grid(width, height, components)
     ncomp = len(components)
-    if ncomp not in (1, 3):
-        raise ValueError(f"encode_jpeg supports 1 or 3 components, got {ncomp}")
-    hmax = max(c["hv"][0] for c in components)
-    vmax = max(c["hv"][1] for c in components)
-    if width % (8 * hmax) or height % (8 * vmax):
-        raise ValueError("dimensions must tile the MCU grid exactly")
-    mcux, mcuy = width // (8 * hmax), height // (8 * vmax)
-    for c in components:
-        h, v = c["hv"]
-        if len(c["coeffs"]) != mcuy * v or len(c["coeffs"][0]) != mcux * h:
-            raise ValueError("coefficient grid does not match geometry")
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
-    out += struct.pack(">HHBB", 1, 1, 0, 0)
-    # DQT (tables stored in zigzag order per B.2.4.1)
-    for i, c in enumerate(components[:2]):  # table 0 = luma, 1 = chroma
-        zz = bytes(c["q"][ZIGZAG[k]] for k in range(64))
-        out += b"\xff\xdb" + struct.pack(">HB", 67, i) + zz
-    # SOF0
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, height, width, ncomp)
-    for i, c in enumerate(components):
-        h, v = c["hv"]
-        out += struct.pack(">BBB", i + 1, (h << 4) | v, min(i, 1))
+    out = _frame_header(width, height, components, 0xC0)  # SOF0
     # DHT
     tables = [(0x00, DC_LUM_BITS, DC_LUM_VALS), (0x10, AC_LUM_BITS, AC_LUM_VALS)]
     if ncomp == 3:
@@ -373,6 +393,19 @@ class _BitReader:
     def byte_align(self) -> None:
         self.nbits = 0
         self.acc = 0
+
+    def restart(self) -> None:
+        """Consume the RSTn marker that must end a restart interval —
+        either already seen by the reader or next in the raw stream."""
+        self.byte_align()
+        if self.marker is None:
+            if self.data[self.pos] != 0xFF:
+                raise ValueError("expected RST marker")
+            self.marker = self.data[self.pos + 1]
+            self.pos += 2
+        if not 0xD0 <= self.marker <= 0xD7:
+            raise ValueError(f"expected RST, got 0xFF{self.marker:02X}")
+        self.marker = None
 
 
 class _MarkerHit(Exception):
@@ -633,19 +666,7 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     while m < n_mcu:
         try:
             if restart_interval and m and m % restart_interval == 0:
-                br.byte_align()
-                # the next marker must be RSTn — either already seen
-                # by the reader or next in the raw stream
-                if br.marker is None:
-                    if data[br.pos] != 0xFF:
-                        raise ValueError("expected RST marker")
-                    br.marker = data[br.pos + 1]
-                    br.pos += 2
-                if not 0xD0 <= br.marker <= 0xD7:
-                    raise ValueError(
-                        f"expected RST, got 0xFF{br.marker:02X}"
-                    )
-                br.marker = None
+                br.restart()
                 preds = [0] * len(comps)
             my, mx = divmod(m, mcux)
             for ci, c in enumerate(comps):
@@ -973,15 +994,7 @@ def _decode_scan_prog(
     try:
         for u, blocks in enumerate(units):
             if restart_interval and u and u % restart_interval == 0:
-                br.byte_align()
-                if br.marker is None:
-                    if data[br.pos] != 0xFF:
-                        raise ValueError("expected RST marker")
-                    br.marker = data[br.pos + 1]
-                    br.pos += 2
-                if not 0xD0 <= br.marker <= 0xD7:
-                    raise ValueError(f"expected RST, got 0xFF{br.marker:02X}")
-                br.marker = None
+                br.restart()
                 preds = {ci: 0 for ci in idxs}
                 eobrun = 0
             for ci, by, bx in blocks:
@@ -1291,33 +1304,11 @@ def encode_jpeg_progressive(
     pass writes the bits. A complete default script (``scans=None``)
     reaches Al=0 everywhere, so decoding reproduces the baseline
     pixels of the same coefficients exactly."""
-    ncomp = len(components)
-    if ncomp not in (1, 3):
-        raise ValueError(f"progressive encode supports 1 or 3, got {ncomp}")
-    hmax = max(c["hv"][0] for c in components)
-    vmax = max(c["hv"][1] for c in components)
-    if width % (8 * hmax) or height % (8 * vmax):
-        raise ValueError("dimensions must tile the MCU grid exactly")
-    mcux, mcuy = width // (8 * hmax), height // (8 * vmax)
-    for c in components:
-        h, v = c["hv"]
-        if len(c["coeffs"]) != mcuy * v or len(c["coeffs"][0]) != mcux * h:
-            raise ValueError("coefficient grid does not match geometry")
+    _mcu_grid(width, height, components)
     if scans is None:
-        scans = progressive_scan_script(ncomp)
+        scans = progressive_scan_script(len(components))
 
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00"
-    out += struct.pack(">HHBB", 1, 1, 0, 0)
-    for i, c in enumerate(components[:2]):
-        zz = bytes(c["q"][ZIGZAG[k]] for k in range(64))
-        out += b"\xff\xdb" + struct.pack(">HB", 67, i) + zz
-    out += b"\xff\xc2" + struct.pack(
-        ">HBHHB", 8 + 3 * ncomp, 8, height, width, ncomp
-    )
-    for i, c in enumerate(components):
-        h, v = c["hv"]
-        out += struct.pack(">BBB", i + 1, (h << 4) | v, min(i, 1))
+    out = _frame_header(width, height, components, 0xC2)  # SOF2
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
 

@@ -47,7 +47,6 @@ from shippai_knowledge_etl_spark.queries.dedup import (
 from shippai_knowledge_etl_spark.tables import load, scale_out
 
 MIN_TOKENS = 25  # ≈ p15 of the corpus: drops fragments, keeps bulk
-STOPWORD_PER_200 = 1  # kept ⟺ 200*n_stop >= n_tokens (ratio ≥ 0.005)
 
 _TOKS = (
     "list_filter(str_split(trim(regexp_replace(lower(text), "

@@ -370,6 +370,24 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _link_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int, DataFrame]:
+    """The synthetic link graph the graph_* queries run on: returns
+    (documents, n = their row count, edges) where doc i links to
+    (i*7+1) mod n and (i*13+2) mod n — self-loops kept, the operators
+    drop them. Sizing happens here, in the query layer, because the
+    edge list is synthesized modulo n; the operators in
+    operators/graph.py take edge lists and never trigger actions."""
+    d = load(spark, sf_dir, "documents")
+    n = table_rowcount(sf_dir, "documents")
+    i = F.col("doc_id")
+    edges = d.select(
+        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
+    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
+    return d, n, edges
+
+
 _PR_N = "(SELECT count(*) FROM documents)"
 _PR_EDGES = f"""
     e0 AS (
@@ -425,13 +443,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     node, one dst-keyed shuffle, lineage truncated by localCheckpoint."""
     from shippai_knowledge_etl_spark.operators.graph import pagerank
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
+    d, n, edges = _link_graph(spark, sf_dir)
     nodes = d.select(F.col("doc_id").alias("id"))
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
     ranks = pagerank(nodes, edges, n_iters=3, n_nodes=n)
     return ranks.select(
         F.col("id").alias("doc_id"), F.col("rank_scaled").cast("long")
@@ -474,6 +487,7 @@ def graph_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     n = table_rowcount(sf_dir, "documents")
     i = F.col("doc_id")
+    # not _link_graph: each side of the union carries its own anchor
     edges = (
         d.select(
             i.alias("src"),
@@ -677,16 +691,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint lineage truncation."""
     from shippai_knowledge_etl_spark.operators.graph import label_propagation
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    fwd = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
+    d, _, fwd = _link_graph(spark, sf_dir)
     fwd = fwd.filter(F.col("src") != F.col("dst"))
     edges = fwd.unionAll(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+    i = F.col("doc_id")
     nodes = d.select(
         i.alias("id"),
         F.when(i % 10 == 0, (i % 4).cast("long")).alias("label"),
@@ -748,13 +758,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, 1-row broadcast totals, localCheckpoint lineage."""
     from shippai_knowledge_etl_spark.operators.graph import hits
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
+    d, _, edges = _link_graph(spark, sf_dir)
     nodes = d.select(F.col("doc_id").alias("id"))
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
     out = hits(nodes, edges, n_iters=2)
     return out.select(
         F.col("id").alias("doc_id"), "auth_scaled", "hub_scaled"
@@ -835,13 +840,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregate map-side, and nothing collects to the driver."""
     from shippai_knowledge_etl_spark.operators.graph import triangle_counts
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    nodes = d.select(i.alias("id"))
+    d, _, edges = _link_graph(spark, sf_dir)
+    nodes = d.select(F.col("doc_id").alias("id"))
     out = triangle_counts(nodes, edges)
     return out.select(
         F.col("id").alias("doc_id"), "degree", "n_triangles", "clustering"
@@ -977,13 +977,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_dedup.py on known graphs."""
     from shippai_knowledge_etl_spark.operators.graph import k_core
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    nodes = d.select(i.alias("id"))
+    d, _, edges = _link_graph(spark, sf_dir)
+    nodes = d.select(F.col("doc_id").alias("id"))
     out = k_core(nodes, edges, k=3, n_iters=3)
     return out.select(
         F.col("id").alias("doc_id"), "in_core", "core_degree"
@@ -1049,13 +1044,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, no collects."""
     from shippai_knowledge_etl_spark.operators.graph import assortativity
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    e0 = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    return assortativity(e0)
+    return assortativity(_link_graph(spark, sf_dir)[2])
 
 
 @register(
@@ -1106,13 +1095,8 @@ def graph_negative_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/graph.py:negative_edges``."""
     from shippai_knowledge_etl_spark.operators.graph import negative_edges
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    nodes = d.select(i.alias("id"))
+    d, n, edges = _link_graph(spark, sf_dir)
+    nodes = d.select(F.col("doc_id").alias("id"))
     return negative_edges(nodes, edges, k=2, n_nodes=n)
 
 
@@ -1206,13 +1190,8 @@ def graph_node_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         triangle_counts,
     )
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    nodes = d.select(i.alias("id"))
+    d, n, edges = _link_graph(spark, sf_dir)
+    nodes = d.select(F.col("doc_id").alias("id"))
     pr = pagerank(nodes, edges, n_iters=3, n_nodes=n).select(
         F.col("id").alias("doc_id"), F.col("rank_scaled").cast("long")
     )
@@ -1351,13 +1330,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         link_prediction_scores,
     )
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-    return link_prediction_scores(edges)
+    return link_prediction_scores(_link_graph(spark, sf_dir)[2])
 
 
 @register(
@@ -1909,14 +1882,9 @@ def graph_personalized_pagerank(
         personalized_pagerank,
     )
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
+    d, n, edges = _link_graph(spark, sf_dir)
     nodes = d.select(F.col("doc_id").alias("id"))
     seeds = nodes.filter(F.col("id") % 50 == 0)
-    i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
     # |S| in closed form: seeds are ids {0, 50, 100, ...} < n, so
     # ceil(n/50) — no second sizing action beyond the demo-graph count
     ranks = personalized_pagerank(
@@ -1997,16 +1965,8 @@ def graph_bfs_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-keyed aggregate."""
     from shippai_knowledge_etl_spark.operators.graph import multi_source_bfs
 
-    d = load(spark, sf_dir, "documents")
-    # demo-graph sizing action lives HERE, in the query wrapper — the
-    # edge list is synthesized modulo n so the count is part of graph
-    # construction, not of multi_source_bfs (which takes edge lists
-    # and never triggers actions; operators/graph.py module convention)
-    n = table_rowcount(sf_dir, "documents")
+    d, _, edges = _link_graph(spark, sf_dir)
     i = F.col("doc_id")
-    edges = d.select(
-        i.alias("src"), ((i * 7 + 1) % n).alias("dst")
-    ).unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
     seeds = d.filter(i % 50 == 0).select(i.alias("seed"))
     dists = multi_source_bfs(edges, seeds, n_rounds=3)
     per_node = dists.groupBy("node").agg(
@@ -2104,13 +2064,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure arithmetic); everything downstream lives on the |communities|
     grid with a 1-row m broadcast. At 100 TB: two linear shuffles of
     (node)/(community) keys, no pairs, no iteration."""
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    edges = (
-        d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst"))
-        .unionAll(d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
+    edges = _link_graph(spark, sf_dir)[2].filter(
+        F.col("src") != F.col("dst")
     )
     m = edges.agg(F.count(F.lit(1)).alias("m"))
     degs = (
@@ -2246,6 +2201,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_rowcount(sf_dir, "documents")
     i = F.col("doc_id")
 
+    # not _link_graph: a self-loop is redirected to i + bump, not dropped
     def repaired(mult: int, add: int, bump: int):
         raw = (i * mult + add) % n
         return F.when(raw == i, (i + bump) % n).otherwise(raw)
@@ -2386,13 +2342,8 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage localCheckpoint-truncated each round."""
     from shippai_knowledge_etl_spark.operators.graph import shortest_paths
 
-    d = load(spark, sf_dir, "documents")
-    n = table_rowcount(sf_dir, "documents")
-    i = F.col("doc_id")
-    nodes = d.select(i.alias("id"))
-    e0 = d.select(i.alias("src"), ((i * 7 + 1) % n).alias("dst")).unionAll(
-        d.select(i.alias("src"), ((i * 13 + 2) % n).alias("dst"))
-    )
+    d, _, e0 = _link_graph(spark, sf_dir)
+    nodes = d.select(F.col("doc_id").alias("id"))
     edges = e0.filter(F.col("src") != F.col("dst")).select(
         "src", "dst", (1 + (F.col("src") + F.col("dst")) % 7).alias("w")
     )

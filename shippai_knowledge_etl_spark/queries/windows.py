@@ -1266,7 +1266,8 @@ def behavior_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (event_type, day, n) event-count rollup under the grid."""
+    """The (event_type, day, n) event-count rollup under the grid; w31,
+    w36 and w38 read it directly."""
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type", _day()).agg(F.count(F.lit(1)).alias("n"))
 
@@ -2736,14 +2737,11 @@ def w31_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; segments re-aggregate the bounded ≤|days| grid; the
     stats join moves |event_type| rows. Letters per (type, week) —
     constant-size output at any event volume."""
-    ev = load(spark, sf_dir, "events").select("event_type", _day())
-    daily = ev.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    daily = _daily_counts(spark, sf_dir)
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nd"),
-        F.sum("cnt").alias("sx"),
-        F.sum(F.col("cnt") * F.col("cnt")).alias("sxx"),
+        F.sum("n").alias("sx"),
+        F.sum(F.col("n") * F.col("n")).alias("sxx"),
         F.min("day").alias("d0"),
     )
     seg = (
@@ -2751,14 +2749,14 @@ def w31_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.expr("(day - d0) div 7").alias("segment"),
-            "cnt",
+            "n",
             "nd",
             "sx",
             "sxx",
         )
         .groupBy("event_type", "segment")
         .agg(
-            F.sum("cnt").alias("seg_sum"),
+            F.sum("n").alias("seg_sum"),
             F.count(F.lit(1)).alias("seg_days"),
             F.max("nd").alias("nd"),
             F.max("sx").alias("sx"),
@@ -4481,14 +4479,11 @@ def w36_anova_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the (type, day) rollup cuts the stream (w19/w20
     class), the (type, dow) grid is ≤ 7 rows per type, and everything
     after is per-type arithmetic — no joins at all."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", _day()).agg(
-        F.count(F.lit(1)).alias("x")
-    )
+    daily = _daily_counts(spark, sf_dir)
     g = daily.groupBy("event_type", (F.col("day") % 7).alias("dow")).agg(
         F.count(F.lit(1)).alias("n_g"),
-        F.sum("x").alias("s_g"),
-        F.sum(F.col("x") * F.col("x")).alias("q_g"),
+        F.sum("n").alias("s_g"),
+        F.sum(F.col("n") * F.col("n")).alias("q_g"),
     )
     terms = g.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("k"),
@@ -5586,15 +5581,12 @@ def w38_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     step. Reference analog: none; [EXT] time-series surface."""
     from pyspark.sql import Window as SqlWindow
 
-    ev = load(spark, sf_dir, "events").select("event_type", _day())
-    daily = ev.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    daily = _daily_counts(spark, sf_dir)
     wt = SqlWindow.partitionBy("event_type")
     grid = daily.select(
         "event_type",
         (F.col("day") - F.min("day").over(wt)).alias("t"),
-        "cnt",
+        F.col("n").alias("cnt"),
     )
     wo = wt.orderBy("t")
     pre = grid.select(

@@ -27,11 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor —
-# region/nation are fixed-size; labels-style dims belong here too.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 # (sf_dir, table) → exact row count, served from the parquet footer.
 # The demo-graph queries synthesize edges modulo the node count, so
 # they need n at PLAN-BUILD time; before round 11 each one paid an

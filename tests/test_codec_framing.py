@@ -1,4 +1,4 @@
-"""Spark-free guards for the container framing of the wav/avi/bmp/png
+"""Spark-free guards for the container framing of the wav/avi/bmp/png/jpeg
 codecs: encoder byte goldens, the decoders' error contract on truncated
 input, and the single home of each container layout."""
 
@@ -11,6 +11,7 @@ import pytest
 from shippai_knowledge_etl_spark.operators import (
     avi_codec,
     bmp_codec,
+    jpeg_codec,
     png_codec,
     wav_codec,
 )
@@ -28,6 +29,21 @@ def _rgb(w, h, seed=0):
 _PALETTE = [((7 * j) % 256, (13 * j) % 256, (29 * j) % 256) for j in range(256)]
 _RLE_IDX = bytes((x // 3 + 5 * y) % 256 for y in range(3) for x in range(7))
 _MJPEG = [b"\xff\xd8" + bytes(range(7)) + b"\xff\xd9", b"\xff\xd8\x01\xff\xd9\x00"]
+_Q = [1 + (k * 5) % 23 for k in range(64)]
+
+
+def _jpg_blocks(nby, nbx, seed):
+    """Quantized 8x8 blocks: a DC ramp plus a sparse AC pattern."""
+    return [[[(by * 31 + bx * 17 + k * 7 + seed) % 11 - 5
+              if k == 0 or (k * k + seed) % 5 == 0 else 0
+              for k in range(64)] for bx in range(nbx)] for by in range(nby)]
+
+
+_JPG_420 = [
+    {"coeffs": _jpg_blocks(2, 4, 0), "q": _Q, "hv": (2, 2)},
+    {"coeffs": _jpg_blocks(1, 2, 1), "q": _Q[::-1], "hv": (1, 1)},
+    {"coeffs": _jpg_blocks(1, 2, 2), "q": _Q[::-1], "hv": (1, 1)},
+]
 _U16 = np.array([[(r * 7919 + c * 104729) % 65536 for c in range(10)]
                  for r in range(6)], dtype=np.uint16)
 
@@ -54,6 +70,12 @@ ENCODERS = {
     "png_adam7_nofilter": lambda: png_codec.encode_png(
         9, 7, 3, _rgb(9, 7), filter_cycle=False, interlace=True),
     "png16": lambda: png_codec.encode_png16(5, 6, 2, _U16),
+    "jpeg_gray": lambda: jpeg_codec.encode_jpeg(
+        16, 8, [{"coeffs": _jpg_blocks(1, 2, 3), "q": _Q, "hv": (1, 1)}]),
+    "jpeg_420_rst": lambda: jpeg_codec.encode_jpeg(
+        32, 16, _JPG_420, restart_interval=1),
+    "jpeg_progressive_420_rst": lambda: jpeg_codec.encode_jpeg_progressive(
+        32, 16, _JPG_420, restart_interval=1),
 }
 
 # Recorded before the container code was folded. The PNG entries hash
@@ -63,6 +85,9 @@ GOLDEN_SHA256 = {
     "avi_rgb24": "6a1d1195f5edba19a13552ef22c7f0a9ebbe24dd3ebb883a0171c6add2e6e24b",
     "bmp_rgb24": "5f1f4d0b1045c98722494e07d886cce507069eee5e16c23e4a2768c5481962c7",
     "bmp_rle8": "513d6407f2ba0247aec56a696a01912ee140de18f337061de090e15c56a8db7a",
+    "jpeg_420_rst": "f1266c7cb191da45c7f0d997fc34713db73c1e986b1ffa90f9674c415e45a7b6",
+    "jpeg_gray": "fb06ef4d143d0cf492a291ff3d51e9a3e9f6cd9506dab6f0055a18742e1a2419",
+    "jpeg_progressive_420_rst": "f30b7a20178f215931ac98328eb7e036342b04eca9ced93885294fbb9d4dda35",
     "png16": "547016b65ebb1d92d6955386acd9de0f5cf1d579c04172d71d93b92d28806b01",
     "png_adam7": "545178955893658d2d37a4ec62349f2de4c7731dce910b07fedc9f7c4fa2c3b3",
     "png_adam7_nofilter": "136703e40fb9677323b2f8435767c5ea2e86274e9b1e44b19953aaae6b13d4a2",

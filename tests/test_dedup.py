@@ -541,6 +541,16 @@ def test_assortativity_known_graphs(spark):
     row = assortativity(star).collect()[0]
     assert row["n_endpoints"] == 10  # 5 undirected edges, both ways
     assert row["assortativity"] == -1.0
+    # degree-regular graphs (one edge given three times, a 5-cycle) have
+    # zero degree variance: r is undefined, NULL like the DuckDB oracle
+    for regular, n_end in (
+        ([(1, 2), (2, 1), (1, 2)], 2),
+        ([(i, (i + 1) % 5) for i in range(5)], 10),
+    ):
+        row = assortativity(
+            spark.createDataFrame(regular, ["src", "dst"])
+        ).collect()[0]
+        assert (row["n_endpoints"], row["assortativity"]) == (n_end, None)
 
 
 def test_negative_edges_are_true_non_edges(spark):

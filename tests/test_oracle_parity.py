@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from scripts.driver_sim import forbidden_output_types, frame_mismatch
+from scripts.driver_sim import forbidden_output_types, frame_mismatch, jvm_lost
 from shippai_knowledge_etl_spark.catalog import load_catalog
 
 
@@ -42,6 +42,31 @@ def test_frame_mismatch_sees_one_ulp():
     assert frame_mismatch(same, same.copy()) is None
     msg = frame_mismatch(same, pd.DataFrame({"k": [1], "v": [b]}))
     assert msg is not None and msg.startswith("values")
+
+
+def test_jvm_lost_reports_exit_or_signal():
+    """driver_sim's lost-JVM line: None while the gateway process
+    lives, then its signal or exit code and the queries not run."""
+    import subprocess
+    from types import SimpleNamespace
+
+    def fake_spark(proc):
+        gateway = SimpleNamespace(proc=proc)
+        return SimpleNamespace(sparkContext=SimpleNamespace(_gateway=gateway))
+
+    live = subprocess.Popen(["sleep", "30"])
+    try:
+        assert jvm_lost(fake_spark(live), 5) is None
+    finally:
+        live.kill()
+        live.wait()
+    assert jvm_lost(fake_spark(live), 5) == (
+        "JVM LOST: gateway process ended (killed by signal 9); "
+        "5 queries not run"
+    )
+    done = subprocess.Popen(["sh", "-c", "exit 3"])
+    done.wait()
+    assert "(exit code 3); 1 queries not run" in jvm_lost(fake_spark(done), 1)
 
 
 _SPECS = load_catalog()

@@ -62,34 +62,18 @@ def test_short_series_matches_oracle(spark, three_day_events, name):
 
 def test_time_series_decisions_have_one_home():
     """Spark-free tokenize scan of queries/windows.py: outside comments
-    and multi-line strings (docstrings, oracles), the grid fill, the day
-    bucket, the floor-division bias, the mod-3 generation filter and the
+    and multi-line strings (docstrings, oracles), the (type, day) count
+    rollup (w31, w36 and w38 included), the grid fill, the day bucket,
+    the floor-division bias, the mod-3 generation filter and the
     sweep's closing boundary are each written exactly once."""
-    import io
     import re
-    import tokenize
-    from pathlib import Path
 
     import shippai_knowledge_etl_spark.queries.windows as mod
+    from tests.source_scan import masked_code
 
-    src = Path(mod.__file__).read_text(encoding="utf-8")
-    lines = [list(ln) for ln in src.splitlines(keepends=True)]
-    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
-        masked = tok.type == tokenize.COMMENT or (
-            tok.type == tokenize.STRING and tok.start[0] != tok.end[0]
-        )
-        if not masked:
-            continue
-        (r0, c0), (r1, c1) = tok.start, tok.end
-        for r in range(r0 - 1, r1):
-            lo = c0 if r == r0 - 1 else 0
-            hi = c1 if r == r1 - 1 else len(lines[r])
-            for c in range(lo, hi):
-                if lines[r][c] != "\n":
-                    lines[r][c] = " "
-    code = "".join("".join(ln) for ln in lines)
-
+    code = masked_code(mod.__file__)
     patterns = {
+        "daily rollup": r'groupBy\("event_type",\s*(_day\(\)|"day")\)',
         "grid fill": r"crossJoin\(days\)",
         "day bucket": r"unix_timestamp\(ts\)[^\n]*div 86400",
         "floor-division bias": r"1 << 41",
