@@ -360,7 +360,9 @@ class _BitReader:
         b = self.data[self.pos]
         self.pos += 1
         if b == 0xFF:
-            nxt = self.data[self.pos] if self.pos < len(self.data) else None
+            if self.pos >= len(self.data):
+                raise ValueError("truncated JPEG entropy data")
+            nxt = self.data[self.pos]
             if nxt == 0x00:
                 self.pos += 1
             else:
@@ -399,6 +401,8 @@ class _BitReader:
         either already seen by the reader or next in the raw stream."""
         self.byte_align()
         if self.marker is None:
+            if self.pos + 2 > len(self.data):
+                raise ValueError("truncated JPEG entropy data")
             if self.data[self.pos] != 0xFF:
                 raise ValueError("expected RST marker")
             self.marker = self.data[self.pos + 1]
@@ -540,7 +544,11 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             if progressive and prog_coeffs is not None:
                 break  # all scans consumed — reconstruct below
             raise ValueError("EOI before SOS")
+        if pos + 2 > len(data):
+            raise ValueError("truncated JPEG segment length")
         (seglen,) = struct.unpack_from(">H", data, pos)
+        if seglen < 2 or pos + seglen > len(data):
+            raise ValueError(f"truncated JPEG segment 0xFF{marker:02X}")
         seg = data[pos + 2 : pos + seglen]
         if marker == 0xDB:  # DQT
             off = 0
@@ -568,6 +576,8 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 htables[tc_th] = _decode_table(bits, vals)
                 off += 17 + n
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                raise ValueError("short SOF segment")
             prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
             if prec != 8:
                 raise NotImplementedError(f"{prec}-bit precision")
@@ -586,10 +596,15 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 "lossless/hierarchical/arithmetic)"
             )
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("short DRI segment")
             (restart_interval,) = struct.unpack_from(">H", seg, 0)
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
+            # Ns, Ns component specs, then Ss / Se / Ah|Al
+            if not seg or len(seg) < 4 + 2 * seg[0]:
+                raise ValueError("short SOS segment")
             ns = seg[0]
             scan = []
             for i in range(ns):

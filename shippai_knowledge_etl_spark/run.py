@@ -23,10 +23,13 @@ Where the reference loops sequentially with 30 s timeouts per fetch,
 the case worklist here is one ``createDataFrame`` over the driver's
 rows in worklist order, which PySpark slices into ``defaultParallelism``
 near-equal partitions, so case fetches fan out partition-parallel
-on every core (errors are data, never task failures), the parse edges are
-Arrow-batched HTML UDFs — ONE parse per page via a Generate barrier —
-and everything downstream is column expressions: the scenario sub-page
-(S3) is fetched per case and decoded Spark-side (F19 separator decode →
+on every core (errors are data, never task failures). The case edge is
+ONE Arrow-batched pandas UDF (``fetch.fetch_case_pages``): per case it
+fetches and parses the case page, resolves and fetches the scenario
+sub-page (S3) and parses it, so each case crosses the Python boundary
+once and no page body enters the JVM; a Generate barrier pins that one
+evaluation. Everything downstream is column expressions: the scenario
+facts are decoded Spark-side (F19 separator decode →
 O1 ordinal sort → W2 boundary slice → W1 chunk-by-3), multimedia links
 are merged and order-preserving-deduped (P7/J3/O3), dates normalize via
 F1, casualty counts via F2, knowledge via the F6 fold, and validation /
@@ -62,12 +65,8 @@ from pyspark.sql import functions as F
 from shippai_knowledge_etl_spark.functions import listparse, nested, scalar
 from shippai_knowledge_etl_spark.operators import quality
 from shippai_knowledge_etl_spark.sources import sinks
-from shippai_knowledge_etl_spark.sources.fetch import _fetch_one, fetch_html
-from shippai_knowledge_etl_spark.sources.html_parse import (
-    case_page_facets,
-    parse_list_page,
-    scenario_page_facts,
-)
+from shippai_knowledge_etl_spark.sources.fetch import _fetch_one, fetch_case_pages
+from shippai_knowledge_etl_spark.sources.html_parse import parse_list_page
 
 # src/extract.py:14-20 — HTML label → JSON key for required fields
 REQUIRED_FIELDS = {
@@ -213,48 +212,20 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     throws: fetch failures → status 'error', missing required fields →
     'excluded'). Column order of the produced record follows the output
     contract (requirements.md:107-142)."""
-    page = cases_urls.select(
-        "seq",
-        F.col("case_url"),
-        scalar.case_id_from_url(F.col("case_url")).alias("case_id"),
-        fetch_html(F.col("case_url")).alias("page"),
-    )
-    # Generate barrier: ONE parse per page (same pattern as
-    # run_pipeline_e2e); fetch errors carry through as null body
-    parsed = page.select(
-        "seq",
-        "case_url",
-        "case_id",
-        F.col("page.error").alias("fetch_error"),
-        F.explode(F.array(case_page_facets(F.col("page.body")))).alias("__p"),
-    )
-
     rows = F.filter(
         F.col("__p.rows"),
         lambda r: F.upper(r.getField("bgcolor")) == "#DFE9F2",
     )
-
-    # scenario sub-page: labeled-row link first, page-wide /sf/ anchor
-    # as fallback (O4 first-match, src/extract.py:197-210); fetch is the
-    # S3 edge, then a second Generate barrier pins one scenario parse
-    scen_href = F.coalesce(
-        F.col("__p.scenario_row_href"), F.col("__p.sf_href")
-    )
-    scen_url = F.when(
-        scen_href.isNotNull(),
-        scalar.resolve_url(F.col("case_url"), scen_href),
-    )
-    staged = parsed.select(
-        "seq", "case_url", "case_id", "fetch_error", "__p",
-        rows.alias("__rows"),
-        scen_href.alias("__scen_href"),
-        fetch_html(scen_url).alias("__scen_page"),
-    ).select(
-        "*",
-        F.explode(
-            F.array(scenario_page_facts(F.col("__scen_page.body")))
-        ).alias("__s"),
-    )
+    # the case edge: ONE Python evaluation per case fetches and parses
+    # the case page and its scenario sub-page (fetch_case_pages); the
+    # Generate barrier pins that one evaluation, so the field reads
+    # below never re-run it. Fetch errors carry through as data.
+    staged = cases_urls.select(
+        "seq",
+        F.col("case_url"),
+        scalar.case_id_from_url(F.col("case_url")).alias("case_id"),
+        F.explode(F.array(fetch_case_pages(F.col("case_url")))).alias("__p"),
+    ).select("*", rows.alias("__rows"))
 
     # multimedia: labeled-row links ++ page-wide /mf/ scan, first-
     # occurrence dedup on (href, caption) pairs (P7/J3 merge + O3,
@@ -290,7 +261,7 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     fields["knowledge"] = listparse.parse_knowledge(
         nested.first_val(rows, "知識化")
     )
-    fields["scenario"] = _scenario_struct(F.col("__s"))
+    fields["scenario"] = _scenario_struct(F.col("__p"))
     fields["images"] = images
     fields["sources"] = scalar.split_nonblank(nested.first_val(rows, "情報源"))
     fields["casualties"] = F.struct(
@@ -310,17 +281,15 @@ def process_cases(cases_urls: DataFrame) -> DataFrame:
     named = dict(fields)
     named["url"] = F.col("case_url")
     named["case_id"] = F.col("case_id")
-    # a present-but-failed scenario fetch aborts the case like the
-    # reference's raise_for_status inside parse_scenario_page
-    # (src/extract.py:284-286 → run.py:113-120 generic error)
-    scen_error = F.when(
-        F.col("__scen_href").isNotNull(), F.col("__scen_page.error")
-    )
+    # a present-but-failed scenario fetch (scen_error, null when the
+    # case links no scenario page) aborts the case like the reference's
+    # raise_for_status inside parse_scenario_page (src/extract.py:284-286
+    # → run.py:113-120 generic error)
     wide = staged.select(
         "seq",
         F.col("case_url"),
-        F.col("fetch_error"),
-        scen_error.alias("scen_error"),
+        F.col("__p.error").alias("fetch_error"),
+        F.col("__p.scen_error").alias("scen_error"),
         *[named[c].alias(c) for c in record_order],
     )
 

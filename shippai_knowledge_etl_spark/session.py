@@ -31,19 +31,44 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    16g, or half of the host's physical memory when that is less, so a
+    long single-session run cannot grow its heap past the machine.
+    ``None`` (memory size unknown) keeps 16g."""
+    if phys_bytes is None:
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(MAX_DRIVER_MEMORY_MB, phys_bytes // 2 // 2**20)}m"
+
+
+def _physical_memory() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no POSIX sysconf
+        return None
+
+
 def get_spark(app_name: str = "shippai-knowledge-etl-spark") -> SparkSession:
     """Build (or reuse) a local session sized from the environment.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32); shuffle
     partition count follows it so small-SF runs don't pay 200-partition
     scheduling overhead while a real cluster would override it upward.
+    ``SPARK_DRIVER_MEMORY`` sets the driver heap; unset, it follows the
+    host (``default_driver_memory``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(
+        _physical_memory()
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
     )
     for k, v in ENGINE_CONF.items():

@@ -13,8 +13,14 @@ of the input: the CLI's ``run.expand_worklist`` spreads the case
 worklist evenly over ``defaultParallelism`` partitions.
 
 ``_fetch_one`` is the one fetch definition (timeout, decoding, error
-strings). Both UDFs call it per row, and ``run.expand_worklist`` calls
-it on the driver for the CLI's list pages.
+strings). Its users:
+
+- ``fetch_html`` and ``fetch_binary``, per row: page text for the
+  isolated fetch/parse queries, image bytes for the PDF sink;
+- ``fetch_case_pages``, twice per row: the CLI's case edge, which
+  fetches and parses the case page and its scenario sub-page in one
+  Python evaluation;
+- ``run.expand_worklist``, on the driver, for the CLI's list pages.
 
 Correctness tests use a loopback HTTP server (tests/test_fetch.py);
 live-network use is smoke-only (SURVEY §7.4 item 6).
@@ -23,10 +29,18 @@ live-network use is smoke-only (SURVEY §7.4 item 6).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from urllib.parse import urljoin
 
 import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from shippai_knowledge_etl_spark.sources.html_parse import (
+    CASE_PAGE_SCHEMA,
+    SCENARIO_PAGE_SCHEMA,
+    parse_case_page,
+    parse_scenario_page,
+)
 
 FETCH_RESULT_SCHEMA = T.StructType(
     [
@@ -89,3 +103,51 @@ def fetch_binary(urls: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     for batch in urls:
         rows = [_fetch_one(opener, u, binary=True) for u in batch]
         yield pd.DataFrame(rows, columns=["content", "status", "error"])
+
+
+# case fetch error, scenario fetch error (null when the case links no
+# scenario page), then the case-page and scenario-page parse fields
+CASE_PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("error", T.StringType()),
+        T.StructField("scen_error", T.StringType()),
+        *CASE_PAGE_SCHEMA.fields,
+        *SCENARIO_PAGE_SCHEMA.fields,
+    ]
+)
+
+
+def _case_pages(opener, url: str) -> dict:
+    """One case row of ``fetch_case_pages``: case fetch and parse, the
+    scenario href (labeled-row link first, page-wide ``/sf/`` anchor as
+    fallback, src/extract.py:197-210), resolved by the reference's own
+    ``urljoin`` (src/extract.py:206,210), then scenario fetch and parse.
+    The href fallback is a null test, not a truthiness test: an
+    ``href=""`` anchor wins and resolves to the case URL itself."""
+    body, _, error = _fetch_one(opener, url, binary=False)
+    case = parse_case_page(body or "")
+    href = case["scenario_row_href"]
+    if href is None:
+        href = case["sf_href"]
+    scen_body = scen_error = None
+    if href is not None:
+        scen_body, _, scen_error = _fetch_one(
+            opener, urljoin(url, href), binary=False
+        )
+    scen = parse_scenario_page(scen_body or "")
+    return {"error": error, "scen_error": scen_error, **case, **scen}
+
+
+@pandas_udf(CASE_PAGES_SCHEMA)
+def fetch_case_pages(urls: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    """S1+S3 fused: case URL → both pages fetched and parsed in ONE
+    Python evaluation, so page bodies never cross into the JVM and a
+    running task holds one Python worker for the whole case edge. A
+    failed fetch leaves the fields of its page empty (errors are data)."""
+    import urllib.request
+
+    opener = urllib.request.build_opener()
+    cols = [f.name for f in CASE_PAGES_SCHEMA.fields]
+    for batch in urls:
+        rows = [_case_pages(opener, u) for u in batch]
+        yield pd.DataFrame(rows, columns=cols)

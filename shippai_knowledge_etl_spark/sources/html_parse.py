@@ -276,8 +276,11 @@ def list_page_links(pages: Iterator[pd.Series]) -> Iterator[pd.Series]:
 # ---------------------------------------------------------------------------
 # Full case-page facets: tall rows PLUS the page-level structures the
 # nested case record needs (representative image, multimedia links,
-# scenario sub-page link) — all from ONE parse pass, so the CLI keeps
-# the single-ArrowEvalPython-per-page plan shape.
+# scenario sub-page link) — all from ONE parse pass. The CLI calls
+# ``parse_case_page`` / ``parse_scenario_page`` inside its one fused
+# fetch-and-parse edge (``fetch.fetch_case_pages``); the
+# ``case_page_facets`` / ``scenario_page_facts`` UDFs are the same parses
+# as standalone Arrow edges over page bodies already in a frame.
 # ---------------------------------------------------------------------------
 
 MM_LINK_SCHEMA = T.StructType(

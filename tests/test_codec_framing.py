@@ -122,15 +122,19 @@ PREFIX_SWEEP = [
     ("decode_png", "png_flat"),
     ("decode_png", "png_adam7"),
     ("decode_png16", "png16"),
+    ("decode_jpeg", "jpeg_gray"),
+    ("decode_jpeg", "jpeg_420_rst"),
+    ("decode_jpeg", "jpeg_progressive_420_rst"),
 ]
-_MODULES = (wav_codec, avi_codec, bmp_codec, png_codec)
+_MODULES = (wav_codec, avi_codec, bmp_codec, png_codec, jpeg_codec)
 
 
 @pytest.mark.parametrize("decoder,stream", PREFIX_SWEEP)
 def test_decoder_truncation_contract(decoder, stream):
     """Every prefix of a valid stream either decodes or raises the
     documented ValueError (NotImplementedError for scope gaps); no raw
-    struct.error, zlib.error or IndexError escapes the container walk."""
+    struct.error, zlib.error, IndexError or TypeError escapes the
+    container walk."""
     fn = next(getattr(m, decoder) for m in _MODULES if hasattr(m, decoder))
     data = ENCODERS[stream]()
     fn(data)

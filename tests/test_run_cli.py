@@ -79,6 +79,42 @@ CASE_MISSING = """
 </table></html>
 """
 
+
+def _required_case(name: str, tail: str) -> str:
+    """A case page with every required text field; ``tail`` is the
+    markup that decides its scenario link."""
+    return f"""
+<html><table>
+<tr><td bgcolor="#DFE9F2">事例名称</td><td>{name}</td></tr>
+<tr><td bgcolor="#DFE9F2">事例概要</td><td>summary</td></tr>
+<tr><td bgcolor="#DFE9F2">経過</td><td>process</td></tr>
+<tr><td bgcolor="#DFE9F2">原因</td><td>cause</td></tr>
+<tr><td bgcolor="#DFE9F2">対策</td><td>fix</td></tr>
+{tail}
+</table></html>
+"""
+
+
+# the labeled シナリオ anchor has href="": it still wins over the
+# page-wide /sf/ anchor (a null coalesce, not a truthiness test) and
+# resolves to the case page itself, which holds no scenario item
+CASE_EMPTY_HREF = _required_case(
+    "空リンク",
+    '<tr><td bgcolor="#DFE9F2">シナリオ</td><td><a href="">シナリオ</a></td></tr>\n'
+    '<tr><td>関連</td><td><a href="../sf/SA0000001.html">関連</a></td></tr>',
+)
+# no labeled シナリオ row: the page-wide /sf/ anchor is the scenario link
+CASE_SF_ONLY = _required_case(
+    "頁内リンク",
+    '<tr><td>関連</td><td><a href="../sf/SA0000001.html">シナリオ図</a></td></tr>',
+)
+# the labeled scenario link points at a page that 404s
+CASE_SCEN_404 = _required_case(
+    "シナリオ欠落",
+    '<tr><td bgcolor="#DFE9F2">シナリオ</td>'
+    '<td><a href="../sf/SA0000404.html">シナリオ</a></td></tr>',
+)
+
 LIST_PAGE = """
 <html>
 <ul class="other"><li><a href="/cf/DECOY.html">decoy</a></li></ul>
@@ -119,7 +155,12 @@ class _Site(BaseHTTPRequestHandler):
             "/fkd/cf/CA0000001.html": CASE_OK,
             "/fkd/cf/CA0000002.html": CASE_MISSING,
             "/fkd/sf/SA0000001.html": SCENARIO_PAGE,
+            "/fkd/cf/CA0000005.html": CASE_EMPTY_HREF,
+            "/fkd/cf/CA0000006.html": CASE_SF_ONLY,
+            "/fkd/cf/CA0000007.html": CASE_SCEN_404,
         }
+        # a case page that 404s with a body that links a scenario page
+        not_found = {"/fkd/cf/CA0000009.html": CASE_SCEN_404}
         images = {
             "/fkd/df/DZ001.jpg": TINY_JPEG,
             "/fkd/mf/MA1.jpg": TINY_JPEG,
@@ -132,10 +173,13 @@ class _Site(BaseHTTPRequestHandler):
             self.wfile.write(images[self.path])
             return
         body = _big_list(int(big.group(1))) if big else pages.get(self.path)
+        status = 200
+        if body is None and self.path in not_found:
+            status, body = 404, not_found[self.path]
         if body is None:
             self.send_error(404)
             return
-        self.send_response(200)
+        self.send_response(status)
         self.send_header("Content-Type", "text/html; charset=utf-8")
         self.end_headers()
         self.wfile.write(body.encode("utf-8"))
@@ -457,7 +501,8 @@ def test_sinks_plan_over_checkpointed_records(pdf_run):
     assert set(frames) == {"write_cases_json_named", "render_pdf_sink"}
     for name, df in frames.items():
         plan = df._jdf.queryExecution().analyzed().toString()
-        for udf in ("fetch_html", "case_page_facets", "scenario_page_facts"):
+        for udf in ("fetch_html", "fetch_case_pages", "case_page_facets",
+                    "scenario_page_facts"):
             assert udf not in plan, (name, udf)
 
 
@@ -476,6 +521,73 @@ def test_each_page_fetched_once(pdf_run):
         "/fkd/df/DZ001.jpg": 1,
         "/fkd/mf/MA1.jpg": 1,
         "/fkd/mf/MA2.jpg": 1,
+    }
+
+
+def test_case_edge_is_one_python_evaluation(spark, site):
+    """Each case crosses the Python boundary once: the executed plan of
+    ``process_cases`` holds one ArrowEvalPython (the fused case and
+    scenario fetch-and-parse edge) under one Generate barrier. Chained
+    fetch and parse UDFs would each add a node, and each node holds its
+    own Python worker per running task."""
+    from shippai_knowledge_etl_spark.run import expand_worklist, process_cases
+
+    df = process_cases(expand_worklist([f"{site}/cf/CA0000001.html"], None))
+    assert df.select("status").collect()[0].status == "success"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+    assert len(re.findall(r"\bGenerate\b", plan)) == 1, plan
+    assert "fetch_case_pages" in plan, plan
+
+
+@pytest.mark.slow
+def test_case_edge_scenario_link_semantics(spark, site, tmp_path):
+    """The scenario decisions the case edge makes per case:
+
+    - a labeled シナリオ anchor with ``href=""`` beats the page-wide
+      ``/sf/`` anchor and resolves to the case page itself, so the
+      scenario is empty and the case is excluded for シナリオ;
+    - with no labeled link, the page-wide ``/sf/`` anchor is used;
+    - a scenario page that 404s makes the case an error ``http 404``;
+    - a case page that 404s is an error with its own message, and the
+      scenario link in its error body is never fetched."""
+    from shippai_knowledge_etl_spark.run import main
+
+    ids = ["CA0000005", "CA0000006", "CA0000007", "CA0000009"]
+    urls = [f"{site}/cf/{i}.html" for i in ids]
+    out = tmp_path / "data"
+    _Site.hits.clear()
+    assert main(urls + ["--output-dir", str(out)]) == 0
+
+    assert dict(_Site.hits) == {
+        "/fkd/cf/CA0000005.html": 2,  # once as the case, once as its scenario
+        "/fkd/cf/CA0000006.html": 1,
+        "/fkd/sf/SA0000001.html": 1,
+        "/fkd/cf/CA0000007.html": 1,
+        "/fkd/sf/SA0000404.html": 1,
+        "/fkd/cf/CA0000009.html": 1,
+    }
+    manifest = json.loads((out / "results_001.json").read_text("utf-8"))
+    assert manifest["summary"] == {
+        "total": 4, "n_success": 1, "n_excluded": 1, "n_error": 2,
+    }
+    assert manifest["cases"] == [
+        {"case_id": "CA0000005", "case_name": "空リンク", "url": urls[0],
+         "status": "excluded", "missing_fields": ["シナリオ"]},
+        {"case_id": "CA0000006", "case_name": "頁内リンク", "url": urls[1],
+         "status": "success", "outputs": ["CA0000006_頁内リンク.json"]},
+        {"url": urls[2], "status": "error", "message": "http 404"},
+        {"url": urls[3], "status": "error", "message": "http 404"},
+    ]
+    assert sorted(p.name for p in out.iterdir()) == [
+        "CA0000006_頁内リンク.json", "results_001.json",
+    ]
+    doc = json.loads((out / "CA0000006_頁内リンク.json").read_text("utf-8"))
+    assert doc["case_name"] == "頁内リンク"
+    assert doc["scenario"] == {
+        "cause": [["組織運営不良", "腐食", "管理不良"]],
+        "action": [["定常操作", "誤操作", "破損"]],
+        "result": [["二次災害", "損壊", "環境破壊"]],
     }
 
 
